@@ -29,47 +29,39 @@ object Bench {
     Tables.all.foreach { t =>
       Tables(spark, sfDir, t).write.format("noop").mode("overwrite").save()
     }
-    // Shared multi-query derivations (SGNS training, eval base frame)
-    // warm untimed for the same reason as the fixture readers — but the
-    // cost is PUBLISHED as shared_warm_sec so the total stays honest.
-    val warmT0 = System.nanoTime()
-    SparkEntry.sharedWarmups.foreach { case (n, f) =>
-      try f(spark, sfDir)
+    // Shared trainings (SparkEntry.sharedWarmups) build untimed for the
+    // same reason as the fixture readers — but each one's cost is
+    // PUBLISHED (shared_warm, shared_warm_sec) so the total stays honest.
+    val sharedWarm = SparkEntry.sharedWarmups.map { a =>
+      val t0 = System.nanoTime()
+      try a(spark, sfDir)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] warm $n failed: ${e.getMessage}")
+        System.err.println(s"[bench] warm ${a.name} failed: ${e.getMessage}")
       }
+      a.name -> (System.nanoTime() - t0) / 1e9
     }
-    val sharedWarmSec = (System.nanoTime() - warmT0) / 1e9
+    val sharedWarmSec = sharedWarm.map(_._2).sum
 
-    // Per-query checkpoint-block cleanup cadence. Freeing finished
-    // queries' localCheckpoint blocks must go through GC + ContextCleaner,
-    // NOT a manual unpersist sweep: the session-memoized trained-quantizer
-    // artifacts are localCheckpoint frames too, and a blanket unpersist
-    // kills their blocks with truncated lineage (6 trained queries failed
-    // when the old async sweep was made blocking). But a FULL GC after
-    // EVERY query is its own tax — System.gc() discards JIT profiling
-    // state, so the next query re-pays warm-up (measured ~2× on stable
-    // queries across the whole suite). Every 16 queries keeps peak block
-    // memory bounded (32 GiB heap holds dozens of fixture-scale
-    // checkpoints) without the per-query deopt churn.
-    val gcEvery = sys.env.get("SPARK_GRAFT_GC_EVERY").map(_.toInt).getOrElse(16)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).zipWithIndex
-      .map { case ((name, fn), i) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val t = (System.nanoTime() - t0) / 1e9
-        if (gcEvery > 0 && (i + 1) % gcEvery == 0) System.gc()
-        name -> t
+    // After each query, free the checkpoint blocks it left behind: every
+    // persistent RDD no Artifact owns is a finished query's own. The
+    // shared trainings keep theirs, so later sharers still read them.
+    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val t0 = System.nanoTime()
+      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+      val t = (System.nanoTime() - t0) / 1e9
+      Artifacts.releaseUnowned(spark)
+      name -> t
+    }
+    def jsonObj(kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = jsonObj(results)
     val total = results.map(_._2).sum
     // Canary: a warm-isolated re-timing of one stable query (min of 3
     // after an untimed warm pass), embedded in the artifact so a
-    // machine/GC-cadence speed shift between rounds is readable off the
+    // machine speed shift between rounds is readable off the
     // JSON itself instead of re-derived by the next reader (full-bench
     // totals are machine-noisy; BenchOne-style warm timing is the
     // regression oracle — this bakes one such number into every run).
@@ -85,9 +77,10 @@ object Bench {
     }.getOrElse(-1.0)
     val rt = Runtime.getRuntime
     val envInfo =
-      s""""gc_every":$gcEvery,"jvm":"${System.getProperty("java.version")}",""" +
+      s""""jvm":"${System.getProperty("java.version")}",""" +
       s""""max_heap_gb":${rt.maxMemory / (1L << 30)},"bench_cpus":$cpus,""" +
       s""""canary":"$canaryName","canary_warm_sec":$canary,""" +
+      s""""shared_warm":${jsonObj(sharedWarm)},""" +
       s""""shared_warm_sec":$sharedWarmSec"""
     // "queries" first, headline totals last: the driver stores only a
     // bounded TAIL of this output, and with 270 queries the map is what

@@ -14,17 +14,16 @@ object BenchOne {
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(1000).selectExpr("sum(id)").write.format("noop").mode("overwrite").save()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Three runs, all reported — the MINIMUM is the warm signal. Ops
-    // that localCheckpoint per call (containment, allpairs) accumulate
-    // blocks across runs, so a later run can read SLOWER than run1 at
-    // sf1 under memory pressure; unpersisting would break the shared
-    // lineage-truncated caches (tokenizedDocs), so report instead of
-    // mutating state.
+    // Three runs, all reported — the MINIMUM is the warm signal. Each
+    // run's own checkpoint blocks are released after it (the shared
+    // Artifacts keep theirs), so a later run does not carry the blocks of
+    // the runs before it.
     args.foreach { name =>
       (1 to 3).foreach { run =>
         val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
         println(f"[benchone] $name run$run ${(System.nanoTime()-t0)/1e9}%.2f s")
+        Artifacts.releaseUnowned(spark)
       }
     }
     spark.stop()

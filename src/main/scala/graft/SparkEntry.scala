@@ -41,14 +41,14 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     registry.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
 
-  /** Session-memoized derivations shared by MULTIPLE declared queries
-    * (SGNS training, the eval clipped-count base frame). Bench forces
-    * these untimed — like the Tables-reader warm-up — so a one-time
-    * shared derivation is not charged to whichever sharer runs first
-    * alphabetically; the warm seconds are published in the bench JSON. */
-  val sharedWarmups: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "sgns_training" -> (rel.SelectionQueries.warmShared(_, _)),
-    "eval_base_frame" -> (rel.EvalQueries.warmShared(_, _)),
-    "trained_quantizers" -> (rel.PipelineQueries.warmShared(_, _)),
-    "pca_parts" -> (rel.VectorQueries.warmShared(_, _)))
+  /** The [[Artifact]]s Bench builds untimed before the timed pass, like
+    * the fixture readers, so a one-time training shared by several
+    * queries is not charged to whichever sharer runs first; the seconds
+    * are published per artifact in the bench JSON. Only shared trainings
+    * belong here — never a derivation a single query uses. */
+  val sharedWarmups: Seq[Artifact[_]] = Seq(
+    rel.SelectionQueries.sgnsTrained, rel.EvalQueries.baseFrame,
+    rel.PipelineQueries.trainedCentroids, rel.PipelineQueries.trainedPqCodebook,
+    rel.PipelineQueries.softmaxWeights, rel.PipelineQueries.unigramTrained,
+    rel.PipelineQueries.nswIndexShared, rel.VectorQueries.pcaPartsShared)
 }

@@ -14,23 +14,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Plans are immutable, so the (session, dir, table) → DataFrame mapping is
-  // safely memoizable; this drops the repeated parquet-footer schema reads
-  // that otherwise dominate registerViews (10 tables × every sqlBoth query).
-  // Bounded: the map strongly references its SparkSession keys, so a
-  // process cycling many sessions would otherwise retain every stopped
-  // session's state graph for the JVM's lifetime.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private val MaxCached = 256
-
-  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (cache.size > MaxCached) cache.clear()
-    cache.computeIfAbsent((spark, sfDir, name), { key =>
+  // Plans are immutable, so each table's reader is a session artifact;
+  // this drops the repeated parquet-footer schema reads that otherwise
+  // dominate registerViews (10 tables × every sqlBoth query).
+  private val frames: Map[String, Artifact[DataFrame]] = all.map { name =>
+    name -> Artifact(s"table_$name") { (spark, sfDir) =>
       val df = spark.read.parquet(s"$sfDir/$name.parquet")
       if (name == "events") normalizeEventsTs(df) else df
-    })
-  }
+    }
+  }.toMap
+
+  def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    frames(name)(spark, sfDir)
 
   /** Normalize `events.ts` to a session-TZ TIMESTAMP regardless of how the
     * fixture generation wrote it. Two encodings exist in the wild:
@@ -56,14 +51,12 @@ object Tables {
   // spaced-quantizer queries (⌈√n⌉ codebook sizing) pass n down instead of
   // paying a count job per call (an extra scheduling round-trip per query
   // at cluster scale).
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), java.lang.Long]()
+  private val counts: Map[String, Artifact[Long]] = all.map { name =>
+    name -> Artifact(s"rows_$name")((spark, sfDir) => apply(spark, sfDir, name).count())
+  }.toMap
 
-  def rowCount(spark: SparkSession, sfDir: String, name: String): Long = {
-    if (countCache.size > MaxCached) countCache.clear()
-    countCache.computeIfAbsent((spark, sfDir, name),
-      key => apply(spark, sfDir, name).count())
-  }
+  def rowCount(spark: SparkSession, sfDir: String, name: String): Long =
+    counts(name)(spark, sfDir)
 
   /** Register every fixture as a temp view so declared queries can use
     * `spark.sql` where the DataFrame API is clumsier (GROUPING SETS etc.). */

@@ -4,6 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
+import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
@@ -63,42 +64,62 @@ final class EngineHttpServer(engine: Engine, port: Int) {
     "type" -> e.etype, "weight" -> e.weight)
 
   // -------------------------------------------------------------- JSON in
+  /** A request the server cannot read — a body that is not a JSON
+    * object, a field of the wrong JSON type, a non-integer query
+    * parameter. Answered 422 with a short detail, the status FastAPI's
+    * request validation returns. */
+  private final class BadRequest(detail: String) extends Exception(detail)
+
   private def parseBody(ex: HttpExchange): Map[String, Object] = {
     val raw = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
     if (raw.isEmpty) Map.empty
-    else mapper.readValue(raw, classOf[java.util.Map[String, Object]])
-      .asScala.toMap
+    else {
+      val m = try mapper.readValue(raw, classOf[java.util.Map[String, Object]])
+        catch { case _: JsonProcessingException => null }
+      if (m == null) throw new BadRequest("body must be a JSON object")
+      m.asScala.toMap
+    }
   }
+
+  /** Field `k` when present and not null, read by `read`; a value of any
+    * other JSON type is a [[BadRequest]]. */
+  private def field[T](b: Map[String, Object], k: String, expected: String)(
+      read: PartialFunction[Object, T]): Option[T] =
+    b.get(k).filter(_ != null).map(v =>
+      read.applyOrElse(v, (_: Object) => throw new BadRequest(s"$k must be $expected")))
 
   private def optStr(b: Map[String, Object], k: String): Option[String] =
     b.get(k).filter(_ != null).map(_.toString)
 
   private def optStrMap(b: Map[String, Object], k: String): Option[Map[String, String]] =
-    b.get(k).filter(_ != null).map {
-      case m: java.util.Map[_, _] =>
-        m.asScala.map { case (kk, vv) => kk.toString -> String.valueOf(vv) }.toMap
+    field(b, k, "an object") { case m: java.util.Map[_, _] =>
+      m.asScala.map { case (kk, vv) => kk.toString -> String.valueOf(vv) }.toMap
     }
 
   private def optVec(b: Map[String, Object], k: String): Option[Seq[Float]] =
-    b.get(k).filter(_ != null).map {
-      case l: java.util.List[_] =>
+    field(b, k, "a list of numbers") {
+      case l: java.util.List[_] if l.asScala.forall(_.isInstanceOf[Number]) =>
         l.asScala.map(_.asInstanceOf[Number].floatValue()).toSeq
     }
 
   private def optBool(b: Map[String, Object], k: String, dflt: Boolean): Boolean =
-    b.get(k).filter(_ != null).map(_.asInstanceOf[Boolean].booleanValue())
+    field(b, k, "a boolean") { case x: java.lang.Boolean => x.booleanValue() }
       .getOrElse(dflt)
 
   private def optNum(b: Map[String, Object], k: String): Option[Double] =
-    b.get(k).filter(_ != null).map(_.asInstanceOf[Number].doubleValue())
+    field(b, k, "a number") { case x: Number => x.doubleValue() }
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
+    try Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
         java.net.URLDecoder.decode(k, "UTF-8") ->
           java.net.URLDecoder.decode(v, "UTF-8")
       }.toMap
+    catch { case _: IllegalArgumentException => throw new BadRequest("malformed query string") }
+
+  private def intParam(q: Map[String, String], k: String): Option[Int] =
+    q.get(k).map(v => v.toIntOption.getOrElse(throw new BadRequest(s"$k must be an integer")))
 
   // ------------------------------------------------------------ responses
   private def respond(ex: HttpExchange, code: Int, body: Any): Unit = {
@@ -122,7 +143,11 @@ final class EngineHttpServer(engine: Engine, port: Int) {
       try f(ex)
       catch {
         case e: Throwable =>
-          try respond(ex, 500, Map("detail" -> String.valueOf(e))) catch { case _: Throwable => () }
+          val (code, detail) = e match {
+            case b: BadRequest => (422, b.getMessage)
+            case _             => (500, String.valueOf(e))
+          }
+          try respond(ex, code, Map("detail" -> detail)) catch { case _: Throwable => () }
       }
 
   // --------------------------------------------------------------- routes
@@ -210,7 +235,7 @@ final class EngineHttpServer(engine: Engine, port: Int) {
     val q = queryParams(ex)
     val startId = q.getOrElse("start_id", "")
     engine.graphSearch(startId,
-      depth = q.get("depth").map(_.toInt).getOrElse(2),
+      depth = intParam(q, "depth").getOrElse(2),
       edgeType = q.get("type")) match {
       case Some(r) => respond(ex, 200, Map(
         "start_id" -> r.startId, "depth" -> r.depth, "edge_type" -> r.edgeType,

@@ -413,23 +413,50 @@ object GraphAnalytics {
     var lab = ee.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("comp"))
     for (_ <- 1 to iters) {
-      val nb = ee.join(lab, ee("u") === lab("node"))
-        .select(ee("v").as("node"), col("comp"))
-      val stepped = lab.unionByName(nb)
-        .groupBy("node").agg(min(col("comp")).as("comp"))
-      // labels are always node ids, so comp(n) resolves in `stepped` itself
       val prev = lab
-      lab = stepped.join(
-          stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
-          Seq("comp"))
-        .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
-        .localCheckpoint()
+      lab = ccRound(ee, lab)
       // r15 (guide §5): the superseded round's checkpoint blocks are the
       // only copy of a frame nothing references anymore — free them now
       // instead of leaving them to the next full GC's ContextCleaner pass
       org.apache.spark.sql.graft.bridge.unpersistCheckpoint(prev)
     }
     lab.select(col("node"), col("comp").as("component"))
+  }
+
+  /** One CC round over both-ways edges `ee` (u, v) and labels (node,
+    * comp): the neighbor-min step, then one pointer jump, checkpointed. */
+  private def ccRound(ee: DataFrame, lab: DataFrame): DataFrame = {
+    val nb = ee.join(lab, ee("u") === lab("node"))
+      .select(ee("v").as("node"), col("comp"))
+    val stepped = lab.unionByName(nb)
+      .groupBy("node").agg(min(col("comp")).as("comp"))
+    // labels are always node ids, so comp(n) resolves in `stepped` itself
+    stepped.join(
+        stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
+        Seq("comp"))
+      .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
+      .localCheckpoint()
+  }
+
+  /** Driver-side union-find over `pairs`, iterative so a chain-shaped
+    * input near the collect gate cannot overflow the JVM stack. Union
+    * always hangs the larger root under the smaller, so every root is
+    * its component's minimum: returns node → minimum member, for every
+    * node in `pairs`. */
+  private def minRootUnionFind(pairs: Iterable[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = parent.getOrElseUpdate(x, x)
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+    pairs.foreach { case (u, v) =>
+      val (ru, rv) = (find(u), find(v))
+      if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
+    }
+    parent.keys.toSeq.map(n => (n, find(n)))
   }
 
   /** Connected components with the size-GATED local finish the SCC /
@@ -451,20 +478,7 @@ object GraphAnalytics {
       requireDriverFits(und.count(), "connected components")
       val es = und.select(col("u").cast("long"), col("v").cast("long"))
         .as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = parent.getOrElseUpdate(x, x)
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      es.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        // min-root union keeps the label the component minimum
-        if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
-      }
-      parent.keys.toSeq.map(n => (n, find(n))).toDF("node", "component")
+      minRootUnionFind(es).toDF("node", "component")
     } else connectedComponentsConverged(
       und.select(col("u").as("src"), col("v").as("dst")), maxIters)
   }
@@ -486,15 +500,7 @@ object GraphAnalytics {
     var round = 0
     while (!converged && round < maxIters) {
       round += 1
-      val nb = ee.join(lab, ee("u") === lab("node"))
-        .select(ee("v").as("node"), col("comp"))
-      val stepped = lab.unionByName(nb)
-        .groupBy("node").agg(min(col("comp")).as("comp"))
-      val next = stepped.join(
-          stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
-          Seq("comp"))
-        .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
-        .localCheckpoint()
+      val next = ccRound(ee, lab)
       val changed = next.join(lab.select(col("node"), col("comp").as("prev")),
           Seq("node"))
         .filter(col("comp") =!= col("prev")).count()
@@ -1183,27 +1189,8 @@ object GraphAnalytics {
           if (nLinks <= localLinkLimit) {
             requireDriverFits(nLinks, "Boruvka union-find")
             val pairs = links.collect().map(r => (r.getLong(0), r.getLong(1)))
-            val parent = scala.collection.mutable.Map.empty[Long, Long]
-            // iterative find (walk to root, then compress): a chain-shaped
-            // link set near localLinkLimit would overflow the JVM stack
-            // under naive recursion
-            def find(x: Long): Long = {
-              parent.getOrElseUpdate(x, x)
-              var r = x
-              while (parent(r) != r) r = parent(r)
-              var c = x
-              while (c != r) { val nx = parent(c); parent(c) = r; c = nx }
-              r
-            }
-            pairs.foreach { case (a, b) =>
-              val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb
-            }
-            val byRoot = parent.keys.toSeq.groupBy(find)
-            val mapping = byRoot.iterator.flatMap { case (_, members) =>
-              val m = members.min; members.iterator.map(c => (c, m))
-            }.toSeq
             import links.sparkSession.implicits._
-            broadcast(mapping.toDF("c", "newc"))
+            broadcast(minRootUnionFind(pairs).toDF("c", "newc"))
           } else
             connectedComponentsDf(links, iters = jsteps(nLinks))
               .select(col("node").as("c"), col("component").as("newc"))

@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.{QueryDef, Tables}
+import graft.{Artifact, QueryDef, Tables}
 import graft.pipeline._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -23,26 +23,19 @@ object PipelineQueries {
     * SIZE, not a fixed fraction, so pair volume is constant at 100 TB. */
   val AuditN = 120
 
-  /** Session-memoized TOKENIZED documents table — the text family's
-    * shared intermediate (the SURVEY §13 materialize-once pattern applied
-    * ACROSS queries): documents plus a precomputed `toks` column, spread
-    * and localCheckpointed once per (session, dir). The
+  /** The TOKENIZED documents table as a session artifact — the text
+    * family's shared intermediate (the SURVEY §13 materialize-once
+    * pattern applied ACROSS queries): documents plus a precomputed `toks`
+    * column, spread and localCheckpointed once per (session, dir). The
     * q_text_{tokens,vocab,tfidf,oov,langid,quality,fingerprint} family
     * all consume it, so the corpus regex tokenization — their dominant
     * cost — is paid once per session instead of once per query. At
     * cluster scale this is the tokenized staging table a curation DAG
-    * materializes before its analysis fan-out; bounded like the Tables
-    * cache (same immutable-fixture contract). */
-  private val tokDocsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), DataFrame]()
-
-  def tokenizedDocs(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    if (tokDocsCache.size > 64) tokDocsCache.clear()
-    tokDocsCache.computeIfAbsent((s, dir), { _ =>
-      TextOps.spread(Tables(s, dir, "documents"))
-        .withColumn("toks", TextOps.tokens(col("text")))
-        .localCheckpoint()
-    })
+    * materializes before its analysis fan-out. */
+  val tokenizedDocs = Artifact("tokenized_docs") { (s, dir) =>
+    TextOps.spread(Tables(s, dir, "documents"))
+      .withColumn("toks", TextOps.tokens(col("text")))
+      .localCheckpoint()
   }
 
   // ---- shared DuckDB fragments (mirror graft.pipeline.TextOps exactly) ----
@@ -130,65 +123,36 @@ object PipelineQueries {
        |    FROM e CROSS JOIN $cName c)) t
        |JOIN e ON e.vid = t.vid WHERE t.rn = 1""".stripMargin
 
-  /** Session-scoped memo of the trained quantizers, keyed like Tables'
-    * read memo: a production system trains a codebook ONCE and serves
-    * every query from the persisted artifact (the BM25 index follows the
-    * same version-keyed pattern) — per-query retraining would be the
-    * anti-pattern. Centroids are bit-deterministic, so memoization cannot
-    * change any result; the five coarse-quantizer queries and the two PQ
-    * ones share one training each per (session, sfDir). */
-  private val trainedCentMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  /** Force the session-memoized trained artifacts shared by MULTIPLE
-    * declared queries — the coarse k-means centroids (IVF family), the
-    * PQ codebook (pq_trained / pq_err / opq), and the softmax domain
-    * weights (clf / eval). Bench runs this untimed so the one-time
-    * training is not charged to whichever sharer runs first
-    * alphabetically (q_ann_opq was absorbing the PQ training that
-    * q_ann_pq_* then read back in ~1 s). */
-  private[graft] def warmShared(s: org.apache.spark.sql.SparkSession,
-                                dir: String): Unit = {
-    trainedCentroids(s, dir)
-    trainedPqCodebook(s, dir)
-    softmaxWeights(s, dir)
-    unigramTrained(s, dir)
-    nswIndexShared(s, dir)
-    ()
+  /** The trained quantizers as session artifacts: a production system
+    * trains a codebook ONCE and serves every query from the persisted
+    * artifact (the BM25 index follows the same version-keyed pattern) —
+    * per-query retraining would be the anti-pattern. Centroids are
+    * bit-deterministic, so memoization cannot change any result; the five
+    * coarse-quantizer queries and the two PQ ones share one training
+    * each per (session, sfDir). Bench warms both untimed (q_ann_opq was
+    * absorbing the PQ training that q_ann_pq_* then read back in ~1 s). */
+  private[graft] val trainedCentroids = Artifact("kmeans_centroids") { (s, dir) =>
+    Similarity.kmeansCentroids(Tables(s, dir, "embeddings"),
+      "vec_id", "embedding", iters = 2,
+      corpusN = Tables.rowCount(s, dir, "embeddings"))
   }
-
-  private def trainedCentroids(s: org.apache.spark.sql.SparkSession,
-                               dir: String): DataFrame =
-    trainedCentMemo.getOrElseUpdate((s, dir),
-      Similarity.kmeansCentroids(Tables(s, dir, "embeddings"),
-        "vec_id", "embedding", iters = 2,
-        corpusN = Tables.rowCount(s, dir, "embeddings")))
-  /** The classifier family's shared training (trainedCentMemo
-    * convention): q_text_classifier, q_text_classifier_eval, and
-    * q_text_classifier_ece train the IDENTICAL model on the IDENTICAL
-    * feature frame — features and the 1-row weight frame are built once
-    * per (session, sfDir) and the three queries diverge only in what
-    * they report (weights / operating curve / calibration). */
-  private val qualFeatMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  private def qualFeat(s: org.apache.spark.sql.SparkSession,
-                       dir: String): DataFrame =
-    qualFeatMemo.getOrElseUpdate((s, dir),
-      Classifier.qualityFeatures(Tables(s, dir, "documents")).localCheckpoint())
-  private val logRegMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  private def logRegWeights(s: org.apache.spark.sql.SparkSession,
-                            dir: String): DataFrame =
-    logRegMemo.getOrElseUpdate((s, dir),
-      Classifier.trainWeights(qualFeat(s, dir), iters = 5, lr = 2.0))
-
-  private val trainedPqMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  private def trainedPqCodebook(s: org.apache.spark.sql.SparkSession,
-                                dir: String): DataFrame =
-    trainedPqMemo.getOrElseUpdate((s, dir),
-      Similarity.pqCodebookTrained(Tables(s, dir, "embeddings"),
-        "vec_id", "embedding", dim = 64, m = 8, iters = 2,
-        corpusN = Tables.rowCount(s, dir, "embeddings")))
+  private[graft] val trainedPqCodebook = Artifact("pq_codebook") { (s, dir) =>
+    Similarity.pqCodebookTrained(Tables(s, dir, "embeddings"),
+      "vec_id", "embedding", dim = 64, m = 8, iters = 2,
+      corpusN = Tables.rowCount(s, dir, "embeddings"))
+  }
+  /** The classifier family's shared training: q_text_classifier,
+    * q_text_classifier_eval, and q_text_classifier_ece train the
+    * IDENTICAL model on the IDENTICAL feature frame — features and the
+    * 1-row weight frame are built once per (session, sfDir) and the three
+    * queries diverge only in what they report (weights / operating curve
+    * / calibration). */
+  private val qualFeat = Artifact("quality_features") { (s, dir) =>
+    Classifier.qualityFeatures(Tables(s, dir, "documents")).localCheckpoint()
+  }
+  private val logRegWeights = Artifact("logreg_weights") { (s, dir) =>
+    Classifier.trainWeights(qualFeat(s, dir), iters = 5, lr = 2.0)
+  }
 
   /** Unrolled-CTE replay of per-subspace Lloyd PQ training
     * (Similarity.pqCodebookTrained): psub = (vid, s, xs) subvector rows,
@@ -1647,29 +1611,25 @@ object PipelineQueries {
   private val NswBeam = 16
   private val NswHops = 6
 
-  /** Session-scoped memo of the navigable graph (trainedCentMemo
+  /** The navigable graph as a session artifact (the trainedCentroids
     * convention): built once per (session, sfDir), shared by q_ann_nsw
     * and q_ann_nsw_recall — a production NSW index is a per-snapshot
     * artifact, not a per-query build. Bit-deterministic, so sharing
-    * cannot change any result. r14-opt: the memo also carries the
-    * normed-corpus scoring frame (cid, cv, ncv) — the beam search reads
-    * it every hop, and deriving it per QUERY paid one full corpus
-    * materialization each for q_ann_nsw and q_ann_nsw_recall. */
-  private val nswGraphMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  private def nswIndexShared(s: org.apache.spark.sql.SparkSession,
-                             dir: String): (DataFrame, DataFrame, DataFrame) =
-    nswGraphMemo.getOrElseUpdate((s, dir), {
-      import org.apache.spark.sql.functions.col
-      val emb = Tables(s, dir, "embeddings")
-      val (e, r) = Similarity.nswIndex(emb,
-        "vec_id", "embedding", m = NswM,
-        corpusN = Tables.rowCount(s, dir, "embeddings"))
-      val c = emb.select(col("vec_id").as("cid"),
-          col("embedding").cast("array<double>").as("cv"))
-        .withColumn("ncv", graft.functions.vec.norm(col("cv")))
-      (e.localCheckpoint(), r.localCheckpoint(), c.localCheckpoint())
-    })
+    * cannot change any result. r14-opt: it also carries the normed-corpus
+    * scoring frame (cid, cv, ncv) — the beam search reads it every hop,
+    * and deriving it per QUERY paid one full corpus materialization each
+    * for q_ann_nsw and q_ann_nsw_recall. */
+  private[graft] val nswIndexShared = Artifact("nsw_index") { (s, dir) =>
+    import org.apache.spark.sql.functions.col
+    val emb = Tables(s, dir, "embeddings")
+    val (e, r) = Similarity.nswIndex(emb,
+      "vec_id", "embedding", m = NswM,
+      corpusN = Tables.rowCount(s, dir, "embeddings"))
+    val c = emb.select(col("vec_id").as("cid"),
+        col("embedding").cast("array<double>").as("cv"))
+      .withColumn("ncv", graft.functions.vec.norm(col("cv")))
+    (e.localCheckpoint(), r.localCheckpoint(), c.localCheckpoint())
+  }
 
   /** Unrolled-CTE replay of Similarity.nswGraph + fixed-hop beam search:
     * defines nb (bucketed corpus with precomputed norms), nedges (local
@@ -3753,15 +3713,12 @@ object PipelineQueries {
        |unp AS (SELECT w, CAST(len(string_split(seg, ' ')) AS INT) AS np FROM vseg)""".stripMargin
   }
 
-  /** Session-memoized unigram-LM training — shared by the lm / apply /
-    * fertility queries (the trainedPqCodebook convention; training is
-    * bit-deterministic so sharing cannot change any result). */
-  private val unigramMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), (DataFrame, DataFrame)]
-  private def unigramTrained(s: org.apache.spark.sql.SparkSession,
-                             dir: String): (DataFrame, DataFrame) =
-    unigramMemo.getOrElseUpdate((s, dir),
-      UnigramLm.train(Tables(s, dir, "documents"), "text"))
+  /** Unigram-LM training as a session artifact — shared by the lm /
+    * apply / fertility queries (training is bit-deterministic, so sharing
+    * cannot change any result). */
+  private[graft] val unigramTrained = Artifact("unigram_lm") { (s, dir) =>
+    UnigramLm.train(Tables(s, dir, "documents"), "text")
+  }
 
   /** Unigram-LM (SentencePiece-style) tokenizer training
     * ([[graft.pipeline.UnigramLm]] — deterministic Viterbi hard-EM, the
@@ -4617,37 +4574,30 @@ object PipelineQueries {
     * appended once (the q_text_classifier planting discipline — fixture
     * lang labels are independent of the synthetic text, so the learnable
     * signal is planted deterministically). Feature frame (y, x1..x4). */
-  private val domainFeatMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  private def domainFeat(s: org.apache.spark.sql.SparkSession,
-                         dir: String): DataFrame =
-    domainFeatMemo.getOrElseUpdate((s, dir), {
-      import s.implicits._
-      val sw = TextAnalysis.stopwords
-      val sfx = sw.tail.foldLeft(
-        when($"lang" === sw.head._1, " " + sw.head._2.mkString(" "))) {
-        case (acc, (l, ws)) => acc.when($"lang" === l, " " + ws.mkString(" "))
-      }.otherwise(lit(""))
-      val marked = TextOps.spread(Tables(s, dir, "documents"))
-        .select($"lang".as("y"), concat($"text", sfx).as("text"))
-        .select($"y", array_distinct(TextOps.tokens($"text")).as("dtoks"))
-        .filter(size($"dtoks") > 0)
-      val swMap = sw.toMap
-      val feats = Seq("de", "en", "es", "fr").zipWithIndex.map { case (l, i) =>
-        graft.graph.NodeEmbedding.pround(
-          lit(10.0) * size(array_intersect($"dtoks", typedlit(swMap(l))))
-            .cast("double") / size($"dtoks"), 6).as(s"x${i + 1}")
-      }
-      marked.select(($"y" +: feats): _*).localCheckpoint()
-    })
+  private val domainFeat = Artifact("domain_features") { (s, dir) =>
+    import s.implicits._
+    val sw = TextAnalysis.stopwords
+    val sfx = sw.tail.foldLeft(
+      when($"lang" === sw.head._1, " " + sw.head._2.mkString(" "))) {
+      case (acc, (l, ws)) => acc.when($"lang" === l, " " + ws.mkString(" "))
+    }.otherwise(lit(""))
+    val marked = TextOps.spread(Tables(s, dir, "documents"))
+      .select($"lang".as("y"), concat($"text", sfx).as("text"))
+      .select($"y", array_distinct(TextOps.tokens($"text")).as("dtoks"))
+      .filter(size($"dtoks") > 0)
+    val swMap = sw.toMap
+    val feats = Seq("de", "en", "es", "fr").zipWithIndex.map { case (l, i) =>
+      graft.graph.NodeEmbedding.pround(
+        lit(10.0) * size(array_intersect($"dtoks", typedlit(swMap(l))))
+          .cast("double") / size($"dtoks"), 6).as(s"x${i + 1}")
+    }
+    marked.select(($"y" +: feats): _*).localCheckpoint()
+  }
 
-  private val softmaxMemo =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), DataFrame]
-  private def softmaxWeights(s: org.apache.spark.sql.SparkSession,
-                             dir: String): DataFrame =
-    softmaxMemo.getOrElseUpdate((s, dir),
-      Softmax.train(domainFeat(s, dir), domainClasses, d = 4,
-        iters = 4, lr = 5.0))
+  private[graft] val softmaxWeights = Artifact("softmax_weights") { (s, dir) =>
+    Softmax.train(domainFeat(s, dir), domainClasses, d = 4,
+      iters = 4, lr = 5.0)
+  }
 
   /** Unrolled-CTE replay of [[graft.pipeline.Softmax]] domain training:
     * planting, coverage features, and every GD iteration's K·(d+1)

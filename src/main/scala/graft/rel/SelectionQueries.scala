@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.{QueryDef, Tables}
+import graft.{Artifact, QueryDef, Tables}
 import graft.graph.{NodeEmbedding, Walks}
 import graft.pipeline.{Selection, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -269,36 +269,24 @@ object SelectionQueries {
        |${(1 to iters).map(stepCtes).mkString(",\n")}""".stripMargin
   }
 
-  /** Memoized corpus→train artifacts per (SparkContext, sf dir):
-    * q_graph_embeddings and q_graph_embed_auc train the IDENTICAL
-    * fixture (same walks, same hyperparameters), so whichever runs
-    * second reuses the checkpointed weight table instead of re-running
-    * all three GD iterations — r10's bench had the pair at #1/#2
-    * registry-wide (14 s combined at sf0.1), half of it retraining.
-    * The cached tables are |V|·d rows (tiny at any corpus scale). */
-  private val sgnsCache = scala.collection.concurrent.TrieMap[
-    String, (DataFrame, DataFrame, DataFrame)]()
-  /** Force the memoized SGNS training (eager localCheckpoints inside) —
-    * Bench runs this untimed so the one-time derivation is not charged
-    * to whichever embed query happens to run first. */
-  private[graft] def warmShared(s: SparkSession, dir: String): Unit = {
-    sgnsTrained(s, dir); ()
+  /** Corpus→train artifact per (session, sf dir): q_graph_embeddings
+    * and q_graph_embed_auc train the IDENTICAL fixture (same walks, same
+    * hyperparameters), so whichever runs second reuses the checkpointed
+    * weight table instead of re-running all three GD iterations — r10's
+    * bench had the pair at #1/#2 registry-wide (14 s combined at sf0.1),
+    * half of it retraining. The tables are |V|·d rows (tiny at any
+    * corpus scale). */
+  private[graft] val sgnsTrained = Artifact("sgns_training") { (s, dir) =>
+    import s.implicits._
+    val edges = ScaleQueries.sparseEdges(s, dir)
+    val seeds = edges.select($"src".as("wid")).distinct()
+      .orderBy($"wid").limit(10)
+    val walks = Walks.deterministicWalks(edges, seeds, steps = 4)
+    val nodes = edges.select($"src".as("n"))
+      .union(edges.select($"dst".as("n"))).distinct()
+    val (vr, nvDf) = NodeEmbedding.vocabRank(nodes)
+    (NodeEmbedding.trainSgnsFrom(walks, vr, nvDf), vr, nvDf)
   }
-
-  private def sgnsTrained(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) =
-    sgnsCache.getOrElseUpdate(
-      System.identityHashCode(s.sparkContext) + ":" + dir, {
-        import s.implicits._
-        val edges = ScaleQueries.sparseEdges(s, dir)
-        val seeds = edges.select($"src".as("wid")).distinct()
-          .orderBy($"wid").limit(10)
-        val walks = Walks.deterministicWalks(edges, seeds, steps = 4)
-        val nodes = edges.select($"src".as("n"))
-          .union(edges.select($"dst".as("n"))).distinct()
-        val (vr, nvDf) = NodeEmbedding.vocabRank(nodes)
-        (NodeEmbedding.trainSgnsFrom(walks, vr, nvDf), vr, nvDf)
-      })
 
   /** Deterministic node-embedding training over the q_graph_walks
     * corpus — skip-gram with negative sampling by full-batch GD

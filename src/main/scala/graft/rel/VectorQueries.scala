@@ -1,6 +1,6 @@
 package graft.rel
 
-import graft.{QueryDef, Tables}
+import graft.{Artifact, QueryDef, Tables}
 import graft.functions.vec
 import graft.search.{Bm25, VectorSearch}
 import org.apache.spark.sql.expressions.Window
@@ -18,31 +18,16 @@ object VectorQueries {
   val queryVec: Seq[Double] = Seq.tabulate(64)(i => ((i % 7) - 3) / 4.0)
   private val queryVecSql = queryVec.map(_.toString).mkString("[", ", ", "]::DOUBLE[]")
 
-  /** Session-scoped memo of the PCA training artifact (centered values,
-    * covariance, loadings) — q_vec_pca and q_vec_whiten share one
-    * covariance build + power iteration per (session, sfDir), the same
-    * once-per-session discipline as the trained IVF/PQ codebooks.
-    * pcaParts is bit-deterministic, so sharing cannot change any hash. */
-  private val pcaMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-           (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-            org.apache.spark.sql.DataFrame)]
-  private def pcaPartsShared(s: org.apache.spark.sql.SparkSession,
-                             dir: String) =
-    pcaMemo.getOrElseUpdate((s, dir), {
-      val (x, cov, w) = graft.pipeline.Similarity.pcaParts(
-        Tables(s, dir, "embeddings"), "vec_id", "embedding", iters = 3)
-      (x.localCheckpoint(), cov, w)
-    })
-  /** Force the shared PCA derivation so Bench charges it to
-    * shared_warm_sec instead of whichever sharer runs first (q_vec_pca
+  /** The PCA training artifact (centered values, covariance, loadings)
+    * — q_vec_pca and q_vec_whiten share one covariance build + power
+    * iteration per (session, sfDir), the same once-per-session discipline
+    * as the trained IVF/PQ codebooks. Bench warms it untimed: q_vec_pca
     * was absorbing the d²-key covariance + power steps its sharers read
-    * back in ~0.3 s — the last worst20 entry that was a shared
-    * derivation, r12 verdict item 5). */
-  private[graft] def warmShared(s: org.apache.spark.sql.SparkSession,
-                                dir: String): Unit = {
-    pcaPartsShared(s, dir)
-    ()
+    * back in ~0.3 s (r12 verdict item 5). */
+  private[graft] val pcaPartsShared = Artifact("pca_parts") { (s, dir) =>
+    val (x, cov, w) = graft.pipeline.Similarity.pcaParts(
+      Tables(s, dir, "embeddings"), "vec_id", "embedding", iters = 3)
+    (x.localCheckpoint(), cov, w)
   }
 
   /** Dot-product top-k over the embeddings fixture (O12's scoring core). */

@@ -42,4 +42,13 @@ object bridge {
         lr.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** The RDDs a DataFrame's plan scans directly — its localCheckpoint and
+    * createDataFrame leaves, subqueries included. */
+  def rddLeaves(df: org.apache.spark.sql.Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed.collectWithSubqueries {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+        case er: org.apache.spark.sql.execution.ExternalRDD[_] => er.rdd
+      }
 }

@@ -103,4 +103,36 @@ class HttpSpec extends SparkSpec {
     assert(st.get("total_nodes").asInstanceOf[Number].longValue() >= 2)
     assert(json(send("GET", "/")._2).containsKey("status"))
   }
+
+  test("unreadable input → 422 with a short detail, and no write happens") {
+    val before = json(send("GET", "/stats")._2).get("total_nodes")
+    val a = json(send("POST", "/nodes",
+      Some("""{"text":"node a 422","metadata":{}}"""))._2).get("id").toString
+    val bad = Seq(
+      "GET" -> s"/search/graph?start_id=$a&depth=two" -> None,
+      "POST" -> "/search/vector" -> Some("""{"query_text":"x","top_k":"five"}"""),
+      "POST" -> "/search/hybrid" ->
+        Some(s"""{"query_text":"x","graph_start_id":"$a","graph_depth":"deep"}"""),
+      "POST" -> "/nodes" -> Some("""{"text":"t","auto_embed":"yes"}"""),
+      "POST" -> "/nodes" -> Some("""{"text":"t","metadata":["not","a","map"]}"""),
+      "POST" -> "/nodes" -> Some("""{"text":"t","embedding":[1.0,"x"]}"""),
+      "POST" -> "/nodes" -> Some("""not json"""),
+      "POST" -> "/nodes" -> Some("""[1, 2]"""),
+      "POST" -> "/edges" -> Some(s"""{"source":"$a","target":"$a","weight":"x"}"""),
+      "PUT" -> s"/nodes/$a" -> Some("""{"text":"changed","regen_embedding":1}"""))
+    bad.foreach { case ((method, path), body) =>
+      val (code, resp) = send(method, path, body)
+      assert(code == 422, s"$method $path $body -> $resp")
+      val detail = json(resp).get("detail").toString
+      assert(detail.nonEmpty && detail.length < 80 && !detail.contains("Exception"),
+        s"$method $path: detail '$detail'")
+    }
+    val after = json(send("GET", "/stats")._2).get("total_nodes")
+    assert(after.asInstanceOf[Number].longValue() ==
+      before.asInstanceOf[Number].longValue() + 1, "rejected POSTs created no node")
+    val node = json(send("GET", s"/nodes/$a")._2)
+    assert(node.get("text") == "node a 422", "rejected PUT left the node as it was")
+    assert(node.get("edges").asInstanceOf[java.util.Map[String, java.util.List[_]]]
+      .get("outgoing").isEmpty, "rejected edge POST created no edge")
+  }
 }

@@ -9,8 +9,9 @@ import graft.hybrid.HybridSearch
 import graft.model._
 import graft.search.Bm25
 import graft.store.TableCatalog
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Opt-in serving mode for [[Engine.vectorSearch]].
   *
@@ -65,21 +66,24 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
   }
 
   /** GET /nodes/{id} (O3, app.py:163-202): details + has_embedding +
-    * outgoing/incoming edges. */
+    * outgoing/incoming edges — both edge lists from one collect of the
+    * incident edges (a self-loop is in both). */
   def getNode(id: String): Option[NodeDetails] = {
     val n = catalog.nodes.filter($"id" === id).as[Node].collect().headOption
     n.map { node =>
       val emb = catalog.embeddings.filter($"node_id" === id)
         .as[EmbeddingRow].collect().headOption
-      val out = edgeInfos(catalog.edges.filter($"source" === id))
-      val in = edgeInfos(catalog.edges.filter($"target" === id))
+      val incident = edgeInfos(catalog.edges.filter($"source" === id || $"target" === id))
       NodeDetails(node.id, node.text, node.metadata, node.created_at,
-        node.updated_at, emb.nonEmpty, emb.map(_.vector), out, in)
+        node.updated_at, emb.nonEmpty, emb.map(_.vector),
+        incident.filter(_.source == node.id), incident.filter(_.target == node.id))
     }
   }
 
+  /** The edges of a response-sized frame, in Spark's order by id, sorted
+    * on the driver. */
   private def edgeInfos(df: DataFrame): Seq[EdgeInfo] =
-    df.orderBy($"id").as[EdgeRow].collect()
+    df.as[EdgeRow].collect().sortBy(_.id)(Engine.SparkStringOrder)
       .map(e => EdgeInfo(e.id, e.source, e.target, e.etype, e.weight)).toSeq
 
   /** PUT /nodes/{id} (O2+O21, app.py:794-821): partial update; embedding
@@ -326,23 +330,33 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
       .as[(String, Double)].collect().map { case (i, s) => Bm25Hit(i, s) }.toSeq
   }
 
-  /** GET /search/graph (O19, app.py:893-903): None when start missing. */
+  /** GET /search/graph (O19, app.py:893-903): None when start missing.
+    * The traversal is response-sized and on the driver already
+    * ([[Bfs.traverse]]), so the rest is two scans: the visited ids' node
+    * rows (a missing start row is the 404) and the induced edges. */
   def graphSearch(startId: String, depth: Int = 2,
                   edgeType: Option[String] = None): Option[GraphSearchResult] = {
-    if (catalog.nodes.filter($"id" === startId).isEmpty) None
+    val bfs = Bfs.traverse(catalog.edges, lit(startId), depth,
+      srcCol = "source", dstCol = "target", weightCol = "weight",
+      edgeType = edgeType.map(("etype", _)))
+      .as[(String, Int, Double)].collect()
+    // a null target names no node and matches no edge
+    val visited = bfs.map(_._1).filter(_ != null)
+    val rows = catalog.nodes.filter($"id".isin(visited: _*)).as[Node].collect()
+      .map(n => n.id -> n).toMap
+    val (start, reached) = bfs.partition(_._2 == 0)
+    if (!rows.contains(start.head._1)) None
     else {
-      val bfs = Bfs.traverse(catalog.edges, lit(startId), depth,
-        srcCol = "source", dstCol = "target", weightCol = "weight",
-        edgeType = edgeType.map(("etype", _)))
-      val nodes = bfs.filter($"node" =!= startId) // start excluded, app.py:599
-        .join(catalog.nodes, $"node" === $"id")
-        .orderBy($"dist", $"node")
-        .select($"id", $"text", $"metadata", $"dist".as("distance"),
-          $"path_weight".as("pathWeight"))
-        .as[GraphNodeHit].collect().toSeq
-      val induced = GraphOps.inducedEdges(catalog.edges, bfs,
-        srcCol = "source", dstCol = "target")
-      Some(GraphSearchResult(startId, depth, edgeType, nodes, edgeInfos(induced)))
+      // start excluded (app.py:599); ordered by (dist, node) as Spark does
+      val nodes = reached.sortBy(h => (h._2, h._1))(
+        Ordering.Tuple2(Ordering.Int, Engine.SparkStringOrder))
+        .flatMap { case (id, dist, pw) =>
+          rows.get(id).map(n => GraphNodeHit(n.id, n.text, n.metadata, dist, pw))
+        }.toSeq
+      // induced subgraph, not type-filtered (GraphOps.inducedEdges' rule)
+      val induced = edgeInfos(catalog.edges
+        .filter($"source".isin(visited: _*) && $"target".isin(visited: _*)))
+      Some(GraphSearchResult(startId, depth, edgeType, nodes, induced))
     }
   }
 
@@ -377,11 +391,15 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
       }
       val fused = HybridSearch.fuse(catalog.nodes, vecScores, graphScores,
         vectorWeight, graphWeight, topK)
-      Some(fused.join(catalog.nodes.select($"id", $"text"), Seq("id"))
-        .orderBy($"final_score".desc, $"id")
-        .select($"id", $"text", $"vec_norm".as("vectorScore"),
-          $"graph_score".as("graphScore"), $"final_score".as("finalScore"))
-        .as[HybridHit].collect().toSeq)
+        .select($"id", $"vec_norm", $"graph_score", $"final_score")
+        .as[(String, Double, Double, Double)].collect()
+      // ≤ topK rows: texts by one id scan, order (final desc, id) as Spark's
+      val texts = catalog.nodes.filter($"id".isin(fused.map(_._1): _*))
+        .select($"id", $"text").as[(String, String)].collect().toMap
+      Some(fused.sortBy(h => (h._4, h._1))(Ordering.Tuple2(
+          Ordering.Double.TotalOrdering.reverse, Engine.SparkStringOrder))
+        .flatMap { case (id, vn, gs, f) => texts.get(id).map(HybridHit(id, _, vn, gs, f)) }
+        .toSeq)
     }
   }
 
@@ -444,4 +462,13 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     catalog.nodes.count(),
     catalog.embeddings.count(),
     catalog.edges.count())
+}
+
+object Engine {
+
+  /** Spark's string order — UTF-8 bytes (`UTF8String.compareTo`) — for the
+    * driver-side sorts of response rows. `String.compareTo` compares UTF-16
+    * units and puts a supplementary character (U+1F600) before U+FFFD. */
+  val SparkStringOrder: Ordering[String] =
+    (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
 }

@@ -129,8 +129,7 @@ object GraphQueries {
     * [[graft.graph.Bfs.traverse]] (the driver-loop implementation behind
     * q_graph_bfs) against the planner's own fixpoint execution — three
     * independent BFS engines, one hash. Depth-bounded recursion keeps the
-    * per-iteration frontier an equi-join on the node key, the same
-    * scale shape as the driver loop. */
+    * per-iteration frontier an equi-join on the node key. */
   val graphBfsSql = QueryDef(
     "q_graph_bfs_sql",
     (s, dir) => {

@@ -188,6 +188,28 @@ class EngineSpec extends SparkSpec {
     assert(engine.hybridSearch(q, graphStartId = Some("node-missing")).isEmpty)
   }
 
+  test("graph and node reads order ids as Spark does: UTF-8 bytes, not UTF-16") {
+    import graft.model.{EdgeRow, Node}
+    val (bmp, astral) = ("a\uFFFD", "a\uD83D\uDE00") // U+FFFD, U+1F600
+    assert(astral.compareTo(bmp) < 0, "UTF-16 order puts the emoji first")
+    val ts = "2024-01-01T00:00:00Z"
+    val start = "utf8-order-start"
+    Seq(start, astral, bmp).foreach(id =>
+      engine.catalog.upsertNode(Node(id, s"text of $id", Map.empty, ts, ts)))
+    // edge ids equal the target ids, so both edge lists sort on them too;
+    // the self-loop is listed as outgoing and as incoming
+    val loop = "utf8-loop"
+    Seq(astral -> astral, bmp -> bmp, loop -> start).foreach { case (id, target) =>
+      engine.catalog.upsertEdge(EdgeRow(id, start, target, "utf8", 1.0, ts))
+    }
+    val g = engine.graphSearch(start, depth = 1).get
+    assert(g.nodes.map(_.id) == Seq(bmp, astral))
+    assert(g.edges.map(_.id) == Seq(bmp, astral, loop))
+    val n = engine.getNode(start).get
+    assert(n.outgoing.map(_.id) == Seq(bmp, astral, loop))
+    assert(n.incoming.map(_.id) == Seq(loop))
+  }
+
   test("stats counts nodes / embeddings / edges") {
     val before = engine.stats()
     val n = engine.createNode("stats probe", autoEmbed = false)

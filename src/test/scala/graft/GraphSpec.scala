@@ -75,4 +75,29 @@ class GraphSpec extends SparkSpec {
     // visited = {A, B}; the off-type B→A edge IS reported, B→X is not
     assert(got == Set(("A", "B", "follow"), ("B", "A", "other")), s"$got")
   }
+
+  test("null dst (eventEdges shape): one row per level it is reached, never expanded") {
+    // get_json_object(props, '$.k').cast("long") % 15 is null when k is
+    // missing, exactly as GraphQueries.eventEdges derives dst
+    val ev = Seq((0L, """{"k": 16}""", 1.0), (0L, """{"j": 1}""", 2.0),
+      (1L, """{"k": 2}""", 1.5), (1L, "{}", 3.0), (2L, """{"k": 30}""", 1.0),
+      (2L, """{"k": 3}""", 0.5), (3L, "{}", 1.0))
+      .toDF("src", "props", "weight")
+      .select($"src", (get_json_object($"props", "$.k").cast("long") % 15).as("dst"),
+        $"weight")
+    val got = Bfs.traverse(ev, lit(0L), depth = 3).collect().map(_.toString).sorted
+    // pinned from the distributed join/anti-join loop this BFS replaced
+    assert(got.toSeq == Seq("[0,0,0.0]", "[1,1,1.0]", "[2,2,2.5]", "[3,3,3.0]",
+      "[null,1,2.0]", "[null,2,4.0]"), got.mkString(" "))
+  }
+
+  test("int src/dst columns started from lit(0L): bigint nodes, same labels") {
+    val e = Seq((0, 1, 1.0), (1, 2, 2.5), (0, 2, 4.0), (2, 0, 1.0), (2, 3, 0.25),
+      (1, 3, 3.0)).toDF("src", "dst", "weight")
+    val bfs = Bfs.traverse(e, lit(0L), depth = 3)
+    assert(bfs.schema.simpleString == "struct<node:bigint,dist:int,path_weight:double>")
+    // pinned from the distributed join/anti-join loop this BFS replaced
+    val got = bfs.as[(Long, Int, Double)].collect().sorted.toSeq
+    assert(got == Seq((0L, 0, 0.0), (1L, 1, 1.0), (2L, 1, 4.0), (3L, 2, 4.25)), got)
+  }
 }

@@ -95,6 +95,41 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("BFS labels == plain-Scala BFS: min hop, then max weight (8 samples)") {
+    // 6 nodes and 14 random edges mostly include parallel edges and
+    // self-loops; the fixed tail adds a self-loop, a 2-cycle and a
+    // parallel edge to every sample
+    val edgeGen = Gen.listOfN(14, Gen.zip(Gen.choose(0, 5), Gen.choose(0, 5),
+      Gen.oneOf("a", "b"), Gen.choose(0.5, 3.0)))
+    val caseGen = Gen.zip(edgeGen, Gen.choose(1, 3), Gen.oneOf(None, Some("a")))
+    forAll(caseGen, 8) { case (random, depth, etype) =>
+      val es = random ++ Seq((0, 0, "a", 1.0), (0, 1, "a", 0.75), (1, 0, "a", 1.25),
+        (0, 1, "a", 2.0))
+      val kept = es.filter { case (_, _, t, _) => etype.forall(_ == t) }
+      // hop distances level by level, then each node's weight is the max
+      // over its in-edges from the level before
+      val dist = scala.collection.mutable.Map(0L -> 0)
+      (1 to depth).foreach { d =>
+        kept.foreach { case (s, t, _, _) =>
+          if (dist.get(s.toLong).contains(d - 1) && !dist.contains(t.toLong)) dist(t.toLong) = d
+        }
+      }
+      val pw = scala.collection.mutable.Map(0L -> 0.0)
+      (1 to depth).foreach { d =>
+        kept.foreach { case (s, t, _, w) =>
+          if (dist.get(s.toLong).contains(d - 1) && dist(t.toLong) == d)
+            pw(t.toLong) = pw.get(t.toLong).fold(pw(s.toLong) + w)(math.max(_, pw(s.toLong) + w))
+        }
+      }
+      val expected = dist.map { case (n, d) => (n, d, pw(n)) }.toSeq.sorted
+      val edges = es.map { case (s, t, ty, w) => (s.toLong, t.toLong, ty, w) }
+        .toDF("src", "dst", "etype", "weight")
+      val got = Bfs.traverse(edges, lit(0L), depth, edgeType = etype.map(("etype", _)))
+        .as[(Long, Int, Double)].collect().sorted.toSeq
+      assert(got == expected, s"depth $depth, type $etype, edges $es")
+    }
+  }
+
   test("histogramQuantiles: est-exact in (0, width], exact == sorted rank (5 samples)") {
     val valuesGen = Gen.zip(
       Gen.nonEmptyListOf(Gen.chooseNum(0L, 5000L)),

@@ -403,13 +403,25 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     }
   }
 
-  /** Whole-graph analytics over the store (GraphX path — beyond the
-    * reference's ego traversals): connected components of the edge graph,
-    * component labeled by its lexicographically smallest node id. */
-  def connectedComponents(): Seq[(String, String)] =
-    graft.graph.GraphXOps.connectedComponentsString(catalog.edges)
-      .orderBy($"id")
-      .as[(String, String)].collect().toSeq
+  /** Whole-graph analytics over the store (beyond the reference's ego
+    * traversals): connected components of the edge graph as (id,
+    * component id), ordered by id. Ids map to dense ranks in
+    * `String.compareTo` order, so the representative — the minimum rank —
+    * is the UTF-16-smallest member id. */
+  def connectedComponents(): Seq[(String, String)] = {
+    val ranks = graft.graph.GraphXOps
+      .stringVertexMapping(catalog.edges, "source", "target")
+      .as[(String, Long)].collect()
+    val vm = ranks.toSeq.toDF("sid", "vid")
+    val edges = catalog.edges
+      .join(vm.select($"sid".as("source"), $"vid".as("src")), "source")
+      .join(vm.select($"sid".as("target"), $"vid".as("dst")), "target")
+    val sid = ranks.map(_.swap).toMap
+    graft.graph.GraphAnalytics.connectedComponents(edges, maxIters = 64)
+      .as[(Long, Long)].collect()
+      .map { case (n, c) => (sid(n), sid(c)) }
+      .sortBy(_._1)(Engine.SparkStringOrder).toSeq
+  }
 
   // --------------------------------------------- trained-ANN persistence
   /** Persist the trained ANN artifacts (round-9: at 100 TB a trained

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -192,51 +192,42 @@ object GraphAnalytics {
     * partitioning/merge order — unlike double-precision PageRank, this
     * hash-matches a sequential oracle at any cluster size. Dangling-node
     * mass is dropped (no redistribution), matching the unrolled-CTE oracle.
+    * It is [[personalizedPageRank]] with every node a seed.
     *
     * Per iteration: one shuffle for the contribution aggregation, one for
     * the rank re-join; lineage is cut with localCheckpoint so the plan
     * doesn't grow multiplicatively with iteration count.
     */
-  def pageRankFixedPoint(edges: DataFrame, iters: Int): DataFrame = {
+  def pageRankFixedPoint(edges: DataFrame, iters: Int): DataFrame =
+    fixedPointRank(edges, lit(true), _.count(), iters)
+
+  /** Personalized PageRank: the [[pageRankFixedPoint]] kernel, but ALL
+    * teleport mass returns to the seed set (init = PrScale/|S| on seeds,
+    * 0 elsewhere; per-iteration base paid only to seeds) —
+    * proximity-to-seeds ranking, the "related items" / seed-expansion
+    * primitive. Exact BIGINT arithmetic keeps it bit-identical at any
+    * partitioning, so the unrolled-CTE oracle reproduces every rank. */
+  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
+                           iters: Int): DataFrame = {
+    require(seeds.nonEmpty, "personalized PageRank needs a seed set")
+    fixedPointRank(edges, col("n").isin(seeds: _*), _ => seeds.size, iters)
+  }
+
+  /** The integer PageRank kernel: nodes where `isSeed` (over the node
+    * column `n`) holds start at PrScale/|S| and receive the teleport
+    * base, where |S| = `seedCount` of the node table. A zero count
+    * (PageRank of an empty graph) returns the empty node table. */
+  private def fixedPointRank(edges: DataFrame, isSeed: Column,
+                             seedCount: DataFrame => Long, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
     val nodes = e.select(col("src").as("n"))
       .union(e.select(col("dst").as("n"))).distinct().localCheckpoint()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val n = nodes.count()
+    val n = seedCount(nodes)
     if (n == 0)
       return nodes.select(col("n").as("node"), lit(0L).as("rank_fp"))
     val init = PrScale / n
     val base = (15L * init) / 100L
-    var rank = nodes.select(col("n"), lit(init).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = e.join(rank, e("src") === rank("n")).join(outdeg, "src")
-        .select(col("dst").as("n"), expr("r DIV od").as("c"))
-        .groupBy("n").agg(sum(col("c")).as("cs"))
-      rank = nodes.join(contrib, Seq("n"), "left")
-        .select(col("n"),
-          (lit(base) + expr("(85 * coalesce(cs, CAST(0 AS BIGINT))) DIV 100")).as("r"))
-        .localCheckpoint()
-    }
-    rank.select(col("n").as("node"), col("r").as("rank_fp"))
-  }
-
-  /** Personalized PageRank: identical integer fixed-point kernel to
-    * [[pageRankFixedPoint]], but ALL teleport mass returns to the seed
-    * set (init = PrScale/|S| on seeds, 0 elsewhere; per-iteration base
-    * paid only to seeds) — proximity-to-seeds ranking, the "related
-    * items" / seed-expansion primitive. Exact BIGINT arithmetic keeps it
-    * bit-identical at any partitioning, so the unrolled-CTE oracle
-    * reproduces every rank. Same per-iteration shuffle shape. */
-  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
-                           iters: Int): DataFrame = {
-    require(seeds.nonEmpty, "personalized PageRank needs a seed set")
-    val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("n"))
-      .union(e.select(col("dst").as("n"))).distinct().localCheckpoint()
-    val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val init = PrScale / seeds.size
-    val base = (15L * init) / 100L
-    val isSeed = col("n").isin(seeds: _*)
     var rank = nodes.select(col("n"),
       when(isSeed, lit(init)).otherwise(lit(0L)).as("r"))
     for (_ <- 1 to iters) {
@@ -391,51 +382,77 @@ object GraphAnalytics {
     lab.localCheckpoint()
   }
 
-  /** Connected components as pure DataFrame algebra: each round runs
-    * (1) a neighbor-min step label(v) ← min(label(v), min_{u∼v} label(u))
-    * — the [[labelPropagation]] kernel — then (2) a pointer-jumping step
-    * label(v) ← min(label(v), label(label(v))) that chases each label one
-    * hop up its own component tree. Jumping roughly doubles the radius the
-    * component-minimum id has flooded per round, so convergence is
-    * O(log diam) rounds instead of O(diam) — what makes DataFrame CC
-    * viable on high-diameter graphs (near-dup cluster chains, road
-    * networks) where plain flooding needs a round per hop. Labels are node
-    * ids and every step is a min — order-independent, so the fixpoint
-    * hash-matches a true-reachability oracle at any parallelism (the
-    * declared query reuses q_graphx_cc's transitive-closure oracle: the
-    * check is REAL convergence, not iteration replay). Three equi-join
-    * shuffles per round, lineage cut per round.
-    * [[GraphXOps.connectedComponents]] is the RDD/Pregel form of the same
-    * fixpoint; this one keeps Catalyst in the loop (AQE, broadcast, skew
-    * splitting on a real cluster). */
-  def connectedComponentsDf(edges: DataFrame, iters: Int): DataFrame = {
-    val ee = bothWays(edges).localCheckpoint()
-    var lab = ee.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-    for (_ <- 1 to iters) {
-      val prev = lab
-      lab = ccRound(ee, lab)
-      // r15 (guide §5): the superseded round's checkpoint blocks are the
-      // only copy of a frame nothing references anymore — free them now
-      // instead of leaving them to the next full GC's ContextCleaner pass
-      org.apache.spark.sql.graft.bridge.unpersistCheckpoint(prev)
-    }
-    lab.select(col("node"), col("comp").as("component"))
-  }
-
-  /** One CC round over both-ways edges `ee` (u, v) and labels (node,
-    * comp): the neighbor-min step, then one pointer jump, checkpointed. */
-  private def ccRound(ee: DataFrame, lab: DataFrame): DataFrame = {
-    val nb = ee.join(lab, ee("u") === lab("node"))
-      .select(ee("v").as("node"), col("comp"))
-    val stepped = lab.unionByName(nb)
-      .groupBy("node").agg(min(col("comp")).as("comp"))
-    // labels are always node ids, so comp(n) resolves in `stepped` itself
-    stepped.join(
-        stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
-        Seq("comp"))
-      .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
+  /** Connected components of the undirected graph over `edges` (src,
+    * dst) → (node, component), component = the minimum member id (both
+    * BIGINT). Every non-null endpoint is a vertex, so a node whose only
+    * edges are self-loops is its own component; an edge with a null
+    * endpoint contributes nothing. Labels are node ids and every step is
+    * a min — order-independent, so the answer hash-matches a
+    * true-reachability oracle at any parallelism.
+    *
+    * The canonical (u ≤ v) edge rows are counted once. At or under
+    * `localEdgeLimit` — after a [[requireDriverFits]] heap check — it is
+    * collected and solved with one driver-side union-find pass, because
+    * below a few million edges the per-round scheduling of a distributed
+    * fixpoint costs more than the whole problem. Above the gate each
+    * round runs (1) a neighbor-min step label(v) ← min(label(v),
+    * min_{u∼v} label(u)) — the [[labelPropagation]] kernel — then (2) a
+    * pointer-jumping step label(v) ← min(label(v), label(label(v))) that
+    * chases each label one hop up its own component tree. Jumping
+    * roughly doubles the radius the component minimum has flooded per
+    * round, so convergence takes O(log diam) rounds instead of O(diam).
+    * The loop stops on the first round that changes no label and fails
+    * LOUDLY after `maxIters` rounds: a silently-unconverged CC is a wrong
+    * answer, not a slow one (the q_spatial_dbscan oracle caught exactly
+    * that at 8 fixed rounds). [[GraphXOps.connectedComponents]] is the
+    * RDD/Pregel form of the same fixpoint. */
+  def connectedComponents(edges: DataFrame, maxIters: Int,
+                          localEdgeLimit: Long = 1L << 22): DataFrame = {
+    val (s, d) = (col("src").cast("long"), col("dst").cast("long"))
+    // duplicates stay until the gate: the union-find absorbs them, so only
+    // the distributed path pays the dedup shuffle
+    val und = edges.filter(s.isNotNull && d.isNotNull)
+      .select(least(s, d).as("u"), greatest(s, d).as("v"))
       .localCheckpoint()
+    val m = und.count()
+    if (m <= localEdgeLimit) {
+      requireDriverFits(m, "connected components")
+      val spark = edges.sparkSession
+      import spark.implicits._
+      minRootUnionFind(und.as[(Long, Long)].collect()).toDF("node", "component")
+    } else {
+      val ee = und.unionAll(und.select(col("v"), col("u"))).distinct()
+        .localCheckpoint()
+      var lab = ee.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("comp"))
+        .localCheckpoint()
+      var converged = false
+      var round = 0
+      while (!converged && round < maxIters) {
+        round += 1
+        val nb = ee.join(lab, ee("u") === lab("node"))
+          .select(ee("v").as("node"), col("comp"))
+        val stepped = lab.unionByName(nb)
+          .groupBy("node").agg(min(col("comp")).as("comp"))
+        // labels are always node ids, so comp(n) resolves in `stepped` itself
+        val next = stepped.join(
+            stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
+            Seq("comp"))
+          .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
+          .localCheckpoint()
+        val changed = next.join(lab.select(col("node"), col("comp").as("prev")),
+            Seq("node"))
+          .filter(col("comp") =!= col("prev")).count()
+        // `changed` was the last reader of the previous round's checkpoint
+        org.apache.spark.sql.graft.bridge.unpersistCheckpoint(lab)
+        lab = next
+        converged = changed == 0L
+      }
+      require(converged,
+        s"connected components did not converge in $maxIters pointer-doubling " +
+          "rounds; raise the budget (labels would silently be wrong)")
+      lab.select(col("node"), col("comp").as("component"))
+    }
   }
 
   /** Driver-side union-find over `pairs`, iterative so a chain-shaped
@@ -457,63 +474,6 @@ object GraphAnalytics {
       if (ru < rv) parent(rv) = ru else if (rv < ru) parent(ru) = rv
     }
     parent.keys.toSeq.map(n => (n, find(n)))
-  }
-
-  /** Connected components with the size-GATED local finish the SCC /
-    * Borůvka operators use: count the (deduped undirected) edge set
-    * once; at or under `localEdgeLimit` — after a [[requireDriverFits]]
-    * heap check — collect and solve with one driver-side union-find
-    * pass (min-id labels), because below a few million edges the
-    * per-round scheduling of a distributed fixpoint costs more than the
-    * whole problem; above the gate, fall back to the loudly-convergence-
-    * checked distributed loop. Both paths label a component by its
-    * minimum member id, so results are identical and hash-match the
-    * same closure oracle. */
-  def connectedComponentsGated(edges: DataFrame, maxIters: Int,
-                               localEdgeLimit: Long = 1L << 22): DataFrame = {
-    val und = undirected(edges).localCheckpoint()
-    val spark = edges.sparkSession
-    import spark.implicits._
-    if (und.count() <= localEdgeLimit) {
-      requireDriverFits(und.count(), "connected components")
-      val es = und.select(col("u").cast("long"), col("v").cast("long"))
-        .as[(Long, Long)].collect()
-      minRootUnionFind(es).toDF("node", "component")
-    } else connectedComponentsConverged(
-      und.select(col("u").as("src"), col("v").as("dst")), maxIters)
-  }
-
-  /** [[connectedComponentsDf]] with a per-round convergence check:
-    * stops as soon as a round changes no label, and fails LOUDLY if
-    * `maxIters` rounds were not enough (a silently-unconverged CC is a
-    * wrong answer, not a slow one — the q_spatial_dbscan oracle caught
-    * exactly that at 8 fixed rounds). The changed-count action runs on
-    * the label table — |V| of the EDGE-INDUCED vertex set, already tiny
-    * after upstream filtering — so the check costs one small agg per
-    * round. */
-  def connectedComponentsConverged(edges: DataFrame, maxIters: Int): DataFrame = {
-    val ee = bothWays(edges).localCheckpoint()
-    var lab = ee.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("comp"))
-      .localCheckpoint()
-    var converged = false
-    var round = 0
-    while (!converged && round < maxIters) {
-      round += 1
-      val next = ccRound(ee, lab)
-      val changed = next.join(lab.select(col("node"), col("comp").as("prev")),
-          Seq("node"))
-        .filter(col("comp") =!= col("prev")).count()
-      // r15 (guide §5): `changed` was the last reader of the previous
-      // round's checkpoint — free its blocks eagerly
-      org.apache.spark.sql.graft.bridge.unpersistCheckpoint(lab)
-      lab = next
-      converged = changed == 0L
-    }
-    require(converged,
-      s"connected components did not converge in $maxIters pointer-doubling " +
-        "rounds; raise the budget (labels would silently be wrong)")
-    lab.select(col("node"), col("comp").as("component"))
   }
 
   /** Per-community Newman modularity contributions for a given node
@@ -927,7 +887,7 @@ object GraphAnalytics {
     * — sound because lab(v) always holds a node on the required side of
     * v (reaching / reached), and reachability composes; jumping doubles
     * the propagated radius per step, so O(log diam) steps reach the
-    * fixpoint exactly like [[connectedComponentsDf]].
+    * fixpoint exactly like [[connectedComponents]]' distributed path.
     * Extraction: fwd(v) = bwd(v) = c proves v→*c and c→*v, so v ∈
     * SCC(c); mutual-reachability paths never leave an SCC (any node on
     * a u⇄v cycle is itself mutually reachable with both), so whole SCCs
@@ -943,7 +903,7 @@ object GraphAnalytics {
     * which is what makes SCC viable on a 100 TB edge list where the
     * closure is quadratic. Returns (node, scc = max member id).
     *
-    * The finish is size-GATED like [[boruvkaMst]]'s contraction: once
+    * The finish is size-GATED like [[connectedComponents]]: once
     * the remaining edge count drops to `localEdgeLimit` the tail is
     * collected and solved with one driver-side iterative Tarjan pass —
     * after the giant SCC peels off, the remainder of a real graph is a
@@ -956,11 +916,12 @@ object GraphAnalytics {
     * Long) tuple + array slot + union-find map entry. */
   val LocalFinishRowBytes = 96L
 
-  /** Guard for the size-gated driver-side local finishes ([[boruvkaMst]],
-    * [[stronglyConnectedComponents]]): refuse the collect when the
-    * bytes estimate exceeds a quarter of the heap currently available to
-    * the driver JVM — a fat edge list fails LOUDLY with a actionable
-    * message instead of OOMing the driver mid-job. */
+  /** Guard for the size-gated driver-side local finishes
+    * ([[connectedComponents]], [[stronglyConnectedComponents]]): refuse
+    * the collect when the bytes estimate exceeds a quarter of the heap
+    * currently available to the driver JVM — a fat edge list fails
+    * LOUDLY with an actionable message instead of OOMing the driver
+    * mid-job. */
   def requireDriverFits(rows: Long, what: String,
                         rowBytes: Long = LocalFinishRowBytes): Unit = {
     val rt = Runtime.getRuntime
@@ -1025,9 +986,10 @@ object GraphAnalytics {
     var round = 0
     var finished = false
     while (round < maxRounds && !finished) {
+      lazy val remRows = rem.count()
       if (nodes.isEmpty) { finished = true }
-      else if (rem.count() <= localEdgeLimit) {
-        requireDriverFits(rem.count() + nodes.count(), "SCC Tarjan")
+      else if (remRows <= localEdgeLimit) {
+        requireDriverFits(remRows + nodes.count(), "SCC Tarjan")
         val es = rem.collect().map(r => (r.getLong(0), r.getLong(1)))
         val ns = nodes.collect().map(_.getLong(0))
         val comp = tarjanScc(ns, es)
@@ -1126,27 +1088,19 @@ object GraphAnalytics {
     * whose only cycles are 2-cycles (mutual minima, deduped on the edge
     * key) and the computed forest is the unique MSF under that order,
     * replayable edge-for-edge by a sequential oracle. Contraction
-    * relabels via [[connectedComponentsDf]] on the chosen component
-    * links (min-flood + pointer jumping, O(log n) steps cover ANY chosen
-    * tree shape); components without a cross edge are finished and keep
-    * their label. Components at least halve per round, so
+    * relabels via [[connectedComponents]] on the chosen component links
+    * — size-gated, so the link table (one row per active component,
+    * geometrically shrinking and orders of magnitude smaller than the
+    * edge list) is usually solved by the driver-side union-find, and a
+    * billion-component first round on a 100 TB edge list takes the
+    * distributed pointer-jumping fixpoint instead. Components without a
+    * cross edge are finished and keep their label. Components at least
+    * halve per round, so
     * ⌈log₂ n⌉ rounds suffice; the loop exits on the first round with no
     * cross-component edge and throws if the cap is hit un-converged.
     * Input edges are canonicalized (least/greatest, self-loops dropped,
-    * parallel edges keep min w). Returns the forest rows (u, v, w).
-    *
-    * Contraction is size-GATED: the chosen-link table holds one row per
-    * active component — geometrically shrinking and orders of magnitude
-    * smaller than the edge list — so below `localLinkLimit` rows it is
-    * collected and solved with a driver-side union-find whose min-label
-    * mapping broadcasts back (the same local-solve-below-threshold gate
-    * production MST/CC implementations use; a billion-component first
-    * round on a 100 TB edge list takes the distributed
-    * [[connectedComponentsDf]] path instead). Both paths produce the
-    * identical min-label mapping — the recursive-closure oracle checks
-    * whichever ran. */
-  def boruvkaMst(edges: DataFrame, maxRounds: Int = 24,
-                 localLinkLimit: Long = 1L << 22): DataFrame = {
+    * parallel edges keep min w). Returns the forest rows (u, v, w). */
+  def boruvkaMst(edges: DataFrame, maxRounds: Int = 24): DataFrame = {
     val e = edges
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"), col("w"))
@@ -1155,11 +1109,6 @@ object GraphAnalytics {
       .localCheckpoint()
     var comp = e.select(col("u").as("n")).unionByName(e.select(col("v").as("n")))
       .distinct().select(col("n"), col("n").as("c")).localCheckpoint()
-    // O(log k) pointer-jump steps relabel ANY chosen-tree shape over k
-    // links exactly; k at least halves per round, so later rounds get
-    // geometrically cheaper contractions
-    def jsteps(k: Long): Int =
-      math.max(4, 65 - java.lang.Long.numberOfLeadingZeros(math.max(1L, k)))
     var mst = e.limit(0)
     var round = 0
     var active = true
@@ -1182,18 +1131,9 @@ object GraphAnalytics {
           .distinct()
           .localCheckpoint()
         mst = mst.unionByName(chosen.select("u", "v", "w")).localCheckpoint()
-        val links = chosen.select(col("cu").as("src"), col("cv").as("dst"))
-          .localCheckpoint()
-        val nLinks = links.count()
-        val merged =
-          if (nLinks <= localLinkLimit) {
-            requireDriverFits(nLinks, "Boruvka union-find")
-            val pairs = links.collect().map(r => (r.getLong(0), r.getLong(1)))
-            import links.sparkSession.implicits._
-            broadcast(minRootUnionFind(pairs).toDF("c", "newc"))
-          } else
-            connectedComponentsDf(links, iters = jsteps(nLinks))
-              .select(col("node").as("c"), col("component").as("newc"))
+        val merged = connectedComponents(
+            chosen.select(col("cu").as("src"), col("cv").as("dst")), maxIters = 64)
+          .select(col("node").as("c"), col("component").as("newc"))
         comp = comp.join(merged, Seq("c"), "left")
           .select(col("n"), coalesce(col("newc"), col("c")).as("c"))
           .localCheckpoint()

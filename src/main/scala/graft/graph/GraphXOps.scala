@@ -5,15 +5,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** GraphX-backed graph analytics — the scale path for whole-graph
-  * computation (BASELINE.json north star: "graph analytics via GraphX").
-  *
-  * The DataFrame BFS in [[Bfs]] is the right tool for depth ≤ ~10 ego
-  * traversals (Catalyst-visible, joins prunable); GraphX Pregel is the
-  * right tool when the iteration count is unbounded (components, PageRank)
-  * or the whole graph participates. Vertex ids here are the Long node ids
-  * of the derived fixture graphs; string-keyed engine graphs map through
-  * `xxhash64`/dense-rank first (SURVEY §1.4).
+/** GraphX-backed graph analytics — the RDD/Pregel forms of whole-graph
+  * computation (BASELINE.json north star: "graph analytics via GraphX"),
+  * run by the GraphX query module (`rel.GraphXQueries`) and used by the
+  * tests as a reference. Connected components everywhere else is
+  * [[GraphAnalytics.connectedComponents]]; its string-keyed callers map
+  * ids through [[stringVertexMapping]] first (SURVEY §1.4). Vertex ids
+  * here are the Long node ids of the derived fixture graphs.
   */
 object GraphXOps {
 
@@ -49,29 +47,10 @@ object GraphXOps {
       .toDF("sid", "vid")
   }
 
-  /** Connected components over STRING-keyed edges (the engine's edge
-    * model): map ids → dense longs, run GraphX CC, map back. Component
-    * representative = the lexicographically smallest member id (dense rank
-    * preserves order, GraphX CC labels with the min long id). */
-  def connectedComponentsString(edges: DataFrame,
-                                srcCol: String = "source",
-                                dstCol: String = "target"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val vm = stringVertexMapping(edges, srcCol, dstCol)
-    val longEdges = edges
-      .join(vm.select($"sid".as("s0"), $"vid".as("src")), col(srcCol) === $"s0")
-      .join(vm.select($"sid".as("s1"), $"vid".as("dst")), col(dstCol) === $"s1")
-      .select($"src", $"dst", lit(1.0).as("weight"))
-    connectedComponents(longEdges)
-      .join(vm, $"node" === $"vid")
-      .select($"sid".as("id"), $"component".as("cvid"))
-      .join(vm.select($"sid".as("component_id"), $"vid".as("cvid")), "cvid")
-      .select($"id", $"component_id")
-  }
-
   /** Connected components (undirected closure) → (node, component) where
-    * component = min node id reachable. Deterministic → oracle-checkable. */
+    * component = min node id reachable. Deterministic → oracle-checkable.
+    * q_graphx_cc's subject and the tests' reference for
+    * [[GraphAnalytics.connectedComponents]]. */
   def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._

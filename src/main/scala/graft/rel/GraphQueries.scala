@@ -886,18 +886,18 @@ object GraphQueries {
          |SELECT n AS node, CAST(r AS BIGINT) AS rank_fp FROM r$iters ORDER BY node""".stripMargin
     })
 
-  /** Pure-DataFrame connected components (GraphAnalytics
-    * .connectedComponentsDf — min-flood + pointer jumping, O(log diam)
-    * rounds): the Catalyst-native scale path beside the RDD/Pregel
-    * q_graphx_cc. Shares that query's TRUE transitive-closure oracle, so a
-    * hash match proves the bounded-round fixpoint actually converged —
-    * not merely that the oracle replayed the same iterations. */
+  /** Connected components on the size-gated operator
+    * (GraphAnalytics.connectedComponents — driver union-find under the
+    * edge gate, else the convergence-checked min-flood + pointer-jumping
+    * fixpoint), the same labelling q_graphx_cc computes with GraphX.
+    * Shares that query's independent label-propagation oracle, so a hash
+    * match proves the fixpoint — not a replay of the engine's rounds. */
   val graphCc = QueryDef(
     "q_graph_cc",
     (s, dir) => {
       import s.implicits._
       graft.graph.GraphAnalytics
-        .connectedComponentsDf(eventEdges(s, dir), iters = 4)
+        .connectedComponents(eventEdges(s, dir), maxIters = 64)
         .orderBy($"node")
     },
     Some(s"""WITH $edgesCte,

@@ -436,7 +436,7 @@ object PipelineQueries {
     * transitive; a keep-one-per-PAIR rule over a chain a~b~c either
     * over- or under-deletes) → per-cluster-size histogram with the
     * documents-to-remove count (size − 1 per cluster, keep-min-id).
-    * Components run on GraphAnalytics.connectedComponentsGated (local
+    * Components run on GraphAnalytics.connectedComponents (local
     * union-find under the edge gate, else the convergence-CHECKED
     * min-flood/pointer-jumping fixpoint — never a fixed round budget)
     * over the pair edges; the oracle is a TRUE recursive-CTE transitive
@@ -467,7 +467,7 @@ object PipelineQueries {
       // O(log diam) bound): a fixed 4-round budget would silently split
       // longer LSH chains into bogus extra clusters at scale — the same
       // unconverged-CC failure mode the q_spatial_dbscan oracle caught.
-      graft.graph.GraphAnalytics.connectedComponentsGated(pairs, maxIters = 64)
+      graft.graph.GraphAnalytics.connectedComponents(pairs, maxIters = 64)
         .groupBy($"component").agg(count(lit(1)).as("size"))
         .groupBy($"size")
         .agg(count(lit(1)).as("n_clusters"),
@@ -544,7 +544,7 @@ object PipelineQueries {
       // LSH chains must not silently split — that would misreport
       // leak_pairs for the cluster-safe policy as if it leaked.
       val comp = graft.graph.GraphAnalytics
-        .connectedComponentsGated(pairs, maxIters = 64)
+        .connectedComponents(pairs, maxIters = 64)
         .select($"node".as("doc_id"), $"component")
       def bucket(c: org.apache.spark.sql.Column) =
         graft.functions.hashx.md5Prefix(c.cast("string"), 8) % 5
@@ -3001,8 +3001,8 @@ object PipelineQueries {
           .select(($"doc_id" + 100000).as("doc_id"),
             concat($"text", lit(" qq17 zz88")).as("text")))
       val pairs = Dedup.minhashPairs(corpus, "doc_id", "text")
-      val cc = graft.graph.GraphXOps.connectedComponents(
-        pairs.select($"a".as("src"), $"b".as("dst"), lit(1.0).as("weight")))
+      val cc = graft.graph.GraphAnalytics.connectedComponents(
+        pairs.select($"a".as("src"), $"b".as("dst")), maxIters = 64)
       val sizes = cc.groupBy($"component").agg(count(lit(1)).as("component_size"))
       cc.join(sizes, "component")
         .select($"node".as("doc_id"), $"component".as("canonical"), $"component_size")
@@ -3187,17 +3187,16 @@ object PipelineQueries {
           .select(($"doc_id" + 100000).as("doc_id"),
             concat($"text", lit(" qq17 zz88")).as("text")))
       val pairs = Dedup.minhashPairs(corpus, "doc_id", "text")
-      val cc = graft.graph.GraphXOps.connectedComponents(
-        pairs.select($"a".as("src"), $"b".as("dst"), lit(1.0).as("weight")))
+      val cc = graft.graph.GraphAnalytics.connectedComponents(
+        pairs.select($"a".as("src"), $"b".as("dst")), maxIters = 64)
       val q = TextAnalysis.qualityScore(corpus, "doc_id", "text")
         .select($"doc_id", $"quality")
-      val members = cc.select($"node".as("doc_id"), $"component").join(q, "doc_id")
+      // the keeper is each component's first row in (quality desc, doc_id)
+      // order: one window pass, so the quality scores are computed once
       val w = Window.partitionBy($"component").orderBy($"quality".desc, $"doc_id")
-      val keepers = members.withColumn("rn", row_number().over(w))
-        .filter($"rn" === 1)
-        .select($"component", $"doc_id".as("keep_id"),
-          $"quality".as("keep_quality"))
-      members.join(keepers, "component")
+      cc.select($"node".as("doc_id"), $"component").join(q, "doc_id")
+        .select($"doc_id", first($"doc_id").over(w).as("keep_id"),
+          first($"quality").over(w).as("keep_quality"))
         .select($"doc_id", $"keep_id", $"keep_quality",
           ($"doc_id" === $"keep_id").as("kept"))
         .orderBy($"doc_id")

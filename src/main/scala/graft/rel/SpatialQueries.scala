@@ -71,11 +71,12 @@ object SpatialQueries {
 
   /** Exact DBSCAN (Ester et al., KDD'96) over `p(vec_id, ix, iy)`:
     * core = ≥ minPts ε-neighbors; clusters = connected components of
-    * the core-core ε-graph labeled by min core id (the pointer-doubling
-    * [[graft.graph.GraphAnalytics.connectedComponentsDf]] fixpoint —
-    * O(log diameter) rounds); border = non-core with a core ε-neighbor,
-    * assigned the MIN cluster id among its core neighbors (DBSCAN's
-    * border ambiguity resolved deterministically); noise emits nothing.
+    * the core-core ε-graph labeled by min core id (the size-gated
+    * [[graft.graph.GraphAnalytics.connectedComponents]] — O(log diameter)
+    * pointer-doubling rounds above its gate); border = non-core with a
+    * core ε-neighbor, assigned the MIN cluster id among its core
+    * neighbors (DBSCAN's border ambiguity resolved deterministically);
+    * noise emits nothing.
     * Returns (vec_id, cluster, role) with role 2 = core, 1 = border.
     * Every stage is the grid equi-join or a key-partitioned agg — the
     * only iteration is the CC fixpoint over the (much smaller)
@@ -96,7 +97,7 @@ object SpatialQueries {
     // graph is the DENSITY-FILTERED remnant, usually small), else the
     // convergence-checked distributed fixpoint
     val comp = graft.graph.GraphAnalytics
-      .connectedComponentsGated(cc, ccIters)
+      .connectedComponents(cc, ccIters)
       .select(col("node").as("id"), col("component"))
     val coreComp = core.join(comp, Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("cluster"))

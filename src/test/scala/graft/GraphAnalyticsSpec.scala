@@ -16,10 +16,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     val got = vm.as[(String, Long)].collect().sortBy(_._2)
     assert(got.toSeq == Seq(("n-a", 1L), ("n-b", 2L), ("n-c", 3L), ("n-d", 4L)),
       s"dense ranks in sorted-id order: ${got.toSeq}")
-    // end-to-end: components labeled by lexicographically smallest member
-    val cc = graft.graph.GraphXOps.connectedComponentsString(edges)
-      .as[(String, String)].collect().toMap
-    assert(cc == Map("n-a" -> "n-a", "n-b" -> "n-a", "n-c" -> "n-a", "n-d" -> "n-a"))
   }
 
   test("triangleCounts on K4: every node in C(3,2)=3 triangles") {
@@ -86,26 +82,28 @@ class GraphAnalyticsSpec extends SparkSpec {
       "seed must gain relative rank under personalization")
   }
 
-  test("connectedComponentsDf: equals GraphX CC; pointer jumping beats flooding") {
+  test("connectedComponents distributed path: equals GraphX CC; pointer jumping beats flooding") {
     val edges = Tables(spark, sf, "events")
       .select($"user_id".as("src"),
         (get_json_object($"props", "$.k").cast("long") % 15).as("dst"))
-    val df = GraphAnalytics.connectedComponentsDf(edges, iters = 4)
-      .as[(Long, Long)].collect().toMap
+    def distributed(e: org.apache.spark.sql.DataFrame, maxIters: Int) =
+      GraphAnalytics.connectedComponents(e, maxIters, localEdgeLimit = 0L)
+        .as[(Long, Long)].collect().toMap
+    val df = distributed(edges, 64)
     val gx = graft.graph.GraphXOps
       .connectedComponents(edges.withColumn("weight", lit(1.0)))
       .as[(Long, Long)].collect().toMap
     assert(df == gx, "DataFrame CC must agree with GraphX CC")
-    val dfRep = GraphAnalytics.connectedComponentsDf(edges.repartition(7), iters = 4)
-      .as[(Long, Long)].collect().toMap
+    val dfRep = distributed(edges.repartition(7), 64)
     assert(df == dfRep, "min semiring must be partition-order independent")
-    // the O(log diam) claim: a 41-node path (diam 40) converges in 5
-    // jumped rounds, while plain min-flooding at 5 rounds has only
-    // reached radius 5 — the far end still carries a non-root label
+    // the O(log diam) claim: a 41-node path (diam 40) converges under a
+    // cap of 6 rounds — 5 jumped rounds plus the one that changes nothing
+    // — and not under 5, while plain min-flooding at 5 rounds has only
+    // reached radius 5: the far end still carries a non-root label
     val path = (0L until 40L).map(i => (i, i + 1)).toDF("src", "dst")
-    val jumped = GraphAnalytics.connectedComponentsDf(path, iters = 5)
-      .as[(Long, Long)].collect().toMap
+    val jumped = distributed(path, 6)
     assert(jumped.values.forall(_ == 0L), s"path not converged: $jumped")
+    intercept[IllegalArgumentException](distributed(path, 5))
     val flooded = GraphAnalytics.labelPropagation(path, iters = 5)
       .as[(Long, Long)].collect().toMap
     assert(flooded(40L) == 35L, "flooding reach must be exactly `iters` hops")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.api.Engine
-import graft.model.Node
+import graft.model.{EdgeRow, Node}
 import graft.store.TableCatalog
 import graft.streaming.EventStreams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -62,5 +62,30 @@ class IngestSpec extends SparkSpec {
     assert(cc(ids(0)) != cc(ids(3)))
     assert(cc(ids(0)) == Seq(ids(0), ids(1), ids(2)).min,
       "component labeled by smallest member id")
+    // ids that sort differently from creation order
+    Seq("n-c" -> "n-a", "n-b" -> "n-d", "n-d" -> "n-a").zipWithIndex.foreach {
+      case ((s, t), i) => catalog.upsertEdge(EdgeRow(s"cc-e$i", s, t, "cc", 1.0, "t0"))
+    }
+    val named = engine.connectedComponents().filter(_._1.startsWith("n-")).toMap
+    assert(named == Map("n-a" -> "n-a", "n-b" -> "n-a", "n-c" -> "n-a", "n-d" -> "n-a"))
+  }
+
+  test("engine connected components: a self-loop-only node is its own component") {
+    val catalog = new TableCatalog(spark)
+    val engine = new Engine(catalog)
+    Seq(("e1", "loop", "loop"), ("e2", "y", "x")).foreach { case (id, s, t) =>
+      catalog.upsertEdge(EdgeRow(id, s, t, "cc", 1.0, "t0"))
+    }
+    assert(engine.connectedComponents() ==
+      Seq("loop" -> "loop", "x" -> "x", "y" -> "x"))
+  }
+
+  test("engine connected components: representative is the UTF-16-smallest id") {
+    val catalog = new TableCatalog(spark)
+    val engine = new Engine(catalog)
+    val (bmp, astral) = ("a\uFFFD", "a\uD83D\uDE00") // U+FFFD, U+1F600
+    catalog.upsertEdge(EdgeRow("e1", bmp, astral, "cc", 1.0, "t0"))
+    // rows in Spark's (UTF-8) id order; the label is String.compareTo's minimum
+    assert(engine.connectedComponents() == Seq(bmp -> astral, astral -> astral))
   }
 }

@@ -8,7 +8,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 /** ScalaCheck properties (SURVEY §5c): embedding invariants, fusion
-  * linearity, top-k prefix soundness, BFS depth monotonicity.
+  * linearity, top-k prefix soundness, BFS depth monotonicity, connected
+  * components against a union-find.
   * (scalatestplus bridge unavailable offline → seeded Gen sampling.) */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
@@ -127,6 +128,37 @@ class PropertySpec extends SparkSpec {
       val got = Bfs.traverse(edges, lit(0L), depth, edgeType = etype.map(("etype", _)))
         .as[(Long, Int, Double)].collect().sorted.toSeq
       assert(got == expected, s"depth $depth, type $etype, edges $es")
+    }
+  }
+
+  test("connectedComponents == plain-Scala union-find: local, distributed, GraphX (6 samples)") {
+    // 16 random edges over 20 ids bring parallel edges, 2-cycles and
+    // self-loops; every sample adds a 2-cycle, a parallel edge, a
+    // self-loop-only node (500) and a 41-node chain (1000..1040), and
+    // every other sample a null-dst edge whose src (600) has no other edge
+    val edgeGen = Gen.listOfN(16, Gen.zip(Gen.choose(0L, 19L), Gen.choose(0L, 19L)))
+    forAll(Gen.zip(edgeGen, Gen.oneOf(false, true)), 6) { case (random, withNull) =>
+      val pairs = random ++ Seq((3L, 4L), (4L, 3L), (5L, 6L), (5L, 6L), (500L, 500L)) ++
+        (1000L until 1040L).map(i => (i, i + 1))
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) => parent(find(a)) = find(b) }
+      val expected = parent.keys.toSeq.groupBy(find).values
+        .flatMap(members => members.map(_ -> members.min)).toSeq.sorted
+      val edges = (pairs.map { case (a, b) => (a, Option(b)) } ++
+        (if (withNull) Seq((600L, None)) else Nil)).toDF("src", "dst")
+      def cc(e: org.apache.spark.sql.DataFrame, limit: Long) =
+        graft.graph.GraphAnalytics.connectedComponents(e, maxIters = 64, localEdgeLimit = limit)
+          .as[(Long, Long)].collect().sorted.toSeq
+      assert(cc(edges, 1L << 22) == expected, s"local path, edges $random")
+      assert(cc(edges, 0L) == expected, s"distributed path, edges $random")
+      assert(cc(edges.repartition(7), 0L) == expected, s"distributed, 7 partitions")
+      if (!withNull) assert(graft.graph.GraphXOps
+        .connectedComponents(edges.withColumn("weight", lit(1.0)))
+        .as[(Long, Long)].collect().sorted.toSeq == expected, "GraphX reference")
     }
   }
 

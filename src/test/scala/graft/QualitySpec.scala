@@ -202,9 +202,9 @@ class QualitySpec extends SparkSpec {
     val edges = ((0L until 40L).map(i => (i, i + 1)) ++
       Seq((100L, 101L), (101L, 102L), (102L, 100L), (200L, 201L)))
       .toDF("src", "dst")
-    val local = GraphAnalytics.connectedComponentsGated(edges, maxIters = 24)
+    val local = GraphAnalytics.connectedComponents(edges, maxIters = 24)
       .as[(Long, Long)].collect().toMap
-    val dist = GraphAnalytics.connectedComponentsGated(edges, maxIters = 24,
+    val dist = GraphAnalytics.connectedComponents(edges, maxIters = 24,
       localEdgeLimit = 0L).as[(Long, Long)].collect().toMap
     assert(local == dist)
     assert((0L to 40L).forall(local(_) == 0L) &&

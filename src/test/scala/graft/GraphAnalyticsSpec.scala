@@ -82,7 +82,9 @@ class GraphAnalyticsSpec extends SparkSpec {
       "seed must gain relative rank under personalization")
   }
 
-  test("connectedComponents distributed path: equals GraphX CC; pointer jumping beats flooding") {
+  // named for the former connectedComponentsDf entry point: the same
+  // pointer-jumping loop is connectedComponents past its local gate
+  test("connectedComponentsDf: equals GraphX CC; pointer jumping beats flooding") {
     val edges = Tables(spark, sf, "events")
       .select($"user_id".as("src"),
         (get_json_object($"props", "$.k").cast("long") % 15).as("dst"))

@@ -5,8 +5,10 @@ import java.nio.charset.StandardCharsets
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.functions._
@@ -34,35 +36,94 @@ case class DotProductD(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "vec_dot"
 
-  /** Strict left-to-right accumulation — keeps the result bit-identical to
-    * an equivalent sequential oracle computation (SURVEY §7.5.3). */
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
-    acc
+  /** The arrays actually read: a side that is an array<float> cast to
+    * array<double> (how `vec.dot` takes a stored embedding) is read as the
+    * float array itself, `getFloat(i)` widened to double. Widening is
+    * exact, so every product and sum is bit-identical to the cast form,
+    * without the per-row array copy the cast makes. */
+  @transient private lazy val (leftIn, leftFloat) = DotProductD.throughCast(left)
+  @transient private lazy val (rightIn, rightFloat) = DotProductD.throughCast(right)
+
+  override def eval(input: InternalRow): Any = {
+    val a = leftIn.eval(input)
+    if (a == null) null
+    else {
+      val b = rightIn.eval(input)
+      if (b == null) null
+      else DotProductD.dot(a.asInstanceOf[ArrayData], leftFloat,
+        b.asInstanceOf[ArrayData], rightFloat)
+    }
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val a = leftIn.genCode(ctx)
+    val b = rightIn.genCode(ctx)
+    val n = ctx.freshName("n")
+    val i = ctx.freshName("i")
+    val acc = ctx.freshName("acc")
+    def get(arr: ExprCode, float: Boolean) =
+      if (float) s"(double) ${arr.value}.getFloat($i)" else s"${arr.value}.getDouble($i)"
+    // strict left-to-right accumulation, as in `DotProductD.dot`
+    val body =
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = java.lang.Math.min(${a.value}.numElements(), ${b.value}.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
+         |  $acc += ${get(a, leftFloat)} * ${get(b, rightFloat)};
          |}
          |${ev.value} = $acc;
        """.stripMargin
-    })
+    if (nullable) {
+      val onRight = ctx.nullSafeExec(rightIn.nullable, b.isNull)(s"${ev.isNull} = false;\n$body")
+      ev.copy(code = code"""
+        ${a.code}
+        boolean ${ev.isNull} = true;
+        double ${ev.value} = 0.0;
+        ${ctx.nullSafeExec(leftIn.nullable, a.isNull)(s"${b.code}\n$onRight")}
+      """)
+    } else {
+      ev.copy(code = code"""
+        ${a.code}
+        ${b.code}
+        double ${ev.value} = 0.0;
+        $body
+      """, isNull = FalseLiteral)
+    }
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProductD =
     copy(left = l, right = r)
+}
+
+object DotProductD {
+
+  /** (the expression to read, whether it is an array<float>): looks
+    * through a cast of a float array to array<double>. */
+  def throughCast(e: Expression): (Expression, Boolean) = e match {
+    case Cast(c, ArrayType(DoubleType, _), _, _) => c.dataType match {
+      case ArrayType(FloatType, _) => (c, true)
+      case _ => (e, false)
+    }
+    case _ => (e, false)
+  }
+
+  /** Strict left-to-right accumulation over the common prefix — keeps the
+    * result bit-identical to an equivalent sequential oracle computation
+    * (SURVEY §7.5.3). A float side is widened element by element. */
+  def dot(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var acc = 0.0
+    var i = 0
+    if (xFloat && yFloat)
+      while (i < n) { acc += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
+    else if (xFloat)
+      while (i < n) { acc += x.getFloat(i).toDouble * y.getDouble(i); i += 1 }
+    else if (yFloat)
+      while (i < n) { acc += x.getDouble(i) * y.getFloat(i).toDouble; i += 1 }
+    else
+      while (i < n) { acc += x.getDouble(i) * y.getDouble(i); i += 1 }
+    acc
+  }
 }
 
 /** Fused cosine similarity: dot(a,b), ‖a‖², ‖b‖² in ONE pass over the

@@ -21,9 +21,11 @@ import org.apache.spark.sql.types._
   * exercise (chains, stars, 2-cycles) and is what the recursive-CTE oracle
   * computes, so the declared checks are self-consistent.
   *
-  * Scale: a level costs one job (a filtered scan, no shuffle) and the loop
-  * stops at the first empty frontier, so a traversal runs at most `depth`
-  * jobs and holds nothing in the block manager. Each level's collected
+  * Scale: a level costs one filtered scan (no shuffle) and the loop stops
+  * at the first empty frontier, so a traversal runs at most `depth` jobs
+  * and holds nothing in the block manager; over the serving catalog's
+  * driver-held `LocalRelation` edges Spark folds each scan on the driver
+  * and a traversal runs no job. Each level's collected
   * edges plus the visited set pass [[GraphAnalytics.requireDriverFits]]
   * before they are kept: an ego traversal's frontier is a handful of ids,
   * and one that would not fit the driver fails loudly. The isolated-start

@@ -917,7 +917,8 @@ object GraphAnalytics {
   val LocalFinishRowBytes = 96L
 
   /** Guard for the size-gated driver-side local finishes
-    * ([[connectedComponents]], [[stronglyConnectedComponents]]): refuse
+    * ([[connectedComponents]], [[stronglyConnectedComponents]], the BFS
+    * frontier) and the serving catalog's load: refuse
     * the collect when the bytes estimate exceeds a quarter of the heap
     * currently available to the driver JVM — a fat edge list fails
     * LOUDLY with an actionable message instead of OOMing the driver

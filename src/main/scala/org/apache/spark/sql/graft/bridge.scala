@@ -51,4 +51,10 @@ object bridge {
         case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
         case er: org.apache.spark.sql.execution.ExternalRDD[_] => er.rdd
       }
+
+  /** Wait until every event posted so far has reached the session's
+    * listeners (the listener bus is `private[spark]`), so a count read
+    * after it covers everything the code before it ran. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

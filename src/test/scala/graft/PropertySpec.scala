@@ -207,4 +207,78 @@ class PropertySpec extends SparkSpec {
         s"missed=${(brute -- got).take(3)} extra=${(got -- brute).take(3)}")
     }
   }
+
+  test("TableCatalog == plain-Scala model over random write sequences (4 samples)") {
+    import graft.model.{EdgeRow, EmbeddingRow, Node}
+    import graft.store.TableCatalog
+    // a 5-node, 6-edge id pool makes repeats, cascades and re-inserts common
+    val nodeId = Gen.oneOf((0 until 5).map(i => s"n$i"))
+    val edgeId = Gen.oneOf((0 until 6).map(i => s"e$i"))
+    val node = Gen.zip(nodeId, word, Gen.oneOf("t0", "t1"))
+      .map { case (id, t, ts) => Node(id, t, Map("k" -> t.take(1)), "c", ts) }
+    val emb = Gen.zip(nodeId, Gen.listOf(Gen.choose(-1.0f, 1.0f)))
+      .map { case (id, v) => EmbeddingRow(id, v, v.length) }
+    val edge = Gen.zip(edgeId, nodeId, nodeId, Gen.oneOf("a", "b"), Gen.choose(0.5, 3.0))
+      .map { case (id, s, t, ty, w) => EdgeRow(id, s, t, ty, w, "c") }
+    // a bulk batch always repeats its first id, with a later row
+    def batch[A](g: Gen[A], relabel: (A, A) => A): Gen[Seq[A]] =
+      Gen.zip(Gen.nonEmptyListOf(g), g).map { case (b, x) => b :+ relabel(b.head, x) }
+    trait Op
+    case class UpNode(n: Node) extends Op
+    case class UpEmb(e: EmbeddingRow) extends Op
+    case class UpEdge(e: EdgeRow) extends Op
+    case class DelNode(id: String) extends Op
+    case class DelEdge(id: String) extends Op
+    case class UpNodes(b: Seq[Node], distributed: Boolean) extends Op
+    case class UpEdges(b: Seq[EdgeRow], distributed: Boolean) extends Op
+    val op: Gen[Op] = Gen.frequency(
+      3 -> node.map(UpNode), 2 -> emb.map(UpEmb), 3 -> edge.map(UpEdge),
+      2 -> nodeId.map(DelNode), 1 -> edgeId.map(DelEdge),
+      1 -> Gen.zip(batch[Node](node, (h, x) => x.copy(id = h.id)), Gen.oneOf(false, true))
+        .map(UpNodes.tupled),
+      1 -> Gen.zip(batch[EdgeRow](edge, (h, x) => x.copy(id = h.id)), Gen.oneOf(false, true))
+        .map(UpEdges.tupled))
+    // every sequence starts with n0 holding a self-loop, an in-edge and an
+    // out-edge, then deletes it
+    val prefix = Seq(UpNode(Node("n0", "hub", Map.empty, "c", "t0")),
+      UpEdge(EdgeRow("e0", "n0", "n0", "a", 1.0, "c")),
+      UpEdge(EdgeRow("e1", "n1", "n0", "a", 1.5, "c")),
+      UpEdge(EdgeRow("e2", "n0", "n2", "b", 2.0, "c")),
+      UpEmb(EmbeddingRow("n0", Seq(1.0f), 1)), DelNode("n0"))
+    forAll(Gen.listOfN(30, op), n = 4) { random =>
+      val catalog = new TableCatalog(spark)
+      var nodes = Map.empty[String, Node]
+      var embs = Map.empty[String, EmbeddingRow]
+      var edges = Map.empty[String, EdgeRow]
+      var nodesVer, embsVer = 0L
+      def frame[A: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](b: Seq[A], distributed: Boolean) =
+        (if (distributed) spark.createDataset(spark.sparkContext.parallelize(b, 3))
+         else b.toDS()).toDF()
+      (prefix ++ random).zipWithIndex.foreach { case (o, step) =>
+        o match {
+          case UpNode(n) => catalog.upsertNode(n); nodes += n.id -> n; nodesVer += 1
+          case UpEmb(e) => catalog.upsertEmbedding(e); embs += e.node_id -> e; embsVer += 1
+          case UpEdge(e) => catalog.upsertEdge(e); edges += e.id -> e
+          case DelNode(id) =>
+            catalog.deleteNode(id)
+            nodes -= id; embs -= id
+            edges = edges.filter { case (_, e) => e.source != id && e.target != id }
+            nodesVer += 1; embsVer += 1
+          case DelEdge(id) => catalog.deleteEdge(id); edges -= id
+          case UpNodes(b, d) =>
+            catalog.upsertNodes(frame(b, d)); nodes ++= b.map(n => n.id -> n); nodesVer += 1
+          case UpEdges(b, d) =>
+            catalog.upsertEdges(frame(b, d)); edges ++= b.map(e => e.id -> e)
+        }
+        val what = s"step $step: $o"
+        assert(catalog.nodes.as[Node].collect().sortBy(_.id).toSeq ==
+          nodes.values.toSeq.sortBy(_.id), what)
+        assert(catalog.embeddings.as[EmbeddingRow].collect().sortBy(_.node_id).toSeq ==
+          embs.values.toSeq.sortBy(_.node_id), what)
+        assert(catalog.edges.as[EdgeRow].collect().sortBy(_.id).toSeq ==
+          edges.values.toSeq.sortBy(_.id), what)
+        assert((catalog.nodesVersion, catalog.embeddingsVersion) == (nodesVer, embsVer), what)
+      }
+    }
+  }
 }

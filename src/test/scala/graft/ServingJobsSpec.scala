@@ -7,10 +7,11 @@ import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
 /** Jobs per serving request on a 200-node Engine. Job counts repeat
-  * exactly from run to run, so a rise here is a real regression: a graph
-  * request is `depth` BFS scans plus the node-row and induced-edge scans,
-  * with no shuffle; getNode is the node, embedding and incident-edge
-  * collects. */
+  * exactly from run to run, so a rise here is a real regression. The
+  * catalog's tables are driver-held `LocalRelation`s and Spark folds a
+  * filter or projection over one on the driver, so a graph request, a
+  * getNode and every write run no job; vector and hybrid search still
+  * join, sort and aggregate as Spark jobs. */
 class ServingJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -37,30 +38,54 @@ class ServingJobsSpec extends SparkSpec {
 
   lazy val counter = new JobCounter(spark)
 
-  test("graphSearch runs at most depth + 2 jobs and no shuffle") {
+  test("graphSearch runs no job") {
     engine.graphSearch("n-0", 1) // warm-up
     for (depth <- 1 to 3) {
-      val (g, jobs, shuffles) = counter.count(engine.graphSearch("n-0", depth))
-      info(s"depth $depth: $jobs jobs, $shuffles shuffle stages")
+      val (g, jobs, _) = counter.count(engine.graphSearch("n-0", depth))
+      info(s"depth $depth: $jobs jobs")
       assert(g.get.nodes.map(_.distance).max == depth, "the traversal reaches every level")
-      assert(jobs <= depth + 2, s"depth $depth: $jobs jobs")
-      assert(shuffles == 0, s"depth $depth: $shuffles shuffle stages")
+      assert(jobs == 0, s"depth $depth: $jobs jobs")
     }
   }
 
-  test("getNode runs 3 jobs") {
+  test("getNode runs no job") {
     val (n, jobs, _) = counter.count(engine.getNode("n-5"))
     info(s"$jobs jobs")
     assert(n.get.outgoing.size == 3 && n.get.incoming.nonEmpty)
-    assert(jobs == 3, s"$jobs jobs")
+    assert(jobs == 0, s"$jobs jobs")
   }
 
-  test("hybridSearch runs at most 13 jobs") {
+  test("node and edge writes run no job") {
+    def noJobs[A](what: String)(body: => A): A = {
+      val (a, jobs, _) = counter.count(body)
+      info(s"$what: $jobs jobs")
+      assert(jobs == 0, s"$what: $jobs jobs")
+      a
+    }
+    val n = noJobs("create node")(engine.createNode("a written node", Map("type" -> "w")))
+    noJobs("update node")(engine.updateNode(n.id, text = Some("rewritten"),
+      regenEmbedding = true))
+    val e = noJobs("create edge")(engine.createEdge(n.id, "n-7", "tw", 2.0)).get
+    assert(noJobs("update edge")(engine.updateEdge(e.id, weight = Some(3.0))).get.weight == 3.0)
+    assert(noJobs("delete edge")(engine.deleteEdge(e.id)))
+    assert(noJobs("delete node")(engine.deleteNode(n.id)))
+    assert(engine.getNode(n.id).isEmpty)
+  }
+
+  test("vectorSearch runs at most 2 jobs") {
+    engine.vectorSearch("node text 3", topK = 10)
+    val (v, jobs, _) = counter.count(engine.vectorSearch("node text 5", topK = 10))
+    info(s"$jobs jobs")
+    assert(v.size == 10)
+    assert(jobs <= 2, s"$jobs jobs")
+  }
+
+  test("hybridSearch runs at most 7 jobs") {
     engine.hybridSearch("node text 3", topK = 10, graphStartId = Some("n-0"))
     val (h, jobs, _) = counter.count(
       engine.hybridSearch("node text 5", topK = 10, graphStartId = Some("n-0")))
     info(s"$jobs jobs")
     assert(h.get.size == 10)
-    assert(jobs <= 13, s"$jobs jobs")
+    assert(jobs <= 7, s"$jobs jobs")
   }
 }

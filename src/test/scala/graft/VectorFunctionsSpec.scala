@@ -60,6 +60,63 @@ class VectorFunctionsSpec extends SparkSpec {
     assert(got(1)._2 == 0.5 * 2.0 + -1.0 * 0.25 + 2.0 * -1.0)
   }
 
+  test("vec_dot reads a float array through its cast, bit-identical to the cast form, codegen and interpreted") {
+    import graft.functions.DotProductD
+    val rng = new scala.util.Random(11)
+    val specials = Array(Float.NaN, 0.0f, -0.0f, Float.MinPositiveValue, -1.0e-40f,
+      1.17549435e-38f, Float.MaxValue, Float.NegativeInfinity)
+    def arr(): Option[Seq[Float]] =
+      if (rng.nextInt(8) == 0) None
+      else Some(Seq.fill(rng.nextInt(12))(
+        if (rng.nextInt(3) == 0) specials(rng.nextInt(specials.length))
+        else (rng.nextGaussian() * 10).toFloat))
+    // unequal lengths, null arrays and the special values in every pairing;
+    // an RDD source, so the projection runs in a physical plan
+    val rows = (0 until 300).map(i => (i, arr(), arr()))
+    val floats = spark.createDataset(spark.sparkContext.parallelize(rows, 4))
+      .toDF("id", "a", "b")
+    // the cast form: Spark's own float -> double cast, materialized first
+    val cast = floats.select($"id", $"a".cast("array<double>").as("a"),
+      $"b".cast("array<double>").as("b")).collect()
+    val doubles = spark.createDataFrame(spark.sparkContext.parallelize(cast.toSeq, 4),
+      cast.head.schema)
+    val q = typedlit(Seq.fill(12)(rng.nextGaussian()))
+    def dots(df: org.apache.spark.sql.DataFrame, other: org.apache.spark.sql.DataFrame) =
+      df.join(other.select($"id", $"a".as("oa"), $"b".as("ob")), "id").select($"id",
+        vec.dot($"a", $"b"), vec.dot($"a", $"ob"), vec.dot($"oa", $"b"), vec.dot($"a", q))
+    def bits(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Option[Long]]] =
+      df.collect().map(r => r.getInt(0) -> (1 to 4).map(i =>
+        if (r.isNullAt(i)) None
+        else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i))))).toMap
+    // the float side really is read through the cast
+    val planned = floats.select(vec.dot($"a", q)).queryExecution.analyzed.expressions
+      .flatMap(_.collect { case d: DotProductD => d })
+    assert(planned.nonEmpty && planned.forall(d => DotProductD.throughCast(d.left)._2 &&
+      !DotProductD.throughCast(d.right)._2))
+    def withConf[A](kv: (String, String)*)(body: => A): A = {
+      val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally old.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    val codegen = (bits(dots(floats, doubles)), bits(dots(doubles, floats)))
+    val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false") {
+      (bits(dots(floats, doubles)), bits(dots(doubles, floats)))
+    }
+    val reference = bits(dots(doubles, doubles))
+    assert(reference.size == rows.size && reference.values.flatten.count(_.isEmpty) > 0)
+    assert(reference.values.flatten.flatten.exists(b => java.lang.Double.isNaN(
+      java.lang.Double.longBitsToDouble(b))), "NaN products are covered")
+    Seq("codegen" -> codegen, "interpreted" -> interpreted).foreach { case (mode, (f, d)) =>
+      // floats first: float·float, float·double, double·float, float·literal;
+      // doubles first: double·double, double·float, float·double, double·literal
+      rows.foreach { case (i, _, _) =>
+        assert(f(i) == reference(i), s"$mode, floats first, row $i")
+        assert(d(i) == reference(i), s"$mode, doubles first, row $i")
+      }
+    }
+  }
+
   test("cosine: unit self-similarity and zero-vector convention") {
     val df = Seq(
       (1L, Seq(3.0f, 4.0f)),

@@ -370,10 +370,15 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
       None // 404 contract, app.py:909-910
     else {
       val q = HashEmbed.encode(queryText, dim)
-      val vecScores = catalog.embeddings
+      val scored = catalog.embeddings
         .filter($"dim" === q.length)
         .select($"node_id".as("id"),
           vec.dot($"vector", typedlit(q.toSeq.map(_.toDouble))).as("vector_score"))
+      // score once: the projection folds on the driver over the driver-held
+      // embeddings, and `fuse` reads its scores twice (min/max and the
+      // join), so hand it the collected rows rather than the projection
+      val vecScores = spark.createDataFrame(
+        java.util.Arrays.asList(scored.collect(): _*), scored.schema)
       val graphScores = graphStartId.map { start =>
         // hybrid BFS ignores edge_type (app.py:712)
         val bfs = Bfs.traverse(catalog.edges, lit(start), graphDepth,

@@ -1,8 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.types.DecimalType
 
 /** Whole-graph analytics over an edge DataFrame (src, dst, ...) — the
   * batch-analytics layer above the reference's per-request traversals
@@ -11,6 +13,20 @@ import org.apache.spark.sql.functions._
   * unchanged on a real cluster.
   */
 object GraphAnalytics {
+
+  /** `df.localCheckpoint()` together with the aggregate `stat` over its
+    * rows, observed (`Dataset.observe`) on the same job that materializes
+    * the checkpoint — a loop's stop statistic costs no second job
+    * re-reading the blocks. */
+  private[graft] def checkpointObserved[T](df: DataFrame, stat: Column): (DataFrame, T) = {
+    val obs = Observation()
+    val cp = df.observe(obs, stat.as("stat")).localCheckpoint()
+    (cp, obs.get("stat").asInstanceOf[T])
+  }
+
+  /** [[checkpointObserved]] with the row count as the statistic. */
+  private def checkpointCounted(df: DataFrame): (DataFrame, Long) =
+    checkpointObserved[Long](df, count(lit(1)))
 
   /** Undirected simple edge set: canonical (u < v) pairs, self-loops and
     * parallel edges dropped. */
@@ -199,7 +215,7 @@ object GraphAnalytics {
     * doesn't grow multiplicatively with iteration count.
     */
   def pageRankFixedPoint(edges: DataFrame, iters: Int): DataFrame =
-    fixedPointRank(edges, lit(true), _.count(), iters)
+    fixedPointRank(edges, lit(true), identity, iters)
 
   /** Personalized PageRank: the [[pageRankFixedPoint]] kernel, but ALL
     * teleport mass returns to the seed set (init = PrScale/|S| on seeds,
@@ -215,15 +231,15 @@ object GraphAnalytics {
 
   /** The integer PageRank kernel: nodes where `isSeed` (over the node
     * column `n`) holds start at PrScale/|S| and receive the teleport
-    * base, where |S| = `seedCount` of the node table. A zero count
+    * base, where |S| = `seedCount(|V|)`. A zero count
     * (PageRank of an empty graph) returns the empty node table. */
   private def fixedPointRank(edges: DataFrame, isSeed: Column,
-                             seedCount: DataFrame => Long, iters: Int): DataFrame = {
+                             seedCount: Long => Long, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("n"))
-      .union(e.select(col("dst").as("n"))).distinct().localCheckpoint()
+    val (nodes, nodeRows) = checkpointCounted(e.select(col("src").as("n"))
+      .union(e.select(col("dst").as("n"))).distinct())
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("od"))
-    val n = seedCount(nodes)
+    val n = seedCount(nodeRows)
     if (n == 0)
       return nodes.select(col("n").as("node"), lit(0L).as("rank_fp"))
     val init = PrScale / n
@@ -269,9 +285,8 @@ object GraphAnalytics {
     * principal eigenvector direction after `iters` rounds. */
   def eigenvectorCentrality(edges: DataFrame, iters: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("n"))
-      .union(e.select(col("dst").as("n"))).distinct().localCheckpoint()
-    val n = nodes.count()
+    val (nodes, n) = checkpointCounted(e.select(col("src").as("n"))
+      .union(e.select(col("dst").as("n"))).distinct())
     if (n == 0)
       return nodes.select(col("n").as("node"), lit(0L).as("eig_fp"))
     // seed = max(share, 1): for n ≤ EigScale this IS the exact 10^6/n
@@ -327,22 +342,23 @@ object GraphAnalytics {
     arr
   }
 
-  /** Both directions of the undirected simple edge set — the adjacency
-    * relation the per-node iterative algorithms below join against. */
+  /** Both directions of the undirected simple edge set (u, v) — the
+    * adjacency relation the per-node iterative algorithms below join
+    * against. */
   private def bothWays(edges: DataFrame): DataFrame = {
     val und = undirected(edges)
     und.unionAll(und.select(col("v"), col("u"))).toDF("u", "v")
   }
 
-  /** The checkpointed both-ways adjacency helpers derive internally —
-    * public so a COMPOSED query (LPA feeding a Louvain move / modularity
-    * score) can build it ONCE and hand the same frame to every stage
-    * (r14-opt: each helper re-deriving it paid one extra undirected
-    * distinct + materialization of the full edge list per stage). */
+  /** The checkpointed both-ways adjacency `ee` that [[labelPropagation]],
+    * [[modularity]] and [[louvainMove]] take — a composed query (LPA
+    * feeding a Louvain move or a modularity score) builds it ONCE and
+    * hands the same frame to every stage. */
   def bothWaysCheckpointed(edges: DataFrame): DataFrame =
     bothWays(edges).localCheckpoint()
 
-  /** Synchronous min-label propagation, `iters` rounds of
+  /** Synchronous min-label propagation over the both-ways adjacency `ee`
+    * ([[bothWaysCheckpointed]]), `iters` rounds of
     * label(v) ← min(label(v), min over neighbors label(u)), labels seeded
     * with node ids. The min semiring makes every round order-independent —
     * no random tie-breaks, so the result hash-matches a sequential oracle
@@ -360,10 +376,7 @@ object GraphAnalytics {
     * Spark job for the entire propagation instead of one per round.
     * Recurrence unchanged: lab'(v) = min_{u ∈ N(v) ∪ {v}} lab(u) ≡
     * min(lab(v), min_{u∼v} lab(u)); BIGINT min, so bit-identical. */
-  def labelPropagation(edges: DataFrame, iters: Int,
-                       prebuiltEe: DataFrame = null): DataFrame = {
-    val ee = if (prebuiltEe != null) prebuiltEe
-      else bothWays(edges).localCheckpoint()
+  def labelPropagation(ee: DataFrame, iters: Int): DataFrame = {
     // Lazy narrow union over the checkpointed adjacency: one (u, u) row per
     // EDGE row (duplicates are absorbed by the min) — no distinct shuffle,
     // no second materialized copy of the edge list.
@@ -377,8 +390,7 @@ object GraphAnalytics {
     }
     // Materialize ONCE at the end: composed consumers (modularity reads the
     // labeling twice, louvainMove four times) must not re-execute the whole
-    // chain per reference. 2 eager jobs total (eeSelf + result) vs the old
-    // one-per-round.
+    // chain per reference: one eager job for the result, not one per round.
     lab.localCheckpoint()
   }
 
@@ -390,15 +402,15 @@ object GraphAnalytics {
     * a min — order-independent, so the answer hash-matches a
     * true-reachability oracle at any parallelism.
     *
-    * The canonical (u ≤ v) edge rows are counted once. At or under
-    * `localEdgeLimit` — after a [[requireDriverFits]] heap check — it is
-    * collected and solved with one driver-side union-find pass, because
-    * below a few million edges the per-round scheduling of a distributed
-    * fixpoint costs more than the whole problem. Above the gate each
-    * round runs (1) a neighbor-min step label(v) ← min(label(v),
-    * min_{u∼v} label(u)) — the [[labelPropagation]] kernel — then (2) a
-    * pointer-jumping step label(v) ← min(label(v), label(label(v))) that
-    * chases each label one hop up its own component tree. Jumping
+    * The canonical (u ≤ v) edge rows are checkpointed, and their count is
+    * observed on that job. At or under `localEdgeLimit` — after a
+    * [[requireDriverFits]] heap check — they are collected and solved with
+    * one driver-side union-find pass, because below a few million edges
+    * the per-round scheduling of a distributed fixpoint costs more than
+    * the whole problem. Above the gate the min-side [[labelFixpoint]]
+    * runs over the deduplicated both-ways edges: each round a neighbor-min
+    * step, then a pointer jump label(v) ← min(label(v), label(label(v)))
+    * that chases each label one hop up its own component tree. Jumping
     * roughly doubles the radius the component minimum has flooded per
     * round, so convergence takes O(log diam) rounds instead of O(diam).
     * The loop stops on the first round that changes no label and fails
@@ -411,10 +423,8 @@ object GraphAnalytics {
     val (s, d) = (col("src").cast("long"), col("dst").cast("long"))
     // duplicates stay until the gate: the union-find absorbs them, so only
     // the distributed path pays the dedup shuffle
-    val und = edges.filter(s.isNotNull && d.isNotNull)
-      .select(least(s, d).as("u"), greatest(s, d).as("v"))
-      .localCheckpoint()
-    val m = und.count()
+    val (und, m) = checkpointCounted(edges.filter(s.isNotNull && d.isNotNull)
+      .select(least(s, d).as("u"), greatest(s, d).as("v")))
     if (m <= localEdgeLimit) {
       requireDriverFits(m, "connected components")
       val spark = edges.sparkSession
@@ -422,37 +432,48 @@ object GraphAnalytics {
       minRootUnionFind(und.as[(Long, Long)].collect()).toDF("node", "component")
     } else {
       val ee = und.unionAll(und.select(col("v"), col("u"))).distinct()
-        .localCheckpoint()
-      var lab = ee.select(col("u").as("node")).distinct()
-        .select(col("node"), col("node").as("comp"))
-        .localCheckpoint()
-      var converged = false
-      var round = 0
-      while (!converged && round < maxIters) {
-        round += 1
-        val nb = ee.join(lab, ee("u") === lab("node"))
-          .select(ee("v").as("node"), col("comp"))
-        val stepped = lab.unionByName(nb)
-          .groupBy("node").agg(min(col("comp")).as("comp"))
-        // labels are always node ids, so comp(n) resolves in `stepped` itself
-        val next = stepped.join(
-            stepped.select(col("node").as("comp"), col("comp").as("pcomp")),
-            Seq("comp"))
-          .select(col("node"), least(col("comp"), col("pcomp")).as("comp"))
-          .localCheckpoint()
-        val changed = next.join(lab.select(col("node"), col("comp").as("prev")),
-            Seq("node"))
-          .filter(col("comp") =!= col("prev")).count()
-        // `changed` was the last reader of the previous round's checkpoint
-        org.apache.spark.sql.graft.bridge.unpersistCheckpoint(lab)
-        lab = next
-        converged = changed == 0L
-      }
-      require(converged,
-        s"connected components did not converge in $maxIters pointer-doubling " +
-          "rounds; raise the budget (labels would silently be wrong)")
-      lab.select(col("node"), col("comp").as("component"))
+        .toDF("src", "dst").localCheckpoint()
+      val init = ee.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("lab")).localCheckpoint()
+      labelFixpoint(ee, init, Nil, min(_), least(_, _), maxIters, "connected components")
+        .select(col("node"), col("lab").as("component"))
     }
+  }
+
+  /** The pointer-jumping label fixpoint of [[connectedComponents]] and
+    * [[stronglyConnectedComponents]]. Over the directed adjacency `adj`
+    * (src, dst, keys…) and start labels `init` (node, keys…, lab) — every
+    * label the id of a node of the same keys — each round runs a neighbor
+    * step lab(v) ← pick(lab(v), pick_{u→v} lab(u)) and then a pointer jump
+    * lab(v) ← jump(lab(v), lab(lab(v))), where (pick, jump) is (min,
+    * least) or (max, greatest). Labels thus move one way only, so a
+    * round whose label sum (DECIMAL(38,0), observed on the round's
+    * checkpoint) equals the previous round's moved no label: the loop
+    * stops there; round 1 has no previous sum, so at least two rounds
+    * run. Each round frees the checkpoint it replaces; after `maxRounds`
+    * rounds without that fixpoint it fails naming `what`. */
+  private def labelFixpoint(adj: DataFrame, init: DataFrame, keys: Seq[String],
+                            pick: Column => Column, jump: (Column, Column) => Column,
+                            maxRounds: Int, what: String): DataFrame = {
+    val k = keys.map(col)
+    @annotation.tailrec
+    def loop(lab: DataFrame, prev: java.math.BigDecimal, round: Int): DataFrame = {
+      require(round < maxRounds, s"$what did not converge in $maxRounds " +
+        "pointer-jumping rounds; raise the budget (labels would silently be wrong)")
+      val nb = adj.join(lab.withColumnRenamed("node", "src"), "src" +: keys)
+        .select(col("dst").as("node") +: k :+ col("lab"): _*)
+      val stepped = lab.unionByName(nb)
+        .groupBy(col("node") +: k: _*).agg(pick(col("lab")).as("lab"))
+      // labels are node ids of the same keys, so lab(lab) resolves in `stepped`
+      val (next, total) = checkpointObserved[java.math.BigDecimal](
+        stepped.join(stepped.select(col("node").as("lab") +: k :+
+            col("lab").as("plab"): _*), "lab" +: keys)
+          .select(col("node") +: k :+ jump(col("lab"), col("plab")).as("lab"): _*),
+        sum(col("lab").cast(DecimalType(38, 0))))
+      bridge.unpersistCheckpoint(lab)
+      if (total == prev) next else loop(next, total, round + 1)
+    }
+    loop(init, null, 0)
   }
 
   /** Driver-side union-find over `pairs`, iterative so a chain-shaped
@@ -477,7 +498,8 @@ object GraphAnalytics {
   }
 
   /** Per-community Newman modularity contributions for a given node
-    * labeling (e.g. [[labelPropagation]]'s): for community c,
+    * labeling (e.g. [[labelPropagation]]'s) over the both-ways adjacency
+    * `ee` ([[bothWaysCheckpointed]]): for community c,
     * q_c = e_c/(2m) − (d_c/(2m))², where e_c counts BOTH directions of
     * intra-community edges, d_c is the community degree sum, and 2m is the
     * directed-pair count of the undirected simple graph — Σ q_c is the
@@ -488,10 +510,7 @@ object GraphAnalytics {
     * two label joins on the edge list + two small aggs — linear, no
     * all-pairs anywhere. Returns (label, n_nodes, e_intra2, deg_sum,
     * q_contrib). */
-  def modularity(edges: DataFrame, labels: DataFrame,
-                 prebuiltEe: DataFrame = null): DataFrame = {
-    val ee = if (prebuiltEe != null) prebuiltEe
-      else bothWays(edges).localCheckpoint()
+  def modularity(ee: DataFrame, labels: DataFrame): DataFrame = {
     val m2 = ee.agg(count(lit(1)).as("m2"))
     val lu = labels.select(col("node").as("u"), col("label").as("lu"))
     val lv = labels.select(col("node").as("v"), col("label").as("lv"))
@@ -535,7 +554,8 @@ object GraphAnalytics {
 
   /** One synchronous Louvain local-moving round (Blondel et al. 2008
     * phase 1, the simultaneous-update variant distributed Louvain
-    * implementations use): every node simultaneously re-labels to the
+    * implementations use) over the both-ways adjacency `ee`
+    * ([[bothWaysCheckpointed]]): every node simultaneously re-labels to the
     * candidate community c — a neighbor's label or its own — maximizing
     * the INTEGER move score m2·e(u,c) − d(u)·d'(c), where e(u,c) counts
     * u's edges into c, d'(c) is c's degree sum excluding u when c is u's
@@ -553,10 +573,7 @@ object GraphAnalytics {
     * Scale shape: degree/community aggregations + one (u, neighbor-label)
     * groupBy + one per-node argmax window — all linear in |E|, keyed by
     * node or label, never all-pairs. Returns (node, label). */
-  def louvainMove(edges: DataFrame, labels: DataFrame,
-                  prebuiltEe: DataFrame = null): DataFrame = {
-    val ee = if (prebuiltEe != null) prebuiltEe
-      else bothWays(edges).localCheckpoint()
+  def louvainMove(ee: DataFrame, labels: DataFrame): DataFrame = {
     val m2 = ee.agg(count(lit(1)).as("m2"))
     val deg = ee.groupBy("u").agg(count(lit(1)).as("deg"))
     val dc = deg.join(labels.select(col("node").as("u"), col("label")), "u")
@@ -582,65 +599,6 @@ object GraphAnalytics {
       .select(col("u").as("node"), col("c").as("label"))
   }
 
-  /** The weighted Louvain local-moving round [[louvainMove]]'s integer
-    * discipline generalizes to — the round that runs on a COARSENED
-    * super-graph ([[coarsenGraph]]'s (c1 ≤ c2, weight) output, self-loops
-    * carrying intra-community weight), which is what makes multi-level
-    * Louvain possible: level L's move reads level L−1's super-graph, so
-    * each level's cost is the (shrinking) super-edge count, never the
-    * original |E|. Semantics per Blondel et al. 2008 on weighted graphs:
-    * node u moves to the candidate community c (a neighbor's label or its
-    * own) maximizing m2·e(u,c) − wdeg(u)·d'(c), where e(u,c) = Σ w(u,v)
-    * over u's non-self edges into c, wdeg(u) = Σ_adj w + 2·w_self(u)
-    * (a self-loop contributes both endpoints), d'(c) = Σ wdeg over c's
-    * members excluding u when c is u's own community, and m2 = 2·Σ all
-    * weights — equal to the ORIGINAL graph's 2m when the weights came
-    * from [[coarsenGraph]], so scores are commensurate across levels.
-    * All-BIGINT, smallest-label tie-break, synchronous (all nodes decide
-    * from the old labels): bit-identical at any parallelism, oracle-
-    * replayable. With unit weights and no self-loops this IS
-    * [[louvainMove]] (spec-pinned). Caveat, measured on the bipartite
-    * event fixture: simultaneous moves of MANY super-nodes into one
-    * target can collectively overshoot and lower modularity — the
-    * declared multi-level pipeline therefore uses the guaranteed-monotone
-    * [[louvainMergeRound]] at level 2 and keeps this sweep for
-    * seed-refinement shapes where per-node gains dominate. Returns
-    * (node, label). */
-  def louvainMoveWeighted(superEdges: DataFrame, labels: DataFrame): DataFrame = {
-    val und = superEdges.filter(col("c1") =!= col("c2"))
-      .select(col("c1").as("u"), col("c2").as("v"), col("weight"))
-    val adj = und.unionByName(und.select(col("v").as("u"), col("u").as("v"),
-      col("weight"))).localCheckpoint()
-    val selfW = superEdges.filter(col("c1") === col("c2"))
-      .select(col("c1").as("u"), col("weight").as("wself"))
-    val m2 = superEdges.agg((sum(col("weight")) * lit(2L)).as("m2"))
-    val nodes = labels.select(col("node").as("u"))
-    val deg = nodes
-      .join(adj.groupBy("u").agg(sum(col("weight")).as("aw")), Seq("u"), "left")
-      .join(selfW, Seq("u"), "left")
-      .select(col("u"), (coalesce(col("aw"), lit(0L)) +
-        lit(2L) * coalesce(col("wself"), lit(0L))).as("wdeg"))
-    val dc = deg.join(labels.select(col("node").as("u"), col("label")), "u")
-      .groupBy(col("label").as("c")).agg(sum(col("wdeg")).as("dsum"))
-    val euc = adj.join(labels.select(col("node").as("v"), col("label").as("c")), "v")
-      .groupBy(col("u"), col("c")).agg(sum(col("weight")).as("e"))
-    val cand = euc.unionByName(
-        labels.select(col("node").as("u"), col("label").as("c"), lit(0L).as("e")))
-      .groupBy(col("u"), col("c")).agg(max(col("e")).as("e"))
-    val own = labels.select(col("node").as("u"), col("label").as("own"))
-    val wBest = Window.partitionBy(col("u"))
-      .orderBy(col("score").desc, col("c"))
-    // same skew rule as louvainMove: dc/deg/m2 are label- or node-count
-    // sized and the label key is skewed — broadcast, never shuffle cand by c
-    cand.join(deg, "u").join(broadcast(dc), "c").join(own, "u")
-      .crossJoin(broadcast(m2))
-      .withColumn("score", col("m2") * col("e") - col("wdeg") *
-        (col("dsum") - when(col("c") === col("own"), col("wdeg")).otherwise(lit(0L))))
-      .withColumn("rn", row_number().over(wBest))
-      .filter(col("rn") === 1)
-      .select(col("u").as("node"), col("c").as("label"))
-  }
-
   /** One agglomerative community-merge round over a coarsened super-graph
     * ([[coarsenGraph]]'s (c1 ≤ c2, weight), self-loops carrying intra
     * weight) — the level-2 step of the declared multi-level Louvain
@@ -653,10 +611,10 @@ object GraphAnalytics {
     * disjoint by construction, every accepted merge strictly increases
     * modularity, hence Q(level 2) > Q(level 1) whenever any merge fires
     * and Q never decreases — the guarantee a SYNCHRONOUS local-move sweep
-    * cannot give at this granularity ([[louvainMoveWeighted]]'s
-    * simultaneous moves can collectively overshoot: measured Q −0.23 →
-    * −0.5 on the bipartite event fixture when every node piles into the
-    * same hub community). This is heavy-edge matching agglomeration
+    * cannot give at this granularity (a weighted [[louvainMove]] over the
+    * super-graph, where every super-node moves at once, can collectively
+    * overshoot: measured Q −0.23 → −0.5 on the bipartite event fixture
+    * when every node piles into the same hub community). This is heavy-edge matching agglomeration
     * (METIS-style coarsening applied to modularity), all-BIGINT and
     * oracle-replayable.
     *
@@ -758,32 +716,57 @@ object GraphAnalytics {
       .agg(round(sum(col("c")).cast("double"), 6).as("score"))
   }
 
-  /** Bounded-round k-core peeling (onion decomposition): round i removes
-    * every node whose degree within the surviving induced subgraph is < k.
-    * Returns (node, peel_round) over ALL nodes — the 1-based round the node
-    * was peeled at, 0 for survivors. Each non-final round removes ≥1 node,
-    * so `rounds` ≥ |V| always reaches the fixpoint, where the 0-labels are
-    * exactly the k-core; the declared query's round budget is past the
-    * fixpoint on every fixture (asserted by GraphAnalyticsSpec). Two
-    * shuffles per round (survivor semi-joins + degree agg). */
+  /** The peel loop of [[kCorePeel]], [[kTrussPeel]] and [[lubyMis]]: a
+    * survivor set that shrinks each round. `round` maps the checkpointed
+    * survivors and the 1-based round number to the next survivors (a
+    * lazy subset) and to the rows that round emits given the next
+    * survivors' checkpoint — emitted rows read checkpoints, never a
+    * round's lazy plan, or the final plan would grow with every round
+    * again. The survivor count is observed on each checkpoint; the
+    * loop stops at the first round that leaves it unchanged (a fixpoint:
+    * that round emits nothing, and so would every later one) or at zero,
+    * else after `rounds` rounds — the bounded-round result. Returns the
+    * emitted frames, one per round that removed something, and the last
+    * survivors. */
+  private def peel(units: DataFrame, rounds: Int)(
+      round: (DataFrame, Int) => (DataFrame, DataFrame => DataFrame))
+      : (Seq[DataFrame], DataFrame) = {
+    @annotation.tailrec
+    def loop(alive: DataFrame, n: Long, i: Int,
+             emitted: Vector[DataFrame]): (Seq[DataFrame], DataFrame) =
+      if (n == 0 || i > rounds) (emitted, alive)
+      else {
+        val (next, emit) = round(alive, i)
+        val (kept, m) = checkpointCounted(next)
+        if (m == n) (emitted, kept) else loop(kept, m, i + 1, emitted :+ emit(kept))
+      }
+    val (alive, n) = checkpointCounted(units)
+    loop(alive, n, 1, Vector.empty)
+  }
+
+  /** Bounded-round k-core peeling (onion decomposition) on the [[peel]]
+    * loop: round i removes every node whose degree within the surviving
+    * induced subgraph is < k. Returns (node, peel_round) over ALL nodes —
+    * the 1-based round the node was peeled at, 0 for survivors. Each
+    * non-final round removes ≥ 1 node and the loop stops at the fixpoint
+    * (a round that peels nothing), where the 0-labels are exactly the
+    * k-core; a `rounds` budget that ends first returns the bounded-round
+    * labels. Two shuffles per round (survivor semi-joins + degree agg). */
   def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val ee = bothWays(edges).localCheckpoint()
-    var alive = ee.select(col("u").as("node")).distinct().localCheckpoint()
-    var peeled = alive.select(col("node"), lit(0).as("peel_round")).limit(0)
-    for (i <- 1 to rounds) {
-      val keep = ee
-        .join(alive.select(col("node").as("u")), "u")
-        .join(alive.select(col("node").as("v")), "v")
-        .groupBy("u").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select(col("u").as("node"))
-        .localCheckpoint()
-      val dropped = alive.join(keep, Seq("node"), "left_anti")
-        .select(col("node"), lit(i).as("peel_round"))
-      peeled = peeled.unionByName(dropped)
-      alive = keep
+    val (peeled, core) = peel(ee.select(col("u").as("node")).distinct(), rounds) {
+      (alive, i) =>
+        val keep = ee
+          .join(alive.select(col("node").as("u")), "u")
+          .join(alive.select(col("node").as("v")), "v")
+          .groupBy("u").agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k)
+          .select(col("u").as("node"))
+        (keep, kept => alive.join(kept, Seq("node"), "left_anti")
+          .select(col("node"), lit(i).as("peel_round")))
     }
-    peeled.unionByName(alive.select(col("node"), lit(0).as("peel_round")))
+    (peeled :+ core.select(col("node"), lit(0).as("peel_round")))
+      .reduce(_ unionByName _)
   }
 
   /** Per-edge triangle support over a canonical (u < v) simple edge set:
@@ -801,18 +784,6 @@ object GraphAnalytics {
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("sup"))
 
-  /** Bounded-round k-truss peeling (Cohen 2008): round i removes every edge
-    * whose triangle support within the surviving subgraph is < k − 2.
-    * Returns (u, v, peel_round) over ALL canonical undirected edges — the
-    * 1-based round the edge was peeled at, 0 for survivors. After the
-    * fixpoint the 0-labels are exactly the k-truss (every edge in ≥ k − 2
-    * triangles of the truss); each non-final round removes ≥ 1 edge, so
-    * `rounds` ≥ |E| always converges, and the declared query's budget is
-    * past the fixpoint on every fixture (GraphAnalyticsSpec asserts the
-    * next round changes nothing). Per round the support recount is the
-    * degree-ordered O(m^1.5) triangle enumeration — never a per-node
-    * neighborhood cross product — so each round is two equi-join shuffles
-    * plus an aggregation, the shape that survives a 1000-executor graph. */
   /** Luby-style maximal independent set with deterministic hash
     * priorities (Luby 1986, the parallel-MIS workhorse): per round,
     * every undecided node whose priority is a strict minimum among its
@@ -822,7 +793,10 @@ object GraphAnalytics {
     * larger id spaces widen the shift), so min-aggregation is exact and
     * the whole run is a pure function of the graph — replayable by the
     * SQL oracle and identical at any parallelism (a selected node can
-    * never also be dominated: strict minimality is asymmetric). Per
+    * never also be dominated: strict minimality is asymmetric). The
+    * undecided set is the [[peel]] loop's survivors: a non-empty one
+    * always selects its minimum, so it shrinks every round and the loop
+    * stops once it is empty — later rounds would emit nothing. Per
     * round: one adjacency join + min-agg for neighbor minima, two
     * semi/anti joins to shrink the undecided set — the O(log n)
     * expected-round parallel shape, each round two shuffles. Returns
@@ -831,87 +805,30 @@ object GraphAnalytics {
     val ee = bothWays(edges).localCheckpoint()
     val prio = graft.pipeline.TextOps.strHash(
       concat(lit("mis:"), col("n").cast("string"))) * lit(2097152L) + col("n")
-    var undec = ee.select(col("u").as("n")).distinct()
-      .withColumn("pr", prio).localCheckpoint()
-    var decided = undec
-      .select(col("n"), lit("in").as("state"), lit(0).as("round")).limit(0)
-    var i = 1
-    var fixpoint = false
-    while (i <= rounds && !fixpoint) {
-      val nb = ee
-        .join(undec.select(col("n").as("v"), col("pr").as("vpr")), "v")
-        .join(undec.select(col("n").as("u")), "u")
-        .groupBy(col("u")).agg(min(col("vpr")).as("mn"))
-      val sel = undec
-        .join(nb.select(col("u").as("n"), col("mn")), Seq("n"), "left")
-        .filter(col("mn").isNull || col("pr") < col("mn"))
-        .select(col("n"))
-        .localCheckpoint()
-      val dominated = ee.join(sel.select(col("n").as("u")), "u")
-        .select(col("v").as("n")).distinct()
-        .join(undec.select(col("n")), Seq("n"), "left_semi")
-      decided = decided
-        .unionByName(sel.select(col("n"), lit("in").as("state"),
-          lit(i).as("round")))
-        .unionByName(dominated.select(col("n"), lit("out").as("state"),
-          lit(i).as("round")))
-      undec = undec
-        .join(sel, Seq("n"), "left_anti")
-        .join(dominated, Seq("n"), "left_anti")
-        .localCheckpoint()
-      // r15 early-exit (guide §2): with distinct hash priorities a
-      // non-empty undecided set always selects its minimum, so undec can
-      // only stop shrinking by becoming EMPTY — every later round then
-      // produces zero 'in'/'out' rows and leaves undec empty, i.e. the
-      // output is bit-identical with or without the remaining rounds.
-      // The isEmpty probe reads the just-materialized checkpoint blocks
-      // (one trivial job) and saves whole no-op rounds of join+checkpoint
-      // past the fixpoint (3 of 5 rounds at sf0.1). Old undec/sel blocks
-      // stay persisted: `decided` references them lazily until the final
-      // union executes.
-      fixpoint = undec.isEmpty
-      i += 1
+    val (decided, undec) = peel(
+        ee.select(col("u").as("n")).distinct().withColumn("pr", prio), rounds) {
+      (undec, i) =>
+        val nb = ee
+          .join(undec.select(col("n").as("v"), col("pr").as("vpr")), "v")
+          .join(undec.select(col("n").as("u")), "u")
+          .groupBy(col("u")).agg(min(col("vpr")).as("mn"))
+        val sel = undec
+          .join(nb.select(col("u").as("n"), col("mn")), Seq("n"), "left")
+          .filter(col("mn").isNull || col("pr") < col("mn"))
+          .select(col("n"))
+          .localCheckpoint()
+        val dominated = ee.join(sel.select(col("n").as("u")), "u")
+          .select(col("v").as("n")).distinct()
+          .join(undec.select(col("n")), Seq("n"), "left_semi")
+        (undec.join(sel, Seq("n"), "left_anti").join(dominated, Seq("n"), "left_anti"),
+          _ => sel.select(col("n"), lit("in").as("state"), lit(i).as("round"))
+            .unionByName(dominated.select(col("n"), lit("out").as("state"),
+              lit(i).as("round"))))
     }
-    decided.unionByName(
-      undec.select(col("n"), lit("und").as("state"), lit(0).as("round")))
+    (decided :+ undec.select(col("n"), lit("und").as("state"), lit(0).as("round")))
+      .reduce(_ unionByName _)
   }
 
-  /** Strongly connected components of a DIRECTED graph by iterated
-    * forward/backward max-label propagation (the Pregel-era "coloring"
-    * SCC; cf. Orzan 2004 / Salihoglu & Widom VLDB'14 — public
-    * algorithms, original DataFrame formulation). Per peeling round,
-    * over the remaining subgraph:
-    *   fwd(v) = max id that can REACH v,  bwd(v) = max id v can REACH,
-    * each computed by `propSteps` iterations of a neighbor-max step
-    * fused with a pointer-jumping step lab(v) ← max(lab(v), lab(lab(v)))
-    * — sound because lab(v) always holds a node on the required side of
-    * v (reaching / reached), and reachability composes; jumping doubles
-    * the propagated radius per step, so O(log diam) steps reach the
-    * fixpoint exactly like [[connectedComponents]]' distributed path.
-    * Extraction: fwd(v) = bwd(v) = c proves v→*c and c→*v, so v ∈
-    * SCC(c); mutual-reachability paths never leave an SCC (any node on
-    * a u⇄v cycle is itself mutually reachable with both), so whole SCCs
-    * share (fwd, bwd) and are extracted COMPLETE, labeled with their
-    * maximum member id. Removing an extracted SCC cannot disconnect a
-    * surviving one, so peeling on the shrinking remainder is exact. The
-    * global max remaining id always satisfies fwd = bwd = itself, so
-    * every round extracts ≥ 1 SCC and the loop terminates; the round
-    * cap only bounds pathological id-ordered SCC chains, and hitting it
-    * throws rather than returning a partial labeling. Per round: two
-    * label propagations (two equi-join shuffles per step) + one
-    * node-keyed join — no transitive closure is ever materialized,
-    * which is what makes SCC viable on a 100 TB edge list where the
-    * closure is quadratic. Returns (node, scc = max member id).
-    *
-    * The finish is size-GATED like [[connectedComponents]]: once
-    * the remaining edge count drops to `localEdgeLimit` the tail is
-    * collected and solved with one driver-side iterative Tarjan pass —
-    * after the giant SCC peels off, the remainder of a real graph is a
-    * long straggler tail whose per-round frontier is tiny, exactly
-    * where scheduling round-trips dominate (the trim-then-local-finish
-    * design production SCC implementations use). Both paths label an
-    * SCC with its maximum member id, so the mutual-reachability oracle
-    * checks whichever combination ran. */
   /** Conservative per-collected-edge driver heap cost: a boxed (Long,
     * Long) tuple + array slot + union-find map entry. */
   val LocalFinishRowBytes = 96L
@@ -934,98 +851,96 @@ object GraphAnalytics {
         s"lower the local-finish limit so the tail stays distributed")
   }
 
+  /** Strongly connected components of a DIRECTED graph by iterated
+    * forward/backward max-label propagation (the Pregel-era "coloring"
+    * SCC; cf. Orzan 2004 / Salihoglu & Widom VLDB'14 — public
+    * algorithms, original DataFrame formulation). Per peeling round,
+    * over the remaining subgraph:
+    *   fwd(v) = max id that can REACH v,  bwd(v) = max id v can REACH,
+    * both computed as ONE max-side [[labelFixpoint]] keyed by a `dir`
+    * column over the edges and their mirror (half the scheduling
+    * round-trips of two propagations): a neighbor-max step, then a
+    * pointer jump lab(v) ← max(lab(v), lab(lab(v))) — sound because
+    * lab(v) always holds a node on the required side of v (reaching /
+    * reached), and reachability composes; jumping doubles the propagated
+    * radius per step, so O(log diam) steps reach the fixpoint exactly
+    * like [[connectedComponents]]' distributed path, and `propSteps`
+    * only caps it (hitting the cap throws). The fixpoint property —
+    * lab(v) ≥ lab(u) on every edge u→v — makes lab(v) the max reaching
+    * id EXACTLY, independent of the step budget.
+    * Extraction: fwd(v) = bwd(v) = c proves v→*c and c→*v, so v ∈
+    * SCC(c); mutual-reachability paths never leave an SCC (any node on
+    * a u⇄v cycle is itself mutually reachable with both), so whole SCCs
+    * share (fwd, bwd) and are extracted COMPLETE, labeled with their
+    * maximum member id. Removing an extracted SCC cannot disconnect a
+    * surviving one, so peeling on the shrinking remainder is exact. The
+    * global max remaining id always satisfies fwd = bwd = itself, so
+    * every round extracts ≥ 1 SCC and the loop terminates; the round
+    * cap only bounds pathological id-ordered SCC chains, and hitting it
+    * throws rather than returning a partial labeling. Per round: one
+    * keyed label fixpoint (two equi-join shuffles per step) + one
+    * node-keyed join — no transitive closure is ever materialized,
+    * which is what makes SCC viable on a 100 TB edge list where the
+    * closure is quadratic. Returns (node, scc = max member id).
+    *
+    * The finish is size-GATED like [[connectedComponents]]: the remaining
+    * edge and node counts are observed on the checkpoints that
+    * materialize them, and once the edge count drops to `localEdgeLimit`
+    * the tail is collected and solved with one driver-side iterative
+    * Tarjan pass — after the giant SCC peels off, the remainder of a real
+    * graph is a long straggler tail whose per-round frontier is tiny,
+    * exactly where scheduling round-trips dominate (the
+    * trim-then-local-finish design production SCC implementations use).
+    * Both paths label an SCC with its maximum member id, so the
+    * mutual-reachability oracle checks whichever combination ran. */
   def stronglyConnectedComponents(edges: DataFrame, propSteps: Int = 32,
                                   maxRounds: Int = 40,
                                   localEdgeLimit: Long = 1L << 22): DataFrame = {
-    // the forward and backward propagations are the SAME fixpoint over
-    // mirrored edges, so both run as ONE keyed computation with a `dir`
-    // column in every join key — half the scheduling round-trips, which
-    // dominate once the remaining frontier is small
-    def propagate(e2: DataFrame, nodes: DataFrame): DataFrame = {
-      var lab = nodes
-        .select(col("node"), explode(array(lit(0), lit(1))).as("dir"))
-        .withColumn("lab", col("node"))
-      // labels only ever INCREASE, so the label sum is strictly monotone
-      // until the fixpoint: an unchanged sum IS convergence. Detecting it
-      // beats a worst-case fixed step count because real rounds converge
-      // in O(log diam) ≪ cap steps (a dense graph converges in 2-3), and
-      // the fixpoint property — lab(v) ≥ lab(u) on every edge u→v —
-      // guarantees lab(v) = max reaching id EXACTLY, independent of the
-      // step budget
-      var prev: java.math.BigDecimal = null
-      var converged = false
-      var step = 0
-      while (!converged && step < propSteps) {
-        step += 1
-        val nb = e2.join(lab,
-            e2("a") === lab("node") && e2("dir") === lab("dir"))
-          .select(e2("b").as("node"), e2("dir").as("dir"), col("lab"))
-        val stepped = lab.unionByName(nb)
-          .groupBy("node", "dir").agg(max(col("lab")).as("lab"))
-        // labels are remaining-node ids, so lab(lab) resolves in `stepped`
-        lab = stepped.join(
-            stepped.select(col("node").as("lab"), col("dir"),
-              col("lab").as("plab")),
-            Seq("lab", "dir"))
-          .select(col("node"), col("dir"),
-            greatest(col("lab"), col("plab")).as("lab"))
-          .localCheckpoint()
-        val s = lab.agg(sum(col("lab"))
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("s"))
-          .head.getDecimal(0)
-        if (s == prev) converged = true else prev = s
+    @annotation.tailrec
+    def peelRound(rem: DataFrame, remRows: Long, nodes: DataFrame, nodeRows: Long,
+                  acc: DataFrame, round: Int): DataFrame =
+      if (nodeRows == 0) acc
+      else {
+        require(round < maxRounds, s"SCC peeling did not converge within $maxRounds rounds")
+        if (remRows <= localEdgeLimit) {
+          requireDriverFits(remRows + nodeRows, "SCC Tarjan")
+          val es = rem.collect().map(r => (r.getLong(0), r.getLong(1)))
+          val ns = nodes.collect().map(_.getLong(0))
+          val comp = tarjanScc(ns, es)
+          val spark = rem.sparkSession
+          import spark.implicits._
+          acc.unionByName(ns.toSeq.map(n => (n, comp.getOrElse(n, n))).toDF("node", "scc"))
+            .localCheckpoint()
+        } else {
+          val e2 = rem.withColumn("dir", lit(0))
+            .unionByName(rem.select(col("dst").as("src"), col("src").as("dst"),
+              lit(1).as("dir")))
+          val init = nodes
+            .select(col("node"), explode(array(lit(0), lit(1))).as("dir"))
+            .withColumn("lab", col("node"))
+          val both = labelFixpoint(e2, init, Seq("dir"), max(_), greatest(_, _),
+              propSteps, "SCC propagation")
+            .groupBy("node")
+            .agg(max(when(col("dir") === 0, col("lab"))).as("fwd"),
+              max(when(col("dir") === 1, col("lab"))).as("bwd"))
+            .localCheckpoint()
+          val (left, leftRows) = checkpointCounted(
+            both.filter(col("fwd") =!= col("bwd")).select("node"))
+          val (leftEdges, leftEdgeRows) = checkpointCounted(rem
+            .join(left.select(col("node").as("src")), Seq("src"), "left_semi")
+            .join(left.select(col("node").as("dst")), Seq("dst"), "left_semi"))
+          peelRound(leftEdges, leftEdgeRows, left, leftRows,
+            acc.unionByName(both.filter(col("fwd") === col("bwd"))
+              .select(col("node"), col("fwd").as("scc"))).localCheckpoint(),
+            round + 1)
+        }
       }
-      require(converged, s"SCC propagation did not converge in $propSteps steps")
-      lab
-    }
-    var rem = edges.select(col("src"), col("dst")).distinct()
-      .filter(col("src") =!= col("dst")).localCheckpoint()
-    var nodes = edges.select(col("src").as("node"))
-      .unionByName(edges.select(col("dst").as("node")))
-      .distinct().localCheckpoint()
-    var acc = nodes.select(col("node"), col("node").as("scc")).limit(0)
-    var round = 0
-    var finished = false
-    while (round < maxRounds && !finished) {
-      lazy val remRows = rem.count()
-      if (nodes.isEmpty) { finished = true }
-      else if (remRows <= localEdgeLimit) {
-        requireDriverFits(remRows + nodes.count(), "SCC Tarjan")
-        val es = rem.collect().map(r => (r.getLong(0), r.getLong(1)))
-        val ns = nodes.collect().map(_.getLong(0))
-        val comp = tarjanScc(ns, es)
-        val spark = rem.sparkSession
-        import spark.implicits._
-        val local = ns.toSeq.map(n => (n, comp.getOrElse(n, n)))
-          .toDF("node", "scc")
-        acc = acc.unionByName(local).localCheckpoint()
-        finished = true
-      } else {
-      val e2 = rem
-        .select(col("src").as("a"), col("dst").as("b"), lit(0).as("dir"))
-        .unionByName(rem
-          .select(col("dst").as("a"), col("src").as("b"), lit(1).as("dir")))
-      val both = propagate(e2, nodes)
-        .groupBy("node")
-        .agg(max(when(col("dir") === 0, col("lab"))).as("fwd"),
-          max(when(col("dir") === 1, col("lab"))).as("bwd"))
-        .localCheckpoint()
-      acc = acc.unionByName(
-          both.filter(col("fwd") === col("bwd"))
-            .select(col("node"), col("fwd").as("scc")))
-        .localCheckpoint()
-      nodes = both.filter(col("fwd") =!= col("bwd"))
-        .select("node").localCheckpoint()
-      rem = rem
-        .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint()
-      round += 1
-      }
-    }
-    require(finished,
-      s"SCC peeling did not converge within $maxRounds rounds")
-    acc
+    val (rem, remRows) = checkpointCounted(edges.select(col("src"), col("dst"))
+      .distinct().filter(col("src") =!= col("dst")))
+    val (nodes, nodeRows) = checkpointCounted(edges.select(col("src").as("node"))
+      .unionByName(edges.select(col("dst").as("node"))).distinct())
+    peelRound(rem, remRows, nodes, nodeRows,
+      nodes.select(col("node"), col("node").as("scc")).limit(0), 0)
   }
 
   /** Iterative (explicit-stack) Tarjan SCC for the local finish of
@@ -1116,9 +1031,9 @@ object GraphAnalytics {
     while (round < maxRounds && active) {
       val cu = comp.select(col("n").as("u"), col("c").as("cu"))
       val cv = comp.select(col("n").as("v"), col("c").as("cv"))
-      val x = e.join(cu, "u").join(cv, "v")
-        .filter(col("cu") =!= col("cv")).localCheckpoint()
-      if (x.isEmpty) { active = false }
+      val (x, crossRows) = checkpointCounted(e.join(cu, "u").join(cv, "v")
+        .filter(col("cu") =!= col("cv")))
+      if (crossRows == 0) { active = false }
       else {
         val inc = x.select(col("cu").as("cc"), col("w"), col("u"), col("v"),
             col("cu"), col("cv"))
@@ -1145,39 +1060,30 @@ object GraphAnalytics {
     mst
   }
 
+  /** Bounded-round k-truss peeling (Cohen 2008) on the [[peel]] loop:
+    * round i removes every edge whose triangle support within the
+    * surviving subgraph is < k − 2.
+    * Returns (u, v, peel_round) over ALL canonical undirected edges — the
+    * 1-based round the edge was peeled at, 0 for survivors. After the
+    * fixpoint the 0-labels are exactly the k-truss (every edge in ≥ k − 2
+    * triangles of the truss); each non-final round removes ≥ 1 edge and
+    * the loop stops at the first round that peels nothing, so `rounds` ≥
+    * |E| always converges, and the declared query's budget is past the
+    * fixpoint on every fixture (GraphAnalyticsSpec asserts the next round
+    * changes nothing). Per round the support recount is the
+    * degree-ordered O(m^1.5) triangle enumeration — never a per-node
+    * neighborhood cross product — so each round is two equi-join shuffles
+    * plus an aggregation, the shape that survives a 1000-executor graph. */
   def kTrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"k-truss needs k >= 3 (got $k)")
-    var alive = undirected(edges).localCheckpoint()
-    var peeled = alive.select(col("u"), col("v"), lit(0).as("peel_round")).limit(0)
-    var aliveCount = alive.count()
-    var i = 1
-    var fixpoint = false
-    while (i <= rounds && !fixpoint) {
-      val sup = edgeSupport(alive)
-      val keep = alive.join(sup, Seq("u", "v"), "left")
+    val (peeled, truss) = peel(undirected(edges), rounds) { (alive, i) =>
+      val keep = alive.join(edgeSupport(alive), Seq("u", "v"), "left")
         .filter(coalesce(col("sup"), lit(0L)) >= k - 2)
         .select("u", "v")
-        .localCheckpoint()
-      // r15 early-exit (guide §2): support is a pure function of the
-      // surviving edge set, so a round that peels NOTHING is a fixpoint —
-      // every later round recomputes the same supports and peels nothing.
-      // One count over the just-checkpointed blocks per round (trivial)
-      // saves whole no-op rounds of the O(m^1.5) wedge join past
-      // convergence; rows out are identical (skipped rounds contribute
-      // zero peeled rows).
-      val keepCount = keep.count()
-      if (keepCount == aliveCount) {
-        fixpoint = true
-        alive = keep
-      } else {
-        peeled = peeled.unionByName(
-          alive.join(keep, Seq("u", "v"), "left_anti")
-            .select(col("u"), col("v"), lit(i).as("peel_round")))
-        alive = keep
-        aliveCount = keepCount
-      }
-      i += 1
+      (keep, kept => alive.join(kept, Seq("u", "v"), "left_anti")
+        .select(col("u"), col("v"), lit(i).as("peel_round")))
     }
-    peeled.unionByName(alive.select(col("u"), col("v"), lit(0).as("peel_round")))
+    (peeled :+ truss.select(col("u"), col("v"), lit(0).as("peel_round")))
+      .reduce(_ unionByName _)
   }
 }

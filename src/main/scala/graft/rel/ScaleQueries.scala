@@ -762,7 +762,8 @@ object ScaleQueries {
     "q_graph_lpa",
     (s, dir) => {
       import s.implicits._
-      GraphAnalytics.labelPropagation(sparseEdges(s, dir), iters = 3)
+      GraphAnalytics.labelPropagation(
+          GraphAnalytics.bothWaysCheckpointed(sparseEdges(s, dir)), iters = 3)
         .orderBy($"node")
     },
     Some(s"""WITH $eeCte,
@@ -783,13 +784,9 @@ object ScaleQueries {
     "q_graph_modularity",
     (s, dir) => {
       import s.implicits._
-      val edges = sparseEdges(s, dir)
-      // r14-opt: one shared both-ways adjacency for LPA + the modularity
-      // score (each stage re-derived and re-materialized it before)
-      val ee = GraphAnalytics.bothWaysCheckpointed(edges)
-      GraphAnalytics.modularity(edges,
-          GraphAnalytics.labelPropagation(edges, iters = 3, prebuiltEe = ee),
-          prebuiltEe = ee)
+      // one shared both-ways adjacency for LPA + the modularity score
+      val ee = GraphAnalytics.bothWaysCheckpointed(sparseEdges(s, dir))
+      GraphAnalytics.modularity(ee, GraphAnalytics.labelPropagation(ee, iters = 3))
         .orderBy($"label")
     },
     Some(s"""WITH $eeCte,
@@ -847,18 +844,9 @@ object ScaleQueries {
     "q_graph_louvain",
     (s, dir) => {
       import s.implicits._
-      // checkpoint the derived edge table once: LPA and the move round
-      // each re-derive bothWays(edges), and without the checkpoint each
-      // re-pays the events scan + JSON parse + distinct
-      val edges = sparseEdges(s, dir)
-      // r14-opt: LPA and the move round share ONE both-ways adjacency
-      // (the former per-stage rebuild paid an extra edge-list
-      // materialization; the edges checkpoint it replaced is subsumed —
-      // every consumer reads ee, not the raw edge list)
-      val ee = GraphAnalytics.bothWaysCheckpointed(edges)
-      GraphAnalytics.louvainMove(edges,
-          GraphAnalytics.labelPropagation(edges, iters = 3, prebuiltEe = ee),
-          prebuiltEe = ee)
+      // LPA and the move round share ONE checkpointed both-ways adjacency
+      val ee = GraphAnalytics.bothWaysCheckpointed(sparseEdges(s, dir))
+      GraphAnalytics.louvainMove(ee, GraphAnalytics.labelPropagation(ee, iters = 3))
         .orderBy($"node")
     },
     Some(s"""WITH $eeCte,
@@ -878,13 +866,11 @@ object ScaleQueries {
     (s, dir) => {
       import s.implicits._
       val edges = sparseEdges(s, dir).localCheckpoint()
-      // r14-opt: shared adjacency for LPA + move (coarsenGraph reads the
-      // DIRECTED edge list, so edges stays checkpointed too)
+      // shared adjacency for LPA + move (coarsenGraph reads the DIRECTED
+      // edge list, so edges stays checkpointed too)
       val ee = GraphAnalytics.bothWaysCheckpointed(edges)
       GraphAnalytics.coarsenGraph(edges,
-          GraphAnalytics.louvainMove(edges,
-            GraphAnalytics.labelPropagation(edges, iters = 3, prebuiltEe = ee),
-            prebuiltEe = ee))
+          GraphAnalytics.louvainMove(ee, GraphAnalytics.labelPropagation(ee, iters = 3)))
         .orderBy($"c1", $"c2")
     },
     Some(s"""WITH $eeCte,
@@ -908,8 +894,8 @@ object ScaleQueries {
     * wdeg(a)·wdeg(b)), disjoint merges are exactly additive, and the
     * mutual-best matching only accepts strictly positive pairs — so
     * Q(level 2) ≥ Q(level 1) always, strictly when any pair fires (it
-    * does at every fixture SF; spec-pinned, with the overshooting
-    * synchronous alternative documented on louvainMoveWeighted). Final
+    * does at every fixture SF; spec-pinned — a synchronous weighted move
+    * sweep over the super-graph can overshoot, see louvainMergeRound). Final
     * labels map every ORIGINAL node through its level-1 community to the
     * merged level-2 community; all-BIGINT, oracle-replayed as one CTE
     * chain over the shared LPA/move/coarsen CTEs. */
@@ -920,10 +906,9 @@ object ScaleQueries {
       val edges = sparseEdges(s, dir).localCheckpoint()
       // l1 feeds BOTH the coarsening and the final label join — checkpoint
       // once so the LPA+move chain isn't executed twice
-      val ee = GraphAnalytics.bothWaysCheckpointed(edges) // r14-opt: shared
-      val l1 = GraphAnalytics.louvainMove(edges,
-        GraphAnalytics.labelPropagation(edges, iters = 3, prebuiltEe = ee),
-        prebuiltEe = ee).localCheckpoint()
+      val ee = GraphAnalytics.bothWaysCheckpointed(edges) // shared by LPA + move
+      val l1 = GraphAnalytics.louvainMove(ee, GraphAnalytics.labelPropagation(ee, iters = 3))
+        .localCheckpoint()
       val cg = GraphAnalytics.coarsenGraph(edges, l1)
       val l2 = GraphAnalytics.louvainMergeRound(cg)
       // |level-1 communities| rows — broadcast the level map, never
@@ -1082,9 +1067,10 @@ object ScaleQueries {
                 GROUP BY ee.u HAVING COUNT(*) >= $k)"""
     }
 
-  /** 5-core onion decomposition, 8 peeling rounds (past the fixpoint on
-    * every fixture — GraphAnalyticsSpec asserts round 9 changes nothing):
-    * (node, peel_round) for every node, 0 = in the 5-core. */
+  /** 5-core onion decomposition, a budget of 8 peeling rounds (past the
+    * fixpoint on every fixture — ScaleOpsSpec asserts round 9 changes
+    * nothing; the engine's peel stops at the fixpoint, the oracle unrolls
+    * all 8): (node, peel_round) for every node, 0 = in the 5-core. */
   val graphKcore = QueryDef(
     "q_graph_kcore",
     (s, dir) => {

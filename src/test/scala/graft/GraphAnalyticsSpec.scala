@@ -7,6 +7,33 @@ import org.apache.spark.sql.functions._
 class GraphAnalyticsSpec extends SparkSpec {
   import spark.implicits._
 
+  test("checkpointObserved: the observed stat is count()/sum, at no extra job") {
+    import org.apache.spark.sql.types.DecimalType
+    val dsum = sum($"k".cast(DecimalType(38, 0)))
+    // a join + aggregate, the shape every fixpoint round checkpoints
+    def frame(parts: Int) = spark.range(0, 600, 1, parts).select(($"id" % 53).as("k"))
+      .join(spark.range(0, 40, 1, parts).select(($"id" % 53).as("k")), "k")
+      .groupBy("k").agg(count(lit(1)).as("c"))
+    val cases = Seq(
+      "empty" -> frame(3).filter($"k" < 0),
+      "empty local relation" -> Seq.empty[Long].toDF("k"),
+      "one partition" -> frame(1).coalesce(1),
+      "many partitions" -> frame(5).repartition(7))
+    cases.foreach { case (name, df) =>
+      val (cp, n) = GraphAnalytics.checkpointObserved[Long](df, count(lit(1)))
+      assert(n == cp.count(), s"$name: observed count")
+      val (cp2, s) = GraphAnalytics.checkpointObserved[java.math.BigDecimal](df, dsum)
+      val want = cp2.agg(dsum).head.getDecimal(0)
+      assert(s == want, s"$name: observed sum $s vs $want")
+    }
+    assert(GraphAnalytics.checkpointObserved[Long](frame(5), count(lit(1)))._2 == 40L)
+    val jobs = new org.apache.spark.graft.JobCounter(spark)
+    val (_, bare, _) = jobs.count(frame(5).localCheckpoint())
+    val (_, observed, _) = jobs.count(
+      GraphAnalytics.checkpointObserved[Long](frame(5), count(lit(1))))
+    assert(observed == bare, s"observed checkpoint ran $observed jobs, bare $bare")
+  }
+
   test("string vertex mapping: dense sorted ranks, no single-partition window") {
     val edges = Seq(("n-c", "n-a", 1.0), ("n-b", "n-d", 1.0), ("n-d", "n-a", 1.0))
       .toDF("source", "target", "weight")
@@ -106,7 +133,8 @@ class GraphAnalyticsSpec extends SparkSpec {
     val jumped = distributed(path, 6)
     assert(jumped.values.forall(_ == 0L), s"path not converged: $jumped")
     intercept[IllegalArgumentException](distributed(path, 5))
-    val flooded = GraphAnalytics.labelPropagation(path, iters = 5)
+    val flooded = GraphAnalytics.labelPropagation(
+        GraphAnalytics.bothWaysCheckpointed(path), iters = 5)
       .as[(Long, Long)].collect().toMap
     assert(flooded(40L) == 35L, "flooding reach must be exactly `iters` hops")
   }
@@ -119,14 +147,14 @@ class GraphAnalyticsSpec extends SparkSpec {
       (2L, 3L)).toDF("src", "dst")
     val labels = Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L), (5L, 1L))
       .toDF("node", "label")
-    val got = GraphAnalytics.modularity(g, labels)
+    val got = GraphAnalytics.modularity(GraphAnalytics.bothWaysCheckpointed(g), labels)
       .select($"label", $"n_nodes", $"e_intra2", $"deg_sum", $"q_contrib")
       .as[(Long, Long, Long, Long, Double)].collect().sortBy(_._1)
     assert(got.toSeq == Seq((0L, 3L, 6L, 7L, 0.178571), (1L, 3L, 6L, 7L, 0.178571)),
       got.toSeq.toString)
     // an all-singletons partition has no intra edges: every e_intra2 = 0
     val single = labels.select($"node", $"node".as("label"))
-    val s = GraphAnalytics.modularity(g, single)
+    val s = GraphAnalytics.modularity(GraphAnalytics.bothWaysCheckpointed(g), single)
       .select($"e_intra2").as[Long].collect()
     assert(s.forall(_ == 0L))
   }
@@ -137,7 +165,7 @@ class GraphAnalyticsSpec extends SparkSpec {
       (2L, 3L)).toDF("src", "dst")
     val perfect = Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 1L), (4L, 1L), (5L, 1L))
       .toDF("node", "label")
-    val moved = GraphAnalytics.louvainMove(g, perfect)
+    val moved = GraphAnalytics.louvainMove(GraphAnalytics.bothWaysCheckpointed(g), perfect)
       .as[(Long, Long)].collect().toMap
     assert(moved == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 1L, 5L -> 1L),
       s"optimal partition must not move: $moved")
@@ -147,15 +175,16 @@ class GraphAnalyticsSpec extends SparkSpec {
       .select($"user_id".as("src"),
         (get_json_object($"props", "$.k").cast("long") + 100000L).as("dst"))
       .filter($"dst".isNotNull).distinct()
-    val lpa = GraphAnalytics.labelPropagation(edges, iters = 3)
+    val lpa = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(edges), iters = 3)
     def q(labels: org.apache.spark.sql.DataFrame): Double =
-      GraphAnalytics.modularity(edges, labels)
+      GraphAnalytics.modularity(GraphAnalytics.bothWaysCheckpointed(edges), labels)
         .agg(sum($"q_contrib")).as[Double].collect().head
-    val refined = GraphAnalytics.louvainMove(edges, lpa)
+    val refined = GraphAnalytics.louvainMove(GraphAnalytics.bothWaysCheckpointed(edges), lpa)
     val (q0, q1) = (q(lpa), q(refined))
     assert(q1 >= q0 - 1e-9, s"move round decreased modularity: $q0 -> $q1")
     // order-independence: same moves at any partitioning
-    val refined2 = GraphAnalytics.louvainMove(edges.repartition(7), lpa)
+    val refined2 = GraphAnalytics.louvainMove(
+        GraphAnalytics.bothWaysCheckpointed(edges.repartition(7)), lpa)
       .as[(Long, Long)].collect().toMap
     assert(refined.as[(Long, Long)].collect().toMap == refined2)
   }
@@ -188,33 +217,17 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(deg == Map(1L -> 1L, 2L -> 2L, 3L -> 1L))
   }
 
-  test("louvainMoveWeighted: unit weights and no self-loops reduce to louvainMove") {
-    val edges = graft.rel.ScaleQueries.sparseEdges(spark, sf)
-    val lpa = GraphAnalytics.labelPropagation(edges, iters = 3)
-    // identity-coarsened graph = the graph itself with unit weights and no
-    // self-loops; the weighted move must reproduce the unweighted one
-    val ident = edges.select($"src".as("node")).union(edges.select($"dst"))
-      .distinct().select($"node", $"node".as("label"))
-    val unitSuper = GraphAnalytics.coarsenGraph(edges, ident)
-    val viaWeighted = GraphAnalytics.louvainMoveWeighted(unitSuper, lpa)
-      .as[(Long, Long)].collect().toMap
-    val viaPlain = GraphAnalytics.louvainMove(edges, lpa)
-      .as[(Long, Long)].collect().toMap
-    assert(viaWeighted == viaPlain,
-      "unit-weight louvainMoveWeighted must equal louvainMove")
-  }
-
   test("louvainMergeRound: monotone level-2 merges on the fixture; guarded on toys") {
     val edges = graft.rel.ScaleQueries.sparseEdges(spark, sf)
-    val lpa = GraphAnalytics.labelPropagation(edges, iters = 3)
+    val lpa = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(edges), iters = 3)
     // q_graph_louvain2's composition: move -> coarsen -> mutual-best merge
-    val l1 = GraphAnalytics.louvainMove(edges, lpa)
+    val l1 = GraphAnalytics.louvainMove(GraphAnalytics.bothWaysCheckpointed(edges), lpa)
     val cg = GraphAnalytics.coarsenGraph(edges, l1)
     val l2sup = GraphAnalytics.louvainMergeRound(cg)
     val l2 = l1.join(l2sup.select($"node".as("label"), $"label".as("label2")), "label")
       .select($"node", $"label2".as("label"))
     def q(labels: org.apache.spark.sql.DataFrame): Double =
-      GraphAnalytics.modularity(edges, labels)
+      GraphAnalytics.modularity(GraphAnalytics.bothWaysCheckpointed(edges), labels)
         .agg(sum($"q_contrib")).as[Double].collect().head
     val (q1, q2) = (q(l1), q(l2))
     // merges are positive-gain only, and the fixture HAS positive pairs:

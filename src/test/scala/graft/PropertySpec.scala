@@ -9,7 +9,8 @@ import org.scalacheck.rng.Seed
 
 /** ScalaCheck properties (SURVEY §5c): embedding invariants, fusion
   * linearity, top-k prefix soundness, BFS depth monotonicity, connected
-  * components against a union-find.
+  * components against a union-find, SCC against mutual reachability,
+  * k-core/k-truss peeling against plain-Scala peel models.
   * (scalatestplus bridge unavailable offline → seeded Gen sampling.) */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
@@ -159,6 +160,96 @@ class PropertySpec extends SparkSpec {
       if (!withNull) assert(graft.graph.GraphXOps
         .connectedComponents(edges.withColumn("weight", lit(1.0)))
         .as[(Long, Long)].collect().sorted.toSeq == expected, "GraphX reference")
+    }
+  }
+
+  test("stronglyConnectedComponents == plain-Scala mutual reachability: distributed, gated, " +
+      "7 partitions (6 samples)") {
+    // 20 random arcs over 15 ids bring 2-cycles, self-loops and parallel
+    // arcs; every sample adds a fixed 2-cycle, a self-loop-only (isolated)
+    // node 700, and a chain of four 3-cycles 100→103→106→109 whose ids
+    // rise along the chain, so the distributed path peels one cycle a round
+    val arcGen = Gen.listOfN(20, Gen.zip(Gen.choose(0L, 14L), Gen.choose(0L, 14L)))
+    forAll(arcGen, 6) { random =>
+      val cycles = (0 until 4).flatMap { c =>
+        val b = 100L + 3 * c
+        Seq((b, b + 1), (b + 1, b + 2), (b + 2, b)) ++
+          (if (c < 3) Seq((b + 2, b + 3)) else Nil)
+      }
+      val arcs = random ++ Seq((20L, 21L), (21L, 20L), (700L, 700L)) ++ cycles
+      val out = arcs.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      def reach(v: Long): Set[Long] = {
+        var seen = Set(v); var frontier = List(v)
+        while (frontier.nonEmpty) {
+          val nxt = frontier.flatMap(out.getOrElse(_, Nil)).filterNot(seen)
+          seen ++= nxt; frontier = nxt.distinct
+        }
+        seen
+      }
+      val nodes = arcs.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val reaches = nodes.map(v => v -> reach(v)).toMap
+      val expected = nodes.map(v => v -> nodes.filter(u => reaches(v)(u) && reaches(u)(v)).max)
+        .sorted
+      val edges = arcs.toDF("src", "dst")
+      def scc(e: org.apache.spark.sql.DataFrame, limit: Long) =
+        graft.graph.GraphAnalytics.stronglyConnectedComponents(e, localEdgeLimit = limit)
+          .as[(Long, Long)].collect().sorted.toSeq
+      assert(scc(edges, 0L) == expected, s"distributed path, arcs $random")
+      assert(scc(edges, 1L << 22) == expected, s"default gate, arcs $random")
+      assert(scc(edges.repartition(7), 0L) == expected, s"distributed, 7 partitions")
+    }
+  }
+
+  test("kCorePeel and kTrussPeel rounds == plain-Scala peel models, full and short budgets " +
+      "(4 samples)") {
+    // 24 random edges over 12 ids, plus a K5 on 50..54 with a 4-node tail
+    // 54-60-61-62-63 (k-core peels the tail one node a round) and the cube
+    // of the path 70..77 less edge 73-74 (k-truss at k = 4 peels it over
+    // three rounds and keeps 12 edges)
+    val edgeGen = Gen.listOfN(24, Gen.zip(Gen.choose(0L, 11L), Gen.choose(0L, 11L)))
+    forAll(edgeGen, 4) { random =>
+      val k5 = for { a <- 50L to 54L; b <- 50L to 54L if a < b } yield (a, b)
+      val strip = for { a <- 70L to 77L; b <- a + 1 to math.min(a + 3, 77L)
+        if (a, b) != ((73L, 74L)) } yield (a, b)
+      val pairs = random ++ k5 ++ Seq((54L, 60L), (60L, 61L), (61L, 62L), (62L, 63L)) ++ strip
+      val und = pairs.filter { case (a, b) => a != b }
+        .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+      // peel model: each round removes the units `drop` names among the
+      // survivors, labelling them with the round; stops when none drop
+      def model[U](units: Seq[U], rounds: Int)(drop: Set[U] => Set[U]): Map[U, Int] = {
+        var alive = units.toSet
+        var label = units.map(_ -> 0).toMap
+        var i = 1
+        var moved = true
+        while (moved && i <= rounds) {
+          val d = drop(alive)
+          d.foreach(u => label += u -> i)
+          alive --= d; moved = d.nonEmpty; i += 1
+        }
+        label
+      }
+      val nodes = und.flatMap { case (a, b) => Seq(a, b) }.distinct
+      def coreModel(k: Int, rounds: Int) = model(nodes, rounds) { alive =>
+        alive.filter(v => und.count { case (a, b) =>
+          (a == v && alive(b)) || (b == v && alive(a)) } < k)
+      }
+      def trussModel(k: Int, rounds: Int) = model(und, rounds) { alive =>
+        val adj = alive.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+          .groupBy(_._1).map { case (x, ys) => x -> ys.map(_._2).toSet }
+        alive.filter { case (a, b) => (adj(a) & adj(b)).size < k - 2 }
+      }
+      val edges = pairs.toDF("src", "dst")
+      for (rounds <- Seq(2, 12)) {
+        val core = graft.graph.GraphAnalytics.kCorePeel(edges, k = 2, rounds)
+          .as[(Long, Int)].collect().toMap
+        assert(core == coreModel(2, rounds), s"k-core, $rounds rounds, edges $random")
+        val truss = graft.graph.GraphAnalytics.kTrussPeel(edges, k = 4, rounds)
+          .as[(Long, Long, Int)].collect().map { case (a, b, r) => (a, b) -> r }.toMap
+        assert(truss == trussModel(4, rounds), s"k-truss, $rounds rounds, edges $random")
+      }
+      val (coreLast, trussLast) = (coreModel(2, 12).values.max, trussModel(4, 12).values.max)
+      assert(coreLast > 2 && trussLast > 2, "the short budget must stop before the fixpoint")
+      assert(coreLast < 12 && trussLast < 12, "the long budget must reach the fixpoint")
     }
   }
 

@@ -13,11 +13,11 @@ class ScaleOpsSpec extends SparkSpec {
   test("labelPropagation: min-label flood, bounded radius per round") {
     // path 0-1-2-3 plus isolated pair 8-9
     val g = Seq((0L, 1L), (1L, 2L), (2L, 3L), (8L, 9L)).toDF("src", "dst")
-    val r1 = GraphAnalytics.labelPropagation(g, iters = 1)
+    val r1 = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(g), iters = 1)
       .as[(Long, Long)].collect().toMap
     assert(r1 == Map(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 2L, 8L -> 8L, 9L -> 8L),
       s"one round reaches radius 1: $r1")
-    val r3 = GraphAnalytics.labelPropagation(g, iters = 3)
+    val r3 = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(g), iters = 3)
       .as[(Long, Long)].collect().toMap
     assert(r3 == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 0L, 8L -> 8L, 9L -> 8L),
       s"diameter rounds converge to component minima: $r3")
@@ -25,8 +25,10 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("labelPropagation: partition-order independent") {
     val g = Seq((0L, 1L), (1L, 2L), (2L, 3L), (8L, 9L)).toDF("src", "dst")
-    val a = GraphAnalytics.labelPropagation(g, 2).as[(Long, Long)].collect().toMap
-    val b = GraphAnalytics.labelPropagation(g.repartition(7), 2)
+    val a = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(g), 2)
+      .as[(Long, Long)].collect().toMap
+    val b = GraphAnalytics.labelPropagation(
+        GraphAnalytics.bothWaysCheckpointed(g.repartition(7)), 2)
       .as[(Long, Long)].collect().toMap
     assert(a == b)
   }
@@ -57,7 +59,8 @@ class ScaleOpsSpec extends SparkSpec {
 
   test("labelPropagation: declared 3 rounds keep real structure on the fixture") {
     val edges = rel.ScaleQueries.sparseEdges(spark, sf)
-    val labels = GraphAnalytics.labelPropagation(edges, iters = 3)
+    val labels = GraphAnalytics.labelPropagation(
+        GraphAnalytics.bothWaysCheckpointed(edges), iters = 3)
       .select($"label").distinct().count()
     assert(labels > 1, "3 rounds must NOT collapse to one label (vacuous)")
   }

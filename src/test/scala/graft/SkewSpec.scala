@@ -56,8 +56,10 @@ class SkewSpec extends SparkSpec {
     val skw = edgesOf(hub = true)
     // giant-label partitions: 2 LPA rounds on the hub graph flood most
     // nodes to one label — the skewed join key the operators must absorb
-    val labU = GraphAnalytics.labelPropagation(uni, 2).localCheckpoint()
-    val labS = GraphAnalytics.labelPropagation(skw, 2).localCheckpoint()
+    val labU = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(uni), 2)
+      .localCheckpoint()
+    val labS = GraphAnalytics.labelPropagation(GraphAnalytics.bothWaysCheckpointed(skw), 2)
+      .localCheckpoint()
     val hubLab = labS.groupBy("label").count().orderBy(col("count").desc)
       .first().getLong(1)
     assert(hubLab >= n / 2, s"hub LPA must produce a giant community: $hubLab")
@@ -67,8 +69,10 @@ class SkewSpec extends SparkSpec {
     }
     val ops: Seq[(String,
         (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => Unit)] = Seq(
-      ("louvainMove", (e, l) => { GraphAnalytics.louvainMove(e, l).count(); () }),
-      ("modularity", (e, l) => { GraphAnalytics.modularity(e, l).count(); () }),
+      ("louvainMove", (e, l) => {
+        GraphAnalytics.louvainMove(GraphAnalytics.bothWaysCheckpointed(e), l).count(); () }),
+      ("modularity", (e, l) => {
+        GraphAnalytics.modularity(GraphAnalytics.bothWaysCheckpointed(e), l).count(); () }),
       ("coarsenGraph", (e, l) => { GraphAnalytics.coarsenGraph(e, l).count(); () }))
     ops.foreach { case (name, op) =>
       val tU = timed(op(uni, labU))

@@ -24,6 +24,15 @@ object GraphAnalytics {
     (cp, obs.get("stat").asInstanceOf[T])
   }
 
+  /** Round `i`'s state `next`, already materialized, after freeing the
+    * checkpoint `prev` of round i − 1 that it replaces. Round 1 replaces
+    * the loop's seed state, which the loop did not checkpoint and keeps:
+    * a fixed-round loop holds one round's blocks, not one per round. */
+  private[graft] def nextRound(i: Int, prev: DataFrame, next: DataFrame): DataFrame = {
+    if (i > 1) bridge.unpersistCheckpoint(prev)
+    next
+  }
+
   /** [[checkpointObserved]] with the row count as the statistic. */
   private def checkpointCounted(df: DataFrame): (DataFrame, Long) =
     checkpointObserved[Long](df, count(lit(1)))
@@ -97,12 +106,12 @@ object GraphAnalytics {
   def shortestPaths(edges: DataFrame, start: Long, hops: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("weight")).localCheckpoint()
     var dists = e.sparkSession.range(1).select(lit(start).as("node"), lit(0.0).as("dist"))
-    for (_ <- 1 to hops) {
+    for (i <- 1 to hops) {
       val relaxed = e.join(dists, e("src") === dists("node"))
         .select(col("dst").as("node"), (col("dist") + col("weight")).as("dist"))
-      dists = dists.unionByName(relaxed)
+      dists = nextRound(i, dists, dists.unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     dists
   }
@@ -123,12 +132,12 @@ object GraphAnalytics {
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       .localCheckpoint()
     var dist = pivots.select(col("p"), col("p").as("node"), lit(0).as("d"))
-    for (_ <- 1 to hops) {
+    for (i <- 1 to hops) {
       val nxt = e.join(dist, e("src") === dist("node"))
         .select(col("p"), col("dst").as("node"), (col("d") + 1).as("d"))
-      dist = dist.unionByName(nxt)
+      dist = nextRound(i, dist, dist.unionByName(nxt)
         .groupBy("p", "node").agg(min(col("d")).as("d"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     dist
   }
@@ -157,7 +166,7 @@ object GraphAnalytics {
     var levels = Vector(
       pivots.select(col("p"), col("p").as("node"), lit(1L).as("sig")).localCheckpoint())
     var visited = levels(0).select(col("p"), col("node")).localCheckpoint()
-    for (_ <- 1 to hops) {
+    for (i <- 1 to hops) {
       val prev = levels.last
       val cand = e.join(prev, e("src") === prev("node"))
         .select(col("p"), col("dst").as("node"), col("sig"))
@@ -165,7 +174,8 @@ object GraphAnalytics {
         .groupBy(col("p"), col("node")).agg(sum(col("sig")).as("sig"))
         .localCheckpoint()
       levels :+= nxt
-      visited = visited.unionByName(nxt.select(col("p"), col("node"))).localCheckpoint()
+      visited = nextRound(i, visited,
+        visited.unionByName(nxt.select(col("p"), col("node"))).localCheckpoint())
     }
     var nextInfo = levels(hops)
       .select(col("p").as("np"), col("node").as("w"), col("sig").as("sigw"),
@@ -246,15 +256,15 @@ object GraphAnalytics {
     val base = (15L * init) / 100L
     var rank = nodes.select(col("n"),
       when(isSeed, lit(init)).otherwise(lit(0L)).as("r"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val contrib = e.join(rank, e("src") === rank("n")).join(outdeg, "src")
         .select(col("dst").as("n"), expr("r DIV od").as("c"))
         .groupBy("n").agg(sum(col("c")).as("cs"))
-      rank = nodes.join(contrib, Seq("n"), "left")
+      rank = nextRound(i, rank, nodes.join(contrib, Seq("n"), "left")
         .select(col("n"),
           (when(isSeed, lit(base)).otherwise(lit(0L)) +
             expr("(85 * coalesce(cs, CAST(0 AS BIGINT))) DIV 100")).as("r"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     rank.select(col("n").as("node"), col("r").as("rank_fp"))
   }
@@ -295,19 +305,19 @@ object GraphAnalytics {
     // rescale renormalizes to ΣEigScale regardless of the seed's scale
     // (round-1 rescale numerator ≤ indeg·10^6, still < Long.MaxValue).
     var rank = nodes.select(col("n"), lit(math.max(EigScale / n, 1L)).as("r"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val contrib = e.join(rank, e("src") === rank("n"))
         .select(col("dst").as("n"), col("r"))
         .groupBy("n").agg(sum(col("r")).as("c"))
       val tot = contrib.agg(sum(col("c")).as("s"))
-      rank = nodes.join(contrib, Seq("n"), "left")
+      rank = nextRound(i, rank, nodes.join(contrib, Seq("n"), "left")
         .crossJoin(broadcast(tot))
         .select(col("n"),
           when(col("s").isNull || col("s") === 0L, lit(0L))
             .otherwise(expr(
               s"(coalesce(c, CAST(0 AS BIGINT)) * $EigScale) DIV s"))
             .as("r"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     rank.select(col("n").as("node"), col("r").as("eig_fp"))
   }
@@ -331,13 +341,13 @@ object GraphAnalytics {
     var arr = e.sparkSession.range(1)
       .select(lit(start).as("node"),
         lit("1970-01-01 00:00:00").cast("timestamp").as("arr"))
-    for (_ <- 1 to rounds) {
+    for (i <- 1 to rounds) {
       val cand = e.join(arr, e("src") === arr("node") && e("ts") >= arr("arr"))
         .groupBy(e("dst")).agg(min(e("ts")).as("arr"))
         .select(col("dst").as("node"), col("arr"))
-      arr = arr.unionByName(cand)
+      arr = nextRound(i, arr, arr.unionByName(cand)
         .groupBy(col("node")).agg(min(col("arr")).as("arr"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     arr
   }
@@ -674,17 +684,17 @@ object GraphAnalytics {
       .unionAll(e.select(col("v").as("node"))).distinct().localCheckpoint()
     var hub = nodes.select(col("node"), lit(1L).as("h"))
     var auth = nodes.select(col("node"), lit(0L).as("a"))
-    for (_ <- 1 to iters) {
+    for (i <- 1 to iters) {
       val aIn = e.join(hub, e("u") === hub("node"))
         .groupBy(e("v").as("node")).agg(sum(col("h")).as("a"))
-      auth = nodes.join(aIn, Seq("node"), "left")
+      auth = nextRound(i, auth, nodes.join(aIn, Seq("node"), "left")
         .select(col("node"), coalesce(col("a"), lit(0L)).as("a"))
-        .localCheckpoint()
+        .localCheckpoint())
       val hOut = e.join(auth, e("v") === auth("node"))
         .groupBy(e("u").as("node")).agg(sum(col("a")).as("h"))
-      hub = nodes.join(hOut, Seq("node"), "left")
+      hub = nextRound(i, hub, nodes.join(hOut, Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).as("h"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     hub.join(auth, "node")
       .select(col("node"), col("h").as("hub"), col("a").as("auth"))
@@ -1046,13 +1056,14 @@ object GraphAnalytics {
             col("me.w").as("w"), col("me.cu").as("cu"), col("me.cv").as("cv"))
           .distinct()
           .localCheckpoint()
-        mst = mst.unionByName(chosen.select("u", "v", "w")).localCheckpoint()
+        mst = nextRound(round + 1, mst,
+          mst.unionByName(chosen.select("u", "v", "w")).localCheckpoint())
         val merged = connectedComponents(
             chosen.select(col("cu").as("src"), col("cv").as("dst")), maxIters = 64)
           .select(col("node").as("c"), col("component").as("newc"))
-        comp = comp.join(merged, Seq("c"), "left")
+        comp = nextRound(round + 1, comp, comp.join(merged, Seq("c"), "left")
           .select(col("n"), coalesce(col("newc"), col("c")).as("c"))
-          .localCheckpoint()
+          .localCheckpoint())
         round += 1
       }
     }

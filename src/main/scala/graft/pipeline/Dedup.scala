@@ -139,8 +139,7 @@ object Dedup {
   def embeddingCosineLsh(emb: DataFrame, idCol: String, vecCol: String,
                          topK: Int, numPlanes: Int = 4, roundTo: Int = 6,
                          dim: Int = 0): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
+    val vd = Similarity.doubles(col(vecCol))
     val trueDim =
       if (dim > 0) dim
       else emb.select(size(col(vecCol)).as("d")).head(1)
@@ -175,8 +174,7 @@ object Dedup {
                            topK: Int, roundTo: Int = 6): DataFrame = {
     // per-row precompute on each side: float→double cast and norm happen
     // |rows| times, so the O(n²) pair loop does exactly one dot per pair
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
+    val vd = Similarity.doubles(col(vecCol))
     // spread the STREAM side: a small-file corpus scans as 1 partition and
     // the broadcast-NL pair loop inherits it — single-threaded O(n²)
     val a = spread(emb).select(col(idCol).as("a"), vd.as("va"), vec.norm(vd).as("na"))
@@ -211,16 +209,8 @@ object Dedup {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
                     cent: DataFrame, tau: Double,
                     roundTo: Int = 6): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vid")).orderBy(col("ccos").desc, col("cid"))
-    val assigned = spread(emb).select(col(idCol).as("vid"), vd.as("v"))
-      .join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vid"), col("v"), col("cid"))
+    val assigned = Similarity.assignCells(Similarity.vectors(emb, idCol, vecCol),
+        cent, roundTo).select(col("vid"), col("v"), col("cid"))
     assigned.join(assigned.select(col("cid"), col("vid").as("bvid"),
         col("v").as("bv")), "cid")
       .filter(col("bvid") < col("vid"))
@@ -250,8 +240,6 @@ object Dedup {
       s"numPlanes must be in [1, 63] (got $numPlanes): 0 planes has no " +
         "reduce seed and >63 overflows the int64 sub-bucket key")
     require(budget >= 1, s"budget must be >= 1 (got $budget)")
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
     val trueDim =
       if (dim > 0) dim
       else emb.select(size(col(vecCol)).as("d")).head(1)
@@ -261,14 +249,8 @@ object Dedup {
         .select(lit(0L).as("vid"), array().cast("array<double>").as("v"),
           lit(0L).as("cid"), lit(0L).as("sub"))
     val planes = Similarity.hyperplanes(numPlanes, trueDim)
-    val wAssign = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("vid")).orderBy(col("ccos").desc, col("cid"))
-    val assigned = spread(emb).select(col(idCol).as("vid"), vd.as("v"))
-      .join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vid"), col("v"), col("cid"), col("cv"))
+    val assigned = Similarity.assignCells(Similarity.vectors(emb, idCol, vecCol),
+        cent, roundTo).select(col("vid"), col("v"), col("cid"), col("cv"))
     val sizes = assigned.groupBy(col("cid")).agg(count(lit(1)).as("csz"))
     val subCol = planes.zipWithIndex.map { case (p, b) =>
       when(vec.dot(col("v"), typedlit(p)) -

@@ -4,6 +4,7 @@ import graft.functions.vec
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -46,6 +47,72 @@ object Similarity {
       val n = (if (corpusN > 0) corpusN else corpus.count()).toDouble
       math.max(math.ceil(math.sqrt(n)), math.ceil(n / kMax.toDouble)).toLong
     }
+
+  /** A vector column as array<double>, the element type every kernel in
+    * this layer computes in. */
+  private[pipeline] def doubles(v: Column): Column = v.cast(ArrayType(DoubleType))
+
+  /** A corpus as spread (vid, v: array<double>) rows. */
+  private[pipeline] def vectors(corpus: DataFrame, idCol: String,
+                                vecCol: String): DataFrame =
+    TextOps.spread(corpus).select(col(idCol).as("vid"), doubles(col(vecCol)).as("v"))
+
+  /** Per-row top-n against a small broadcast side — the one ranking rule
+    * of the vector layer (cell assignment, cell probe, exact kNN ground
+    * truth), the engine's counterpart of the oracle's `kmAssignSql` /
+    * `cosSql`. Joins `rows` to `broadcast(side)` (on `on` when given, e.g.
+    * a self-pair exclusion), rounds `score` to `roundTo` places as column
+    * `name` — rounding BEFORE ranking, so last-ulp noise cannot reorder —
+    * numbers each `per` group by (`name` desc, `by` asc) in `rn`, and
+    * keeps rn ≤ n. `per` and `by` may name either side's column: the
+    * assignment partitions by the row id and breaks ties on the broadcast
+    * cell id, the exact kNN partitions by the broadcast query id and
+    * breaks ties on the corpus id. Keeps every column of both sides. */
+  def nearest(rows: DataFrame, side: DataFrame, per: String, by: String,
+              name: String, score: Column, n: Int, roundTo: Int,
+              on: Option[Column] = None): DataFrame =
+    on.fold(rows.join(broadcast(side)))(rows.join(broadcast(side), _))
+      .withColumn(name, round(score, roundTo))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col(per)).orderBy(col(name).desc, col(by))))
+      .filter(col("rn") <= n)
+
+  /** IVF cell assignment: every (vid, v) row joined to its arg-max
+    * round-`roundTo` cosine centroid of `cent` (cid, cv), cid tie-break;
+    * the score rides along as `ccos`. */
+  private[graft] def assignCells(e: DataFrame, cent: DataFrame,
+                                 roundTo: Int): DataFrame =
+    nearest(e, cent, "vid", "cid", "ccos", vec.cosine(col("v"), col("cv")),
+      1, roundTo)
+
+  /** The `nprobe` cells whose centroids are nearest one query vector,
+    * (qcos desc, cid) — the single-query probe. Returns (cid). */
+  private def probeCells(cent: DataFrame, qv: Column, nprobe: Int,
+                         roundTo: Int): DataFrame =
+    cent.withColumn("qcos", round(vec.cosine(col("cv"), qv), roundTo))
+      .orderBy(col("qcos").desc, col("cid")).limit(nprobe)
+      .select(col("cid"))
+
+  /** Packed sign code of a vector half: bit = component > 0, folded
+    * MSB-first into a BIGINT. */
+  private def signCode(half: Column): Column =
+    aggregate(half, lit(0L),
+      (a, x) => a * 2 + when(x > 0, lit(1L)).otherwise(lit(0L)))
+
+  /** SQ8 code of a vector against the global scale column `mx`:
+    * ⌊x·127/M⌋ per component. */
+  private def sq8Code(v: Column): Column =
+    transform(v, x => floor(x * 127.0 / col("mx")))
+
+  /** The batch ADC lookup table: for each query (qid, qv) and codeword
+    * (s, cid, cs), the round-`roundTo` dot of the query's subspace-s slice
+    * with the codeword. Returns (qid, s, cid, contrib). */
+  private def adcTable(q: DataFrame, cb: DataFrame, d: Int,
+                       roundTo: Int): DataFrame =
+    q.crossJoin(cb)
+      .select(col("qid"), col("s"), col("cid"),
+        round(vec.dot(slice(col("qv"), col("s") * d + 1, lit(d)), col("cs")),
+          roundTo).as("contrib"))
 
   /** H fixed hyperplanes with exact-quarter components — deterministic
     * across engines (no RNG; values in {-3/4..3/4} are exact doubles). */
@@ -152,9 +219,7 @@ object Similarity {
              queryVec: Seq[Double], k: Int, m: Int = 8,
              roundTo: Int = 6, codewordEvery: Long = 0L,
              corpusN: Long = 0L): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val spacing = sqrtSpacing(corpus, codewordEvery, corpusN)
     pqAdcScores(e, e, spacing, queryVec, m, roundTo)
       .orderBy(col("score").desc, col("vid"))
@@ -219,9 +284,7 @@ object Similarity {
     * (guide §5, cache-only-when-reused). */
   def pqSubvectors(corpus: DataFrame, idCol: String, vecCol: String,
                    dim: Int, m: Int = 8): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     pqSub(e, dim / m, m).localCheckpoint()
   }
 
@@ -257,9 +320,7 @@ object Similarity {
                        dim: Int, m: Int = 8,
                        codewordEvery: Long = 0L,
                        corpusN: Long = 0L): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = corpus.select(col(idCol).as("vid"), vd.as("v"))
+    val e = corpus.select(col(idCol).as("vid"), doubles(col(vecCol)).as("v"))
     val spacing = sqrtSpacing(corpus, codewordEvery, corpusN)
     pqSpacedCodebook(e, spacing, dim / m, m)
   }
@@ -283,9 +344,7 @@ object Similarity {
                         prebuiltSub: DataFrame = null): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d = dim / m
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val spacing = sqrtSpacing(corpus, codewordEvery, corpusN)
     // r15: share the checkpointed subvector table with a caller's MSE
     // pass ([[pqSubvectors]]) instead of re-slicing the corpus per stage
@@ -311,10 +370,7 @@ object Similarity {
   def pqTopKWith(corpus: DataFrame, idCol: String, vecCol: String,
                  cb: DataFrame, queryVec: Seq[Double], k: Int, m: Int = 8,
                  roundTo: Int = 6): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
-    pqAdcScoresCb(e, cb, queryVec, m, roundTo)
+    pqAdcScoresCb(vectors(corpus, idCol, vecCol), cb, queryVec, m, roundTo)
       .orderBy(col("score").desc, col("vid"))
       .limit(k)
       .select(col("vid").as(idCol), col("score"))
@@ -329,9 +385,7 @@ object Similarity {
             roundTo: Int = 6, prebuiltSub: DataFrame = null): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val d = dim / m
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val sub = if (prebuiltSub != null) prebuiltSub else pqSub(e, d, m)
     pqAssign(sub, cb, roundTo)
       .agg(round(sum(col("d2").cast(DecimalType(20, 10))).cast("double") /
@@ -358,9 +412,7 @@ object Similarity {
   def permuteBalanced(corpus: DataFrame, idCol: String, vecCol: String,
                       dim: Int, m: Int = 8, roundTo: Int = 6): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol), vd.as("__v"))
+    val e = TextOps.spread(corpus).select(col(idCol), doubles(col(vecCol)).as("__v"))
     val mom = e.select(posexplode(col("__v")))
       .select(col("pos").as("i"), col("col").as("xv"))
       .groupBy(col("i"))
@@ -418,9 +470,7 @@ object Similarity {
                              roundTo: Int = 6, codewordEvery: Long = 0L,
                              corpusN: Long = 0L)
       : (DataFrame, DataFrame, DataFrame) = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val spacing = sqrtSpacing(corpus, codewordEvery, corpusN)
     val cb1 = e.filter(col("vid") % spacing === 0)
       .select(col("vid").as("cid1"), col("v").as("c1"))
@@ -520,23 +570,12 @@ object Similarity {
                 cent: DataFrame, queryVec: Seq[Double], k: Int, m: Int = 8,
                 nprobe: Int = 2, rerank: Int = 30, roundTo: Int = 6,
                 codewordEvery: Long = 0L, corpusN: Long = 0L): DataFrame = {
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val spacing = sqrtSpacing(corpus, codewordEvery, corpusN)
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = e.join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val assigned = assignCells(e, cent, roundTo)
       .select(col("vid"), col("v"), col("cid"))
     val qv = typedlit(queryVec)
-    val probed = cent
-      .withColumn("qcos", round(vec.cosine(col("cv"), qv), roundTo))
-      .orderBy(col("qcos").desc, col("cid")).limit(nprobe)
-      .select(col("cid"))
-    val cand = assigned.join(broadcast(probed), "cid")
+    val cand = assigned.join(broadcast(probeCells(cent, qv, nprobe, roundTo)), "cid")
       .select(col("vid"), col("v"))
     // ADC rank as orderBy+limit → TakeOrderedAndProject (per-partition
     // heaps), NOT a single-partition row_number window: identical rows
@@ -570,19 +609,14 @@ object Similarity {
     // overflow the signed BIGINT fold; misuse must fail fast, not drift
     require(queryVec.length % 2 == 0 && queryVec.length <= 126,
       s"hammingTopK needs an even dimension <= 126, got ${queryVec.length}")
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    def codeOf(half: Column): Column =
-      aggregate(half, lit(0L),
-        (a, x) => a * 2 + when(x > 0, lit(1L)).otherwise(lit(0L)))
     def qCode(xs: Seq[Double]): Long =
       xs.foldLeft(0L)((a, x) => a * 2 + (if (x > 0) 1L else 0L))
     val half = queryVec.length / 2
     val (q1, q2) = (qCode(queryVec.take(half)), qCode(queryVec.drop(half)))
     val qv = typedlit(queryVec)
-    TextOps.spread(corpus).select(col(idCol).as("vid"), vd.as("v"))
-      .withColumn("h1", codeOf(slice(col("v"), 1, half)))
-      .withColumn("h2", codeOf(slice(col("v"), half + 1, half)))
+    vectors(corpus, idCol, vecCol)
+      .withColumn("h1", signCode(slice(col("v"), 1, half)))
+      .withColumn("h2", signCode(slice(col("v"), half + 1, half)))
       .withColumn("hamming",
         (bit_count(col("h1").bitwiseXOR(lit(q1))) +
           bit_count(col("h2").bitwiseXOR(lit(q2)))).cast("int"))
@@ -609,20 +643,14 @@ object Similarity {
                          dim: Int, k: Int, roundTo: Int = 6): DataFrame = {
     require(dim % 2 == 0 && dim <= 126,
       s"hammingTopKQueries needs an even dimension <= 126, got $dim")
-    val dt = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType)
-    def codeOf(half: Column): Column =
-      aggregate(half, lit(0L),
-        (a, x) => a * 2 + when(x > 0, lit(1L)).otherwise(lit(0L)))
     val half = dim / 2
-    val coded = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).cast(dt).as("v"))
-      .withColumn("h1", codeOf(slice(col("v"), 1, half)))
-      .withColumn("h2", codeOf(slice(col("v"), half + 1, half)))
+    val coded = vectors(corpus, idCol, vecCol)
+      .withColumn("h1", signCode(slice(col("v"), 1, half)))
+      .withColumn("h2", signCode(slice(col("v"), half + 1, half)))
     val q = queries
-      .select(col(qIdCol).as("qid"), col(qVecCol).cast(dt).as("qv"))
-      .withColumn("qh1", codeOf(slice(col("qv"), 1, half)))
-      .withColumn("qh2", codeOf(slice(col("qv"), half + 1, half)))
+      .select(col(qIdCol).as("qid"), doubles(col(qVecCol)).as("qv"))
+      .withColumn("qh1", signCode(slice(col("qv"), 1, half)))
+      .withColumn("qh2", signCode(slice(col("qv"), half + 1, half)))
     val wRank = Window.partitionBy(col("qid"))
       .orderBy(col("hamming").asc, col("vid"))
     coded.join(broadcast(q))
@@ -673,10 +701,7 @@ object Similarity {
                           queryVec: Seq[Double], k: Int, rerank: Int,
                           roundTo: Int, scaleLit: Option[Double]): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val dt = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType)
-    val e0 = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).cast(dt).as("v"))
+    val e0 = vectors(corpus, idCol, vecCol)
     val e = scaleLit match {
       case Some(sc) => e0.withColumn("mx", lit(sc))
       case None =>
@@ -684,8 +709,8 @@ object Similarity {
           max(array_max(transform(col("v"), x => abs(x)))).as("mx"))))
     }
     val qv = typedlit(queryVec)
-    e.withColumn("qq", transform(qv, x => floor(x * 127.0 / col("mx"))))
-      .withColumn("qc", transform(col("v"), x => floor(x * 127.0 / col("mx"))))
+    e.withColumn("qq", sq8Code(qv))
+      .withColumn("qc", sq8Code(col("v")))
       .withColumn("qdot", vec.dot(col("qc"), col("qq")).cast("long"))
       .orderBy(col("qdot").desc, col("vid"))
       .limit(rerank)
@@ -709,18 +734,15 @@ object Similarity {
                      queries: DataFrame, qIdCol: String, qVecCol: String,
                      k: Int, rerank: Int, roundTo: Int = 6): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val dt = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType)
-    val e = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).cast(dt).as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val scale = e.agg(
       max(array_max(transform(col("v"), x => abs(x)))).as("mx"))
     val coded = e.join(broadcast(scale))
-      .withColumn("qc", transform(col("v"), x => floor(x * 127.0 / col("mx"))))
+      .withColumn("qc", sq8Code(col("v")))
     val q = queries
-      .select(col(qIdCol).as("qid"), col(qVecCol).cast(dt).as("qv"))
+      .select(col(qIdCol).as("qid"), doubles(col(qVecCol)).as("qv"))
       .join(broadcast(scale))
-      .withColumn("qq", transform(col("qv"), x => floor(x * 127.0 / col("mx"))))
+      .withColumn("qq", sq8Code(col("qv")))
       .select(col("qid"), col("qv"), col("qq"))
     val byDot = Window.partitionBy(col("qid"))
       .orderBy(col("qdot").desc, col("vid"))
@@ -757,23 +779,17 @@ object Similarity {
                     queriesN: Long = 0L,
                     broadcastRowLimit: Long = 4000000L): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val dt = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType)
-    val e = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).cast(dt).as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val n = if (corpusN > 0) corpusN else corpus.count()
     val spacing = sqrtSpacing(corpus, codewordEvery, n)
     val d = dim / m
     val cb = pqSpacedCodebook(e, spacing, d, m)
     val codes = pqAssign(pqSub(e, d, m), cb, roundTo)
       .select(col("vid"), col("s"), col("cid"))
-    val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).cast(dt).as("qv"))
+    val q = queries.select(col(qIdCol).as("qid"), doubles(col(qVecCol)).as("qv"))
     val qN = if (queriesN > 0) queriesN else q.count()
     val contribRows = qN * (n / spacing + 1) * m
-    val contrib = q.crossJoin(cb)
-      .select(col("qid"), col("s"), col("cid"),
-        round(vec.dot(slice(col("qv"), col("s") * d + 1, lit(d)), col("cs")),
-          roundTo).as("contrib"))
+    val contrib = adcTable(q, cb, d, roundTo)
     val gatedContrib =
       if (contribRows <= broadcastRowLimit) broadcast(contrib) else contrib
     val wRank = Window.partitionBy(col("qid"))
@@ -862,21 +878,10 @@ object Similarity {
   def ivfTopKWith(corpus: DataFrame, idCol: String, vecCol: String,
                   cent: DataFrame, queryVec: Seq[Double], k: Int,
                   nprobe: Int = 2, roundTo: Int = 6): DataFrame = {
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).as("v"))
-      .join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
-      .select(col("vid"), col("v"), col("cid"))
+    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), col(vecCol).as("v"))
     val qv = typedlit(queryVec)
-    val probed = cent
-      .withColumn("qcos", round(vec.cosine(col("cv"), qv), roundTo))
-      .orderBy(col("qcos").desc, col("cid")).limit(nprobe)
-      .select(col("cid"))
-    assigned.join(broadcast(probed), "cid")
+    assignCells(e, cent, roundTo).select(col("vid"), col("v"), col("cid"))
+      .join(broadcast(probeCells(cent, qv, nprobe, roundTo)), "cid")
       .withColumn("score", round(vec.cosine(col("v"), qv), roundTo))
       .orderBy(col("score").desc, col("vid")).limit(k)
       .select(col("vid").as(idCol), col("score"))
@@ -892,22 +897,12 @@ object Similarity {
                      cent: DataFrame, queries: DataFrame, qIdCol: String,
                      qVecCol: String, k: Int, nprobe: Int = 2,
                      roundTo: Int = 6): DataFrame = {
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).as("v"))
-      .join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), col(vecCol).as("v"))
+    val assigned = assignCells(e, cent, roundTo)
       .select(col("vid"), col("v"), col("cid"))
     val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).as("qv"))
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("cid"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("qcos", round(vec.cosine(col("qv"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    val probes = nearest(q, cent, "qid", "cid", "qcos",
+        vec.cosine(col("qv"), col("cv")), nprobe, roundTo)
       .select(col("qid"), col("qv"), col("cid"))
     val wRank = Window.partitionBy(col("qid"))
       .orderBy(col("score").desc, col("vid"))
@@ -951,21 +946,13 @@ object Similarity {
                        queriesN: Long = 0L,
                        broadcastRowLimit: Long = 4000000L): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val dt = org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType)
-    val e = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).cast(dt).as("v"))
+    val e = vectors(corpus, idCol, vecCol)
     val n = if (corpusN > 0) corpusN else corpus.count()
     val spacing = sqrtSpacing(corpus, codewordEvery, n)
     val d = dim / m
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = e.join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val assigned = assignCells(e, cent, roundTo)
       .select(col("vid"), col("v"), col("cid"))
-    val q = queries.select(col(qIdCol).as("qid"), col(qVecCol).cast(dt).as("qv"))
+    val q = queries.select(col(qIdCol).as("qid"), doubles(col(qVecCol)).as("qv"))
     // size estimates for the broadcast gate — job-free when the caller
     // supplies corpusN/queriesN (declared queries pass the Tables memo)
     val qN = if (queriesN > 0) queriesN else q.count()
@@ -974,12 +961,8 @@ object Similarity {
     val contribRows = qN * cbRows
     def gated(df: DataFrame, rows: Long): DataFrame =
       if (rows <= broadcastRowLimit) broadcast(df) else df
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("qcos").desc, col("cid"))
-    val probes = q.crossJoin(broadcast(cent))
-      .withColumn("qcos", round(vec.cosine(col("qv"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wProbe))
-      .filter(col("rn") <= nprobe)
+    val probes = nearest(q, cent, "qid", "cid", "qcos",
+        vec.cosine(col("qv"), col("cv")), nprobe, roundTo)
       .select(col("qid"), col("qv"), col("cid"))
     val cand = assigned.join(gated(probes, probeRows), "cid")
       .select(col("qid"), col("qv"), col("vid"), col("v"))
@@ -991,10 +974,7 @@ object Similarity {
       .select(col("vid"), col("s"), col("cid"))
     // per-(qid, subspace, codeword) lookup table: |queries|·m·|codebook|
     // rows, broadcast — the ADC table in batch form
-    val contrib = q.crossJoin(cb)
-      .select(col("qid"), col("s"), col("cid"),
-        round(vec.dot(slice(col("qv"), col("s") * d + 1, lit(d)), col("cs")),
-          roundTo).as("contrib"))
+    val contrib = adcTable(q, cb, d, roundTo)
     val adc = cand.select(col("qid"), col("vid"))
       .join(codes, "vid")
       .join(gated(contrib, contribRows), Seq("qid", "s", "cid"))
@@ -1054,14 +1034,8 @@ object Similarity {
   def cellRepresentatives(corpus: DataFrame, idCol: String, vecCol: String,
                           cent: DataFrame, perCell: Int = 2,
                           roundTo: Int = 6): DataFrame = {
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
-    val assigned = TextOps.spread(corpus)
-      .select(col(idCol).as("vid"), col(vecCol).as("v"))
-      .join(broadcast(cent))
-      .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-      .withColumn("rn", row_number().over(wAssign))
-      .filter(col("rn") === 1)
+    val e = TextOps.spread(corpus).select(col(idCol).as("vid"), col(vecCol).as("v"))
+    val assigned = assignCells(e, cent, roundTo)
       .select(col("cid"), col("vid"), col("ccos"))
     val wRep = Window.partitionBy(col("cid"))
       .orderBy(col("ccos").desc, col("vid"))
@@ -1128,8 +1102,7 @@ object Similarity {
                               iters: Int, roundTo: Int = 6)
       : (DataFrame, DataFrame, DataFrame) = {
     import org.apache.spark.sql.types.DecimalType
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
+    val vd = doubles(col(vecCol))
     val e = TextOps.spread(emb)
       .select(col(idCol).as("vid"), vd.as("v"))
       .filter(size(col("v")) > 0)
@@ -1237,11 +1210,8 @@ object Similarity {
                       roundTo: Int = 6, corpusN: Long = 0L,
                       seeds: DataFrame = null): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val e = TextOps.spread(emb).select(col(idCol).as("vid"), vd.as("v"))
-    val wAssign = Window.partitionBy(col("vid"))
-      .orderBy(col("ccos").desc, col("cid"))
+    val e = vectors(emb, idCol, vecCol)
+    val vd = doubles(col(vecCol))
     // Seed rule: `id % spacing == 0` replays exactly in a SQL oracle, but
     // it is only guaranteed non-empty for DENSE integer ids. Callers whose
     // ids are hashes (the Engine's UUID-keyed serving path) pass explicit
@@ -1251,13 +1221,9 @@ object Similarity {
       if (seeds != null) seeds.select(col(idCol).as("cid"), vd.as("cv"))
       else emb.filter(col(idCol) % sqrtSpacing(emb, centroidEvery, corpusN) === 0)
         .select(col(idCol).as("cid"), vd.as("cv"))
-    for (_ <- 1 to iters) {
-      val assigned = e.join(broadcast(cent))
-        .withColumn("ccos", round(vec.cosine(col("v"), col("cv")), roundTo))
-        .withColumn("rn", row_number().over(wAssign))
-        .filter(col("rn") === 1)
-        .select(col("cid"), col("v"))
-      cent = assigned
+    for (i <- 1 to iters) {
+      cent = graft.graph.GraphAnalytics.nextRound(i, cent,
+        assignCells(e, cent, roundTo).select(col("cid"), col("v"))
         .select(col("cid"), posexplode(col("v")))
         .groupBy(col("cid"), col("pos"))
         .agg(round(sum(col("col").cast(DecimalType(20, 10))).cast("double") /
@@ -1265,7 +1231,7 @@ object Similarity {
         .groupBy(col("cid"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m")).as("cv"))
-        .localCheckpoint()
+        .localCheckpoint())
     }
     cent
   }
@@ -1417,8 +1383,7 @@ object Similarity {
       if (numPlanes > 0) numPlanes
       else nswPlanesFor(if (corpusN > 0) corpusN else corpus.count())
     val planes = nswHyperplanes(h, dim)
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
+    val vd = doubles(col(vecCol))
     val b = TextOps.spread(corpus)
       .select(col(idCol).as("vid"), vd.as("v"))
       .withColumn("nv", vec.norm(col("v")))
@@ -1503,10 +1468,8 @@ object Similarity {
         roundTo, dim, corpusN)
       (e0.localCheckpoint(), r0.localCheckpoint())
     }
-    val vd = col(vecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
-    val qd = col(qVecCol).cast(org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.DoubleType))
+    val vd = doubles(col(vecCol))
+    val qd = doubles(col(qVecCol))
     val c = normedCorpus.getOrElse(
       corpus.select(col(idCol).as("cid"), vd.as("cv"))
         .withColumn("ncv", vec.norm(col("cv")))
@@ -1527,19 +1490,14 @@ object Similarity {
     // per query, seed the beam with their rep nodes scored by their OWN
     // vectors (so every visited row carries a true node score). Windows
     // partition by qid — never global.
-    val centScore = round(when(col("ncn") * col("nq") === 0, 0.0)
-      .otherwise(vec.dot(col("cent"), col("qv")) /
-        (col("ncn") * col("nq"))), roundTo)
-    val wSel = Window.partitionBy(col("qid"))
-      .orderBy(col("cscore").desc, col("bucket"))
     // probe 2× beamWidth buckets: seeding costs one tiny join and every
     // probed bucket's members land in VISITED at hop 1 (the answer pool),
     // so extra probes buy recall even though the beam then narrows
-    val sel = reps.withColumn("ncn", vec.norm(col("cent")))
-      .join(broadcast(q))
-      .select(col("qid"), col("bucket"), col("rid"), centScore.as("cscore"))
-      .withColumn("rn", row_number().over(wSel))
-      .filter(col("rn") <= 2 * beamWidth)
+    val sel = nearest(reps.withColumn("ncn", vec.norm(col("cent"))), q,
+        "qid", "bucket", "cscore",
+        when(col("ncn") * col("nq") === 0, 0.0).otherwise(
+          vec.dot(col("cent"), col("qv")) / (col("ncn") * col("nq"))),
+        2 * beamWidth, roundTo)
       .select(col("qid"), col("rid").as("cid"))
     var beam = sel.join(c, "cid").join(broadcast(q), "qid")
       .select(col("qid"), col("cid"), score.as("score"))

@@ -961,15 +961,11 @@ object InferenceQueries {
       val q = e.filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = TextOps.spread(e).select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      def top5(scoreOf: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column) =
-        c.join(broadcast(q))
-          .withColumn("cos", round(scoreOf($"cv", $"qv"), 6))
-          .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
-          .select($"qid", $"cid")
-      val full = top5((a, b) => graft.functions.vec.cosine(a, b))
-      val half = top5((a, b) =>
-        graft.functions.vec.cosine(slice(a, 1, 32), slice(b, 1, 32)))
+      def top5(score: Column) = graft.pipeline.Similarity
+        .nearest(c, q, "qid", "cid", "cos", score, 5, 6).select($"qid", $"cid")
+      val full = top5(graft.functions.vec.cosine($"cv", $"qv"))
+      val half = top5(graft.functions.vec.cosine(
+        slice($"cv", 1, 32), slice($"qv", 1, 32)))
       val hits = full.join(half, Seq("qid", "cid"))
         .groupBy($"qid").agg(count(lit(1)).as("nh"))
       q.select($"qid").join(broadcast(hits), Seq("qid"), "left")

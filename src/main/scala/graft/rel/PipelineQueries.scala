@@ -1486,17 +1486,14 @@ object PipelineQueries {
     "q_ann_recall",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = Tables(s, dir, "embeddings")
       val approx = Similarity.lshTopK(e, e.filter($"vec_id" < 5), "vec_id",
           "embedding", k = 5, probeRadius = 1)
         .select($"qid", $"cid")
       val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = TextOps.spread(e).select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val exact = c.join(broadcast(q))
-        .withColumn("cos", round(graft.functions.vec.cosine($"cv", $"qv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+      val exact = Similarity.nearest(c, q, "qid", "cid", "cos",
+          graft.functions.vec.cosine($"cv", $"qv"), 5, 6)
         .select($"qid", $"cid")
       exact.join(approx, Seq("qid", "cid"))
         .groupBy($"qid")
@@ -1548,7 +1545,6 @@ object PipelineQueries {
     "q_ann_recall_trained",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = Tables(s, dir, "embeddings")
       val cent = trainedCentroids(s, dir)
       val approx = Similarity.ivfTopKQueries(e, "vec_id", "embedding", cent,
@@ -1556,10 +1552,8 @@ object PipelineQueries {
         .select($"qid", $"cand".as("cid"))
       val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = TextOps.spread(e).select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val exact = c.join(broadcast(q))
-        .withColumn("cos", round(graft.functions.vec.cosine($"cv", $"qv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+      val exact = Similarity.nearest(c, q, "qid", "cid", "cos",
+          graft.functions.vec.cosine($"cv", $"qv"), 5, 6)
         .select($"qid", $"cid")
       exact.join(approx, Seq("qid", "cid"))
         .groupBy($"qid")
@@ -1759,7 +1753,6 @@ object PipelineQueries {
     "q_ann_nsw_recall",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = Tables(s, dir, "embeddings")
       val (ie, ir, ic) = nswIndexShared(s, dir)
       val approx = Similarity.nswTopKQueries(e, "vec_id", "embedding",
@@ -1775,12 +1768,9 @@ object PipelineQueries {
         .select($"vec_id".as("cid"),
           $"embedding".cast("array<double>").as("cv"))
         .withColumn("ncv", graft.functions.vec.norm($"cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val exact = c.join(broadcast(q))
-        .withColumn("cos", round(when($"ncv" * $"nq" === 0, 0.0)
-          .otherwise(graft.functions.vec.dot($"cv", $"qv") /
-            ($"ncv" * $"nq")), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+      val exact = Similarity.nearest(c, q, "qid", "cid", "cos",
+          when($"ncv" * $"nq" === 0, 0.0).otherwise(
+            graft.functions.vec.dot($"cv", $"qv") / ($"ncv" * $"nq")), 5, 6)
         .select($"qid", $"cid")
       exact.join(approx, Seq("qid", "cid"))
         .groupBy($"qid")
@@ -1818,17 +1808,11 @@ object PipelineQueries {
       val e = Tables(s, dir, "embeddings")
       val cent = trainedCentroids(s, dir)
       val c = TextOps.spread(e).select($"vec_id".as("vid"), $"embedding".as("v"))
-      val wA = Window.partitionBy($"vid").orderBy($"ccos".desc, $"cid")
-      val af = c.join(broadcast(cent))
-        .withColumn("ccos", round(vec.cosine($"v", $"cv"), 6))
-        .withColumn("rn", row_number().over(wA)).filter($"rn" === 1)
-        .select($"vid", $"v", $"cid")
+      val af = Similarity.assignCells(c, cent, 6).select($"vid", $"v", $"cid")
       val q = e.filter($"vec_id" < 5).select($"vec_id".as("qid"), $"embedding".as("qv"))
-      val wP = Window.partitionBy($"qid").orderBy($"qcos".desc, $"cid")
-      val pr = q.crossJoin(broadcast(cent))
-        .withColumn("qcos", round(vec.cosine($"qv", $"cv"), 6))
-        .withColumn("prn", row_number().over(wP)).filter($"prn" <= 4)
-        .select($"qid", $"qv", $"cid", $"prn")
+      val pr = Similarity.nearest(q, cent, "qid", "cid", "qcos",
+          vec.cosine($"qv", $"cv"), 4, 6)
+        .select($"qid", $"qv", $"cid", $"rn".as("prn"))
       val cand = af.join(broadcast(pr), "cid")
         .select($"qid", $"vid",
           round(vec.cosine($"v", $"qv"), 6).as("score"), $"prn")
@@ -1837,11 +1821,8 @@ object PipelineQueries {
       val approx = cand.join(broadcast(settings), $"prn" <= $"nprobe")
         .withColumn("rn", row_number().over(wS)).filter($"rn" <= 5)
         .select($"nprobe", $"qid", $"vid")
-      val wE = Window.partitionBy($"qid").orderBy($"cos".desc, $"vid")
-      val exact = c.join(broadcast(q))
-        .withColumn("cos", round(vec.cosine($"v", $"qv"), 6))
-        .withColumn("rn", row_number().over(wE)).filter($"rn" <= 5)
-        .select($"qid", $"vid")
+      val exact = Similarity.nearest(c, q, "qid", "vid", "cos",
+          vec.cosine($"v", $"qv"), 5, 6).select($"qid", $"vid")
       val hits = approx.join(exact, Seq("qid", "vid"))
         .groupBy($"nprobe").agg(count(lit(1)).as("h"))
       settings.join(hits, Seq("nprobe"), "left")
@@ -1896,15 +1877,12 @@ object PipelineQueries {
     "q_vec_hubness",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val vec = graft.functions.vec
       val sDf = Audit.sample(Tables(s, dir, "embeddings"), "vec_id", AuditN)
         .select($"vec_id".as("vid"), $"embedding".as("v"))
       val nb = sDf.select($"vid".as("nid"), $"v".as("nv"))
-      val w = Window.partitionBy($"vid").orderBy($"cos".desc, $"nid")
-      val knn = TextOps.spread(sDf).join(broadcast(nb), $"vid" =!= $"nid")
-        .withColumn("cos", round(vec.cosine($"v", $"nv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+      val knn = Similarity.nearest(TextOps.spread(sDf), nb, "vid", "nid", "cos",
+          vec.cosine($"v", $"nv"), 5, 6, on = Some($"vid" =!= $"nid"))
         .select($"nid")
       val occ = knn.groupBy($"nid").agg(count(lit(1)).as("o"))
       sDf.select($"vid").join(occ, $"vid" === $"nid", "left")
@@ -1973,10 +1951,8 @@ object PipelineQueries {
             .select(($"vid" + $"off").as("vid"), $"v", $"label", $"off"))
         .localCheckpoint()
       val nb = sm.select($"vid".as("nid"), $"v".as("nv"))
-      val w = Window.partitionBy($"vid").orderBy($"cos".desc, $"nid")
-      val knn = TextOps.spread(sm).join(broadcast(nb), $"vid" =!= $"nid")
-        .withColumn("cos", round(vec.cosine($"v", $"nv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 5)
+      val knn = Similarity.nearest(TextOps.spread(sm), nb, "vid", "nid", "cos",
+          vec.cosine($"v", $"nv"), 5, 6, on = Some($"vid" =!= $"nid"))
         .select($"vid", $"nid", $"cos")
       val und = knn.unionByName(
           knn.select($"nid".as("vid"), $"vid".as("nid"), $"cos"))
@@ -2528,13 +2504,9 @@ object PipelineQueries {
         .select($"vec_id", $"label", $"embedding".cast("array<double>").as("v"))
       val probes = e.filter($"vec_id" < 25)
         .select($"vec_id".as("qid"), $"label".as("qlabel"), $"v".as("qv"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy($"qid").orderBy($"cos".desc, $"vec_id")
-      TextOps.spread(e).join(broadcast(probes))
-        .filter($"vec_id" =!= $"qid")
-        .withColumn("cos", round(graft.functions.vec.cosine($"v", $"qv"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 5)
+      Similarity.nearest(TextOps.spread(e), probes, "qid", "vec_id", "cos",
+          graft.functions.vec.cosine($"v", $"qv"), 5, 6,
+          on = Some($"vec_id" =!= $"qid"))
         .groupBy($"qid", $"qlabel")
         .agg(sum(when($"label" === $"qlabel", 1L).otherwise(0L)).as("n_same"))
         .select($"qid".as("vec_id"), $"qlabel".as("label"), $"n_same",
@@ -5058,15 +5030,12 @@ object PipelineQueries {
     "q_vec_silhouette",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.types.DecimalType
       val e = TextOps.spread(Tables(s, dir, "embeddings"))
         .select($"vec_id".as("vid"), $"embedding".cast("array<double>").as("v"))
       val cent = trainedCentroids(s, dir)
-      val w = Window.partitionBy($"vid").orderBy($"ccos".desc, $"cid")
-      val top2 = e.join(broadcast(cent))
-        .withColumn("ccos", round(graft.functions.vec.cosine($"v", $"cv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 2)
+      val top2 = Similarity.nearest(e, cent, "vid", "cid", "ccos",
+          graft.functions.vec.cosine($"v", $"cv"), 2, 6)
         .groupBy($"vid")
         .agg(max(when($"rn" === 1, $"cid")).as("cid"),
           max(when($"rn" === 1, $"ccos")).as("cos1"),
@@ -5111,14 +5080,10 @@ object PipelineQueries {
     "q_vec_ood",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = TextOps.spread(Tables(s, dir, "embeddings"))
         .select($"vec_id".as("vid"), $"embedding".cast("array<double>").as("v"))
       val cent = trainedCentroids(s, dir)
-      val w = Window.partitionBy($"vid").orderBy($"ccos".desc, $"cid")
-      e.join(broadcast(cent))
-        .withColumn("ccos", round(graft.functions.vec.cosine($"v", $"cv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" === 1)
+      Similarity.assignCells(e, cent, 6)
         .select($"vid".as("vec_id"), $"cid",
           round(lit(1.0) - $"ccos", 6).as("ood"))
         .orderBy($"ood".desc, $"vec_id").limit(20)
@@ -5146,7 +5111,6 @@ object PipelineQueries {
     "q_rank_mrr",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = Tables(s, dir, "embeddings")
       val approx = Similarity.lshTopK(e, e.filter($"vec_id" < 5), "vec_id",
           "embedding", k = 10, probeRadius = 1)
@@ -5154,10 +5118,8 @@ object PipelineQueries {
       val q = e.filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = TextOps.spread(e).select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val relevant = c.join(broadcast(q))
-        .withColumn("cos", round(graft.functions.vec.cosine($"cv", $"qv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 10)
+      val relevant = Similarity.nearest(c, q, "qid", "cid", "cos",
+          graft.functions.vec.cosine($"cv", $"qv"), 10, 6)
         .select($"qid", $"cid")
       Similarity.rankEvalAt(approx, relevant, k = 10)
     },
@@ -5216,7 +5178,6 @@ object PipelineQueries {
     "q_rank_ndcg",
     (s, dir) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val e = Tables(s, dir, "embeddings")
       val approx = Similarity.lshTopK(e, e.filter($"vec_id" < 5), "vec_id",
           "embedding", k = 10, probeRadius = 1)
@@ -5224,10 +5185,8 @@ object PipelineQueries {
       val q = e.filter($"vec_id" < 5)
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = TextOps.spread(e).select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      val exact = c.join(broadcast(q))
-        .withColumn("cos", round(graft.functions.vec.cosine($"cv", $"qv"), 6))
-        .withColumn("rn", row_number().over(w)).filter($"rn" <= 10)
+      val exact = Similarity.nearest(c, q, "qid", "cid", "cos",
+          graft.functions.vec.cosine($"cv", $"qv"), 10, 6)
         .select($"qid", $"cid", (lit(11) - $"rn").as("rel"))
       Similarity.ndcgAt(approx, exact, k = 10)
     },

@@ -3,7 +3,6 @@ package graft.rel
 import graft.{Artifact, QueryDef, Tables}
 import graft.functions.vec
 import graft.search.{Bm25, VectorSearch}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Declared vector / keyword operator queries — SURVEY.md §2.B cats 12-13.
@@ -70,11 +69,8 @@ object VectorQueries {
         .select($"vec_id".as("qid"), $"embedding".as("qv"))
       val c = graft.pipeline.TextOps.spread(e)
         .select($"vec_id".as("cid"), $"embedding".as("cv"))
-      val w = Window.partitionBy($"qid").orderBy($"cos".desc, $"cid")
-      c.join(broadcast(q))
-        .withColumn("cos", round(vec.cosine($"cv", $"qv"), 6))
-        .withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 5)
+      graft.pipeline.Similarity
+        .nearest(c, q, "qid", "cid", "cos", vec.cosine($"cv", $"qv"), 5, 6)
         .select($"qid", $"cid", $"cos", $"rn")
         .orderBy($"qid", $"rn")
     },

@@ -67,6 +67,27 @@ class GraphAnalyticsSpec extends SparkSpec {
     assert(GraphAnalytics.triangleCounts(path).count() == 0L)
   }
 
+  test("fixed-round loops keep one round's checkpoint: leftover blocks do not grow with rounds") {
+    val events = Tables(spark, sf, "events")
+    val edges = events.select($"user_id".as("src"),
+      (get_json_object($"props", "$.k").cast("long") % 15).as("dst"))
+    val weighted = edges.withColumn("weight", lit(1.0))
+    // persistent RDDs a call leaves behind; the result stays referenced
+    // while counting, so only the call's own leftovers are measured
+    def leftover(run: => org.apache.spark.sql.DataFrame): Int = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = run
+      out.collect()
+      (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    }
+    val pr2 = leftover(GraphAnalytics.pageRankFixedPoint(edges, iters = 2))
+    val pr6 = leftover(GraphAnalytics.pageRankFixedPoint(edges, iters = 6))
+    assert(pr2 == pr6, s"pageRankFixedPoint leaves $pr2 checkpoints at 2 rounds, $pr6 at 6")
+    val sp2 = leftover(GraphAnalytics.shortestPaths(weighted, start = 0L, hops = 2))
+    val sp6 = leftover(GraphAnalytics.shortestPaths(weighted, start = 0L, hops = 6))
+    assert(sp2 == sp6, s"shortestPaths leaves $sp2 checkpoints at 2 hops, $sp6 at 6")
+  }
+
   test("pageRankFixedPoint: deterministic across partitioning, mass bounded") {
     val edges = Tables(spark, sf, "events")
       .select($"user_id".as("src"),

@@ -315,6 +315,66 @@ class SketchIvfSpec extends SparkSpec {
     assert(ext == extSingle)
   }
 
+  test("ivfTopKQueries: every batch slice row-identical to the per-query ivfTopKWith plan") {
+    val emb = Tables(spark, sf, "embeddings")
+    val cent = Similarity.kmeansCentroids(emb, "vec_id", "embedding", iters = 2)
+    val batch = Similarity.ivfTopKQueries(emb, "vec_id", "embedding", cent,
+        emb.filter($"vec_id" < 3), "vec_id", "embedding", k = 5, nprobe = 2)
+      .select($"qid", $"rn", $"cand", $"score")
+      .as[(Long, Int, Long, Double)].collect()
+      .groupBy(_._1).view.mapValues(_.sortBy(_._2).map(t => (t._3, t._4)).toSeq).toMap
+    assert(batch.keySet == Set(0L, 1L, 2L))
+    (0L to 2L).foreach { qid =>
+      val qv = emb.filter($"vec_id" === qid)
+        .select($"embedding".cast("array<double>"))
+        .as[Seq[Double]].head()
+      val single = Similarity.ivfTopKWith(emb, "vec_id", "embedding", cent,
+          qv, k = 5, nprobe = 2)
+        .as[(Long, Double)].collect().toSeq
+      assert(single.nonEmpty)
+      assert(batch(qid) == single, s"qid $qid: batch ${batch(qid)} vs single $single")
+    }
+  }
+
+  test("nearest: rounded ties rank by key, n past the side, empty side, partitioning, self pairs") {
+    val rows = Seq((1L, 0.0), (2L, 0.0), (3L, 0.0)).toDF("rid", "x")
+    // 0.1234561 and 0.1234564 differ only past 6 places: tied at roundTo 6
+    val side = Seq((7L, 0.1234564), (2L, 0.1234561), (9L, 0.5)).toDF("sid", "s")
+    def ranked(r: org.apache.spark.sql.DataFrame, sd: org.apache.spark.sql.DataFrame,
+               n: Int, roundTo: Int, on: Option[org.apache.spark.sql.Column] = None) =
+      Similarity.nearest(r, sd, "rid", "sid", "score", $"s" + $"x", n, roundTo, on)
+        .select($"rid", $"rn", $"sid", $"score")
+        .as[(Long, Int, Long, Double)].collect().toSet
+    val at6 = ranked(rows, side, 3, 6)
+    assert(at6.filter(_._1 == 1L).toSeq.sortBy(_._2).map(_._3) == Seq(9L, 2L, 7L),
+      s"a rounded tie goes to the smaller key: $at6")
+    val at7 = ranked(rows, side, 3, 7)
+    assert(at7.filter(_._1 == 1L).toSeq.sortBy(_._2).map(_._3) == Seq(9L, 7L, 2L),
+      s"unrounded, the larger score wins: $at7")
+    // n larger than the side: every side row, for every row
+    val all = ranked(rows, side, 10, 6)
+    assert(all.size == 9 && all.map(t => (t._1, t._3)) ==
+      (for (r <- Seq(1L, 2L, 3L); s <- Seq(7L, 2L, 9L)) yield (r, s)).toSet)
+    // top-1 keeps exactly one row per group
+    assert(ranked(rows, side, 1, 6).map(t => (t._1, t._3)) ==
+      Set((1L, 9L), (2L, 9L), (3L, 9L)))
+    // empty side: no rows
+    assert(ranked(rows, side.limit(0), 3, 6).isEmpty)
+    // partitioning of the row side cannot move a row (a corpus-sized top-2)
+    val e = Tables(spark, sf, "embeddings").select($"vec_id".as("vid"), $"embedding".as("v"))
+    val cent = e.filter($"vid" % 37 === 0).select($"vid".as("cid"), $"v".as("cv"))
+    def top2(r: org.apache.spark.sql.DataFrame) = Similarity.nearest(r, cent, "vid", "cid",
+        "ccos", graft.functions.vec.cosine($"v", $"cv"), 2, 6)
+      .select($"vid", $"rn", $"cid", $"ccos").as[(Long, Int, Long, Double)].collect().toSet
+    val whole = top2(e)
+    assert(whole.size == 2 * e.count() && top2(e.repartition(7)) == whole)
+    // a self-excluding predicate drops the self pair (rid 2 = sid 2)
+    val noSelf = ranked(rows, side, 3, 6, on = Some($"rid" =!= $"sid"))
+    assert(!noSelf.exists(t => t._1 == t._3), s"self pair kept: $noSelf")
+    assert(noSelf.filter(_._1 == 2L).toSeq.sortBy(_._2).map(_._3) == Seq(9L, 7L))
+    assert(noSelf.filter(_._1 == 1L).size == 3)
+  }
+
   test("histogramQuantiles: err within (0, width]; exact matches a driver-side sort; mergeable") {
     val li = Tables(spark, sf, "lineitem")
     val cents = li.select(round($"l_extendedprice" * 100).cast("long").as("cents"))

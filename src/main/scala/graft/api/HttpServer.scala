@@ -109,6 +109,14 @@ final class EngineHttpServer(engine: Engine, port: Int) {
   private def optNum(b: Map[String, Object], k: String): Option[Double] =
     field(b, k, "a number") { case x: Number => x.doubleValue() }
 
+  /** `top_k` of a search body: a number, 10 when absent; a negative one
+    * is a [[BadRequest]]. */
+  private def topKOf(b: Map[String, Object]): Int =
+    optNum(b, "top_k").map(_.toInt).getOrElse(10) match {
+      case k if k < 0 => throw new BadRequest("top_k must be a non-negative number")
+      case k => k
+    }
+
   private def queryParams(ex: HttpExchange): Map[String, String] =
     try Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
       .filter(_.contains("=")).map { kv =>
@@ -224,7 +232,7 @@ final class EngineHttpServer(engine: Engine, port: Int) {
     val b = parseBody(ex)
     val hits = engine.vectorSearch(
       queryText = optStr(b, "query_text").getOrElse(""),
-      topK = optNum(b, "top_k").map(_.toInt).getOrElse(10),
+      topK = topKOf(b),
       metadataFilter = optStrMap(b, "metadata_filter").getOrElse(Map.empty))
     respond(ex, 200, hits.map(h => Map(
       "node" -> Map("id" -> h.id, "text" -> h.text, "metadata" -> h.metadata),
@@ -253,7 +261,7 @@ final class EngineHttpServer(engine: Engine, port: Int) {
       queryText = optStr(b, "query_text").getOrElse(""),
       vectorWeight = optNum(b, "vector_weight").getOrElse(0.5),
       graphWeight = optNum(b, "graph_weight").getOrElse(0.5),
-      topK = optNum(b, "top_k").map(_.toInt).getOrElse(10),
+      topK = topKOf(b),
       graphStartId = optStr(b, "graph_start_id"),
       graphDepth = optNum(b, "graph_depth").map(_.toInt).getOrElse(2)) match {
       case Some(hits) => respond(ex, 200, hits.map(h => Map(

@@ -439,10 +439,13 @@ object GraphAnalytics {
       requireDriverFits(m, "connected components")
       val spark = edges.sparkSession
       import spark.implicits._
-      minRootUnionFind(und.as[(Long, Long)].collect()).toDF("node", "component")
+      val pairs = und.as[(Long, Long)].collect()
+      bridge.unpersistCheckpoint(und)
+      minRootUnionFind(pairs).toDF("node", "component")
     } else {
       val ee = und.unionAll(und.select(col("v"), col("u"))).distinct()
         .toDF("src", "dst").localCheckpoint()
+      bridge.unpersistCheckpoint(und)
       val init = ee.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("lab")).localCheckpoint()
       labelFixpoint(ee, init, Nil, min(_), least(_, _), maxIters, "connected components")
@@ -909,8 +912,11 @@ object GraphAnalytics {
     @annotation.tailrec
     def peelRound(rem: DataFrame, remRows: Long, nodes: DataFrame, nodeRows: Long,
                   acc: DataFrame, round: Int): DataFrame =
-      if (nodeRows == 0) acc
-      else {
+      if (nodeRows == 0) {
+        // a round's acc is its own checkpoint; round 0's reads `nodes`
+        if (round > 0) Seq(rem, nodes).foreach(bridge.unpersistCheckpoint)
+        acc
+      } else {
         require(round < maxRounds, s"SCC peeling did not converge within $maxRounds rounds")
         if (remRows <= localEdgeLimit) {
           requireDriverFits(remRows + nodeRows, "SCC Tarjan")
@@ -919,8 +925,10 @@ object GraphAnalytics {
           val comp = tarjanScc(ns, es)
           val spark = rem.sparkSession
           import spark.implicits._
-          acc.unionByName(ns.toSeq.map(n => (n, comp.getOrElse(n, n))).toDF("node", "scc"))
-            .localCheckpoint()
+          val done = acc.unionByName(ns.toSeq.map(n => (n, comp.getOrElse(n, n)))
+            .toDF("node", "scc")).localCheckpoint()
+          Seq(rem, nodes, acc).foreach(bridge.unpersistCheckpoint)
+          done
         } else {
           val e2 = rem.withColumn("dir", lit(0))
             .unionByName(rem.select(col("dst").as("src"), col("src").as("dst"),
@@ -928,9 +936,9 @@ object GraphAnalytics {
           val init = nodes
             .select(col("node"), explode(array(lit(0), lit(1))).as("dir"))
             .withColumn("lab", col("node"))
-          val both = labelFixpoint(e2, init, Seq("dir"), max(_), greatest(_, _),
-              propSteps, "SCC propagation")
-            .groupBy("node")
+          val labels = labelFixpoint(e2, init, Seq("dir"), max(_), greatest(_, _),
+            propSteps, "SCC propagation")
+          val both = labels.groupBy("node")
             .agg(max(when(col("dir") === 0, col("lab"))).as("fwd"),
               max(when(col("dir") === 1, col("lab"))).as("bwd"))
             .localCheckpoint()
@@ -939,10 +947,12 @@ object GraphAnalytics {
           val (leftEdges, leftEdgeRows) = checkpointCounted(rem
             .join(left.select(col("node").as("src")), Seq("src"), "left_semi")
             .join(left.select(col("node").as("dst")), Seq("dst"), "left_semi"))
-          peelRound(leftEdges, leftEdgeRows, left, leftRows,
-            acc.unionByName(both.filter(col("fwd") === col("bwd"))
-              .select(col("node"), col("fwd").as("scc"))).localCheckpoint(),
-            round + 1)
+          val extracted = acc.unionByName(both.filter(col("fwd") === col("bwd"))
+            .select(col("node"), col("fwd").as("scc"))).localCheckpoint()
+          // every block of the round it replaces: the next round reads
+          // only leftEdges, left and extracted
+          Seq(labels, both, rem, nodes, acc).foreach(bridge.unpersistCheckpoint)
+          peelRound(leftEdges, leftEdgeRows, left, leftRows, extracted, round + 1)
         }
       }
     val (rem, remRows) = checkpointCounted(edges.select(col("src"), col("dst"))
@@ -1043,8 +1053,10 @@ object GraphAnalytics {
       val cv = comp.select(col("n").as("v"), col("c").as("cv"))
       val (x, crossRows) = checkpointCounted(e.join(cu, "u").join(cv, "v")
         .filter(col("cu") =!= col("cv")))
-      if (crossRows == 0) { active = false }
-      else {
+      if (crossRows == 0) {
+        bridge.unpersistCheckpoint(x)
+        active = false
+      } else {
         val inc = x.select(col("cu").as("cc"), col("w"), col("u"), col("v"),
             col("cu"), col("cv"))
           .unionByName(x.select(col("cv").as("cc"), col("w"), col("u"),
@@ -1061,13 +1073,20 @@ object GraphAnalytics {
         val merged = connectedComponents(
             chosen.select(col("cu").as("src"), col("cv").as("dst")), maxIters = 64)
           .select(col("node").as("c"), col("component").as("newc"))
-        comp = nextRound(round + 1, comp, comp.join(merged, Seq("c"), "left")
+        val next = comp.join(merged, Seq("c"), "left")
           .select(col("n"), coalesce(col("newc"), col("c")).as("c"))
-          .localCheckpoint())
+          .localCheckpoint()
+        // the round's mst and labels are materialized: nothing reads its
+        // crossing edges, its choices or the labels it replaces again
+        Seq(x, chosen, comp).foreach(bridge.unpersistCheckpoint)
+        comp = next
         round += 1
       }
     }
     require(!active, s"Boruvka did not converge within $maxRounds rounds")
+    // only the forest is returned, and after a round it no longer reads e
+    bridge.unpersistCheckpoint(comp)
+    if (round > 0) bridge.unpersistCheckpoint(e)
     mst
   }
 

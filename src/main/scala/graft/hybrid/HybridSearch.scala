@@ -1,11 +1,15 @@
 package graft.hybrid
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 
-/** Weighted vector+graph fusion (reference O20, app.py:657-736) as ONE
-  * composed DataFrame plan — Catalyst sees the whole query, unlike the
-  * reference's separately-materialized passes.
+/** Weighted vector+graph fusion (reference O20, app.py:657-736) in two
+  * forms that compute the same rows. [[fuse]] is ONE composed DataFrame
+  * plan — Catalyst sees the whole query, unlike the reference's
+  * separately-materialized passes — for the declared queries over
+  * distributed tables. [[fuseRows]] is its row form over scores already
+  * on the driver, which `Engine.hybridSearch` ranks without a Spark job.
   *
   * Semantics preserved exactly (SURVEY §7.3):
   *  - min-max normalize vector scores; all-equal degenerate case → 1.0
@@ -18,8 +22,8 @@ import org.apache.spark.sql.functions._
   *    absent), sort desc with id tie-break, top-k
   *  - BM25 deliberately NOT fused (app.py:670-672)
   *
-  * The min/max normalizers are 1-row aggregates broadcast into the plan —
-  * no driver round-trip, no second pass over the data.
+  * In [[fuse]] the min/max normalizers are 1-row aggregates broadcast into
+  * the plan — no driver round-trip, no second pass over the data.
   */
 object HybridSearch {
 
@@ -58,6 +62,47 @@ object HybridSearch {
       .filter(col("final_score") > 0)
       .orderBy(col("final_score").desc, col(idCol))
       .limit(topK)
+  }
+
+  /** Row form of [[fuse]] over scores held on the driver, without the
+    * ordering and the limit: the (id, vec_norm, graph_score, final_score)
+    * rows that pass `final_score > 0`, unordered. It computes what the
+    * plan computes, in the plan's expression order, so every score is
+    * bit-identical: `vmin`/`vmax` are Spark's `min`/`max` (NaN greatest),
+    * `vmax = vmin` is SQL equality (NaN = NaN), a missing, null or NaN
+    * vec_norm or graph score is 0.0 (`na.fill`), and `> 0` is SQL's
+    * comparison (NaN passes).
+    *
+    * The plan's rows are the node universe; here they are the ids of
+    * `vecScores` and `graphScores`, a superset of the nodes that can pass
+    * the filter, which may name ids with no node row. A node with neither
+    * score has final vw·0 + gw·0, which passes only under a non-finite
+    * weight; then the rows are every id of `nodeIds`, as in the plan.
+    *
+    * @param vecScores   (id, vector_score) of every scored embedding
+    * @param graphScores (id, graph_score), empty when no start node given
+    */
+  def fuseRows(vecScores: Seq[(String, Double)], graphScores: Seq[(String, java.lang.Double)],
+               vectorWeight: Double, graphWeight: Double,
+               nodeIds: => Iterable[String]): Seq[(String, Double, Double, Double)] = {
+    def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
+    def filled(x: java.lang.Double): Double = if (x == null || x.isNaN) 0.0 else x
+    val scores = vecScores.map(_._2)
+    val vmin = scores.reduceOption((a, b) => if (cmp(b, a) < 0) b else a)
+    val vmax = scores.reduceOption((a, b) => if (cmp(b, a) > 0) b else a)
+    val vn = vecScores.map { case (id, s) =>
+      id -> filled(if (cmp(vmax.get, vmin.get) == 0) 1.0
+        else (s - vmin.get) / (vmax.get - vmin.get))
+    }.toMap
+    val gs = graphScores.map { case (id, s) => id -> filled(s) }.toMap
+    val ids =
+      if (cmp(vectorWeight * 0.0 + graphWeight * 0.0, 0.0) > 0) nodeIds.toSeq.distinct
+      else (vn.keySet ++ gs.keySet).toSeq
+    ids.map { id =>
+      val v = vn.getOrElse(id, 0.0)
+      val g = gs.getOrElse(id, 0.0)
+      (id, v, g, vectorWeight * v + graphWeight * g)
+    }.filter(r => cmp(r._4, 0.0) > 0)
   }
 
   /** Reciprocal Rank Fusion: rrf(d) = Σ_r 1/(k + rank_r(d)) over any

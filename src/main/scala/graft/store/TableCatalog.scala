@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
 import graft.graph.GraphAnalytics
-import graft.model.{EdgeRow, EmbeddingRow, Node}
+import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -50,6 +50,12 @@ final class TableCatalog(val spark: SparkSession) {
   def nodes: DataFrame = nodesT.df
   def embeddings: DataFrame = embeddingsT.df
   def edges: DataFrame = edgesT.df
+
+  /** The held tables' row counts, read under the write lock so the three
+    * agree with one another; no Spark job. */
+  def stats: Stats = synchronized {
+    Stats(nodesT.size, embeddingsT.size, edgesT.size)
+  }
 
   /** Monotonic node-snapshot version — bumped by every node mutation so
     * derived-index caches (e.g. the Engine's BM25 index) can invalidate on
@@ -165,6 +171,8 @@ object TableCatalog {
     @volatile private var snap: (Vector[InternalRow], DataFrame) = frame(Vector.empty)
 
     def df: DataFrame = snap._2
+
+    def size: Long = snap._1.size
 
     private def frame(rows: Vector[InternalRow]): (Vector[InternalRow], DataFrame) =
       (rows, bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), rows)))

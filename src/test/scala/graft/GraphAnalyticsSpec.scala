@@ -86,6 +86,20 @@ class GraphAnalyticsSpec extends SparkSpec {
     val sp2 = leftover(GraphAnalytics.shortestPaths(weighted, start = 0L, hops = 2))
     val sp6 = leftover(GraphAnalytics.shortestPaths(weighted, start = 0L, hops = 6))
     assert(sp2 == sp6, s"shortestPaths leaves $sp2 checkpoints at 2 hops, $sp6 at 6")
+    // Borůvka on a path whose weights pair neighbouring components every
+    // round (w = trailing zeros of the right endpoint): n nodes merge in
+    // log2 n rounds
+    def pairingPath(n: Int) = (0 until n - 1)
+      .map(i => (i.toLong, i + 1L, Integer.numberOfTrailingZeros(i + 1).toDouble))
+      .toDF("u", "v", "w")
+    val mst2 = leftover(GraphAnalytics.boruvkaMst(pairingPath(4)))
+    val mst5 = leftover(GraphAnalytics.boruvkaMst(pairingPath(32)))
+    assert(mst2 == mst5, s"boruvkaMst leaves $mst2 checkpoints at 2 rounds, $mst5 at 5")
+    // SCC on a chain peels one node a round on the distributed path
+    def chain(n: Int) = (0 until n - 1).map(i => (i.toLong, i + 1L)).toDF("src", "dst")
+    val scc2 = leftover(GraphAnalytics.stronglyConnectedComponents(chain(3), localEdgeLimit = 0))
+    val scc5 = leftover(GraphAnalytics.stronglyConnectedComponents(chain(6), localEdgeLimit = 0))
+    assert(scc2 == scc5, s"SCC peeling leaves $scc2 checkpoints at 2 rounds, $scc5 at 5")
   }
 
   test("pageRankFixedPoint: deterministic across partitioning, mass bounded") {

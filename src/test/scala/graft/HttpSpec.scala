@@ -111,6 +111,10 @@ class HttpSpec extends SparkSpec {
     val bad = Seq(
       "GET" -> s"/search/graph?start_id=$a&depth=two" -> None,
       "POST" -> "/search/vector" -> Some("""{"query_text":"x","top_k":"five"}"""),
+      "POST" -> "/search/vector" -> Some("""{"query_text":"x","top_k":-1}"""),
+      "POST" -> "/search/hybrid" -> Some("""{"query_text":"x","top_k":-3}"""),
+      "POST" -> "/search/hybrid" ->
+        Some(s"""{"query_text":"x","graph_start_id":"$a","top_k":-1}"""),
       "POST" -> "/search/hybrid" ->
         Some(s"""{"query_text":"x","graph_start_id":"$a","graph_depth":"deep"}"""),
       "POST" -> "/nodes" -> Some("""{"text":"t","auto_embed":"yes"}"""),
@@ -127,6 +131,9 @@ class HttpSpec extends SparkSpec {
       assert(detail.nonEmpty && detail.length < 80 && !detail.contains("Exception"),
         s"$method $path: detail '$detail'")
     }
+    val negative = json(send("POST", "/search/vector",
+      Some("""{"query_text":"x","top_k":-1}"""))._2).get("detail").toString
+    assert(negative.startsWith("top_k must be"), negative)
     val after = json(send("GET", "/stats")._2).get("total_nodes")
     assert(after.asInstanceOf[Number].longValue() ==
       before.asInstanceOf[Number].longValue() + 1, "rejected POSTs created no node")

@@ -1,0 +1,214 @@
+package graft
+
+import scala.util.Random
+
+import graft.api.{AnnMode, Engine}
+import graft.functions.{vec, HashEmbed}
+import graft.graph.{Bfs, GraphOps}
+import graft.hybrid.HybridSearch
+import graft.model._
+import graft.store.TableCatalog
+import org.apache.spark.sql.functions._
+
+/** Vector and hybrid search rank on the driver; these checks hold them to
+  * the Spark plans they replaced, kept here as the reference: the
+  * `join` / `orderBy` / `limit` tail of vector search in every
+  * [[AnnMode]], and [[HybridSearch.fuse]] over [[GraphOps.closeness]].
+  * Answers must agree row for row, every score to the bit.
+  *
+  * The catalogs are seeded and loaded through [[TableCatalog.load]]. They
+  * hold tied scores from duplicate texts, ids that differ only in a
+  * supplementary character (UTF-16 and UTF-8 order them differently),
+  * orphan embeddings, dangling edges, and a user-supplied embedding of the
+  * wrong dimension. */
+class ServingEquivalenceSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ts = "2024-01-01T00:00:00Z"
+  private val words = Seq("graph", "vector", "spark", "join", "index", "query", "node", "edge")
+  private val tiedIds = Seq("t-\uFFFD", "t-\uD83D\uDE00", "t-\uD83D\uDE01")
+
+  /** An Engine over a seeded random catalog of `n` nodes. */
+  private def engineFor(seed: Int, n: Int = 40): Engine = {
+    val rnd = new Random(seed)
+    def text() = Seq.fill(2 + rnd.nextInt(4))(words(rnd.nextInt(words.size))).mkString(" ")
+    val shared = text()
+    val ids = (0 until n).map(i => s"n-$i") ++ tiedIds
+    val nodes = ids.map { id =>
+      // the tied ids and every fifth node share one text: tied scores
+      val t = if (id.startsWith("t-") || rnd.nextInt(5) == 0) shared else text()
+      val meta = rnd.nextInt(6) match {
+        case 0 => Map.empty[String, String]
+        case 1 => Map("type" -> "rare")
+        case k => Map("type" -> Seq("a", "b")(k % 2), "lang" -> Seq("en", "de")(rnd.nextInt(2)))
+      }
+      Node(id, t, meta, ts, ts)
+    }
+    val embedded = nodes.filter(_ => rnd.nextInt(8) != 0)
+    val orphans = (0 until 4).map(i => Node(s"orphan-$i", if (i < 2) shared else text(),
+      Map("type" -> "a"), ts, ts))
+    val embeddings = (embedded ++ orphans).map(nd =>
+      EmbeddingRow(nd.id, HashEmbed.encode(nd.text, HashEmbed.DefaultDim).toSeq,
+        HashEmbed.DefaultDim))
+    val targets = ids ++ Seq("ghost-0", "ghost-1")
+    val edges = (0 until 4 * n).map { i =>
+      val src = if (i % 23 == 0) "ghost-2" else ids(rnd.nextInt(ids.size))
+      EdgeRow(s"e-$i", src, targets(rnd.nextInt(targets.size)),
+        Seq("t1", "t2")(rnd.nextInt(2)), Seq(0.5, 1.0, 2.5)(rnd.nextInt(3)), ts)
+    } ++ tiedIds.map(t => EdgeRow(s"e-$t", "n-0", t, "t1", 1.0, ts))
+    val catalog = new TableCatalog(spark)
+    catalog.load(nodes.toDF(), embeddings.toDF(), edges.toDF())
+    val e = new Engine(catalog)
+    // a user-supplied embedding of the wrong dimension
+    e.createNode("wrong dimension " + shared, Map("type" -> "a"),
+      embedding = Some(Seq.fill(8)(0.5f)))
+    e
+  }
+
+  private lazy val engines = Seq(1, 2, 3).map(s => engineFor(s))
+
+  private def bits(x: Double): Long = java.lang.Double.doubleToRawLongBits(x)
+
+  private def vectorKey(h: VectorHit) = (h.id, h.text, h.metadata, bits(h.vectorScore))
+  private def hybridKey(h: HybridHit) =
+    (h.id, h.text, bits(h.vectorScore), bits(h.graphScore), bits(h.finalScore))
+
+  /** Vector search as one Spark plan over the Engine's candidate set. */
+  private def vectorPlan(e: Engine, text: String, topK: Int, filter: Map[String, String],
+                         mode: AnnMode): Seq[VectorHit] = {
+    val q = HashEmbed.encode(text, e.dim)
+    val scored = e.vectorCandidates(q, topK, filter.nonEmpty, mode)
+      .select($"node_id".as("id"),
+        vec.dot($"vector", typedlit(q.toSeq.map(_.toDouble))).as("vector_score"))
+      .join(e.catalog.nodes, "id")
+    filter.foldLeft(scored) { case (df, (k, v)) => df.filter(element_at($"metadata", k) === v) }
+      .orderBy($"vector_score".desc, $"id")
+      .limit(topK)
+      .select($"id", $"text", $"metadata", $"vector_score".as("vectorScore"))
+      .as[VectorHit].collect().toSeq
+  }
+
+  /** Hybrid search as [[HybridSearch.fuse]] over [[GraphOps.closeness]]. */
+  private def hybridPlan(e: Engine, text: String, vw: Double, gw: Double, topK: Int,
+                         start: Option[String], depth: Int): Option[Seq[HybridHit]] = {
+    val nodes = e.catalog.nodes
+    if (start.exists(s => nodes.filter($"id" === s).isEmpty)) None
+    else {
+      val q = HashEmbed.encode(text, e.dim)
+      val vecScores = e.catalog.embeddings.filter($"dim" === q.length)
+        .select($"node_id".as("id"),
+          vec.dot($"vector", typedlit(q.toSeq.map(_.toDouble))).as("vector_score"))
+      val graphScores = start.map { s =>
+        val bfs = Bfs.traverse(e.catalog.edges, lit(s), depth,
+          srcCol = "source", dstCol = "target", weightCol = "weight")
+        GraphOps.closeness(bfs, lit(s), depth)
+          .filter($"node" =!= s).select($"node".as("id"), $"graph_score")
+      }
+      val fused = HybridSearch.fuse(nodes, vecScores, graphScores, vw, gw, topK)
+        .select($"id", $"vec_norm", $"graph_score", $"final_score")
+        .as[(String, Double, Double, Double)].collect()
+      val texts = nodes.filter($"id".isin(fused.map(_._1): _*))
+        .select($"id", $"text").as[(String, String)].collect().toMap
+      Some(fused.toSeq.map { case (id, vn, gs, f) => HybridHit(id, texts(id), vn, gs, f) })
+    }
+  }
+
+  private val filters = Seq(
+    Map.empty[String, String],
+    Map("type" -> "a"),
+    Map("type" -> "a", "lang" -> "de"),
+    Map("type" -> "rare"),         // fewer rows than most topK
+    Map("type" -> "no such type")) // no row
+
+  test("vectorSearch == the join/orderBy/limit plan, brute force") {
+    engines.zipWithIndex.foreach { case (e, i) =>
+      val shared = e.catalog.nodes.filter($"id" === tiedIds.head).select($"text").as[String].head()
+      // "" embeds to the zero vector: every score is 0.0
+      val texts = Seq(shared, "graph vector join", "edge", "")
+      for ((text, t) <- texts.zipWithIndex; (filter, f) <- filters.zipWithIndex) {
+        val topK = Seq(0, 1, 3, 10, 1000)((i + t + f) % 5)
+        val got = e.vectorSearch(text, topK, filter)
+        val want = vectorPlan(e, text, topK, filter, AnnMode.BruteForce)
+        assert(got.map(vectorKey) == want.map(vectorKey),
+          s"catalog $i, '$text', $filter, top $topK:\n$got\n$want")
+      }
+    }
+  }
+
+  test("vectorSearch == the join/orderBy/limit plan, approximate modes") {
+    val e = engines.head
+    for (mode <- Seq(AnnMode.TrainedIvf(nprobe = 2), AnnMode.Sq8(rerank = 8));
+         text <- Seq("graph vector join", "spark index query node");
+         filter <- filters.take(4); topK <- Seq(1, 5, 1000)) {
+      val got = e.vectorSearch(text, topK, filter, mode)
+      val want = vectorPlan(e, text, topK, filter, mode)
+      assert(got.map(vectorKey) == want.map(vectorKey),
+        s"$mode, '$text', $filter, top $topK:\n$got\n$want")
+    }
+  }
+
+  test("hybridSearch == fuse over closeness: weights, starts, depths") {
+    val weights = Seq((0.7, 0.3), (1.0, 0.0), (0.0, 1.0), (-0.5, 1.0), (1.0, -1.0), (0.0, 0.0))
+    engines.zipWithIndex.foreach { case (e, i) =>
+      val starts = Seq(None, Some("n-0"), Some("n-7"), Some("missing"))
+      for (((vw, gw), w) <- weights.zipWithIndex; (start, s) <- starts.zipWithIndex) {
+        val (topK, depth) = Seq((10, 2), (1000, 3), (0, 1), (3, 1))((i + w + s) % 4)
+        val text = Seq("graph vector join", "edge", "")((i + w) % 3)
+        val got = e.hybridSearch(text, vw, gw, topK, start, depth)
+        val want = hybridPlan(e, text, vw, gw, topK, start, depth)
+        assert(got.map(_.map(hybridKey)) == want.map(_.map(hybridKey)),
+          s"catalog $i, '$text', ($vw, $gw), $start, top $topK, depth $depth:\n$got\n$want")
+      }
+    }
+  }
+
+  test("closenessRows == closeness: null and NaN weights, a null node, depth overrun") {
+    val rnd = new Random(7)
+    for (round <- 0 until 20) {
+      val weights = Seq[java.lang.Double](null, Double.NaN, 0.0, 0.5, 1.5, 3.0)
+      val rows = ("s", 0, java.lang.Double.valueOf(0.0)) +: (0 until 1 + rnd.nextInt(6)).map { i =>
+        val node = if (i == 0 && round % 3 == 0) null else s"v$i"
+        val pw = if (round % 4 == 0) weights(rnd.nextInt(3) + 3) else weights(rnd.nextInt(6))
+        (node, 1 + rnd.nextInt(3), pw)
+      }
+      val depth = 1 + rnd.nextInt(3)
+      val bfs = spark.createDataFrame(spark.sparkContext.parallelize(
+          rows.map { case (n, d, w) => org.apache.spark.sql.Row(n, d, w) }, 2),
+        Bfs.traverse(Seq(("a", "b", 1.0)).toDF("src", "dst", "weight"), lit("a"), 1).schema)
+      val want = GraphOps.closeness(bfs, lit("s"), depth).select($"node", $"graph_score")
+        .collect().map(r => (r.getString(0), Option(r.get(1)).map(d => bits(d.asInstanceOf[Double]))))
+        .sortBy(_.toString).toSeq
+      val got = GraphOps.closenessRows(rows, "s", depth)
+        .map { case (n, s) => (n, Option(s).map(d => bits(d))) }.sortBy(_.toString)
+      assert(got == want, s"round $round, depth $depth, $rows")
+    }
+  }
+
+  test("fuseRows == fuse: NaN, ties, orphans, zero, negative and infinite weights") {
+    val rnd = new Random(11)
+    val universe = (0 until 8).map(i => s"n$i")
+    val nodes = universe.toDF("id")
+    val scorePool = Seq(0.25, 0.25, 0.5, 0.9, -0.3, Double.NaN)
+    val weights = Seq((0.7, 0.3), (1.0, 0.0), (0.0, 1.0), (-1.0, 0.5), (0.0, 0.0),
+      (Double.PositiveInfinity, 0.3))
+    for (round <- 0 until 24) {
+      val vecIds = rnd.shuffle(universe :+ "orphan").take(rnd.nextInt(7))
+      val vecScores = vecIds.map(_ -> scorePool(rnd.nextInt(if (round % 2 == 0) 5 else 6)))
+      val graph = rnd.shuffle(universe :+ "dangling").take(rnd.nextInt(5))
+        .map(_ -> (if (rnd.nextInt(5) == 0) null else java.lang.Double.valueOf(rnd.nextInt(4) / 3.0)))
+      val (vw, gw) = weights(round % weights.size)
+      val g = if (graph.isEmpty) None
+        else Some(graph.map { case (id, s) => (id, Option(s).map(_.doubleValue)) }
+          .toDF("id", "graph_score").repartition(2))
+      val want = HybridSearch.fuse(nodes, vecScores.toDF("id", "vector_score"), g, vw, gw, 1000)
+        .select($"id", $"vec_norm", $"graph_score", $"final_score")
+        .as[(String, Double, Double, Double)].collect().toSeq
+      val fused = HybridSearch.fuseRows(vecScores, graph, vw, gw, universe)
+        .filter(r => universe.contains(r._1))
+      val got = Engine.rank(fused)(_._4, _._1)
+      def key(r: (String, Double, Double, Double)) = (r._1, bits(r._2), bits(r._3), bits(r._4))
+      assert(got.map(key) == want.map(key),
+        s"round $round ($vw, $gw): $vecScores / $graph\n$got\n$want")
+    }
+  }
+}

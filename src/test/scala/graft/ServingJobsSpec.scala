@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
 /** Jobs per serving request on a 200-node Engine. Job counts repeat
   * exactly from run to run, so a rise here is a real regression. The
   * catalog's tables are driver-held `LocalRelation`s and Spark folds a
-  * filter or projection over one on the driver, so a graph request, a
-  * getNode and every write run no job; vector and hybrid search still
-  * join, sort and aggregate as Spark jobs. */
+  * filter or projection over one on the driver, so every request here
+  * runs no job: writes, getNode and stats, graph search, and vector and
+  * hybrid search, which score with one folded projection, rank on the
+  * driver and fetch their answer rows with folded id filters. */
 class ServingJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -72,20 +73,33 @@ class ServingJobsSpec extends SparkSpec {
     assert(engine.getNode(n.id).isEmpty)
   }
 
-  test("vectorSearch runs at most 2 jobs") {
+  test("vectorSearch runs no job, filtered or not") {
     engine.vectorSearch("node text 3", topK = 10)
     val (v, jobs, _) = counter.count(engine.vectorSearch("node text 5", topK = 10))
     info(s"$jobs jobs")
     assert(v.size == 10)
-    assert(jobs <= 2, s"$jobs jobs")
+    assert(jobs == 0, s"$jobs jobs")
+    // a filter that keeps a quarter of the nodes walks more than one prefix
+    val (f, fJobs, _) = counter.count(engine.vectorSearch("node text 5", topK = 10,
+      metadataFilter = Map("type" -> "1")))
+    info(s"filtered: $fJobs jobs")
+    assert(f.size == 10 && f.forall(_.metadata("type") == "1"))
+    assert(fJobs == 0, s"filtered: $fJobs jobs")
   }
 
-  test("hybridSearch runs at most 7 jobs") {
+  test("hybridSearch runs no job") {
     engine.hybridSearch("node text 3", topK = 10, graphStartId = Some("n-0"))
     val (h, jobs, _) = counter.count(
       engine.hybridSearch("node text 5", topK = 10, graphStartId = Some("n-0")))
     info(s"$jobs jobs")
     assert(h.get.size == 10)
-    assert(jobs <= 7, s"$jobs jobs")
+    assert(jobs == 0, s"$jobs jobs")
+  }
+
+  test("stats runs no job") {
+    val (s, jobs, _) = counter.count(engine.stats())
+    info(s"$jobs jobs")
+    assert(s.totalNodes == 200 && s.nodesWithEmbeddings == 200 && s.totalEdges == 600)
+    assert(jobs == 0, s"$jobs jobs")
   }
 }

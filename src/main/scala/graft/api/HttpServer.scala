@@ -22,7 +22,7 @@ import scala.jdk.CollectionConverters._
   */
 final class EngineHttpServer(engine: Engine, port: Int) {
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = EngineHttpServer.bind(port)
 
   // ------------------------------------------------------------- JSON out
   /** Scala value → jackson-serializable Java structure. */
@@ -292,6 +292,16 @@ final class EngineHttpServer(engine: Engine, port: Int) {
   def start(): Unit = server.start()
   def stop(): Unit = server.stop(0)
   def boundPort: Int = server.getAddress.getPort
+}
+
+object EngineHttpServer {
+  // The JDK server writes a response's headers and body as two segments;
+  // with Nagle's algorithm on, the body waits for the client's delayed ACK
+  // of the headers (40 ms or more on Linux). The server reads this
+  // property once, when its first instance is made.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def bind(port: Int): HttpServer = HttpServer.create(new InetSocketAddress(port), 0)
 }
 
 /** `runMain graft.api.ServeMain [port]` — stand up the engine over an empty

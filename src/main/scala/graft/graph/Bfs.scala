@@ -9,8 +9,10 @@ import org.apache.spark.sql.types._
 
 /** Depth-limited directed weighted BFS (reference O17, app.py:512-549) with
   * the frontier and labels on the driver, as the reference's in-process
-  * queue keeps them — every level is one filtered edge scan
-  * (`src IN frontier`) collected to the driver.
+  * queue keeps them. One level rule, [[levels]], takes each level's edges
+  * from a source: [[traverse]] collects one filtered edge scan
+  * (`src IN frontier`) per level, and the serving Engine reads the
+  * catalog snapshot's source index.
   *
   * Semantics (SURVEY §7.5.1, deliberate spec choice): `dist` is the exact
   * hop count; `path_weight` is the **max accumulated weight among
@@ -21,16 +23,16 @@ import org.apache.spark.sql.types._
   * exercise (chains, stars, 2-cycles) and is what the recursive-CTE oracle
   * computes, so the declared checks are self-consistent.
   *
-  * Scale: a level costs one filtered scan (no shuffle) and the loop stops
-  * at the first empty frontier, so a traversal runs at most `depth` jobs
-  * and holds nothing in the block manager; over the serving catalog's
-  * driver-held `LocalRelation` edges Spark folds each scan on the driver
-  * and a traversal runs no job. Each level's collected
-  * edges plus the visited set pass [[GraphAnalytics.requireDriverFits]]
-  * before they are kept: an ego traversal's frontier is a handful of ids,
-  * and one that would not fit the driver fails loudly. The isolated-start
-  * short-circuit (app.py:521-525) falls out naturally: an empty first
-  * level leaves only the start row. Depth is assumed small (≤ ~10, as in
+  * Scale: a [[traverse]] level costs one filtered scan (no shuffle) and the
+  * loop stops at the first empty frontier, so a traversal runs at most
+  * `depth` jobs and holds nothing in the block manager; over a
+  * `LocalRelation` of edges Spark folds each scan on the driver and runs
+  * no job. Each level's edges plus the visited set pass
+  * [[GraphAnalytics.requireDriverFits]] before they are kept: an ego
+  * traversal's frontier is a handful of ids, and one that would not fit
+  * the driver fails loudly. The isolated-start short-circuit
+  * (app.py:521-525) falls out naturally: an empty first level leaves only
+  * the start row. Depth is assumed small (≤ ~10, as in
   * all reference workloads); whole-graph traversals belong to GraphX
   * Pregel.
   */
@@ -59,36 +61,51 @@ object Bfs {
 
     // keys compare with Scala's cooperative `==`, so an Int src finds the
     // Long frontier id it equals, as Spark's widening join comparison does
-    val visited = mutable.HashSet[Any](s0)
-    val rows = mutable.ArrayBuffer(Row(s0, 0, 0.0))
-    var frontier = Map[Any, java.lang.Double](s0 -> 0.0)
-    var d = 0
-    while (d < depth && frontier.nonEmpty) {
-      d += 1
-      val hop = e.filter(col(srcCol).isin(frontier.keys.toSeq: _*))
+    val rows = levels[Any](s0, depth) { frontier =>
+      e.filter(col(srcCol).isin(frontier.toSeq: _*))
         .select(col(srcCol), col(dstCol).cast(nodeType), col(weightCol).cast("double"))
-        .collect()
-      GraphAnalytics.requireDriverFits(hop.length.toLong + visited.size, s"BFS level $d")
-      // min hop: only unvisited dsts; then Spark's max of pw(src) + w
-      // (nulls skipped, NaN greatest) over the level's parallel paths
-      val next = mutable.LinkedHashMap.empty[Any, java.lang.Double]
-      hop.foreach { r =>
-        val dst = r.get(1)
-        if (dst == null || !visited(dst)) {
-          val src = frontier(r.get(0))
-          val pw: java.lang.Double =
-            if (src == null || r.isNullAt(2)) null else src + r.getDouble(2)
-          next(dst) = next.get(dst).fold(pw)(maxOf(_, pw))
-        }
-      }
-      next.foreach { case (n, pw) => rows += Row(n, d, pw) }
-      visited ++= next.keys.filter(_ != null)
-      frontier = next.toMap.filter(_._1 != null)
-    }
+        .collect().toSeq
+        .map(r => (r.get(0), r.get(1), if (r.isNullAt(2)) null else java.lang.Double.valueOf(r.getDouble(2))))
+    }.map { case (n, d, pw) => Row(n, d, pw) }
     spark.createDataFrame(rows.asJava, StructType(Seq(
       StructField("node", nodeType),
       StructField("dist", IntegerType, nullable = false),
       StructField("path_weight", DoubleType))))
+  }
+
+  /** The level fold of a traversal from `start` — the one BFS rule, fed
+    * by [[traverse]] with a filtered edge collect per level and by the
+    * serving Engine with its catalog's source index. `out(frontier)`
+    * returns the (src, dst, weight) edges leaving the frontier ids; the
+    * result is the (node, dist, path_weight) rows, the start first.
+    *
+    * A dst reached for the first time gets the level as its hop count and
+    * Spark's max over the level's paths into it of pw(src) + w (nulls
+    * skipped, NaN greatest) as its path weight. A null dst is a row of its
+    * own at each level it is reached and is never expanded. */
+  def levels[K](start: K, depth: Int)(
+      out: Iterable[K] => Seq[(K, K, java.lang.Double)]): Seq[(K, Int, java.lang.Double)] = {
+    val visited = mutable.HashSet[K](start)
+    val rows = mutable.ArrayBuffer[(K, Int, java.lang.Double)]((start, 0, 0.0))
+    var frontier = Map[K, java.lang.Double](start -> 0.0)
+    var d = 0
+    while (d < depth && frontier.nonEmpty) {
+      d += 1
+      val hop = out(frontier.keys)
+      GraphAnalytics.requireDriverFits(hop.length.toLong + visited.size, s"BFS level $d")
+      val next = mutable.LinkedHashMap.empty[K, java.lang.Double]
+      hop.foreach { case (src, dst, w) =>
+        if (dst == null || !visited(dst)) {
+          val spw = frontier(src)
+          val pw: java.lang.Double = if (spw == null || w == null) null else spw + w
+          next(dst) = next.get(dst).fold(pw)(maxOf(_, pw))
+        }
+      }
+      next.foreach { case (n, pw) => rows += ((n, d, pw)) }
+      visited ++= next.keys.filter(_ != null)
+      frontier = next.toMap.filter(_._1 != null)
+    }
+    rows.toSeq
   }
 
   /** Spark's `max` over two nullable doubles: nulls skipped, NaN greatest. */

@@ -1,5 +1,7 @@
 package graft.hybrid
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
@@ -90,14 +92,15 @@ object HybridSearch {
     val scores = vecScores.map(_._2)
     val vmin = scores.reduceOption((a, b) => if (cmp(b, a) < 0) b else a)
     val vmax = scores.reduceOption((a, b) => if (cmp(b, a) > 0) b else a)
-    val vn = vecScores.map { case (id, s) =>
-      id -> filled(if (cmp(vmax.get, vmin.get) == 0) 1.0
+    val vn = mutable.HashMap.empty[String, Double]
+    vecScores.foreach { case (id, s) =>
+      vn(id) = filled(if (cmp(vmax.get, vmin.get) == 0) 1.0
         else (s - vmin.get) / (vmax.get - vmin.get))
-    }.toMap
+    }
     val gs = graphScores.map { case (id, s) => id -> filled(s) }.toMap
     val ids =
       if (cmp(vectorWeight * 0.0 + graphWeight * 0.0, 0.0) > 0) nodeIds.toSeq.distinct
-      else (vn.keySet ++ gs.keySet).toSeq
+      else vn.keys.toSeq ++ gs.keys.filterNot(vn.contains)
     ids.map { id =>
       val v = vn.getOrElse(id, 0.0)
       val g = gs.getOrElse(id, 0.0)

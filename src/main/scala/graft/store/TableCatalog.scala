@@ -1,13 +1,16 @@
 package graft.store
 
+import scala.collection.immutable.{ArraySeq, VectorMap}
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
+import graft.functions.DotProductD
 import graft.graph.GraphAnalytics
 import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
@@ -15,25 +18,29 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The serving store (SURVEY §7.4): the reference's three tables
-  * (app.py:84-124), each an immutable vector of rows held on the driver.
+  * (app.py:84-124) as keyed maps held on the driver.
   *
-  * The reference keeps its tables in one in-process SQLite file, where a
-  * point read or an `INSERT OR REPLACE` is a local call (app.py:126-348).
-  * Here a row is the `UnsafeRow` its model encoder makes (`Node`,
-  * `EmbeddingRow`, `EdgeRow`) and a write is a driver-side edit of the
-  * table's vector: drop the key, then append the new row; a node delete
-  * cascades the same way to its embedding and every incident edge
-  * (app.py:81, 105, 118-119; TC-API-04). Each edit re-exposes the table
-  * as a DataFrame over a `LocalRelation` of its rows, so no write runs a
-  * Spark job. Spark's optimizer evaluates a Filter, Project or Limit over
-  * a `LocalRelation` on the driver (`ConvertToLocalRelation`), so point
-  * reads, existence probes, BFS levels and id scans run no job either;
-  * joins, sorts and aggregates over the tables still do.
+  * The reference keeps its tables in one in-process SQLite file under
+  * primary keys (`id`, `node_id`), so a point read or an `INSERT OR
+  * REPLACE` is one index lookup (app.py:126-348). Here each table is an
+  * insertion-ordered persistent map from its key (ordinal 0) to the
+  * `UnsafeRow` its model encoder makes (`Node`, `EmbeddingRow`, `EdgeRow`),
+  * and the edges are also indexed by source and by target. A write is an
+  * O(log N) edit of those maps: an upserted key is removed, then appended;
+  * a node delete cascades the same way to its embedding and every
+  * incident edge, found through the two indexes (app.py:81, 105, 118-119;
+  * TC-API-04). [[load]] applies the same rule, so a repeated key keeps its
+  * last row.
   *
-  * Readers always see a consistent table: its rows and its frame are
-  * swapped together (read-your-writes for the single-writer workload the
-  * reference's tests exercise, app.py:79-82). Nothing is checkpointed and
-  * nothing is held in the block manager.
+  * The tables, the indexes and the two versions form one immutable
+  * [[Snapshot]], published through one volatile field: a reader that takes
+  * [[snapshot]] once sees all three tables as of one write, never a node
+  * gone but its edges still there. Writes are serialized on the catalog.
+  * Reads are keyed lookups on a snapshot, with no Spark query and no job;
+  * the DataFrame of a table is built over the same rows on its first
+  * access (a `LocalRelation`) and serves BM25, the quantizer, [[save]],
+  * connected components and the streaming sinks. Nothing is checkpointed
+  * and nothing is held in the block manager.
   *
   * The catalog is bounded by the driver heap: [[load]] passes each input's
   * size through [[GraphAnalytics.requireDriverFits]] and fails loudly above
@@ -43,64 +50,57 @@ import org.apache.spark.unsafe.types.UTF8String
 final class TableCatalog(val spark: SparkSession) {
   import TableCatalog._
 
-  private val nodesT = new Table[Node](spark)
-  private val embeddingsT = new Table[EmbeddingRow](spark)
-  private val edgesT = new Table[EdgeRow](spark)
+  // the serializers write every row into one buffer: used under the lock
+  private val nodeRow = NodeEncoder.createSerializer()
+  private val embeddingRow = EmbeddingEncoder.createSerializer()
+  private val edgeRow = EdgeEncoder.createSerializer()
 
-  def nodes: DataFrame = nodesT.df
-  def embeddings: DataFrame = embeddingsT.df
-  def edges: DataFrame = edgesT.df
+  @volatile private var snap: Snapshot = Snapshot.empty(spark)
 
-  /** The held tables' row counts, read under the write lock so the three
-    * agree with one another; no Spark job. */
-  def stats: Stats = synchronized {
-    Stats(nodesT.size, embeddingsT.size, edgesT.size)
-  }
+  /** The current snapshot; a request reads it once. */
+  def snapshot: Snapshot = snap
+
+  def nodes: DataFrame = snap.nodes
+  def embeddings: DataFrame = snap.embeddings
+  def edges: DataFrame = snap.edges
+
+  /** The held tables' row counts, all three of one snapshot; no Spark job. */
+  def stats: Stats = snap.stats
 
   /** Monotonic node-snapshot version — bumped by every node mutation so
     * derived-index caches (e.g. the Engine's BM25 index) can invalidate on
     * write, mirroring the reference's rebuild-on-mutation contract
     * (app.py:772-773) without rebuilding on read. */
-  @volatile private var nodesVer: Long = 0L
-  def nodesVersion: Long = nodesVer
+  def nodesVersion: Long = snap.nodesVersion
 
   /** Monotonic embeddings-snapshot version — the invalidation key for
     * derived vector-index artifacts (the Engine's session-cached trained
     * coarse quantizer), same contract as [[nodesVersion]]. */
-  @volatile private var embeddingsVer: Long = 0L
-  def embeddingsVersion: Long = embeddingsVer
+  def embeddingsVersion: Long = snap.embeddingsVersion
 
   /** O1/O2: upsert (INSERT OR REPLACE, app.py:131-134). */
   def upsertNode(n: Node): Unit = synchronized {
-    nodesT.upsert(Seq(n))
-    nodesVer += 1
+    snap = snap.withNodes(Seq(nodeRow(n).copy()))
   }
 
   /** O6: upsert embedding (app.py:238-241). */
   def upsertEmbedding(e: EmbeddingRow): Unit = synchronized {
-    embeddingsT.upsert(Seq(e))
-    embeddingsVer += 1
+    snap = snap.withEmbeddings(Seq(embeddingRow(e).copy()))
   }
 
   /** O8: upsert edge. */
   def upsertEdge(e: EdgeRow): Unit = synchronized {
-    edgesT.upsert(Seq(e))
+    snap = snap.withEdges(Seq(edgeRow(e).copy()))
   }
 
   /** O4: delete node + FK cascade to its embedding and ALL incident edges
     * (app.py:81, 105, 118-119; verified by TC-API-04). */
   def deleteNode(id: String): Unit = synchronized {
-    val k = UTF8String.fromString(id)
-    nodesT.drop(_.getUTF8String(0) == k)
-    embeddingsT.drop(_.getUTF8String(0) == k)
-    edgesT.drop(r => r.getUTF8String(EdgeSource) == k || r.getUTF8String(EdgeTarget) == k)
-    nodesVer += 1
-    embeddingsVer += 1
+    snap = snap.withoutNode(UTF8String.fromString(id))
   }
 
   def deleteEdge(id: String): Unit = synchronized {
-    val k = UTF8String.fromString(id)
-    edgesT.drop(_.getUTF8String(0) == k)
+    snap = snap.withoutEdge(UTF8String.fromString(id))
   }
 
   /** Bulk upsert of node rows, last-write-wins within and across batches
@@ -108,93 +108,246 @@ final class TableCatalog(val spark: SparkSession) {
     * sink for streaming mutation ingestion (EventStreams.ingestNodes) and
     * any batch ETL append path. The batch is collected to the driver. */
   def upsertNodes(batch: DataFrame): Unit = synchronized {
-    nodesT.upsert(batch.as(nodesT.encoder).collect().toSeq)
-    nodesVer += 1
+    snap = snap.withNodes(batch.as(NodeEncoder).collect().toSeq.map(nodeRow(_).copy()))
   }
 
   /** Bulk upsert of edge rows (streaming edge ingestion), same contract as
     * [[upsertNodes]]. */
   def upsertEdges(batch: DataFrame): Unit = synchronized {
-    edgesT.upsert(batch.as(edgesT.encoder).collect().toSeq)
+    snap = snap.withEdges(batch.as(EdgeEncoder).collect().toSeq.map(edgeRow(_).copy()))
   }
 
-  /** Bulk load (e.g. from parquet snapshots) — replaces every table. Each
+  /** Bulk load (e.g. from parquet snapshots) — replaces every table, with
+    * the upsert rule: a key repeated in an input keeps its last row. Each
     * input is counted, gated by [[GraphAnalytics.requireDriverFits]], then
-    * collected once; an embedding row costs about 4·dim bytes. */
+    * collected once; an embedding row costs about 4·dim bytes more than
+    * [[EmbeddingRowBytes]]. */
   def load(nodes: DataFrame, embeddings: DataFrame, edges: DataFrame): Unit =
     synchronized {
       val emb = embeddings.agg(count(lit(1)), coalesce(max(size(col("vector"))), lit(0)))
         .head()
       // every input is collected before any table is replaced: a refused
       // input leaves the catalog as it was
-      val loaded = (
-        nodesT.collectGated(nodes, nodes.count(), NodeRowBytes),
-        embeddingsT.collectGated(embeddings, emb.getLong(0),
-          EmbeddingRowBytes + 4L * emb.getInt(1)),
-        edgesT.collectGated(edges, edges.count(), EdgeRowBytes))
-      nodesT.set(loaded._1)
-      embeddingsT.set(loaded._2)
-      edgesT.set(loaded._3)
-      nodesVer += 1
-      embeddingsVer += 1
+      val n = collectGated(nodes, nodes.count(), NodeRowBytes, NodeEncoder)(nodeRow)
+      val m = collectGated(embeddings, emb.getLong(0), EmbeddingRowBytes + 4L * emb.getInt(1),
+        EmbeddingEncoder)(embeddingRow)
+      val e = collectGated(edges, edges.count(), EdgeRowBytes, EdgeEncoder)(edgeRow)
+      snap = Snapshot.empty(spark, snap.nodesVersion, snap.embeddingsVersion)
+        .withNodes(n).withEmbeddings(m).withEdges(e)
     }
 
   /** Persist the tables as parquet (the durable form of the store). */
   def save(dir: String): Unit = {
-    nodes.write.mode("overwrite").parquet(s"$dir/nodes.parquet")
-    embeddings.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    edges.write.mode("overwrite").parquet(s"$dir/edges.parquet")
+    val s = snap
+    s.nodes.write.mode("overwrite").parquet(s"$dir/nodes.parquet")
+    s.embeddings.write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    s.edges.write.mode("overwrite").parquet(s"$dir/edges.parquet")
+  }
+
+  private def collectGated[T](df: DataFrame, rows: Long, rowBytes: Long,
+                              encoder: ExpressionEncoder[T])(
+                              serialize: T => InternalRow): Seq[InternalRow] = {
+    GraphAnalytics.requireDriverFits(rows,
+      s"catalog load (${encoder.clsTag.runtimeClass.getSimpleName})", rowBytes)
+    df.as(encoder).collect().toSeq.map(serialize(_).copy())
   }
 }
 
-object TableCatalog {
-  /** `EdgeRow` field ordinals of the two endpoints (the key is ordinal 0
-    * in every table). */
+/** One immutable state of the catalog: the three keyed tables, the edges'
+  * source and target indexes, and the two versions. Every read a serving
+  * request makes is a lookup here; the DataFrames are built on first use.
+  * A lookup of a null id finds nothing, as SQL's `id = null` matches no
+  * row. */
+final class Snapshot private (
+    spark: SparkSession,
+    nodeRows: Snapshot.Table,
+    embeddingRows: Snapshot.Table,
+    edgeRows: Snapshot.Table,
+    bySource: Snapshot.Index,
+    byTarget: Snapshot.Index,
+    val nodesVersion: Long,
+    val embeddingsVersion: Long) {
+  import Snapshot._
+
+  lazy val nodes: DataFrame = frame(spark, TableCatalog.NodeEncoder, nodeRows)
+  lazy val embeddings: DataFrame = frame(spark, TableCatalog.EmbeddingEncoder, embeddingRows)
+  lazy val edges: DataFrame = frame(spark, TableCatalog.EdgeEncoder, edgeRows)
+
+  def stats: Stats = Stats(nodeRows.rows.size, embeddingRows.rows.size, edgeRows.rows.size)
+
+  def hasNode(id: String): Boolean = nodeRows.get(id).nonEmpty
+  def node(id: String): Option[Node] = nodeRows.get(id).map(decodeNode)
+  def embedding(nodeId: String): Option[EmbeddingRow] = embeddingRows.get(nodeId).map(decodeEmbedding)
+  def edge(id: String): Option[EdgeRow] = edgeRows.get(id).map(decodeEdge)
+
+  /** Every node id, in row order. */
+  def nodeIds: Seq[String] = nodeRows.rows.keysIterator.map(k => str(k)).toSeq
+  def allNodes: Iterator[Node] = nodeRows.rows.valuesIterator.map(decodeNode)
+
+  /** The edges whose source (target) is `id`, in no particular order. */
+  def outEdges(id: String): Iterable[EdgeRow] = incident(bySource, id)
+  def inEdges(id: String): Iterable[EdgeRow] = incident(byTarget, id)
+
+  private def incident(ix: Index, id: String): Iterable[EdgeRow] =
+    if (id == null) Nil
+    else ix.getOrElse(UTF8String.fromString(id), Set.empty[UTF8String]).toSeq
+      .map(e => decodeEdge(edgeRows.rows(e)))
+
+  /** (node_id, score) of each embedding of `q`'s dimension that has a
+    * vector — all of them, or those keyed by `ids` — scored by
+    * [[DotProductD.dot]], the kernel `vec.dot` evaluates, so every score
+    * is bit-identical to the projection's. A null node_id stays: it ranks
+    * nowhere but counts in hybrid's min/max. */
+  def vectorScores(q: Array[Float], ids: Option[Seq[String]] = None): Seq[(String, Double)] = {
+    val qd = UnsafeArrayData.fromPrimitiveArray(q.map(_.toDouble))
+    val rows = ids.fold(embeddingRows.rows.valuesIterator)(_.distinct.iterator.flatMap(embeddingRows.get))
+    rows.filter(r => r.getInt(EmbeddingDim) == q.length && !r.isNullAt(EmbeddingVector))
+      .map(r => (str(r.getUTF8String(0)),
+        DotProductD.dot(r.getArray(EmbeddingVector), true, qd, false)))
+      .toSeq
+  }
+
+  private def copy(nodeRows: Table = nodeRows, embeddingRows: Table = embeddingRows,
+                   edgeRows: Table = edgeRows, bySource: Index = bySource,
+                   byTarget: Index = byTarget, nodesVersion: Long = nodesVersion,
+                   embeddingsVersion: Long = embeddingsVersion): Snapshot =
+    new Snapshot(spark, nodeRows, embeddingRows, edgeRows, bySource, byTarget,
+      nodesVersion, embeddingsVersion)
+
+  private[store] def withNodes(batch: Seq[InternalRow]): Snapshot =
+    copy(nodeRows = nodeRows.upserted(batch), nodesVersion = nodesVersion + 1)
+
+  private[store] def withEmbeddings(batch: Seq[InternalRow]): Snapshot =
+    copy(embeddingRows = embeddingRows.upserted(batch), embeddingsVersion = embeddingsVersion + 1)
+
+  private[store] def withEdges(batch: Seq[InternalRow]): Snapshot = {
+    val next = edgeRows.upserted(batch)
+    val keys = batch.map(_.getUTF8String(0)).distinct
+    // unindex the rows the batch replaces, index the rows it keeps
+    val (src, tgt) = unindexed(keys.flatMap(edgeRows.rows.get))
+    copy(edgeRows = next,
+      bySource = keys.foldLeft(src)((ix, k) => ix.add(next.rows(k).getUTF8String(EdgeSource), k)),
+      byTarget = keys.foldLeft(tgt)((ix, k) => ix.add(next.rows(k).getUTF8String(EdgeTarget), k)))
+  }
+
+  private[store] def withoutEdge(id: UTF8String): Snapshot =
+    edgeRows.rows.get(id).fold(this) { r =>
+      val (src, tgt) = unindexed(Seq(r))
+      copy(edgeRows = edgeRows.removed(Seq(id)), bySource = src, byTarget = tgt)
+    }
+
+  private[store] def withoutNode(id: UTF8String): Snapshot = {
+    val edges = (bySource.getOrElse(id, Set.empty) ++ byTarget.getOrElse(id, Set.empty)).toSeq
+    val (src, tgt) = unindexed(edges.map(edgeRows.rows))
+    copy(nodeRows = nodeRows.removed(Seq(id)), embeddingRows = embeddingRows.removed(Seq(id)),
+      edgeRows = edgeRows.removed(edges), bySource = src, byTarget = tgt,
+      nodesVersion = nodesVersion + 1, embeddingsVersion = embeddingsVersion + 1)
+  }
+
+  /** The two indexes without the edges `rows`. */
+  private def unindexed(rows: Seq[InternalRow]): (Index, Index) =
+    rows.foldLeft((bySource, byTarget)) { case ((s, t), r) =>
+      val k = r.getUTF8String(0)
+      (s.remove(r.getUTF8String(EdgeSource), k), t.remove(r.getUTF8String(EdgeTarget), k))
+    }
+}
+
+object Snapshot {
+  /** Edge ids by endpoint id. */
+  type Index = Map[UTF8String, Set[UTF8String]]
+
+  private implicit class IndexOps(private val ix: Index) extends AnyVal {
+    def add(k: UTF8String, e: UTF8String): Index = ix.updated(k, ix.getOrElse(k, Set.empty) + e)
+    def remove(k: UTF8String, e: UTF8String): Index = {
+      val rest = ix.getOrElse(k, Set.empty) - e
+      if (rest.isEmpty) ix.removed(k) else ix.updated(k, rest)
+    }
+  }
+
+  /** One table: its rows by the key at ordinal 0, in insertion order.
+    * `stale` counts the removals since the map was last rebuilt: a
+    * removal leaves a tombstone slot in a `VectorMap`, so once they
+    * outnumber the rows the map is rebuilt, which keeps a table's memory
+    * and its scans proportional to its rows. */
+  private[store] final case class Table(rows: VectorMap[UTF8String, InternalRow], stale: Int) {
+    def get(id: String): Option[InternalRow] =
+      if (id == null) None else rows.get(UTF8String.fromString(id))
+
+    /** Every key of `batch` removed, then the batch's last row per key
+      * appended, in the order of those last rows. */
+    def upserted(batch: Seq[InternalRow]): Table = {
+      val last = mutable.LinkedHashMap.empty[UTF8String, InternalRow]
+      batch.foreach { r =>
+        val k = r.getUTF8String(0)
+        last.remove(k)
+        last(k) = r
+      }
+      val replaced = last.keysIterator.count(rows.contains)
+      Table(rows.removedAll(last.keys) ++ last, stale + replaced).compacted
+    }
+
+    def removed(keys: Seq[UTF8String]): Table =
+      Table(rows.removedAll(keys), stale + keys.count(rows.contains)).compacted
+
+    private def compacted: Table =
+      if (stale <= rows.size) this
+      else Table((VectorMap.newBuilder[UTF8String, InternalRow] ++= rows).result(), 0)
+  }
+
+  private val EmptyTable = Table(VectorMap.empty, 0)
+
+  private[store] def empty(spark: SparkSession, nodesVersion: Long = 0L,
+                           embeddingsVersion: Long = 0L): Snapshot =
+    new Snapshot(spark, EmptyTable, EmptyTable, EmptyTable, Map.empty, Map.empty,
+      nodesVersion, embeddingsVersion)
+
+  // field ordinals (the key is ordinal 0 in every table)
+  private val EmbeddingVector = 1
+  private val EmbeddingDim = 2
   private val EdgeSource = 1
   private val EdgeTarget = 2
 
-  /** Driver heap per loaded row: an encoded row, its id and timestamps,
-    * and the model object it is collected as; an embedding row adds 4
-    * bytes a vector element. */
-  private val EmbeddingRowBytes = 128L
-  private val NodeRowBytes = 512L
-  private val EdgeRowBytes = 256L
+  private def frame(spark: SparkSession, encoder: ExpressionEncoder[_], t: Table): DataFrame =
+    bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), t.rows.values.toVector))
 
-  /** One table: its rows in the model encoder's layout, keyed by the
-    * string at ordinal 0, and the frame over them. Edits run under the
-    * catalog's lock (the serializer reuses one buffer); readers take the
-    * volatile (rows, frame) pair. */
-  private final class Table[T: TypeTag](spark: SparkSession) {
-    val encoder: ExpressionEncoder[T] = ExpressionEncoder[T]()
-    private val serializer = encoder.createSerializer()
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
+  private def str(r: InternalRow, i: Int): String = str(r.getUTF8String(i))
 
-    @volatile private var snap: (Vector[InternalRow], DataFrame) = frame(Vector.empty)
-
-    def df: DataFrame = snap._2
-
-    def size: Long = snap._1.size
-
-    private def frame(rows: Vector[InternalRow]): (Vector[InternalRow], DataFrame) =
-      (rows, bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), rows)))
-
-    def set(rows: Vector[InternalRow]): Unit = snap = frame(rows)
-
-    def drop(p: InternalRow => Boolean): Unit = set(snap._1.filterNot(p))
-
-    /** Drop every key in `batch`, then append its rows; a repeated key
-      * keeps its last row, in batch order. */
-    def upsert(batch: Seq[T]): Unit = {
-      val keys = mutable.HashSet.empty[UTF8String]
-      // copy: the serializer writes every row into the same buffer
-      val last = batch.reverseIterator.map(serializer(_).copy())
-        .filter(r => keys.add(r.getUTF8String(0))).toVector.reverse
-      set(snap._1.filterNot(r => keys(r.getUTF8String(0))) ++ last)
-    }
-
-    def collectGated(df: DataFrame, rows: Long, rowBytes: Long): Vector[InternalRow] = {
-      GraphAnalytics.requireDriverFits(rows, s"catalog load (${encoder.clsTag.runtimeClass.getSimpleName})",
-        rowBytes)
-      df.as(encoder).collect().iterator.map(serializer(_).copy()).toVector
-    }
+  private def decodeNode(r: InternalRow): Node = {
+    val metadata =
+      if (r.isNullAt(2)) null
+      else {
+        val m = r.getMap(2)
+        (0 until m.numElements()).map { i =>
+          str(m.keyArray().getUTF8String(i)) -> str(m.valueArray().getUTF8String(i))
+        }.toMap
+      }
+    Node(str(r, 0), str(r, 1), metadata, str(r, 3), str(r, 4))
   }
+
+  private def decodeEmbedding(r: InternalRow): EmbeddingRow =
+    EmbeddingRow(str(r, 0),
+      if (r.isNullAt(EmbeddingVector)) null
+      else ArraySeq.unsafeWrapArray(r.getArray(EmbeddingVector).toFloatArray()),
+      r.getInt(EmbeddingDim))
+
+  private def decodeEdge(r: InternalRow): EdgeRow =
+    EdgeRow(str(r, 0), str(r, EdgeSource), str(r, EdgeTarget), str(r, 3), r.getDouble(4), str(r, 5))
+}
+
+object TableCatalog {
+  private[store] val NodeEncoder: ExpressionEncoder[Node] = encoder[Node]
+  private[store] val EmbeddingEncoder: ExpressionEncoder[EmbeddingRow] = encoder[EmbeddingRow]
+  private[store] val EdgeEncoder: ExpressionEncoder[EdgeRow] = encoder[EdgeRow]
+
+  private def encoder[T: TypeTag]: ExpressionEncoder[T] = ExpressionEncoder[T]()
+
+  /** Driver heap a loaded row keeps: its encoded row and its map entry,
+    * and for an edge its two index entries; an embedding row adds 4 bytes
+    * a vector element. Measured after GC on a 100k-node / 500k-edge
+    * catalog of 12-word texts and 256-dim embeddings (434, 1,294 and 422
+    * bytes a node, embedding and edge row), rounded up. */
+  private val NodeRowBytes = 448L
+  private val EmbeddingRowBytes = 288L
+  private val EdgeRowBytes = 448L
 }

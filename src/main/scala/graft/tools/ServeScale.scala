@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * loads, for each size n, a fresh catalog of n random nodes with 12-word
   * texts, their 256-dim HashEmbed embeddings and 5n random edges, then
   * prints one table row: for each request type the median of 9 calls
-  * after 2 warm-ups, in ms. Every call draws new random ids and texts, so
-  * no two calls are the same request; the writes add rows and stay. */
+  * after 2 warm-ups, in ms (one decimal below 10 ms). Every call draws
+  * new random ids and texts, so no two calls are the same request; the
+  * writes add rows and stay. */
 object ServeScale {
   private val WarmUps = 2
   private val Timed = 9
@@ -47,7 +48,7 @@ object ServeScale {
         () => engine.createNode(text(12), Map("type" -> "t0")),
         () => engine.createEdge(id(), id(), "e0", 1.0)
       ).map(medianMs)
-      println(s"| $n / ${5 * n} | " + medians.map(ms => f"$ms%.0f").mkString(" | ") + " |")
+      println(s"| $n / ${5 * n} | " + medians.map(ms => if (ms < 10) f"$ms%.1f" else f"$ms%.0f").mkString(" | ") + " |")
     }
     spark.stop()
   }

@@ -142,4 +142,17 @@ class HttpSpec extends SparkSpec {
     assert(node.get("edges").asInstanceOf[java.util.Map[String, java.util.List[_]]]
       .get("outgoing").isEmpty, "rejected edge POST created no edge")
   }
+
+  test("a response is not held back by a delayed ACK: GET /stats median under 20 ms") {
+    // with Nagle's algorithm on, the body segment waits for the client's
+    // delayed ACK of the headers, at least 40 ms on Linux
+    (1 to 3).foreach(_ => send("GET", "/stats"))
+    val ms = (1 to 21).map { _ =>
+      val t0 = System.nanoTime()
+      assert(send("GET", "/stats")._1 == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    info(f"GET /stats: median ${ms(10)}%.1f ms, max ${ms.last}%.1f ms")
+    assert(ms(10) < 20, s"median ${ms(10)} ms")
+  }
 }

@@ -336,39 +336,52 @@ class PropertySpec extends SparkSpec {
       UpEdge(EdgeRow("e1", "n1", "n0", "a", 1.5, "c")),
       UpEdge(EdgeRow("e2", "n0", "n2", "b", 2.0, "c")),
       UpEmb(EmbeddingRow("n0", Seq(1.0f), 1)), DelNode("n0"))
+    // the model keeps rows in catalog order: an upsert removes its key,
+    // then appends
+    def up[A](m: Vector[(String, A)], rows: Seq[A])(key: A => String) =
+      rows.foldLeft(m)((acc, r) => acc.filterNot(_._1 == key(r)) :+ (key(r) -> r))
     forAll(Gen.listOfN(30, op), n = 4) { random =>
       val catalog = new TableCatalog(spark)
-      var nodes = Map.empty[String, Node]
-      var embs = Map.empty[String, EmbeddingRow]
-      var edges = Map.empty[String, EdgeRow]
+      var nodes = Vector.empty[(String, Node)]
+      var embs = Vector.empty[(String, EmbeddingRow)]
+      var edges = Vector.empty[(String, EdgeRow)]
       var nodesVer, embsVer = 0L
       def frame[A: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](b: Seq[A], distributed: Boolean) =
         (if (distributed) spark.createDataset(spark.sparkContext.parallelize(b, 3))
          else b.toDS()).toDF()
       (prefix ++ random).zipWithIndex.foreach { case (o, step) =>
         o match {
-          case UpNode(n) => catalog.upsertNode(n); nodes += n.id -> n; nodesVer += 1
-          case UpEmb(e) => catalog.upsertEmbedding(e); embs += e.node_id -> e; embsVer += 1
-          case UpEdge(e) => catalog.upsertEdge(e); edges += e.id -> e
+          case UpNode(n) => catalog.upsertNode(n); nodes = up(nodes, Seq(n))(_.id); nodesVer += 1
+          case UpEmb(e) =>
+            catalog.upsertEmbedding(e); embs = up(embs, Seq(e))(_.node_id); embsVer += 1
+          case UpEdge(e) => catalog.upsertEdge(e); edges = up(edges, Seq(e))(_.id)
           case DelNode(id) =>
             catalog.deleteNode(id)
-            nodes -= id; embs -= id
-            edges = edges.filter { case (_, e) => e.source != id && e.target != id }
+            nodes = nodes.filterNot(_._1 == id); embs = embs.filterNot(_._1 == id)
+            edges = edges.filterNot { case (_, e) => e.source == id || e.target == id }
             nodesVer += 1; embsVer += 1
-          case DelEdge(id) => catalog.deleteEdge(id); edges -= id
+          case DelEdge(id) => catalog.deleteEdge(id); edges = edges.filterNot(_._1 == id)
           case UpNodes(b, d) =>
-            catalog.upsertNodes(frame(b, d)); nodes ++= b.map(n => n.id -> n); nodesVer += 1
+            catalog.upsertNodes(frame(b, d)); nodes = up(nodes, b)(_.id); nodesVer += 1
           case UpEdges(b, d) =>
-            catalog.upsertEdges(frame(b, d)); edges ++= b.map(e => e.id -> e)
+            catalog.upsertEdges(frame(b, d)); edges = up(edges, b)(_.id)
         }
         val what = s"step $step: $o"
-        assert(catalog.nodes.as[Node].collect().sortBy(_.id).toSeq ==
-          nodes.values.toSeq.sortBy(_.id), what)
-        assert(catalog.embeddings.as[EmbeddingRow].collect().sortBy(_.node_id).toSeq ==
-          embs.values.toSeq.sortBy(_.node_id), what)
-        assert(catalog.edges.as[EdgeRow].collect().sortBy(_.id).toSeq ==
-          edges.values.toSeq.sortBy(_.id), what)
+        assert(catalog.nodes.as[Node].collect().toSeq == nodes.map(_._2), what)
+        assert(catalog.embeddings.as[EmbeddingRow].collect().toSeq == embs.map(_._2), what)
+        assert(catalog.edges.as[EdgeRow].collect().toSeq == edges.map(_._2), what)
         assert((catalog.nodesVersion, catalog.embeddingsVersion) == (nodesVer, embsVer), what)
+        // the keyed reads and both edge indexes agree with the tables
+        val s = catalog.snapshot
+        (0 until 5).map(i => s"n$i").foreach { id =>
+          assert(s.node(id) == nodes.find(_._1 == id).map(_._2), what)
+          assert(s.embedding(id) == embs.find(_._1 == id).map(_._2), what)
+          assert(s.outEdges(id).toSet == edges.map(_._2).filter(_.source == id).toSet, what)
+          assert(s.inEdges(id).toSet == edges.map(_._2).filter(_.target == id).toSet, what)
+        }
+        (0 until 6).map(i => s"e$i").foreach { id =>
+          assert(s.edge(id) == edges.find(_._1 == id).map(_._2), what)
+        }
       }
     }
   }

@@ -10,17 +10,19 @@ import graft.model._
 import graft.store.TableCatalog
 import org.apache.spark.sql.functions._
 
-/** Vector and hybrid search rank on the driver; these checks hold them to
-  * the Spark plans they replaced, kept here as the reference: the
-  * `join` / `orderBy` / `limit` tail of vector search in every
-  * [[AnnMode]], and [[HybridSearch.fuse]] over [[GraphOps.closeness]].
-  * Answers must agree row for row, every score to the bit.
+/** Serving requests are keyed reads on a catalog snapshot; these checks
+  * hold them to the Spark plans they replaced, kept here as the reference:
+  * the `join` / `orderBy` / `limit` tail of vector search in every
+  * [[AnnMode]], [[HybridSearch.fuse]] over [[GraphOps.closeness]], and the
+  * filters over the catalog's DataFrames that getNode and graph search
+  * ran, with the traversal by [[Bfs.traverse]]. Answers must agree row
+  * for row, every score to the bit.
   *
   * The catalogs are seeded and loaded through [[TableCatalog.load]]. They
   * hold tied scores from duplicate texts, ids that differ only in a
   * supplementary character (UTF-16 and UTF-8 order them differently),
-  * orphan embeddings, dangling edges, and a user-supplied embedding of the
-  * wrong dimension. */
+  * orphan embeddings, dangling edges, self-loops, parallel edges, and a
+  * user-supplied embedding of the wrong dimension. */
 class ServingEquivalenceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -55,7 +57,15 @@ class ServingEquivalenceSpec extends SparkSpec {
       val src = if (i % 23 == 0) "ghost-2" else ids(rnd.nextInt(ids.size))
       EdgeRow(s"e-$i", src, targets(rnd.nextInt(targets.size)),
         Seq("t1", "t2")(rnd.nextInt(2)), Seq(0.5, 1.0, 2.5)(rnd.nextInt(3)), ts)
-    } ++ tiedIds.map(t => EdgeRow(s"e-$t", "n-0", t, "t1", 1.0, ts))
+    } ++ tiedIds.map(t => EdgeRow(s"e-$t", "n-0", t, "t1", 1.0, ts)) ++
+      // a self-loop, on a supplementary-character id too, and parallel edges
+      Seq(EdgeRow("e-loop-0", "n-0", "n-0", "t1", 0.5, ts),
+        EdgeRow("e-loop-\uD83D\uDE00", tiedIds(1), tiedIds(1), "t2", 2.5, ts),
+        EdgeRow("e-par-0", tiedIds(1), tiedIds(2), "t1", 1.0, ts),
+        EdgeRow("e-par-1", tiedIds(1), tiedIds(2), "t2", 2.5, ts),
+        EdgeRow("e-par-2", tiedIds(1), tiedIds(2), "t1", 0.5, ts),
+        EdgeRow("e-par-3", "n-1", "n-2", "t1", 1.0, ts),
+        EdgeRow("e-par-4", "n-1", "n-2", "t1", 2.5, ts))
     val catalog = new TableCatalog(spark)
     catalog.load(nodes.toDF(), embeddings.toDF(), edges.toDF())
     val e = new Engine(catalog)
@@ -77,7 +87,10 @@ class ServingEquivalenceSpec extends SparkSpec {
   private def vectorPlan(e: Engine, text: String, topK: Int, filter: Map[String, String],
                          mode: AnnMode): Seq[VectorHit] = {
     val q = HashEmbed.encode(text, e.dim)
-    val scored = e.vectorCandidates(q, topK, filter.nonEmpty, mode)
+    val eligible = e.catalog.embeddings.filter($"dim" === q.length)
+    val candidates = e.candidateIds(e.catalog.snapshot, q, topK, filter.nonEmpty, mode)
+      .fold(eligible)(ids => eligible.filter($"node_id".isin(ids: _*)))
+    val scored = candidates
       .select($"node_id".as("id"),
         vec.dot($"vector", typedlit(q.toSeq.map(_.toDouble))).as("vector_score"))
       .join(e.catalog.nodes, "id")
@@ -111,6 +124,88 @@ class ServingEquivalenceSpec extends SparkSpec {
         .select($"id", $"text").as[(String, String)].collect().toMap
       Some(fused.toSeq.map { case (id, vn, gs, f) => HybridHit(id, texts(id), vn, gs, f) })
     }
+  }
+
+  private def info(e: EdgeRow) = EdgeInfo(e.id, e.source, e.target, e.etype, e.weight)
+
+  /** The edges of `df` in Spark's order by id. */
+  private def edgeInfos(df: org.apache.spark.sql.DataFrame): Seq[EdgeInfo] =
+    df.as[EdgeRow].collect().sortBy(_.id)(Engine.SparkStringOrder).map(info).toSeq
+
+  /** getNode as filters over the catalog's DataFrames. */
+  private def getNodePlan(e: Engine, id: String): Option[NodeDetails] = {
+    val c = e.catalog
+    c.nodes.filter($"id" === id).as[Node].collect().headOption.map { node =>
+      val emb = c.embeddings.filter($"node_id" === id).as[EmbeddingRow].collect().headOption
+      val incident = edgeInfos(c.edges.filter($"source" === id || $"target" === id))
+      NodeDetails(node.id, node.text, node.metadata, node.created_at, node.updated_at,
+        emb.nonEmpty, emb.map(_.vector),
+        incident.filter(_.source == node.id), incident.filter(_.target == node.id))
+    }
+  }
+
+  /** graphSearch as [[Bfs.traverse]] over the edge DataFrame, then `id IN`
+    * filters for the visited nodes' rows and the induced edges. */
+  private def graphPlan(e: Engine, start: String, depth: Int,
+                        etype: Option[String]): Option[GraphSearchResult] = {
+    val c = e.catalog
+    val bfs = Bfs.traverse(c.edges, lit(start), depth, srcCol = "source", dstCol = "target",
+      weightCol = "weight", edgeType = etype.map(("etype", _)))
+      .as[(String, Int, Double)].collect()
+    val visited = bfs.map(_._1).filter(_ != null)
+    val rows = c.nodes.filter($"id".isin(visited: _*)).as[Node].collect().map(n => n.id -> n).toMap
+    val (first, reached) = bfs.partition(_._2 == 0)
+    if (!rows.contains(first.head._1)) None
+    else {
+      val nodes = reached.sortBy(h => (h._2, h._1))(
+          Ordering.Tuple2(Ordering.Int, Engine.SparkStringOrder))
+        .flatMap { case (id, dist, pw) =>
+          rows.get(id).map(n => GraphNodeHit(n.id, n.text, n.metadata, dist, pw))
+        }.toSeq
+      val induced = edgeInfos(c.edges
+        .filter($"source".isin(visited: _*) && $"target".isin(visited: _*)))
+      Some(GraphSearchResult(start, depth, etype, nodes, induced))
+    }
+  }
+
+  private def edgeKey(x: EdgeInfo) = (x.id, x.source, x.target, x.etype, bits(x.weight))
+  private def nodeKey(n: NodeDetails) = (n.id, n.text, n.metadata, n.created_at, n.updated_at,
+    n.hasEmbedding, n.embedding.map(_.map(f => java.lang.Float.floatToRawIntBits(f))),
+    n.outgoing.map(edgeKey), n.incoming.map(edgeKey))
+  private def graphKey(g: GraphSearchResult) = (g.startId, g.depth, g.edgeType,
+    g.nodes.map(h => (h.id, h.text, h.metadata, h.distance, bits(h.pathWeight))),
+    g.edges.map(edgeKey))
+
+  /** getNode and graphSearch == their plan forms on every id of `e`, plus
+    * dangling, orphan and missing ids, at depths 0–3, with and without a type. */
+  private def assertReadsAgree(e: Engine, what: String): Unit = {
+    val ids = e.catalog.nodes.select($"id").as[String].collect().toSeq ++
+      Seq("ghost-0", "ghost-2", "orphan-0", "missing")
+    ids.foreach { id =>
+      assert(e.getNode(id).map(nodeKey) == getNodePlan(e, id).map(nodeKey), s"$what: getNode $id")
+    }
+    val starts = Seq("n-0", "n-1", "n-7", "ghost-0", "missing") ++ tiedIds
+    for (start <- starts; depth <- 0 to 3; etype <- Seq(None, Some("t1"), Some("t2"))) {
+      assert(e.graphSearch(start, depth, etype).map(graphKey) ==
+        graphPlan(e, start, depth, etype).map(graphKey), s"$what: graph $start, $depth, $etype")
+    }
+  }
+
+  test("getNode and graphSearch == filters over the catalog frames, before and after writes") {
+    engines.zipWithIndex.foreach { case (e, i) => assertReadsAgree(e, s"catalog $i") }
+    // writes move rows and rewrite the indexes: a re-upserted edge changes
+    // its endpoints, a deleted node takes its self-loop and parallel edges
+    val e = engineFor(4)
+    assertReadsAgree(e, "fresh")
+    val a = e.createNode("a new node", Map("type" -> "a"))
+    val loop = e.createEdge(a.id, a.id, "t1", 1.5).get
+    e.createEdge("n-0", a.id, "t2", 2.0)
+    e.catalog.upsertEdge(EdgeRow("e-par-3", "n-2", "n-1", "t2", 0.5, ts))
+    e.updateEdge(loop.id, weight = Some(3.0))
+    assert(e.deleteNode(tiedIds(1)))
+    assert(e.deleteEdge("e-par-4"))
+    e.updateNode("n-7", text = Some("rewritten"), regenEmbedding = true)
+    assertReadsAgree(e, "after writes")
   }
 
   private val filters = Seq(
@@ -205,7 +300,7 @@ class ServingEquivalenceSpec extends SparkSpec {
         .as[(String, Double, Double, Double)].collect().toSeq
       val fused = HybridSearch.fuseRows(vecScores, graph, vw, gw, universe)
         .filter(r => universe.contains(r._1))
-      val got = Engine.rank(fused)(_._4, _._1)
+      val got = Engine.rank(fused)(_._4, _._1).toSeq
       def key(r: (String, Double, Double, Double)) = (r._1, bits(r._2), bits(r._3), bits(r._4))
       assert(got.map(key) == want.map(key),
         s"round $round ($vw, $gw): $vecScores / $graph\n$got\n$want")

@@ -6,13 +6,12 @@ import graft.store.TableCatalog
 import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 
-/** Jobs per serving request on a 200-node Engine. Job counts repeat
-  * exactly from run to run, so a rise here is a real regression. The
-  * catalog's tables are driver-held `LocalRelation`s and Spark folds a
-  * filter or projection over one on the driver, so every request here
-  * runs no job: writes, getNode and stats, graph search, and vector and
-  * hybrid search, which score with one folded projection, rank on the
-  * driver and fetch their answer rows with folded id filters. */
+/** Jobs and Dataset actions per serving request on a 200-node Engine.
+  * Both counts repeat exactly from run to run, so a rise here is a real
+  * regression. A request reads one catalog snapshot with keyed lookups and
+  * scores vectors in a driver loop, so every request here runs no job and
+  * no Catalyst query: writes, getNode and stats, graph search, and vector
+  * and hybrid search. */
 class ServingJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,67 +38,64 @@ class ServingJobsSpec extends SparkSpec {
 
   lazy val counter = new JobCounter(spark)
 
+  /** `body`'s result, after asserting it ran no job and no Dataset action. */
+  private def none[A](what: String)(body: => A): A = {
+    val (a, jobs, actions) = counter.countActions(body)
+    info(s"$what: $jobs jobs, $actions actions")
+    assert(jobs == 0, s"$what: $jobs jobs")
+    assert(actions == 0, s"$what: $actions Dataset actions")
+    a
+  }
+
   test("graphSearch runs no job") {
     engine.graphSearch("n-0", 1) // warm-up
-    for (depth <- 1 to 3) {
-      val (g, jobs, _) = counter.count(engine.graphSearch("n-0", depth))
-      info(s"depth $depth: $jobs jobs")
-      assert(g.get.nodes.map(_.distance).max == depth, "the traversal reaches every level")
-      assert(jobs == 0, s"depth $depth: $jobs jobs")
+    for (depth <- 1 to 3; etype <- Seq(None, Some("t1"))) {
+      val g = none(s"depth $depth, type $etype")(engine.graphSearch("n-0", depth, etype))
+      if (etype.isEmpty)
+        assert(g.get.nodes.map(_.distance).max == depth, "the traversal reaches every level")
     }
   }
 
   test("getNode runs no job") {
-    val (n, jobs, _) = counter.count(engine.getNode("n-5"))
-    info(s"$jobs jobs")
+    val n = none("getNode")(engine.getNode("n-5"))
     assert(n.get.outgoing.size == 3 && n.get.incoming.nonEmpty)
-    assert(jobs == 0, s"$jobs jobs")
+    assert(none("getNode of a missing id")(engine.getNode("missing")).isEmpty)
   }
 
   test("node and edge writes run no job") {
-    def noJobs[A](what: String)(body: => A): A = {
-      val (a, jobs, _) = counter.count(body)
-      info(s"$what: $jobs jobs")
-      assert(jobs == 0, s"$what: $jobs jobs")
-      a
-    }
-    val n = noJobs("create node")(engine.createNode("a written node", Map("type" -> "w")))
-    noJobs("update node")(engine.updateNode(n.id, text = Some("rewritten"),
+    val n = none("create node")(engine.createNode("a written node", Map("type" -> "w")))
+    none("update node")(engine.updateNode(n.id, text = Some("rewritten"),
       regenEmbedding = true))
-    val e = noJobs("create edge")(engine.createEdge(n.id, "n-7", "tw", 2.0)).get
-    assert(noJobs("update edge")(engine.updateEdge(e.id, weight = Some(3.0))).get.weight == 3.0)
-    assert(noJobs("delete edge")(engine.deleteEdge(e.id)))
-    assert(noJobs("delete node")(engine.deleteNode(n.id)))
+    val e = none("create edge")(engine.createEdge(n.id, "n-7", "tw", 2.0)).get
+    assert(none("create edge, missing endpoint")(engine.createEdge(n.id, "missing", "tw")).isEmpty)
+    assert(none("update edge")(engine.updateEdge(e.id, weight = Some(3.0))).get.weight == 3.0)
+    assert(none("delete edge")(engine.deleteEdge(e.id)))
+    assert(none("delete node")(engine.deleteNode(n.id)))
+    assert(!none("delete missing node")(engine.deleteNode(n.id)))
     assert(engine.getNode(n.id).isEmpty)
   }
 
   test("vectorSearch runs no job, filtered or not") {
     engine.vectorSearch("node text 3", topK = 10)
-    val (v, jobs, _) = counter.count(engine.vectorSearch("node text 5", topK = 10))
-    info(s"$jobs jobs")
+    val v = none("vector")(engine.vectorSearch("node text 5", topK = 10))
     assert(v.size == 10)
-    assert(jobs == 0, s"$jobs jobs")
-    // a filter that keeps a quarter of the nodes walks more than one prefix
-    val (f, fJobs, _) = counter.count(engine.vectorSearch("node text 5", topK = 10,
+    // a filter that keeps a quarter of the nodes
+    val f = none("filtered vector")(engine.vectorSearch("node text 5", topK = 10,
       metadataFilter = Map("type" -> "1")))
-    info(s"filtered: $fJobs jobs")
     assert(f.size == 10 && f.forall(_.metadata("type") == "1"))
-    assert(fJobs == 0, s"filtered: $fJobs jobs")
   }
 
   test("hybridSearch runs no job") {
     engine.hybridSearch("node text 3", topK = 10, graphStartId = Some("n-0"))
-    val (h, jobs, _) = counter.count(
+    val h = none("hybrid")(
       engine.hybridSearch("node text 5", topK = 10, graphStartId = Some("n-0")))
-    info(s"$jobs jobs")
     assert(h.get.size == 10)
-    assert(jobs == 0, s"$jobs jobs")
+    assert(none("hybrid, missing start")(
+      engine.hybridSearch("node text 5", graphStartId = Some("missing"))).isEmpty)
   }
 
   test("stats runs no job") {
-    val (s, jobs, _) = counter.count(engine.stats())
-    info(s"$jobs jobs")
+    val s = none("stats")(engine.stats())
     assert(s.totalNodes == 200 && s.nodesWithEmbeddings == 200 && s.totalEdges == 600)
-    assert(jobs == 0, s"$jobs jobs")
   }
 }

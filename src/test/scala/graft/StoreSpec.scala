@@ -1,11 +1,20 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.util.Random
+
 import graft.api.Engine
+import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
 import graft.store.TableCatalog
 
-/** Snapshot-store durability: save → fresh catalog → load → identical
-  * engine-visible state (the parquet form IS the store's durable form). */
+/** The serving store: durability (save → fresh catalog → load → identical
+  * engine-visible state; the parquet form IS the store's durable form),
+  * the keyed load, and one atomic snapshot per reader. */
 class StoreSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ts = "2024-01-01T00:00:00Z"
 
   test("catalog parquet round-trip preserves nodes, embeddings, edges") {
     val e1 = new Engine(new TableCatalog(spark))
@@ -33,5 +42,81 @@ class StoreSpec extends SparkSpec {
     assert(e2.deleteNode(b.id))
     assert(e2.getNode(b.id).isEmpty)
     assert(e1.getNode(b.id).nonEmpty, "snapshot isolation between catalogs")
+  }
+
+  test("load keeps the last row per key, in every table and both edge indexes") {
+    val nodes = Seq(Node("a", "old a", Map.empty, ts, ts), Node("b", "b", Map.empty, ts, ts),
+      Node("c", "c", Map.empty, ts, ts), Node("a", "new a", Map("v" -> "2"), ts, ts))
+    val embeddings = Seq(EmbeddingRow("a", Seq(1f, 0f), 2), EmbeddingRow("a", Seq(0f, 1f), 2))
+    // e1 is loaded twice with other endpoints: a → b, then c → a
+    val edges = Seq(EdgeRow("e1", "a", "b", "t", 1.0, ts), EdgeRow("e2", "b", "c", "t", 1.0, ts),
+      EdgeRow("e1", "c", "a", "u", 2.0, ts))
+    val c = new TableCatalog(spark)
+    c.load(nodes.toDF(), embeddings.toDF(), edges.toDF())
+    val e = new Engine(c)
+    assert(e.stats() == Stats(3, 1, 2))
+    assert(c.nodes.as[Node].collect().map(_.id).toSeq == Seq("b", "c", "a"),
+      "a repeated key takes its last row's place")
+    val a = e.getNode("a").get
+    assert(a.text == "new a" && a.metadata == Map("v" -> "2") && a.embedding.get == Seq(0f, 1f))
+    assert(a.outgoing.isEmpty && a.incoming.map(_.id) == Seq("e1"))
+    assert(e.getNode("b").get.incoming.isEmpty)
+    assert(e.getNode("b").get.outgoing.map(_.id) == Seq("e2"))
+    assert(e.getNode("c").get.outgoing.map(x => (x.id, x.target, x.weight)) == Seq(("e1", "a", 2.0)))
+    assert(e.graphSearch("a", 2).get.nodes.isEmpty, "a has no out-edge")
+    assert(e.graphSearch("b", 2).get.nodes.map(_.id) == Seq("c", "a"))
+    // the cascade follows the kept rows: deleting c takes e1 and e2
+    assert(e.deleteNode("c"))
+    assert(e.stats() == Stats(2, 1, 0))
+    assert(e.getNode("a").get.incoming.isEmpty && e.getNode("b").get.outgoing.isEmpty)
+  }
+
+  test("readers see one snapshot: 3 readers beside a writer deleting nodes") {
+    val n = 300
+    val nodes = (0 until n).map(i => Node(s"n$i", s"text $i", Map.empty, ts, ts))
+    val edges = (0 until 3 * n).map(i =>
+      EdgeRow(s"e$i", s"n${i % n}", s"n${(i * 7 + 1) % n}", "t", 1.0, ts))
+    val c = new TableCatalog(spark)
+    c.load(nodes.toDF(), Seq.empty[EmbeddingRow].toDF(), edges.toDF())
+    val e = new Engine(c)
+    @volatile var writing = true
+    val errors = new ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val readers = (0 until 3).map { r =>
+      new Thread(() => {
+        val rnd = new Random(r)
+        while (writing) {
+          // every edge of the reader's snapshot has both endpoints in it
+          val s = c.snapshot
+          val ids = s.nodeIds
+          val out = ids.flatMap(s.outEdges)
+          if (out.size != s.stats.totalEdges)
+            errors.add(s"${s.stats.totalEdges} edges, ${out.size} with a source node")
+          out.filterNot(x => s.hasNode(x.target)).foreach(x => errors.add(s"dangling $x"))
+          ids.flatMap(s.inEdges).filterNot(x => s.hasNode(x.source))
+            .foreach(x => errors.add(s"dangling $x"))
+          // and a graph search reads one snapshot: its edges join its nodes
+          val start = s"n${rnd.nextInt(n)}"
+          e.graphSearch(start, 2).foreach { g =>
+            val seen = g.nodes.map(_.id).toSet + start
+            g.edges.filterNot(x => seen(x.source) && seen(x.target))
+              .foreach(x => errors.add(s"graph from $start: edge $x off its nodes"))
+          }
+          reads.incrementAndGet()
+        }
+      })
+    }
+    readers.foreach(_.start())
+    try {
+      while (reads.get < 3 && readers.forall(_.isAlive)) Thread.sleep(1)
+      new Random(9).shuffle((0 until n).toList).take(n / 2).foreach { i =>
+        c.deleteNode(s"n$i")
+        Thread.sleep(1)
+      }
+    } finally writing = false
+    readers.foreach(_.join())
+    assert(errors.isEmpty, String.valueOf(errors.peek()))
+    assert(reads.get > 0)
+    assert(e.stats().totalNodes == n / 2)
   }
 }

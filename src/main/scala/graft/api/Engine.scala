@@ -4,6 +4,7 @@ import java.time.Instant
 import java.util.UUID
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import graft.functions.HashEmbed
 import graft.graph.{Bfs, GraphOps}
@@ -14,6 +15,7 @@ import graft.store.{Snapshot, TableCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Opt-in serving mode for [[Engine.vectorSearch]].
@@ -31,9 +33,9 @@ sealed trait AnnMode
 object AnnMode {
   /** Reference-faithful exact full scan (the default). */
   case object BruteForce extends AnnMode
-  /** Trained k-means coarse quantizer (session-cached, invalidated by the
-    * embeddings snapshot version): probe the `nprobe` cells nearest the
-    * query, exact-score only their members. */
+  /** Trained k-means coarse quantizer (derived from the embeddings table,
+    * so trained again after an embedding write): probe the `nprobe` cells
+    * nearest the query, exact-score only their members. */
   final case class TrainedIvf(nprobe: Int = 2) extends AnnMode
   /** SQ8 int8 scalar quantization: integer-dot scan over 8-bit codes,
     * exact rerank of the `rerank` best candidates. */
@@ -68,10 +70,9 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
                  embedding: Option[Seq[Float]] = None): NodeDetails = {
     val id = newId("node")
     val ts = now()
-    catalog.upsertNode(Node(id, text, metadata, ts, ts))
     val emb = embedding.orElse(
       if (autoEmbed) Some(HashEmbed.encode(text, dim).toSeq) else None)
-    emb.foreach(v => catalog.upsertEmbedding(EmbeddingRow(id, v, v.length)))
+    catalog.upsertNode(Node(id, text, metadata, ts, ts), emb.map(v => EmbeddingRow(id, v, v.length)))
     getNode(id).get
   }
 
@@ -94,26 +95,21 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     edges.sortBy(_.id)(Engine.SparkStringOrder).map(Engine.info)
 
   /** PUT /nodes/{id} (O2+O21, app.py:794-821): partial update; embedding
-    * precedence explicit > regen (re-encode of the NEW text) > keep. */
+    * precedence explicit > regen (re-encode of the NEW text) > keep. One
+    * catalog write ([[TableCatalog.updateNode]]): a concurrent delete wins
+    * or loses whole, and a concurrent update is never lost. */
   def updateNode(id: String, text: Option[String] = None,
                  metadata: Option[Map[String, String]] = None,
                  regenEmbedding: Boolean = false,
                  embedding: Option[Seq[Float]] = None): Option[NodeDetails] = {
-    catalog.snapshot.node(id).map { old =>
+    val updated = catalog.updateNode(id) { old =>
       val newText = text.getOrElse(old.text)
-      catalog.upsertNode(old.copy(
-        text = newText,
-        metadata = metadata.getOrElse(old.metadata),
-        updated_at = now()))
-      embedding match {
-        case Some(v) => catalog.upsertEmbedding(EmbeddingRow(id, v, v.length))
-        case None if regenEmbedding =>
-          val v = HashEmbed.encode(newText, dim).toSeq
-          catalog.upsertEmbedding(EmbeddingRow(id, v, v.length))
-        case None => ()
-      }
-      getNode(id).get
+      val emb = embedding.orElse(
+        if (regenEmbedding) Some(HashEmbed.encode(newText, dim).toSeq) else None)
+      (old.copy(text = newText, metadata = metadata.getOrElse(old.metadata), updated_at = now()),
+        emb.map(v => EmbeddingRow(id, v, v.length)))
     }
+    if (updated) getNode(id) else None
   }
 
   /** DELETE /nodes/{id} (O4, app.py:824-834): cascade per TC-API-04. */
@@ -127,31 +123,23 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     catalog.snapshot.allNodes.map(n => (n.id, n.text, n.metadata)).toSeq
 
   // ------------------------------------------------------------ edge CRUD
-  /** POST /edges (O22, app.py:839-850): both endpoints must exist. */
+  /** POST /edges (O22, app.py:839-850): both endpoints must exist when
+    * the edge is written ([[TableCatalog.createEdge]]). */
   def createEdge(source: String, target: String, etype: String,
                  weight: Double = 1.0): Option[EdgeInfo] = {
-    val s = catalog.snapshot
-    if (!(s.hasNode(source) && s.hasNode(target))) None
-    else {
-      val e = EdgeRow(newId("edge"), source, target, etype, weight, now())
-      catalog.upsertEdge(e)
-      Some(Engine.info(e))
-    }
+    val e = EdgeRow(newId("edge"), source, target, etype, weight, now())
+    Option.when(catalog.createEdge(e))(Engine.info(e))
   }
 
   def getEdge(id: String): Option[EdgeInfo] = catalog.snapshot.edge(id).map(Engine.info)
 
-  /** PUT /edges/{id} (O8, app.py:288-308): partial, coalesce-with-current. */
+  /** PUT /edges/{id} (O8, app.py:288-308): partial, coalesce-with-current,
+    * one catalog write ([[TableCatalog.updateEdge]]). */
   def updateEdge(id: String, etype: Option[String] = None,
-                 weight: Option[Double] = None): Option[EdgeInfo] = {
-    catalog.snapshot.edge(id).map { old =>
-      val updated = old.copy(
-        etype = etype.getOrElse(old.etype),
-        weight = weight.getOrElse(old.weight))
-      catalog.upsertEdge(updated)
-      Engine.info(updated)
-    }
-  }
+                 weight: Option[Double] = None): Option[EdgeInfo] =
+    catalog.updateEdge(id)(old =>
+      old.copy(etype = etype.getOrElse(old.etype), weight = weight.getOrElse(old.weight)))
+      .map(Engine.info)
 
   def deleteEdge(id: String): Boolean = {
     val exists = catalog.snapshot.edge(id).nonEmpty
@@ -201,9 +189,9 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
             eligible, "node_id", "vector", trainedQuantizer(s), qd,
             k = budget, nprobe = nprobe)
         case AnnMode.Sq8(rerank) =>
-          // serving form: the snapshot-cached scale — a query must not
-          // pay a corpus-wide max-|x| agg for a number that only
-          // changes on write (trained once per version, persistable)
+          // serving form: the scale derived from the embeddings table — a
+          // query must not pay a corpus-wide max-|x| agg for a number that
+          // only changes on write (trained once per table, persistable)
           graft.pipeline.Similarity.sq8TopKWithScale(
             eligible, "node_id", "vector", sq8TrainedScale(s), qd,
             k = budget, rerank = math.max(rerank, budget))
@@ -241,15 +229,7 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     ranked.flatMap(a => s.node(id(a)).filter(keep).map(a -> _)).take(topK).toSeq
   }
 
-  /** Session-scoped trained coarse quantizer over the current embeddings
-    * snapshot (2 k-means refinement rounds over a √n-spaced seed —
-    * [[graft.pipeline.Similarity.kmeansCentroids]]), cached by the
-    * embeddings snapshot version exactly like the BM25 index: training is
-    * paid on the first TrainedIvf search after a mutation, not per query
-    * and not per write. */
-  @volatile private var quantizerCache: Option[(Long, DataFrame)] = None
-
-  /** Test hook: quantizer TRAININGS this session (loads don't count) —
+  /** Test hook: quantizer TRAININGS by this Engine (loads don't count) —
     * lets AnnPersistSpec prove a warmed restart serves without retraining. */
   @volatile private[graft] var quantizerTrainCount: Int = 0
 
@@ -259,94 +239,68 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     * operation. */
   @volatile private[graft] var annFallbackCount: Int = 0
 
-  /** SQ8's one trained parameter — the snapshot's global max-|x| scale —
-    * version-keyed exactly like the coarse quantizer; one corpus agg per
-    * snapshot instead of per query. */
-  @volatile private var sq8ScaleCache: Option[(Long, Double)] = None
-
-  /** Test hook: SQ8 scale TRAININGS (corpus scans) this session. */
+  /** Test hook: SQ8 scale TRAININGS (corpus scans) by this Engine. */
   @volatile private[graft] var sq8TrainCount: Int = 0
 
-  private def sq8TrainedScale(s: Snapshot): Double = annTrainLock.synchronized {
-    val v = s.embeddingsVersion
-    sq8ScaleCache match {
-      case Some((ver, sc)) if ver == v => sc
-      case _ =>
-        sq8TrainCount += 1
-        val row = s.embeddings.filter($"dim" === dim)
-          .agg(max(array_max(transform($"vector".cast("array<double>"),
-            x => abs(x)))))
-          .head()
-        val sc = if (row.isNullAt(0)) 1.0 else row.getDouble(0)
-        sq8ScaleCache = Some((v, sc))
-        sc
-    }
+  /** SQ8's one trained parameter — the embeddings table's global max-|x|
+    * over this Engine's `dim` — derived from the table like the coarse
+    * quantizer: one corpus agg per table instead of per query. */
+  private def sq8TrainedScale(s: Snapshot): Double = s.ofEmbeddings(s"sq8/$dim") {
+    sq8TrainCount += 1
+    val row = s.embeddings.filter($"dim" === dim)
+      .agg(max(array_max(transform($"vector".cast("array<double>"), x => abs(x)))))
+      .head()
+    if (row.isNullAt(0)) 1.0 else row.getDouble(0)
   }
 
-  /** Guards the quantizer/scale memo read-modify-writes: training twice
-    * under a concurrent-read race wastes work, and a torn read of
-    * (version, artifact) pairs could serve a stale artifact against a
-    * fresh snapshot. One lock per engine — training is rare (per
-    * mutation, not per query) so contention is nil. */
-  private val annTrainLock = new Object
-
-  private def trainedQuantizer(s: Snapshot): DataFrame = annTrainLock.synchronized {
-    val v = s.embeddingsVersion
-    quantizerCache match {
-      case Some((ver, cent)) if ver == v => cent
-      case _ =>
-        quantizerTrainCount += 1
-        // node_id is a string; kmeansCentroids spaces integer ids, so key
-        // the training view by the id hash. Seeds must be non-empty BY
-        // CONSTRUCTION: raw hash keys mod spacing select zero rows with
-        // P ≈ e^(−√n) over random UUIDs (the r13 AnnMode flake — empty
-        // centroids → empty candidates → empty search result). Take the
-        // numSeeds smallest hash keys instead: deterministic given ids,
-        // ≥ 1 seed whenever the corpus is non-empty, and bounded by
-        // min(⌈√n⌉, kMax) rows — a distributed top-k (TakeOrdered), no
-        // global sort materialized.
-        val keyed = s.embeddings.filter($"dim" === dim)
-          .select(xxhash64($"node_id").as("kid"), $"vector")
-        val n = keyed.count()
-        val numSeeds = math.max(1L, math.min(
-          math.ceil(math.sqrt(n.toDouble)).toLong,
-          graft.pipeline.Similarity.kMax))
-        val seeds = keyed.orderBy($"kid").limit(numSeeds.toInt)
-        val cent = graft.pipeline.Similarity
-          .kmeansCentroids(keyed, "kid", "vector", iters = 2,
-            corpusN = n, seeds = seeds)
-          .localCheckpoint()
-        quantizerCache = Some((v, cent))
-        cent
-    }
+  /** The trained coarse quantizer over the embeddings of this Engine's
+    * `dim` (2 k-means refinement rounds over a √n-spaced seed —
+    * [[graft.pipeline.Similarity.kmeansCentroids]]), derived from the
+    * embeddings table: training is paid by the first TrainedIvf search
+    * after an embedding write, not per query and not per write. */
+  private def trainedQuantizer(s: Snapshot): DataFrame = s.ofEmbeddings(s"ivf/$dim") {
+    quantizerTrainCount += 1
+    // node_id is a string; kmeansCentroids spaces integer ids, so key
+    // the training view by the id hash. Seeds must be non-empty BY
+    // CONSTRUCTION: raw hash keys mod spacing select zero rows with
+    // P ≈ e^(−√n) over random UUIDs (the r13 AnnMode flake — empty
+    // centroids → empty candidates → empty search result). Take the
+    // numSeeds smallest hash keys instead: deterministic given ids,
+    // ≥ 1 seed whenever the corpus is non-empty, and bounded by
+    // min(⌈√n⌉, kMax) rows — a distributed top-k (TakeOrdered), no
+    // global sort materialized.
+    val keyed = s.embeddings.filter($"dim" === dim)
+      .select(xxhash64($"node_id").as("kid"), $"vector")
+    val n = keyed.count()
+    val numSeeds = math.max(1L, math.min(
+      math.ceil(math.sqrt(n.toDouble)).toLong,
+      graft.pipeline.Similarity.kMax))
+    val seeds = keyed.orderBy($"kid").limit(numSeeds.toInt)
+    val cent = graft.pipeline.Similarity
+      .kmeansCentroids(keyed, "kid", "vector", iters = 2, corpusN = n, seeds = seeds)
+    try onDriver(cent) finally bridge.unpersistCheckpoint(cent)
   }
+
+  /** `centroids` (≤ kMax rows) as a local relation held on the driver: no
+    * block outlives the Engine's reference to it. */
+  private def onDriver(centroids: DataFrame): DataFrame =
+    spark.createDataFrame(centroids.collect().toSeq.asJava, centroids.schema)
 
   /** BM25 keyword search (O15). Declared capability: built + queryable even
     * though no reference endpoint exposes it (app.py:670-672 keeps it out
     * of hybrid; SURVEY authoritative-source note).
     *
-    * The index is built once per node-snapshot version and reused across
-    * queries (version-keyed cache — the reference's rebuild-on-write
-    * contract, app.py:772-773, with the rebuild amortized to the first
-    * search after a mutation instead of every write). */
-  @volatile private var bm25Cache: Option[(Long, graft.search.Bm25Index)] = None
-
-  private def bm25Index(): graft.search.Bm25Index = {
-    val s = catalog.snapshot
-    val v = s.nodesVersion
-    bm25Cache match {
-      case Some((ver, idx)) if ver == v => idx
-      case _ =>
-        val idx = Bm25.build(s.nodes, "id", "text")
-        bm25Cache = Some((v, idx))
-        idx
-    }
-  }
+    * The index is derived from the nodes table and reused across queries
+    * until a node write replaces the table — the reference's
+    * rebuild-on-write contract (app.py:772-773), with the rebuild paid by
+    * the first search after the write instead of by every write. */
+  private def bm25Index(s: Snapshot): graft.search.Bm25Index =
+    s.ofNodes("bm25")(Bm25.build(s.nodes, "id", "text"))
 
   def bm25Search(queryText: String, topK: Int = 10): Seq[Bm25Hit] = {
     val terms = queryText.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
     if (terms.isEmpty) Seq.empty
-    else Bm25.search(bm25Index(), terms.distinct, topK)
+    else Bm25.search(bm25Index(catalog.snapshot), terms.distinct, topK)
       .as[(String, Double)].collect().map { case (i, s) => Bm25Hit(i, s) }.toSeq
   }
 
@@ -445,10 +399,10 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
   // --------------------------------------------- trained-ANN persistence
   /** Persist the trained ANN artifacts (round-9: at 100 TB a trained
     * index is a versioned durable artifact, not a warm cache — the
-    * Bm25Index.save pattern). Trains the coarse quantizer if the cache
-    * is cold, stamps the CONTENT fingerprint of the embeddings snapshot
-    * ([[graft.search.AnnArtifacts.fingerprintOf]] — order-independent,
-    * survives restarts where the session version counter does not). */
+    * Bm25Index.save pattern). Trains the coarse quantizer if the table has
+    * none yet, stamps the CONTENT fingerprint of the embeddings snapshot
+    * ([[graft.search.AnnArtifacts.fingerprintOf]] — order-independent, so
+    * it survives a restart, where the derived quantizer does not). */
   def saveAnnIndex(dir: String): Unit = {
     val s = catalog.snapshot
     graft.search.AnnArtifacts(
@@ -461,27 +415,20 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
       .save(dir)
   }
 
-  /** Warm the quantizer cache from a persisted artifact. Serves ONLY if
-    * the stored fingerprint matches the live embeddings snapshot —
-    * a stale artifact is refused (returns false) and the next TrainedIvf
-    * search retrains, never silently serving the wrong snapshot. */
+  /** Offer a persisted artifact's quantizer and scale as the embeddings
+    * table's, where it has none yet. Serves ONLY if the stored fingerprint
+    * matches the live embeddings snapshot — a stale artifact is refused
+    * (returns false) and the next TrainedIvf search retrains, never
+    * silently serving the wrong snapshot. */
   def loadAnnIndex(dir: String): Boolean = {
     val art = graft.search.AnnArtifacts.load(spark, dir)
     val s = catalog.snapshot
-    if (art.fingerprint == graft.search.AnnArtifacts.fingerprintOf(s.embeddings)) {
-      annTrainLock.synchronized {
-        quantizerCache = Some((s.embeddingsVersion, art.centroids.localCheckpoint()))
-        art.sq8Scale.foreach(sc => sq8ScaleCache = Some((s.embeddingsVersion, sc)))
-      }
-      true
-    } else false
-  }
-
-  /** O13: rebuild_index — scan-based vector search needs no index
-    * (app.py:390-392, readme.md:181); for BM25 this drops the cached
-    * derived index so the next search rebuilds from the current snapshot. */
-  def rebuildIndex(): Unit = {
-    bm25Cache = None; quantizerCache = None; sq8ScaleCache = None
+    val fresh = art.fingerprint == graft.search.AnnArtifacts.fingerprintOf(s.embeddings)
+    if (fresh) {
+      s.ofEmbeddings(s"ivf/$dim")(onDriver(art.centroids))
+      art.sq8Scale.foreach(sc => s.ofEmbeddings(s"sq8/$dim")(sc))
+    }
+    fresh
   }
 
   /** GET / health (O23, app.py:923-926). */

@@ -2,7 +2,7 @@ package graft.api
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
+import java.util.concurrent.{Executors, TimeUnit}
 
 import com.fasterxml.jackson.core.JsonProcessingException
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -287,10 +287,20 @@ final class EngineHttpServer(engine: Engine, port: Int) {
     else notFound(ex, "Not found")
   })
 
-  server.setExecutor(Executors.newSingleThreadExecutor())
+  // one request at a time; its worker is not a daemon, so stop() ends it
+  private val executor = Executors.newSingleThreadExecutor()
+  server.setExecutor(executor)
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+
+  /** Close the socket, then end the worker once its request, if any, is
+    * answered: no thread the server started outlives this call. */
+  def stop(): Unit = {
+    server.stop(0)
+    executor.shutdown()
+    executor.awaitTermination(30, TimeUnit.SECONDS)
+  }
+
   def boundPort: Int = server.getAddress.getPort
 }
 

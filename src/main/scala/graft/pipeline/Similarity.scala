@@ -686,8 +686,8 @@ object Similarity {
 
   /** [[sq8TopK]] against a PRE-TRAINED scale — the serving form: the
     * one SQ8 "parameter" (global max-|x|) is computed once per
-    * embeddings snapshot and cached/persisted (AnnArtifacts, the
-    * Engine's version-keyed cache), so a query does NOT pay a full
+    * embeddings table and persisted (AnnArtifacts) or derived from the
+    * table (the Engine's `Snapshot.ofEmbeddings`), so a query does NOT pay a full
     * corpus agg to recover a number that only changes on write. Same
     * kernel; with scale == the snapshot's true max-|x| the output is
     * row-identical to [[sq8TopK]] (spec-pinned). */

@@ -125,7 +125,7 @@ object PipelineQueries {
 
   /** The trained quantizers as session artifacts: a production system
     * trains a codebook ONCE and serves every query from the persisted
-    * artifact (the BM25 index follows the same version-keyed pattern) —
+    * artifact (the Engine's BM25 index is derived once per nodes table) —
     * per-query retraining would be the anti-pattern. Centroids are
     * bit-deterministic, so memoization cannot change any result; the five
     * coarse-quantizer queries and the two PQ ones share one training

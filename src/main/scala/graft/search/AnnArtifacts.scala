@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted trained-ANN artifacts — the durable counterpart of the
-  * Engine's session-scoped quantizer cache (the round-8 gap: k-means
-  * centroids / PQ codebooks / SQ8 params were recomputed per session,
-  * while at 100 TB a trained index is a versioned persisted artifact,
+  * quantizer the Engine derives from its embeddings table (the round-8
+  * gap: k-means centroids / PQ codebooks / SQ8 params were recomputed per
+  * session, while at 100 TB a trained index is a versioned persisted artifact,
   * exactly like [[Bm25Index]]).
   *
   * Contents: the IVF coarse-quantizer centroids (cid, cv), optionally a
@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * FINGERPRINT of the embeddings snapshot they were trained on. The
   * fingerprint — bit_xor over per-row xxhash64(node_id, vector, dim) —
   * is order-independent and computable in one cheap scan, so a reopened
-  * session can prove the artifact matches the data WITHOUT trusting a
-  * session-local version counter (which resets across restarts) and
+  * session can prove the artifact matches the data WITHOUT trusting any
+  * session-local identity of the table (which a restart loses) and
   * without retraining. Staleness = fingerprint mismatch → the loader
   * refuses and the caller retrains; a trained index must never silently
   * serve a different snapshot than it was built from.

@@ -9,8 +9,8 @@ import graft.pipeline.TextOps
   * build time, so searches run pure joins — no re-tokenization, no corpus
   * re-scan. The reference keeps the same derived state in driver memory and
   * rebuilds it O(N) on every write (app.py:453-471, 772-773); here the
-  * rebuild is explicit ([[Bm25.build]]) and callers invalidate on write
-  * (see `api.Engine`'s version-keyed cache). At cluster scale the two
+  * rebuild is explicit ([[Bm25.build]]), and `api.Engine` derives the index
+  * from the catalog's nodes table, so a node write replaces it. At cluster scale the two
   * tables would persist as bucketed parquet keyed by term.
   */
 final case class Bm25Index(tf: DataFrame, idf: DataFrame, n: Long, avgdl: Double) {

@@ -1,5 +1,7 @@
 package graft.store
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.collection.immutable.{ArraySeq, VectorMap}
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
@@ -32,15 +34,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * TC-API-04). [[load]] applies the same rule, so a repeated key keeps its
   * last row.
   *
-  * The tables, the indexes and the two versions form one immutable
-  * [[Snapshot]], published through one volatile field: a reader that takes
-  * [[snapshot]] once sees all three tables as of one write, never a node
-  * gone but its edges still there. Writes are serialized on the catalog.
-  * Reads are keyed lookups on a snapshot, with no Spark query and no job;
-  * the DataFrame of a table is built over the same rows on its first
-  * access (a `LocalRelation`) and serves BM25, the quantizer, [[save]],
-  * connected components and the streaming sinks. Nothing is checkpointed
-  * and nothing is held in the block manager.
+  * The tables and the indexes form one immutable [[Snapshot]], published
+  * through one volatile field: a reader that takes [[snapshot]] once sees
+  * all three tables as of one write, never a node gone but its edges still
+  * there. Writes are serialized on the catalog. Reads are keyed lookups on
+  * a snapshot, with no Spark query and no job; the DataFrame of a table is
+  * built over the same rows on its first access (a `LocalRelation`) and
+  * serves BM25, the quantizer, [[save]], connected components and the
+  * streaming sinks. Nothing is checkpointed and nothing is held in the
+  * block manager.
+  *
+  * A write makes a new table for each table it changes and keeps the
+  * others, so a value derived from a table ([[Snapshot.ofNodes]],
+  * [[Snapshot.ofEmbeddings]], the table's DataFrame) lives exactly as long
+  * as that table: the reference's rebuild-on-write contract
+  * (app.py:772-773), with the rebuild paid by the first reader.
   *
   * The catalog is bounded by the driver heap: [[load]] passes each input's
   * size through [[GraphAnalytics.requireDriverFits]] and fails loudly above
@@ -67,20 +75,27 @@ final class TableCatalog(val spark: SparkSession) {
   /** The held tables' row counts, all three of one snapshot; no Spark job. */
   def stats: Stats = snap.stats
 
-  /** Monotonic node-snapshot version — bumped by every node mutation so
-    * derived-index caches (e.g. the Engine's BM25 index) can invalidate on
-    * write, mirroring the reference's rebuild-on-mutation contract
-    * (app.py:772-773) without rebuilding on read. */
-  def nodesVersion: Long = snap.nodesVersion
-
-  /** Monotonic embeddings-snapshot version — the invalidation key for
-    * derived vector-index artifacts (the Engine's session-cached trained
-    * coarse quantizer), same contract as [[nodesVersion]]. */
-  def embeddingsVersion: Long = snap.embeddingsVersion
-
   /** O1/O2: upsert (INSERT OR REPLACE, app.py:131-134). */
-  def upsertNode(n: Node): Unit = synchronized {
-    snap = snap.withNodes(Seq(nodeRow(n).copy()))
+  def upsertNode(n: Node): Unit = upsertNode(n, None)
+
+  /** O21: upsert a node and, when given, its embedding, published in one
+    * snapshot: no reader sees the node without its embedding. */
+  def upsertNode(n: Node, embedding: Option[EmbeddingRow]): Unit = synchronized {
+    val s = snap.withNodes(Seq(nodeRow(n).copy()))
+    snap = embedding.fold(s)(e => s.withEmbeddings(Seq(embeddingRow(e).copy())))
+  }
+
+  /** O2: replace node `id` and, when given, its embedding by what `f`
+    * makes of the node, read and written under the write lock, so no
+    * delete or other update lands in between; false if there is no such
+    * node. */
+  def updateNode(id: String)(f: Node => (Node, Option[EmbeddingRow])): Boolean = synchronized {
+    val old = snap.node(id)
+    old.foreach { o =>
+      val (n, e) = f(o)
+      upsertNode(n, e)
+    }
+    old.nonEmpty
   }
 
   /** O6: upsert embedding (app.py:238-241). */
@@ -91,6 +106,25 @@ final class TableCatalog(val spark: SparkSession) {
   /** O8: upsert edge. */
   def upsertEdge(e: EdgeRow): Unit = synchronized {
     snap = snap.withEdges(Seq(edgeRow(e).copy()))
+  }
+
+  /** O22: upsert an edge if both its endpoints are nodes, checked under the
+    * write lock, so no node delete lands between the check and the write
+    * (the reference's foreign keys, app.py:79-82); false if one is not. */
+  def createEdge(e: EdgeRow): Boolean = synchronized {
+    val linked = snap.hasNode(e.source) && snap.hasNode(e.target)
+    if (linked) snap = snap.withEdges(Seq(edgeRow(e).copy()))
+    linked
+  }
+
+  /** O8: replace edge `id` by `f(old)` under the write lock, so a node
+    * delete cannot remove the edge between the read and the write and
+    * leave it dangling; None if there is no such edge. */
+  def updateEdge(id: String)(f: EdgeRow => EdgeRow): Option[EdgeRow] = synchronized {
+    snap.edge(id).map(f).map { e =>
+      snap = snap.withEdges(Seq(edgeRow(e).copy()))
+      e
+    }
   }
 
   /** O4: delete node + FK cascade to its embedding and ALL incident edges
@@ -132,8 +166,7 @@ final class TableCatalog(val spark: SparkSession) {
       val m = collectGated(embeddings, emb.getLong(0), EmbeddingRowBytes + 4L * emb.getInt(1),
         EmbeddingEncoder)(embeddingRow)
       val e = collectGated(edges, edges.count(), EdgeRowBytes, EdgeEncoder)(edgeRow)
-      snap = Snapshot.empty(spark, snap.nodesVersion, snap.embeddingsVersion)
-        .withNodes(n).withEmbeddings(m).withEdges(e)
+      snap = Snapshot.empty(spark).withNodes(n).withEmbeddings(m).withEdges(e)
     }
 
   /** Persist the tables as parquet (the durable form of the store). */
@@ -153,25 +186,29 @@ final class TableCatalog(val spark: SparkSession) {
   }
 }
 
-/** One immutable state of the catalog: the three keyed tables, the edges'
-  * source and target indexes, and the two versions. Every read a serving
-  * request makes is a lookup here; the DataFrames are built on first use.
-  * A lookup of a null id finds nothing, as SQL's `id = null` matches no
-  * row. */
+/** One immutable state of the catalog: the three keyed tables and the
+  * edges' source and target indexes. Every read a serving request makes is
+  * a lookup here; the DataFrames are built on first use. A lookup of a
+  * null id finds nothing, as SQL's `id = null` matches no row. */
 final class Snapshot private (
     spark: SparkSession,
     nodeRows: Snapshot.Table,
     embeddingRows: Snapshot.Table,
     edgeRows: Snapshot.Table,
     bySource: Snapshot.Index,
-    byTarget: Snapshot.Index,
-    val nodesVersion: Long,
-    val embeddingsVersion: Long) {
+    byTarget: Snapshot.Index) {
   import Snapshot._
 
-  lazy val nodes: DataFrame = frame(spark, TableCatalog.NodeEncoder, nodeRows)
-  lazy val embeddings: DataFrame = frame(spark, TableCatalog.EmbeddingEncoder, embeddingRows)
-  lazy val edges: DataFrame = frame(spark, TableCatalog.EdgeEncoder, edgeRows)
+  def nodes: DataFrame = frame(spark, TableCatalog.NodeEncoder, nodeRows)
+  def embeddings: DataFrame = frame(spark, TableCatalog.EmbeddingEncoder, embeddingRows)
+  def edges: DataFrame = frame(spark, TableCatalog.EdgeEncoder, edgeRows)
+
+  /** The value `name` derived from the nodes (embeddings) table: built by
+    * the first caller, then shared by every snapshot that holds the same
+    * table, until a write replaces it. A name must say everything the
+    * build reads besides the table. */
+  def ofNodes[T](name: String)(build: => T): T = nodeRows.derive(name)(build)
+  def ofEmbeddings[T](name: String)(build: => T): T = embeddingRows.derive(name)(build)
 
   def stats: Stats = Stats(nodeRows.rows.size, embeddingRows.rows.size, edgeRows.rows.size)
 
@@ -209,16 +246,14 @@ final class Snapshot private (
 
   private def copy(nodeRows: Table = nodeRows, embeddingRows: Table = embeddingRows,
                    edgeRows: Table = edgeRows, bySource: Index = bySource,
-                   byTarget: Index = byTarget, nodesVersion: Long = nodesVersion,
-                   embeddingsVersion: Long = embeddingsVersion): Snapshot =
-    new Snapshot(spark, nodeRows, embeddingRows, edgeRows, bySource, byTarget,
-      nodesVersion, embeddingsVersion)
+                   byTarget: Index = byTarget): Snapshot =
+    new Snapshot(spark, nodeRows, embeddingRows, edgeRows, bySource, byTarget)
 
   private[store] def withNodes(batch: Seq[InternalRow]): Snapshot =
-    copy(nodeRows = nodeRows.upserted(batch), nodesVersion = nodesVersion + 1)
+    copy(nodeRows = nodeRows.upserted(batch))
 
   private[store] def withEmbeddings(batch: Seq[InternalRow]): Snapshot =
-    copy(embeddingRows = embeddingRows.upserted(batch), embeddingsVersion = embeddingsVersion + 1)
+    copy(embeddingRows = embeddingRows.upserted(batch))
 
   private[store] def withEdges(batch: Seq[InternalRow]): Snapshot = {
     val next = edgeRows.upserted(batch)
@@ -240,8 +275,7 @@ final class Snapshot private (
     val edges = (bySource.getOrElse(id, Set.empty) ++ byTarget.getOrElse(id, Set.empty)).toSeq
     val (src, tgt) = unindexed(edges.map(edgeRows.rows))
     copy(nodeRows = nodeRows.removed(Seq(id)), embeddingRows = embeddingRows.removed(Seq(id)),
-      edgeRows = edgeRows.removed(edges), bySource = src, byTarget = tgt,
-      nodesVersion = nodesVersion + 1, embeddingsVersion = embeddingsVersion + 1)
+      edgeRows = edgeRows.removed(edges), bySource = src, byTarget = tgt)
   }
 
   /** The two indexes without the edges `rows`. */
@@ -268,8 +302,20 @@ object Snapshot {
     * `stale` counts the removals since the map was last rebuilt: a
     * removal leaves a tombstone slot in a `VectorMap`, so once they
     * outnumber the rows the map is rebuilt, which keeps a table's memory
-    * and its scans proportional to its rows. */
+    * and its scans proportional to its rows.
+    *
+    * A table also holds the values derived from it, by name ([[derive]]);
+    * every write makes a new table, so they go with the table they were
+    * derived from. */
   private[store] final case class Table(rows: VectorMap[UTF8String, InternalRow], stale: Int) {
+    private val derived = new ConcurrentHashMap[String, Derived]()
+
+    /** The value `name`, built on the first call, then memoized: one build
+      * per name even under concurrent callers, and a build that throws
+      * leaves the name unbuilt, so the next call retries. */
+    def derive[T](name: String)(build: => T): T =
+      derived.computeIfAbsent(name, _ => new Derived(() => build)).value.asInstanceOf[T]
+
     def get(id: String): Option[InternalRow] =
       if (id == null) None else rows.get(UTF8String.fromString(id))
 
@@ -294,12 +340,19 @@ object Snapshot {
       else Table((VectorMap.newBuilder[UTF8String, InternalRow] ++= rows).result(), 0)
   }
 
-  private val EmptyTable = Table(VectorMap.empty, 0)
+  /** One derived value: the lazy val runs `build` once, under the slot's
+    * lock, and stays unset if it throws. */
+  private final class Derived(build: () => Any) {
+    lazy val value: Any = build()
+  }
 
-  private[store] def empty(spark: SparkSession, nodesVersion: Long = 0L,
-                           embeddingsVersion: Long = 0L): Snapshot =
-    new Snapshot(spark, EmptyTable, EmptyTable, EmptyTable, Map.empty, Map.empty,
-      nodesVersion, embeddingsVersion)
+  /** A snapshot of three new empty tables: a table carries what was derived
+    * from it (a DataFrame of one session among them), so no two catalogs
+    * share one. */
+  private[store] def empty(spark: SparkSession): Snapshot = {
+    def table = Table(VectorMap.empty, 0)
+    new Snapshot(spark, table, table, table, Map.empty, Map.empty)
+  }
 
   // field ordinals (the key is ordinal 0 in every table)
   private val EmbeddingVector = 1
@@ -308,7 +361,9 @@ object Snapshot {
   private val EdgeTarget = 2
 
   private def frame(spark: SparkSession, encoder: ExpressionEncoder[_], t: Table): DataFrame =
-    bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), t.rows.values.toVector))
+    t.derive("frame") {
+      bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), t.rows.values.toVector))
+    }
 
   private def str(s: UTF8String): String = if (s == null) null else s.toString
   private def str(r: InternalRow, i: Int): String = str(r.getUTF8String(i))

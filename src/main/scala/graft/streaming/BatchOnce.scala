@@ -1,5 +1,8 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
+
 /** Exactly-once guard for foreachBatch state updates across query
   * restarts.
   *
@@ -28,5 +31,21 @@ trait BatchOnce {
     * callbacks of one query run sequentially. */
   def applyOnce(batchId: Long)(f: => Unit): Unit = synchronized {
     if (batchId > applied) { f; applied = batchId }
+  }
+
+  /** Start the streaming query that runs `step` on each micro-batch of
+    * `stream`, [[applyOnce]]-guarded, so a batch replayed after a restart
+    * is a no-op. Pass `checkpoint` to make the query restartable from
+    * committed offsets: a new `start` against the same location (and the
+    * same holder and stream) resumes where the last one committed.
+    *
+    * A step that hands a frame to a sink frees that frame's blocks once
+    * the sink returns, so a sink must consume its frame (collect it, write
+    * it) before it returns, never keep it. */
+  def start(stream: DataFrame, checkpoint: Option[String])(
+      step: DataFrame => Unit): StreamingQuery = {
+    val w = stream.writeStream.outputMode("append")
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    w.foreachBatch((batch: DataFrame, batchId: Long) => applyOnce(batchId)(step(batch))).start()
   }
 }

@@ -18,9 +18,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * StreamingSpec asserts the streamed pipeline over an arbitrary shard
   * split equals that batch result exactly.
   *
-  * At cluster scale the state is a keyed Delta/parquet table and `merge`
-  * is the day's MERGE INTO; `localCheckpoint` is the single-JVM stand-in
-  * keeping lineage flat while preserving the identical plan shapes.
+  * The state is a [[StateFrame]]; at cluster scale it is a keyed
+  * Delta/parquet table and `merge` is the day's MERGE INTO.
   */
 object CdcIngest {
 
@@ -60,14 +59,13 @@ object CdcIngest {
     * query's batch callback (foreachBatch batches run sequentially). */
   final class ChangeState(spark: SparkSession) extends BatchOnce {
     import spark.implicits._
-    @volatile private var st: DataFrame =
+    private val st = new StateFrame(
       Seq.empty[(Long, java.sql.Timestamp, Long, String, Double)]
-        .toDF("key", "ts", "event_id", "op", "val")
-    def state: DataFrame = st
+        .toDF("key", "ts", "event_id", "op", "val"))
+    def state: DataFrame = st.get
     /** Merge a batch's last-ops: recency is decided by (ts, event_id),
       * never arrival order, so any interleaving converges. */
-    def merge(batchLast: DataFrame): Unit =
-      st = lastOps(st.unionByName(batchLast)).localCheckpoint()
+    def merge(batchLast: DataFrame): Unit = st.update(s => lastOps(s.unionByName(batchLast)))
   }
 
   /** Start the streaming pipeline: a raw event stream → per-batch
@@ -78,14 +76,6 @@ object CdcIngest {
     * `applySnapshot(base, state.state)`; pass `checkpoint` to make the
     * query restartable from committed offsets. */
   def start(eventStream: DataFrame, state: ChangeState,
-            checkpoint: Option[String] = None): StreamingQuery = {
-    val w = eventStream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        state.applyOnce(batchId) {
-          state.merge(lastOps(changelogOf(batch)))
-        }
-      }
-      .start()
-  }
+            checkpoint: Option[String] = None): StreamingQuery =
+    state.start(eventStream, checkpoint)(batch => state.merge(lastOps(changelogOf(batch))))
 }

@@ -17,22 +17,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * State is depth×width fixed-width rows — a constant decided at sketch
   * creation, independent of stream length and of the key cardinality
-  * (the whole point of sketching the stream instead of counting it). At
-  * cluster scale the sketch is a keyed table in the lake and `add` is a
-  * MERGE; `localCheckpoint` is the single-JVM stand-in keeping lineage
-  * flat across micro-batches.
+  * (the whole point of sketching the stream instead of counting it). The
+  * sketch is a [[StateFrame]]; at cluster scale it is a keyed table in the
+  * lake and `add` is a MERGE.
   */
 object CmsIngest {
 
   /** The accumulated sketch (d, bucket, c). Thread-confined to the
     * streaming query's batch callback (foreachBatch runs sequentially). */
   final class CmsIndex(initial: DataFrame) extends BatchOnce {
-    @volatile private var idx: DataFrame = norm(initial)
     private def norm(df: DataFrame): DataFrame =
       df.groupBy(col("d"), col("bucket")).agg(sum(col("c")).as("c"))
-        .localCheckpoint()
-    def sketch: DataFrame = idx
-    def add(delta: DataFrame): Unit = idx = norm(idx.unionByName(delta))
+    private val idx = new StateFrame(norm(initial))
+    def sketch: DataFrame = idx.get
+    def add(delta: DataFrame): Unit = idx.update(s => norm(s.unionByName(delta)))
   }
 
   def emptyIndex(spark: SparkSession): CmsIndex = {
@@ -47,14 +45,8 @@ object CmsIngest {
     * checkpoint restart; pass `checkpoint` to make the query
     * restartable from committed offsets. */
   def start(stream: DataFrame, keyCol: String, depth: Int, width: Int,
-            index: CmsIndex, checkpoint: Option[String] = None): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.applyOnce(batchId) {
-          index.add(graft.pipeline.Sketches.cmsBuild(batch, keyCol, depth, width))
-        }
-      }
-      .start()
-  }
+            index: CmsIndex, checkpoint: Option[String] = None): StreamingQuery =
+    index.start(stream, checkpoint) { batch =>
+      index.add(graft.pipeline.Sketches.cmsBuild(batch, keyCol, depth, width))
+    }
 }

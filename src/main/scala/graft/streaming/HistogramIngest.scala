@@ -17,21 +17,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * State is |distinct buckets| fixed-width rows — value-range/width,
   * independent of stream length; the monitoring shape for a quantile
-  * dashboard over an unbounded stream at any scale. At cluster scale
-  * the index is a keyed table in the lake and `add` is a MERGE;
-  * `localCheckpoint` is the single-JVM stand-in keeping lineage flat
-  * across micro-batches.
+  * dashboard over an unbounded stream at any scale. The index is a
+  * [[StateFrame]]; at cluster scale it is a keyed table in the lake and
+  * `add` is a MERGE.
   */
 object HistogramIngest {
 
   /** The accumulated histogram (b, c). Thread-confined to the streaming
     * query's batch callback (foreachBatch batches run sequentially). */
   final class HistIndex(initial: DataFrame) extends BatchOnce {
-    @volatile private var idx: DataFrame = norm(initial)
-    private def norm(df: DataFrame): DataFrame =
-      df.groupBy(col("b")).agg(sum(col("c")).as("c")).localCheckpoint()
-    def hist: DataFrame = idx
-    def add(delta: DataFrame): Unit = idx = norm(idx.unionByName(delta))
+    private def norm(df: DataFrame): DataFrame = df.groupBy(col("b")).agg(sum(col("c")).as("c"))
+    private val idx = new StateFrame(norm(initial))
+    def hist: DataFrame = idx.get
+    def add(delta: DataFrame): Unit = idx.update(s => norm(s.unionByName(delta)))
   }
 
   def emptyIndex(spark: SparkSession): HistIndex = {
@@ -56,14 +54,6 @@ object HistogramIngest {
     * checkpoint restart; pass `checkpoint` to make the query
     * restartable from committed offsets. */
   def start(stream: DataFrame, valCol: String, width: Long,
-            index: HistIndex, checkpoint: Option[String] = None): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.applyOnce(batchId) {
-          index.add(bucketCounts(batch, valCol, width))
-        }
-      }
-      .start()
-  }
+            index: HistIndex, checkpoint: Option[String] = None): StreamingQuery =
+    index.start(stream, checkpoint)(batch => index.add(bucketCounts(batch, valCol, width)))
 }

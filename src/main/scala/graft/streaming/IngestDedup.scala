@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming incremental exact-dedup ingestion (SURVEY §2.B.10 × the
@@ -18,11 +19,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * on the same data (keep-first across id-ordered shards == global
   * min-id per digest).
   *
-  * At cluster scale the index is a digest table in the lake (Delta/
-  * parquet, partitioned by digest prefix) and `addAccepted` is an
-  * append; `localCheckpoint` is the single-JVM stand-in that keeps the
-  * lineage flat across micro-batches while preserving the identical
-  * anti-join plan shape.
+  * The index is a [[StateFrame]]; at cluster scale it is a digest table in
+  * the lake (Delta/parquet, partitioned by digest prefix) and
+  * `addAccepted` is an append.
   */
 object IngestDedup {
 
@@ -30,12 +29,10 @@ object IngestDedup {
     * document. Thread-confined to the streaming query's batch callback
     * (foreachBatch batches run sequentially). */
   final class DigestIndex(initial: DataFrame) extends BatchOnce {
-    @volatile private var idx: DataFrame =
-      initial.select(col("h")).distinct().localCheckpoint()
-    def digests: DataFrame = idx
+    private val idx = new StateFrame(initial.select(col("h")).distinct())
+    def digests: DataFrame = idx.get
     def addAccepted(accepted: DataFrame): Unit =
-      idx = idx.select(col("h"))
-        .unionByName(accepted.select(col("h"))).distinct().localCheckpoint()
+      idx.update(_.unionByName(accepted.select(col("h"))).distinct())
   }
 
   /** Build the index from an existing corpus' text column. */
@@ -51,29 +48,21 @@ object IngestDedup {
       .join(index.digests, Seq("h"), "left_anti")
       .select(col(idCol), col("h"))
 
-  /** Start the streaming pipeline: docStream rows (idCol, textCol) →
-    * per-batch dedup → index update → `sink(accepted)`. The index update
-    * happens AFTER the sink call succeeds, so a failed batch retries
-    * without having poisoned the index (at-least-once sink, exactly-once
-    * index semantics under Spark's foreachBatch retry contract); the
-    * whole step is [[BatchOnce.applyOnce]]-guarded so a post-restart
-    * REPLAY of an already-applied batch is a no-op. Pass `checkpoint` to
-    * make the query restartable: a new [[start]] against the same
-    * location (and the same index/stream) resumes from the committed
-    * offsets — StreamingRecoverySpec pins kill-and-restart == clean run. */
+  /** Start the streaming pipeline ([[BatchOnce.start]]): docStream rows
+    * (idCol, textCol) → per-batch dedup → `sink(accepted)` → index update.
+    * The index update happens AFTER the sink call succeeds, so a failed
+    * batch retries without having poisoned the index (at-least-once sink,
+    * exactly-once index semantics under Spark's foreachBatch retry
+    * contract). The sink must consume `accepted` before it returns: its
+    * blocks are freed once the index holds its digests.
+    * StreamingRecoverySpec pins kill-and-restart == clean run. */
   def start(docStream: DataFrame, idCol: String, textCol: String,
             index: DigestIndex, checkpoint: Option[String] = None)(
-            sink: DataFrame => Unit): StreamingQuery = {
-    val w = docStream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.applyOnce(batchId) {
-          val accepted =
-            dedupBatch(batch, idCol, textCol, index).localCheckpoint()
-          sink(accepted)
-          index.addAccepted(accepted)
-        }
-      }
-      .start()
-  }
+            sink: DataFrame => Unit): StreamingQuery =
+    index.start(docStream, checkpoint) { batch =>
+      val accepted = dedupBatch(batch, idCol, textCol, index).localCheckpoint()
+      sink(accepted)
+      index.addAccepted(accepted)
+      bridge.unpersistCheckpoint(accepted)
+    }
 }

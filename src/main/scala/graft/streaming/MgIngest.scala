@@ -53,22 +53,13 @@ object MgIngest {
     * summary merges into `index`. Pass `checkpoint` to make the query
     * restartable from committed offsets. */
   def start(stream: DataFrame, keyCol: String, index: MgIndex,
-            checkpoint: Option[String] = None): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.applyOnce(batchId) {
-          val row = batch
-            .agg(graft.pipeline.HeavyHitters.summary(col(keyCol), index.k)
-              .as("s"))
-            .head()
-          val delta = row.getSeq[org.apache.spark.sql.Row](0)
-            .map(r => r.getString(0) -> r.getLong(1)).toMap
-          index.add(delta)
-        }
-      }
-      .start()
-  }
+            checkpoint: Option[String] = None): StreamingQuery =
+    index.start(stream, checkpoint) { batch =>
+      val row = batch.agg(graft.pipeline.HeavyHitters.summary(col(keyCol), index.k).as("s"))
+        .head()
+      index.add(row.getSeq[org.apache.spark.sql.Row](0)
+        .map(r => r.getString(0) -> r.getLong(1)).toMap)
+    }
 
   /** The deterministic read: exact recount of the maintained candidates
     * over `corpus`, keeping keys with cnt·k > n — identical recipe (and

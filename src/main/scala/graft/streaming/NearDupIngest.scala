@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.streaming.StreamingQuery
 import graft.pipeline.Dedup
 
@@ -29,18 +30,18 @@ object NearDupIngest {
 
   /** Accumulated index over accepted documents: band keys (doc_id, band,
     * bkey) for candidate generation and signature rows (doc_id, i, mh)
-    * for est-Jaccard verification. Thread-confined to the streaming
-    * query's sequential foreachBatch callback. At cluster scale both are
-    * lake tables partitioned by bkey prefix / doc bucket; localCheckpoint
-    * is the single-JVM stand-in keeping lineage flat across batches. */
+    * for est-Jaccard verification, each a [[StateFrame]].
+    * Thread-confined to the streaming query's sequential foreachBatch
+    * callback. At cluster scale both are lake tables partitioned by bkey
+    * prefix / doc bucket. */
   final class SigIndex(bands0: DataFrame, sigs0: DataFrame) extends BatchOnce {
-    @volatile private var b = bands0.localCheckpoint()
-    @volatile private var s = sigs0.localCheckpoint()
-    def bands: DataFrame = b
-    def sigs: DataFrame = s
+    private val b = new StateFrame(bands0)
+    private val s = new StateFrame(sigs0)
+    def bands: DataFrame = b.get
+    def sigs: DataFrame = s.get
     def add(newBands: DataFrame, newSigs: DataFrame): Unit = {
-      b = b.unionByName(newBands).localCheckpoint()
-      s = s.unionByName(newSigs).localCheckpoint()
+      b.update(_.unionByName(newBands))
+      s.update(_.unionByName(newSigs))
     }
   }
 
@@ -48,7 +49,8 @@ object NearDupIngest {
               numHashes: Int = 16, rowsPerBand: Int = 4): SigIndex = {
     val mh = Dedup.minhashSignatures(corpus, idCol, textCol, numHashes)
       .localCheckpoint()
-    new SigIndex(Dedup.bandKeys(mh, rowsPerBand), mh)
+    try new SigIndex(Dedup.bandKeys(mh, rowsPerBand), mh)
+    finally bridge.unpersistCheckpoint(mh)
   }
 
   /** One micro-batch step, shared by streaming and batch callers.
@@ -86,25 +88,22 @@ object NearDupIngest {
     (accepted, bands.join(acc, "doc_id"), mh.join(acc, "doc_id"))
   }
 
-  /** Start the streaming pipeline: per batch dedup → `sink(accepted)` →
-    * index append (after sink success, mirroring [[IngestDedup.start]]'s
-    * retry discipline), [[BatchOnce.applyOnce]]-guarded so a
-    * post-restart replay is a no-op; pass `checkpoint` to make the query
-    * restartable from committed offsets. */
+  /** Start the streaming pipeline ([[BatchOnce.start]]): per batch dedup
+    * → `sink(accepted)` → index append (after sink success, mirroring
+    * [[IngestDedup.start]]'s retry discipline). The sink must consume
+    * `accepted` before it returns: once the index holds the batch's rows,
+    * the step frees its scratch checkpoints (`accepted`, and the batch's
+    * signatures and band keys). */
   def start(docStream: DataFrame, idCol: String, textCol: String,
             index: SigIndex, numHashes: Int = 16, rowsPerBand: Int = 4,
             threshold: Double = 0.5, checkpoint: Option[String] = None)(
-            sink: DataFrame => Unit): StreamingQuery = {
-    val w = docStream.writeStream.outputMode("append")
-    checkpoint.foreach(w.option("checkpointLocation", _))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.applyOnce(batchId) {
-          val (accepted, nb, ns) = dedupBatch(batch, idCol, textCol, index,
-            numHashes, rowsPerBand, threshold)
-          sink(accepted)
-          index.add(nb, ns)
-        }
-      }
-      .start()
-  }
+            sink: DataFrame => Unit): StreamingQuery =
+    index.start(docStream, checkpoint) { batch =>
+      val (accepted, nb, ns) = dedupBatch(batch, idCol, textCol, index,
+        numHashes, rowsPerBand, threshold)
+      sink(accepted)
+      index.add(nb, ns)
+      // nb and ns scan exactly the step's checkpoints: accepted, bands, mh
+      (bridge.rddLeaves(nb) ++ bridge.rddLeaves(ns)).distinct.foreach(_.unpersist(blocking = false))
+    }
 }

@@ -90,6 +90,46 @@ class AnnPersistSpec extends SparkSpec {
     assert(hits.nonEmpty && e.quantizerTrainCount >= 1)
   }
 
+  test("a TrainedIvf training, a retrain after a write and a load leave no persistent RDD") {
+    val ivf = AnnMode.TrainedIvf(nprobe = 2)
+    val dir = tmp()
+    val e1 = new Engine(spark)
+    populate(e1, 60)
+    assert(persistedBy(e1.vectorSearch("document topic 3", topK = 5, mode = ivf))._2.isEmpty)
+    e1.saveAnnIndex(dir)
+    assert(persistedBy {
+      e1.createNode("a write replaces the embeddings table")
+      e1.vectorSearch("document topic 3", topK = 5, mode = ivf)
+    }._2.isEmpty)
+    assert(e1.quantizerTrainCount == 2, "the write must retrain")
+    val e2 = new Engine(spark)
+    populate(e2, 60)
+    assert(persistedBy {
+      assert(e2.loadAnnIndex(dir))
+      e2.vectorSearch("document topic 3", topK = 5, mode = ivf)
+    }._2.isEmpty)
+    assert(e2.quantizerTrainCount == 0)
+  }
+
+  test("two Engines of different dim over one catalog each train their own quantizer") {
+    val cat = new graft.store.TableCatalog(spark)
+    val e8 = new Engine(cat, dim = 8)
+    val e16 = new Engine(cat, dim = 16)
+    (0 until 12).foreach { i =>
+      e8.createNode(s"small doc $i about topic ${i % 3}")
+      e16.createNode(s"large doc $i about topic ${i % 3}")
+    }
+    Seq(e8, e16).foreach { e =>
+      val brute = e.vectorSearch("doc about topic 1", topK = 5)
+      // every cell probed: the candidate set is the whole corpus
+      val ivf = e.vectorSearch("doc about topic 1", topK = 5, mode = AnnMode.TrainedIvf(nprobe = 64))
+      e.vectorSearch("doc about topic 1", topK = 5, mode = AnnMode.Sq8(rerank = 16))
+      assert(brute.size == 5 && ivf == brute, s"dim ${e.dim}: $ivf vs $brute")
+      assert((e.quantizerTrainCount, e.sq8TrainCount, e.annFallbackCount) == (1, 1, 0),
+        s"dim ${e.dim}")
+    }
+  }
+
   test("artifact round-trips centroids, PQ codebook, and SQ8 scale") {
     val emb = (0L until 64L)
       .map(i => (i.toString, Seq.tabulate(8)(d => (i % 5 + d).toFloat), 8))

@@ -219,6 +219,26 @@ class EngineSpec extends SparkSpec {
     engine.deleteNode(n.id)
   }
 
+  test("the BM25 index follows the nodes table: a node write replaces it, others keep it") {
+    val e = new Engine(new TableCatalog(spark))
+    val a = e.createNode("alpha bravo charlie", autoEmbed = false)
+    val b = e.createNode("delta echo foxtrot", autoEmbed = false)
+    // a term in one of two documents has a BM25 idf of 0
+    Seq("india juliett", "kilo lima").foreach(e.createNode(_, autoEmbed = false))
+    // a build checkpoints the index's tf and idf tables
+    val (first, built) = persistedBy(e.bm25Search("alpha"))
+    assert(first.map(_.id) == Seq(a.id) && built.nonEmpty, "the first search builds the index")
+    val (again, kept) = persistedBy {
+      e.createEdge(a.id, b.id, "t")
+      e.catalog.upsertEmbedding(graft.model.EmbeddingRow(b.id, Seq(1f, 0f), 2))
+      e.bm25Search("alpha")
+    }
+    assert(again == first && kept.isEmpty, "an edge or embedding write must not rebuild the index")
+    val c = e.createNode("golf hotel alpha", autoEmbed = false)
+    val (later, rebuilt) = persistedBy(e.bm25Search("golf"))
+    assert(later.map(_.id) == Seq(c.id) && rebuilt.nonEmpty, "a node created after the build is found")
+  }
+
   test("BM25 search over store (declared capability, O15)") {
     engine.createNode("bm25 unique zebra quagga document")
     val hits = engine.bm25Search("zebra quagga")

@@ -155,4 +155,17 @@ class HttpSpec extends SparkSpec {
     info(f"GET /stats: median ${ms(10)}%.1f ms, max ${ms.last}%.1f ms")
     assert(ms(10) < 20, s"median ${ms(10)} ms")
   }
+
+  test("stop() leaves no non-daemon thread of the server alive") {
+    def nonDaemon = Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && !t.isDaemon).toSet
+    val engine = new Engine(spark)
+    val before = nonDaemon
+    val s = new EngineHttpServer(engine, port = 0)
+    s.start()
+    val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${s.boundPort}/stats")).build()
+    assert(client.send(req, HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
+    s.stop()
+    val left = nonDaemon -- before
+    assert(left.isEmpty, s"alive after stop(): ${left.map(_.getName)}")
+  }
 }

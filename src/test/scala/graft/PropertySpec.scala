@@ -345,32 +345,46 @@ class PropertySpec extends SparkSpec {
       var nodes = Vector.empty[(String, Node)]
       var embs = Vector.empty[(String, EmbeddingRow)]
       var edges = Vector.empty[(String, EdgeRow)]
-      var nodesVer, embsVer = 0L
+      // the model's count of the writes that replace each table
+      var nodesVer, embsVer, edgesVer = 0L
       def frame[A: org.apache.spark.sql.Encoder: scala.reflect.ClassTag](b: Seq[A], distributed: Boolean) =
         (if (distributed) spark.createDataset(spark.sparkContext.parallelize(b, 3))
          else b.toDS()).toDF()
       (prefix ++ random).zipWithIndex.foreach { case (o, step) =>
+        // a value derived from each table before the step
+        val before = catalog.snapshot
+        val vers = (nodesVer, embsVer, edgesVer)
+        val derived = (before.ofNodes("probe")(new Object), before.ofEmbeddings("probe")(new Object),
+          before.edges)
         o match {
           case UpNode(n) => catalog.upsertNode(n); nodes = up(nodes, Seq(n))(_.id); nodesVer += 1
           case UpEmb(e) =>
             catalog.upsertEmbedding(e); embs = up(embs, Seq(e))(_.node_id); embsVer += 1
-          case UpEdge(e) => catalog.upsertEdge(e); edges = up(edges, Seq(e))(_.id)
+          case UpEdge(e) => catalog.upsertEdge(e); edges = up(edges, Seq(e))(_.id); edgesVer += 1
           case DelNode(id) =>
             catalog.deleteNode(id)
             nodes = nodes.filterNot(_._1 == id); embs = embs.filterNot(_._1 == id)
             edges = edges.filterNot { case (_, e) => e.source == id || e.target == id }
-            nodesVer += 1; embsVer += 1
-          case DelEdge(id) => catalog.deleteEdge(id); edges = edges.filterNot(_._1 == id)
+            nodesVer += 1; embsVer += 1; edgesVer += 1
+          case DelEdge(id) =>
+            catalog.deleteEdge(id)
+            if (edges.exists(_._1 == id)) edgesVer += 1
+            edges = edges.filterNot(_._1 == id)
           case UpNodes(b, d) =>
             catalog.upsertNodes(frame(b, d)); nodes = up(nodes, b)(_.id); nodesVer += 1
           case UpEdges(b, d) =>
-            catalog.upsertEdges(frame(b, d)); edges = up(edges, b)(_.id)
+            catalog.upsertEdges(frame(b, d)); edges = up(edges, b)(_.id); edgesVer += 1
         }
         val what = s"step $step: $o"
         assert(catalog.nodes.as[Node].collect().toSeq == nodes.map(_._2), what)
         assert(catalog.embeddings.as[EmbeddingRow].collect().toSeq == embs.map(_._2), what)
         assert(catalog.edges.as[EdgeRow].collect().toSeq == edges.map(_._2), what)
-        assert((catalog.nodesVersion, catalog.embeddingsVersion) == (nodesVer, embsVer), what)
+        // each derived value survives the step exactly when the model's
+        // counter for its table did not move
+        val after = catalog.snapshot
+        assert((after.ofNodes("probe")(new Object) eq derived._1) == (nodesVer == vers._1), what)
+        assert((after.ofEmbeddings("probe")(new Object) eq derived._2) == (embsVer == vers._2), what)
+        assert((after.edges eq derived._3) == (edgesVer == vers._3), what)
         // the keyed reads and both edge indexes agree with the tables
         val s = catalog.snapshot
         (0 until 5).map(i => s"n$i").foreach { id =>

@@ -18,4 +18,11 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf = "/root/testdata/sf0.001"
+
+  /** `f`'s value and the ids of the persistent RDDs it left behind. */
+  def persistedBy[T](f: => T): (T, Set[Int]) = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val r = f
+    (r, spark.sparkContext.getPersistentRDDs.keySet.toSet -- before)
+  }
 }

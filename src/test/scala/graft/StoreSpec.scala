@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.util.Random
 
 import graft.api.Engine
+import graft.functions.HashEmbed
 import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
 import graft.store.TableCatalog
 
@@ -118,5 +119,72 @@ class StoreSpec extends SparkSpec {
     assert(errors.isEmpty, String.valueOf(errors.peek()))
     assert(reads.get > 0)
     assert(e.stats().totalNodes == n / 2)
+  }
+
+  test("a node and its embedding publish in one snapshot: readers beside createNode and updateNode") {
+    val c = new TableCatalog(spark)
+    val e = new Engine(c, dim = 16)
+    @volatile var writing = true
+    val errors = new ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val readers = (0 until 2).map { _ =>
+      new Thread(() => {
+        while (writing) {
+          // every node of the snapshot carries the embedding of its text
+          val s = c.snapshot
+          s.allNodes.foreach { n =>
+            val v = s.embedding(n.id).map(_.vector)
+            if (!v.contains(HashEmbed.encode(n.text, e.dim).toSeq))
+              errors.add(s"${n.id} '${n.text}' has embedding $v")
+          }
+          if (s.stats.totalNodes != s.stats.nodesWithEmbeddings) errors.add(s"stats ${s.stats}")
+          reads.incrementAndGet()
+        }
+      })
+    }
+    readers.foreach(_.start())
+    try {
+      while (reads.get < 2 && readers.forall(_.isAlive)) Thread.sleep(1)
+      (0 until 60).foreach { i =>
+        val n = e.createNode(s"created $i")
+        e.updateNode(n.id, text = Some(s"updated $i"), regenEmbedding = true)
+      }
+    } finally writing = false
+    readers.foreach(_.join())
+    assert(errors.isEmpty, String.valueOf(errors.peek()))
+    assert(e.stats() == Stats(60, 60, 0))
+  }
+
+  test("writes racing on one node: no dangling edge, no deleted node back, no update lost") {
+    val c = new TableCatalog(spark)
+    val e = new Engine(c)
+    def race(first: => Any, second: => Any): Unit = {
+      val go = new java.util.concurrent.CyclicBarrier(2)
+      val t = new Thread(() => { go.await(); first })
+      t.start()
+      go.await()
+      second
+      t.join()
+    }
+    (0 until 100).foreach { i =>
+      val a = e.createNode(s"a $i", autoEmbed = false).id
+      val b = e.createNode(s"b $i", autoEmbed = false).id
+      val ab = e.createEdge(a, b, "t").get.id
+      // a delete of b against an edge create, an edge update and a node
+      // update that each read b (or its edge) first
+      race(e.deleteNode(b), {
+        e.createEdge(a, b, "t"); e.updateEdge(ab, weight = Some(2.0))
+        e.updateNode(b, text = Some(s"b' $i"))
+      })
+      val s = c.snapshot
+      // every edge of the snapshot has both endpoints in it
+      val linked = s.nodeIds.flatMap(s.outEdges).count(x => s.hasNode(x.target))
+      assert(s.stats.totalEdges == linked, s"round $i: a dangling edge")
+      assert(!s.hasNode(b), s"round $i: the deleted node is back")
+      // two partial updates of one node both apply
+      race(e.updateNode(a, metadata = Some(Map("k" -> "v"))), e.updateNode(a, text = Some(s"a' $i")))
+      val got = e.getNode(a).get
+      assert((got.text, got.metadata) == (s"a' $i", Map("k" -> "v")), s"round $i: an update was lost")
+    }
   }
 }

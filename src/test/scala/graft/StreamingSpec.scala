@@ -15,6 +15,19 @@ class StreamingSpec extends SparkSpec {
     dir.toString
   }
 
+  /** The count of persistent RDDs made since the first batch began, after
+    * each of `batches`: flat when a stream holder frees the state it
+    * replaces and each batch's scratch checkpoints. */
+  private def persistedAfterEach[A](batches: Seq[A])(run: A => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    batches.map { b => run(b); (sc.getPersistentRDDs.keySet.toSet -- before).size }
+  }
+
+  private def assertFlat(counts: Seq[Int]): Unit =
+    assert(counts.size > 1 && counts.forall(_ == counts.head),
+      s"persistent RDDs after each batch: $counts")
+
   test("streaming windowed counts == batch windowed counts on same data") {
     val stream = EventStreams.readEventsStream(spark, streamDir)
     val q = EventStreams.windowedCounts(stream)
@@ -209,9 +222,9 @@ class StreamingSpec extends SparkSpec {
       // shards of 10 in id order: each 350000 dup pair's partner (360000)
       // arrives TWO shards later, so the cross-batch INDEX path — not the
       // within-batch group — must drop it
-      arriving.grouped(10).foreach { shard =>
+      assertFlat(persistedAfterEach(arriving.grouped(10).toSeq) { shard =>
         stream.addData(shard.toSeq: _*); q.processAllAvailable()
-      }
+      })
       val batch = graft.rel.ScaleQueries.dedupIncremental
         .run(spark, sf).as[(Long, String)].collect().toSet
       assert(batch.nonEmpty && accepted.toSet == batch,
@@ -238,9 +251,9 @@ class StreamingSpec extends SparkSpec {
     val q = HistogramIngest.start(
       stream.toDS().toDF("cents"), "cents", 100000L, index)
     try {
-      cents.grouped(2000).foreach { shard =>
+      assertFlat(persistedAfterEach(cents.grouped(2000).toSeq) { shard =>
         stream.addData(shard.toSeq: _*); q.processAllAvailable()
-      }
+      })
       // integer counts under addition: streamed == batch, exactly
       val streamed = index.hist.as[(Long, Long)].collect().toMap
       val batch = HistogramIngest.bucketCounts(
@@ -274,9 +287,9 @@ class StreamingSpec extends SparkSpec {
     val q = CmsIngest.start(
       stream.toDS().toDF("event_type"), "event_type", 4, 64, index)
     try {
-      keys.grouped(700).foreach { shard =>
+      assertFlat(persistedAfterEach(keys.grouped(700).toSeq) { shard =>
         stream.addData(shard.toSeq: _*); q.processAllAvailable()
-      }
+      })
       // integer counters under addition: streamed == batch, exactly
       val streamed = index.sketch.as[(Int, Long, Long)].collect().toSet
       val batch = Sketches.cmsBuild(
@@ -328,7 +341,7 @@ class StreamingSpec extends SparkSpec {
       accepted ++= kept.as[Long].collect()
     }
     try {
-      shards.foreach { sh => stream.addData(sh: _*); q.processAllAvailable() }
+      assertFlat(persistedAfterEach(shards) { sh => stream.addData(sh: _*); q.processAllAvailable() })
       // 100 dropped by the corpus index; 201 dropped by indexed 101;
       // 301 ACCEPTED (its only near-dup 201 never entered the index —
       // the greedy convention a naive batch pair rule would violate);
@@ -408,10 +421,10 @@ class StreamingSpec extends SparkSpec {
       // shards by event_id % 3: each shard spans the WHOLE ts range, so
       // later batches carry earlier timestamps — recency must be decided
       // by (ts, event_id), never arrival order
-      (0 until 3).foreach { m =>
+      assertFlat(persistedAfterEach(0 until 3) { m =>
         stream.addData(ev.filter(_._1 % 3 == m).toSeq: _*)
         q.processAllAvailable()
-      }
+      })
       assert(state.state.count() > 0)
       val base = Tables(spark, sf, "customer")
         .select($"c_custkey".as("key"), $"c_acctbal".as("bal"))

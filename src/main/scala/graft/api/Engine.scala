@@ -7,10 +7,10 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import graft.functions.HashEmbed
-import graft.graph.{Bfs, GraphOps}
+import graft.graph.{Bfs, GraphAnalytics, GraphOps}
 import graft.hybrid.HybridSearch
 import graft.model._
-import graft.search.Bm25
+import graft.search.{Bm25, Bm25Index}
 import graft.store.{Snapshot, TableCatalog}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -48,10 +48,11 @@ object AnnMode {
   *
   * A serving request reads one catalog [[Snapshot]] and answers with keyed
   * lookups on it: node, embedding and edge reads by key, graph traversal
-  * over the source index, and vector scores from a driver loop over the
-  * embedding rows. No request runs a Catalyst query or a Spark job; the
-  * approximate vector modes generate their candidates with Spark, and BM25,
-  * the trained ANN artifacts and connected components still run plans.
+  * over the source index, and vector scores from one loop over the
+  * snapshot's embedding arena. No request runs a Catalyst query or a Spark
+  * job; the approximate vector modes generate their candidates with Spark,
+  * and BM25, the trained ANN artifacts and connected components still run
+  * plans.
   */
 final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDim) {
   private val spark = catalog.spark
@@ -112,12 +113,10 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     if (updated) getNode(id) else None
   }
 
-  /** DELETE /nodes/{id} (O4, app.py:824-834): cascade per TC-API-04. */
-  def deleteNode(id: String): Boolean = {
-    val exists = catalog.snapshot.hasNode(id)
-    if (exists) catalog.deleteNode(id)
-    exists
-  }
+  /** DELETE /nodes/{id} (O4, app.py:824-834): cascade per TC-API-04;
+    * false (404) if there was no such node, or a concurrent delete removed
+    * it first. */
+  def deleteNode(id: String): Boolean = catalog.deleteNode(id)
 
   def getAllNodes(): Seq[(String, String, Map[String, String])] =
     catalog.snapshot.allNodes.map(n => (n.id, n.text, n.metadata)).toSeq
@@ -141,18 +140,15 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
       old.copy(etype = etype.getOrElse(old.etype), weight = weight.getOrElse(old.weight)))
       .map(Engine.info)
 
-  def deleteEdge(id: String): Boolean = {
-    val exists = catalog.snapshot.edge(id).nonEmpty
-    if (exists) catalog.deleteEdge(id)
-    exists
-  }
+  def deleteEdge(id: String): Boolean = catalog.deleteEdge(id)
 
   // -------------------------------------------------------------- search
   /** POST /search/vector (O12, app.py:394-444): top-k by the reference's
     * dot product with dim-mismatch skip and exact-match AND metadata
     * filter, answered on the driver from one snapshot: the scores of
-    * [[Snapshot.vectorScores]], ordered by [[Engine.rank]] as Spark's
-    * `ORDER BY score DESC, id` orders them, then [[answer]]'s node reads.
+    * [[Snapshot.vectorScores]] over its embedding arena, ordered by
+    * [[Engine.rank]] as Spark's `ORDER BY score DESC, id` orders them,
+    * then [[answer]]'s node reads.
     * So an embedding without a node row never appears, and the filter
     * applies before truncation, as the reference post-filters before
     * truncating (app.py:427-442). An embedding with a null vector has no
@@ -164,8 +160,9 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     val s = catalog.snapshot
     val q = HashEmbed.encode(queryText, dim)
     val scores = s.vectorScores(q, candidateIds(s, q, topK, metadataFilter.nonEmpty, mode))
-    answer(s, Engine.rank(scores)(_._2, _._1), topK, metadataFilter)(_._1)
-      .map { case ((_, score), n) => VectorHit(n.id, n.text, n.metadata, score) }
+    answer(s, Engine.rank(scores.size)(scores.score, scores.key), topK, metadataFilter)(
+      i => Engine.str(scores.key(i)))
+      .map { case (i, n) => VectorHit(n.id, n.text, n.metadata, scores.score(i)) }
   }
 
   /** The ids of the embeddings a vector search for `q` scores: None (all
@@ -242,6 +239,9 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
   /** Test hook: SQ8 scale TRAININGS (corpus scans) by this Engine. */
   @volatile private[graft] var sq8TrainCount: Int = 0
 
+  /** Test hook: BM25 index builds by this Engine. */
+  @volatile private[graft] var bm25BuildCount: Int = 0
+
   /** SQ8's one trained parameter — the embeddings table's global max-|x|
     * over this Engine's `dim` — derived from the table like the coarse
     * quantizer: one corpus agg per table instead of per query. */
@@ -281,10 +281,10 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     try onDriver(cent) finally bridge.unpersistCheckpoint(cent)
   }
 
-  /** `centroids` (≤ kMax rows) as a local relation held on the driver: no
-    * block outlives the Engine's reference to it. */
-  private def onDriver(centroids: DataFrame): DataFrame =
-    spark.createDataFrame(centroids.collect().toSeq.asJava, centroids.schema)
+  /** `df` (≤ kMax rows, or rows a caller has gated) as a local relation
+    * held on the driver: no block outlives the Engine's reference to it. */
+  private def onDriver(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
 
   /** BM25 keyword search (O15). Declared capability: built + queryable even
     * though no reference endpoint exposes it (app.py:670-672 keeps it out
@@ -293,9 +293,22 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
     * The index is derived from the nodes table and reused across queries
     * until a node write replaces the table — the reference's
     * rebuild-on-write contract (app.py:772-773), with the rebuild paid by
-    * the first search after the write instead of by every write. */
-  private def bm25Index(s: Snapshot): graft.search.Bm25Index =
-    s.ofNodes("bm25")(Bm25.build(s.nodes, "id", "text"))
+    * the first search after the write instead of by every write. Its tf
+    * and idf tables are held on the driver, gated by
+    * [[GraphAnalytics.requireDriverFits]], and the build's checkpoints are
+    * freed, so a superseded index holds no block. */
+  private def bm25Index(s: Snapshot): Bm25Index = s.ofNodes("bm25") {
+    bm25BuildCount += 1
+    val ix = Bm25.build(s.nodes, "id", "text")
+    try {
+      GraphAnalytics.requireDriverFits(ix.tf.count() + ix.idf.count(), "BM25 index",
+        Engine.Bm25RowBytes)
+      ix.copy(tf = onDriver(ix.tf), idf = onDriver(ix.idf))
+    } finally {
+      bridge.unpersistCheckpoint(ix.tf)
+      bridge.unpersistCheckpoint(ix.idf)
+    }
+  }
 
   def bm25Search(queryText: String, topK: Int = 10): Seq[Bm25Hit] = {
     val terms = queryText.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
@@ -341,8 +354,8 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
   /** POST /search/hybrid (O20, app.py:657-736): weighted vector+graph
     * fusion, BM25 deliberately not fused, answered on the driver from one
     * snapshot: the vector scores of [[vectorSearch]], the closeness of the
-    * BFS rows ([[GraphOps.closenessRows]]), the fusion
-    * ([[HybridSearch.fuseRows]]), then [[Engine.rank]] and [[answer]].
+    * BFS rows ([[GraphOps.closenessRows]]), the fusion over the scored
+    * rows ([[HybridSearch.fuseRows]]), then [[Engine.rank]] and [[answer]].
     * Each row form computes exactly what its plan form computes. */
   def hybridSearch(queryText: String, vectorWeight: Double = 0.7,
                    graphWeight: Double = 0.3, topK: Int = 10,
@@ -367,11 +380,11 @@ final class Engine(val catalog: TableCatalog, val dim: Int = HashEmbed.DefaultDi
           // target, like SQL's `node <> start`, is dropped too.
           .filter { case (node, _) => node != null && node != start }
       }
-      val fused = HybridSearch.fuseRows(vecScores, graphScores, vectorWeight, graphWeight,
+      val f = HybridSearch.fuseRows(vecScores, graphScores, vectorWeight, graphWeight,
         s.nodeIds)
-      Some(answer(s, Engine.rank(fused)(_._4, _._1), topK, Map.empty)(_._1).map {
-        case ((id, vn, gs, f), n) => HybridHit(id, n.text, vn, gs, f)
-      })
+      Some(answer(s, Engine.rank(f.size)(f.finalScore, f.key), topK, Map.empty)(
+        i => Engine.str(f.key(i)))
+        .map { case (i, n) => HybridHit(n.id, n.text, f.vecNorm(i), f.graphScore(i), f.finalScore(i)) })
     }
   }
 
@@ -458,21 +471,30 @@ object Engine {
 
   private def info(e: EdgeRow): EdgeInfo = EdgeInfo(e.id, e.source, e.target, e.etype, e.weight)
 
-  /** `rows` in Spark's `ORDER BY score DESC, id` — the order of every
-    * serving search's answer: scores by [[SparkDoubleOrder]], ties by id
-    * in UTF-8 byte order, a null id first as in Spark's ascending order.
-    * The rows come off a heap as the iterator advances, so taking the
-    * first k of n costs O(n + k log n), not a full sort. */
-  def rank[A](rows: Seq[A])(score: A => Double, id: A => String): Iterator[A] = {
-    val first: Ordering[(Double, UTF8String, A)] = { (x, y) =>
-      val c = SQLOrderingUtil.compareDoubles(y._1, x._1)
+  private def str(s: UTF8String): String = if (s == null) null else s.toString
+
+  /** Driver heap a held BM25 row keeps, a tf or an idf row: its row
+    * object, two strings and the local relation's copy; an estimate, not
+    * measured. */
+  private val Bm25RowBytes = 256L
+
+  /** Rows 0 until `n` in Spark's `ORDER BY score DESC, id` — the order of
+    * every serving search's answer: scores by [[SparkDoubleOrder]], ties
+    * by key in UTF-8 byte order, a null key first as in Spark's ascending
+    * order. The row numbers come off a heap as the iterator advances, so
+    * taking the first k of n costs O(n + k log n), not a full sort. */
+  def rank(n: Int)(score: Int => Double, key: Int => UTF8String): Iterator[Int] = {
+    val first: Ordering[Int] = { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(score(b), score(a))
       if (c != 0) c
-      else if (x._2 == null || y._2 == null) java.lang.Boolean.compare(x._2 != null, y._2 != null)
-      else x._2.compareTo(y._2)
+      else {
+        val (x, y) = (key(a), key(b))
+        if (x == null || y == null) java.lang.Boolean.compare(x != null, y != null) else x.compareTo(y)
+      }
     }
     // the queue dequeues its greatest element: order it by `first` reversed
     val heap = mutable.PriorityQueue.empty(first.reverse)
-    heap ++= rows.iterator.map(r => (score(r), UTF8String.fromString(id(r)), r))
-    Iterator.fill(heap.size)(heap.dequeue()._3)
+    heap ++= (0 until n)
+    Iterator.fill(n)(heap.dequeue())
   }
 }

@@ -2,16 +2,19 @@ package graft.hybrid
 
 import scala.collection.mutable
 
+import graft.store.Scored
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Weighted vector+graph fusion (reference O20, app.py:657-736) in two
   * forms that compute the same rows. [[fuse]] is ONE composed DataFrame
   * plan — Catalyst sees the whole query, unlike the reference's
   * separately-materialized passes — for the declared queries over
   * distributed tables. [[fuseRows]] is its row form over scores already
-  * on the driver, which `Engine.hybridSearch` ranks without a Spark job.
+  * on the driver (a snapshot's [[Scored]] rows), which
+  * `Engine.hybridSearch` ranks without a Spark job.
   *
   * Semantics preserved exactly (SURVEY §7.3):
   *  - min-max normalize vector scores; all-equal degenerate case → 1.0
@@ -75,37 +78,66 @@ object HybridSearch {
     * vec_norm or graph score is 0.0 (`na.fill`), and `> 0` is SQL's
     * comparison (NaN passes).
     *
-    * The plan's rows are the node universe; here they are the ids of
-    * `vecScores` and `graphScores`, a superset of the nodes that can pass
-    * the filter, which may name ids with no node row. A node with neither
-    * score has final vw·0 + gw·0, which passes only under a non-finite
-    * weight; then the rows are every id of `nodeIds`, as in the plan.
+    * The plan's rows are the node universe; here they are the rows of
+    * `vec` and the ids of `graphScores` that have none, a superset of the
+    * nodes that can pass the filter, which may name ids with no node row.
+    * A node with neither score has final vw·0 + gw·0, which passes only
+    * under a non-finite weight; then the rows are every id of `nodeIds`,
+    * as in the plan. Each row is read by its row number: no map keyed by
+    * id is built over the vector scores.
     *
-    * @param vecScores   (id, vector_score) of every scored embedding
+    * @param vec         the scores of every scored embedding
     * @param graphScores (id, graph_score), empty when no start node given
     */
-  def fuseRows(vecScores: Seq[(String, Double)], graphScores: Seq[(String, java.lang.Double)],
+  def fuseRows(vec: Scored, graphScores: Seq[(String, java.lang.Double)],
                vectorWeight: Double, graphWeight: Double,
-               nodeIds: => Iterable[String]): Seq[(String, Double, Double, Double)] = {
+               nodeIds: => Iterable[String]): Fused = {
     def cmp(a: Double, b: Double): Int = SQLOrderingUtil.compareDoubles(a, b)
-    def filled(x: java.lang.Double): Double = if (x == null || x.isNaN) 0.0 else x
-    val scores = vecScores.map(_._2)
-    val vmin = scores.reduceOption((a, b) => if (cmp(b, a) < 0) b else a)
-    val vmax = scores.reduceOption((a, b) => if (cmp(b, a) > 0) b else a)
-    val vn = mutable.HashMap.empty[String, Double]
-    vecScores.foreach { case (id, s) =>
-      vn(id) = filled(if (cmp(vmax.get, vmin.get) == 0) 1.0
-        else (s - vmin.get) / (vmax.get - vmin.get))
+    def filled(x: Double): Double = if (x.isNaN) 0.0 else x
+    val n = vec.size
+    // Spark's min and max; the first of two equal scores (0.0, -0.0) stays
+    var vmin, vmax = 0.0
+    (0 until n).foreach { i =>
+      val s = vec.score(i)
+      if (i == 0 || cmp(s, vmin) < 0) vmin = s
+      if (i == 0 || cmp(s, vmax) > 0) vmax = s
     }
-    val gs = graphScores.map { case (id, s) => id -> filled(s) }.toMap
-    val ids =
-      if (cmp(vectorWeight * 0.0 + graphWeight * 0.0, 0.0) > 0) nodeIds.toSeq.distinct
-      else vn.keys.toSeq ++ gs.keys.filterNot(vn.contains)
-    ids.map { id =>
-      val v = vn.getOrElse(id, 0.0)
-      val g = gs.getOrElse(id, 0.0)
-      (id, v, g, vectorWeight * v + graphWeight * g)
-    }.filter(r => cmp(r._4, 0.0) > 0)
+    val vn = Array.tabulate(n) { i =>
+      filled(if (cmp(vmax, vmin) == 0) 1.0 else (vec.score(i) - vmin) / (vmax - vmin))
+    }
+    // the graph score of each vector row, and of each id without one
+    val gs = new Array[Double](n)
+    val graphOnly = mutable.LinkedHashMap.empty[UTF8String, Double]
+    graphScores.foreach { case (id, s) =>
+      val k = UTF8String.fromString(id)
+      val g = if (s == null) 0.0 else filled(s)
+      val r = vec.row(k)
+      if (r >= 0) gs(r) = g else graphOnly(k) = g
+    }
+    val (keys, vns, gss, fin) = (mutable.ArrayBuilder.make[UTF8String],
+      mutable.ArrayBuilder.make[Double], mutable.ArrayBuilder.make[Double], mutable.ArrayBuilder.make[Double])
+    def add(k: UTF8String, v: Double, g: Double): Unit = {
+      val f = vectorWeight * v + graphWeight * g
+      if (cmp(f, 0.0) > 0) { keys += k; vns += v; gss += g; fin += f }
+    }
+    if (cmp(vectorWeight * 0.0 + graphWeight * 0.0, 0.0) > 0)
+      nodeIds.iterator.distinct.foreach { id =>
+        val k = UTF8String.fromString(id)
+        val r = vec.row(k)
+        if (r >= 0) add(k, vn(r), gs(r)) else add(k, 0.0, graphOnly.getOrElse(k, 0.0))
+      }
+    else {
+      (0 until n).foreach(i => add(vec.key(i), vn(i), gs(i)))
+      graphOnly.foreach { case (k, g) => add(k, 0.0, g) }
+    }
+    new Fused(keys.result(), vns.result(), gss.result(), fin.result())
+  }
+
+  /** The rows of [[fuseRows]]: row i is keyed `key(i)`, with its vec_norm,
+    * graph_score and final_score. */
+  final class Fused(val key: Array[UTF8String], val vecNorm: Array[Double],
+                    val graphScore: Array[Double], val finalScore: Array[Double]) {
+    def size: Int = key.length
   }
 
   /** Reciprocal Rank Fusion: rrf(d) = Σ_r 1/(k + rank_r(d)) over any

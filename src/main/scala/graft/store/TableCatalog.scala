@@ -2,17 +2,15 @@ package graft.store
 
 import java.util.concurrent.ConcurrentHashMap
 
-import scala.collection.immutable.{ArraySeq, VectorMap}
+import scala.collection.immutable.VectorMap
 import scala.collection.mutable
 import scala.reflect.runtime.universe.TypeTag
 
-import graft.functions.DotProductD
 import graft.graph.GraphAnalytics
 import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
@@ -24,15 +22,17 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The reference keeps its tables in one in-process SQLite file under
   * primary keys (`id`, `node_id`), so a point read or an `INSERT OR
-  * REPLACE` is one index lookup (app.py:126-348). Here each table is an
-  * insertion-ordered persistent map from its key (ordinal 0) to the
-  * `UnsafeRow` its model encoder makes (`Node`, `EmbeddingRow`, `EdgeRow`),
-  * and the edges are also indexed by source and by target. A write is an
-  * O(log N) edit of those maps: an upserted key is removed, then appended;
-  * a node delete cascades the same way to its embedding and every
-  * incident edge, found through the two indexes (app.py:81, 105, 118-119;
-  * TC-API-04). [[load]] applies the same rule, so a repeated key keeps its
-  * last row.
+  * REPLACE` is one index lookup (app.py:126-348). Here the nodes and the
+  * edges are insertion-ordered persistent maps from their key (ordinal 0)
+  * to the `UnsafeRow` their model encoder makes (`Node`, `EdgeRow`), and
+  * the edges are also indexed by source and by target. The embeddings are
+  * an [[Embeddings]] arena: their vectors in contiguous float blocks that
+  * the writes append to, which a vector search scans in one loop. A write
+  * is an O(log N) edit of those maps (and O(dim) in the arena): an
+  * upserted key is removed, then appended; a node delete cascades the same
+  * way to its embedding and every incident edge, found through the two
+  * indexes (app.py:81, 105, 118-119; TC-API-04). [[load]] applies the
+  * same rule, so a repeated key keeps its last row.
   *
   * The tables and the indexes form one immutable [[Snapshot]], published
   * through one volatile field: a reader that takes [[snapshot]] once sees
@@ -60,7 +60,6 @@ final class TableCatalog(val spark: SparkSession) {
 
   // the serializers write every row into one buffer: used under the lock
   private val nodeRow = NodeEncoder.createSerializer()
-  private val embeddingRow = EmbeddingEncoder.createSerializer()
   private val edgeRow = EdgeEncoder.createSerializer()
 
   @volatile private var snap: Snapshot = Snapshot.empty(spark)
@@ -82,7 +81,7 @@ final class TableCatalog(val spark: SparkSession) {
     * snapshot: no reader sees the node without its embedding. */
   def upsertNode(n: Node, embedding: Option[EmbeddingRow]): Unit = synchronized {
     val s = snap.withNodes(Seq(nodeRow(n).copy()))
-    snap = embedding.fold(s)(e => s.withEmbeddings(Seq(embeddingRow(e).copy())))
+    snap = embedding.fold(s)(e => s.withEmbeddings(Seq(e)))
   }
 
   /** O2: replace node `id` and, when given, its embedding by what `f`
@@ -100,7 +99,7 @@ final class TableCatalog(val spark: SparkSession) {
 
   /** O6: upsert embedding (app.py:238-241). */
   def upsertEmbedding(e: EmbeddingRow): Unit = synchronized {
-    snap = snap.withEmbeddings(Seq(embeddingRow(e).copy()))
+    snap = snap.withEmbeddings(Seq(e))
   }
 
   /** O8: upsert edge. */
@@ -128,13 +127,21 @@ final class TableCatalog(val spark: SparkSession) {
   }
 
   /** O4: delete node + FK cascade to its embedding and ALL incident edges
-    * (app.py:81, 105, 118-119; verified by TC-API-04). */
-  def deleteNode(id: String): Unit = synchronized {
-    snap = snap.withoutNode(UTF8String.fromString(id))
+    * (app.py:81, 105, 118-119; verified by TC-API-04). Checked and done
+    * under the write lock: true if this call removed the node, so of two
+    * concurrent deletes of one node exactly one reports it; a missing
+    * node changes nothing. */
+  def deleteNode(id: String): Boolean = synchronized {
+    val found = snap.hasNode(id)
+    if (found) snap = snap.withoutNode(UTF8String.fromString(id))
+    found
   }
 
-  def deleteEdge(id: String): Unit = synchronized {
-    snap = snap.withoutEdge(UTF8String.fromString(id))
+  /** Delete edge `id` under the write lock: true if this call removed it. */
+  def deleteEdge(id: String): Boolean = synchronized {
+    val found = snap.edge(id).nonEmpty
+    if (found) snap = snap.withoutEdge(UTF8String.fromString(id))
+    found
   }
 
   /** Bulk upsert of node rows, last-write-wins within and across batches
@@ -155,17 +162,17 @@ final class TableCatalog(val spark: SparkSession) {
     * the upsert rule: a key repeated in an input keeps its last row. Each
     * input is counted, gated by [[GraphAnalytics.requireDriverFits]], then
     * collected once; an embedding row costs about 4·dim bytes more than
-    * [[EmbeddingRowBytes]]. */
+    * [[EmbeddingRowBytes]], its vector's floats in the arena. */
   def load(nodes: DataFrame, embeddings: DataFrame, edges: DataFrame): Unit =
     synchronized {
       val emb = embeddings.agg(count(lit(1)), coalesce(max(size(col("vector"))), lit(0)))
         .head()
       // every input is collected before any table is replaced: a refused
       // input leaves the catalog as it was
-      val n = collectGated(nodes, nodes.count(), NodeRowBytes, NodeEncoder)(nodeRow)
+      val n = collectGated(nodes, nodes.count(), NodeRowBytes, NodeEncoder).map(nodeRow(_).copy())
       val m = collectGated(embeddings, emb.getLong(0), EmbeddingRowBytes + 4L * emb.getInt(1),
-        EmbeddingEncoder)(embeddingRow)
-      val e = collectGated(edges, edges.count(), EdgeRowBytes, EdgeEncoder)(edgeRow)
+        EmbeddingEncoder)
+      val e = collectGated(edges, edges.count(), EdgeRowBytes, EdgeEncoder).map(edgeRow(_).copy())
       snap = Snapshot.empty(spark).withNodes(n).withEmbeddings(m).withEdges(e)
     }
 
@@ -178,30 +185,31 @@ final class TableCatalog(val spark: SparkSession) {
   }
 
   private def collectGated[T](df: DataFrame, rows: Long, rowBytes: Long,
-                              encoder: ExpressionEncoder[T])(
-                              serialize: T => InternalRow): Seq[InternalRow] = {
+                              encoder: ExpressionEncoder[T]): Seq[T] = {
     GraphAnalytics.requireDriverFits(rows,
       s"catalog load (${encoder.clsTag.runtimeClass.getSimpleName})", rowBytes)
-    df.as(encoder).collect().toSeq.map(serialize(_).copy())
+    df.as(encoder).collect().toSeq
   }
 }
 
 /** One immutable state of the catalog: the three keyed tables and the
   * edges' source and target indexes. Every read a serving request makes is
-  * a lookup here; the DataFrames are built on first use. A lookup of a
-  * null id finds nothing, as SQL's `id = null` matches no row. */
+  * a lookup here, or for a vector search a scan of the embeddings'
+  * arena ([[Embeddings]]); the DataFrames are built on first use. A lookup
+  * of a null id finds nothing, as SQL's `id = null` matches no row. */
 final class Snapshot private (
     spark: SparkSession,
     nodeRows: Snapshot.Table,
-    embeddingRows: Snapshot.Table,
+    embeddingRows: Embeddings,
     edgeRows: Snapshot.Table,
     bySource: Snapshot.Index,
     byTarget: Snapshot.Index) {
   import Snapshot._
 
-  def nodes: DataFrame = frame(spark, TableCatalog.NodeEncoder, nodeRows)
-  def embeddings: DataFrame = frame(spark, TableCatalog.EmbeddingEncoder, embeddingRows)
-  def edges: DataFrame = frame(spark, TableCatalog.EdgeEncoder, edgeRows)
+  def nodes: DataFrame = frame(spark, TableCatalog.NodeEncoder, nodeRows)(nodeRows.rows.values.toVector)
+  def embeddings: DataFrame =
+    frame(spark, TableCatalog.EmbeddingEncoder, embeddingRows)(embeddingRows.internalRows)
+  def edges: DataFrame = frame(spark, TableCatalog.EdgeEncoder, edgeRows)(edgeRows.rows.values.toVector)
 
   /** The value `name` derived from the nodes (embeddings) table: built by
     * the first caller, then shared by every snapshot that holds the same
@@ -210,11 +218,11 @@ final class Snapshot private (
   def ofNodes[T](name: String)(build: => T): T = nodeRows.derive(name)(build)
   def ofEmbeddings[T](name: String)(build: => T): T = embeddingRows.derive(name)(build)
 
-  def stats: Stats = Stats(nodeRows.rows.size, embeddingRows.rows.size, edgeRows.rows.size)
+  def stats: Stats = Stats(nodeRows.rows.size, embeddingRows.size, edgeRows.rows.size)
 
   def hasNode(id: String): Boolean = nodeRows.get(id).nonEmpty
   def node(id: String): Option[Node] = nodeRows.get(id).map(decodeNode)
-  def embedding(nodeId: String): Option[EmbeddingRow] = embeddingRows.get(nodeId).map(decodeEmbedding)
+  def embedding(nodeId: String): Option[EmbeddingRow] = embeddingRows.get(nodeId)
   def edge(id: String): Option[EdgeRow] = edgeRows.get(id).map(decodeEdge)
 
   /** Every node id, in row order. */
@@ -230,21 +238,18 @@ final class Snapshot private (
     else ix.getOrElse(UTF8String.fromString(id), Set.empty[UTF8String]).toSeq
       .map(e => decodeEdge(edgeRows.rows(e)))
 
-  /** (node_id, score) of each embedding of `q`'s dimension that has a
-    * vector — all of them, or those keyed by `ids` — scored by
-    * [[DotProductD.dot]], the kernel `vec.dot` evaluates, so every score
-    * is bit-identical to the projection's. A null node_id stays: it ranks
-    * nowhere but counts in hybrid's min/max. */
-  def vectorScores(q: Array[Float], ids: Option[Seq[String]] = None): Seq[(String, Double)] = {
-    val qd = UnsafeArrayData.fromPrimitiveArray(q.map(_.toDouble))
-    val rows = ids.fold(embeddingRows.rows.valuesIterator)(_.distinct.iterator.flatMap(embeddingRows.get))
-    rows.filter(r => r.getInt(EmbeddingDim) == q.length && !r.isNullAt(EmbeddingVector))
-      .map(r => (str(r.getUTF8String(0)),
-        DotProductD.dot(r.getArray(EmbeddingVector), true, qd, false)))
-      .toSeq
-  }
+  /** The score of `q` for each embedding of `q`'s dimension that has a
+    * vector — all of them, or those keyed by `ids` — scored over the
+    * arena by [[Embeddings.scores]], bit-identical to `vec.dot`. A null
+    * node_id stays: it ranks nowhere but counts in hybrid's min/max. */
+  def vectorScores(q: Array[Float], ids: Option[Seq[String]] = None): Scored =
+    embeddingRows.scores(q, ids)
 
-  private def copy(nodeRows: Table = nodeRows, embeddingRows: Table = embeddingRows,
+  /** The embedding arena's slots this snapshot reads, live and dead: it
+    * grows with each embedding write and drops when the arena compacts. */
+  private[graft] def embeddingSlots: Int = embeddingRows.slots
+
+  private def copy(nodeRows: Table = nodeRows, embeddingRows: Embeddings = embeddingRows,
                    edgeRows: Table = edgeRows, bySource: Index = bySource,
                    byTarget: Index = byTarget): Snapshot =
     new Snapshot(spark, nodeRows, embeddingRows, edgeRows, bySource, byTarget)
@@ -252,7 +257,7 @@ final class Snapshot private (
   private[store] def withNodes(batch: Seq[InternalRow]): Snapshot =
     copy(nodeRows = nodeRows.upserted(batch))
 
-  private[store] def withEmbeddings(batch: Seq[InternalRow]): Snapshot =
+  private[store] def withEmbeddings(batch: Seq[EmbeddingRow]): Snapshot =
     copy(embeddingRows = embeddingRows.upserted(batch))
 
   private[store] def withEdges(batch: Seq[InternalRow]): Snapshot = {
@@ -304,18 +309,9 @@ object Snapshot {
     * outnumber the rows the map is rebuilt, which keeps a table's memory
     * and its scans proportional to its rows.
     *
-    * A table also holds the values derived from it, by name ([[derive]]);
-    * every write makes a new table, so they go with the table they were
-    * derived from. */
-  private[store] final case class Table(rows: VectorMap[UTF8String, InternalRow], stale: Int) {
-    private val derived = new ConcurrentHashMap[String, Derived]()
-
-    /** The value `name`, built on the first call, then memoized: one build
-      * per name even under concurrent callers, and a build that throws
-      * leaves the name unbuilt, so the next call retries. */
-    def derive[T](name: String)(build: => T): T =
-      derived.computeIfAbsent(name, _ => new Derived(() => build)).value.asInstanceOf[T]
-
+    * A table also holds the values derived from it ([[Derives]]). */
+  private[store] final case class Table(rows: VectorMap[UTF8String, InternalRow], stale: Int)
+      extends Derives {
     def get(id: String): Option[InternalRow] =
       if (id == null) None else rows.get(UTF8String.fromString(id))
 
@@ -340,6 +336,18 @@ object Snapshot {
       else Table((VectorMap.newBuilder[UTF8String, InternalRow] ++= rows).result(), 0)
   }
 
+  /** The values derived from one table, by name ([[derive]]); every write
+    * makes a new table, so they go with the table they were derived from. */
+  private[store] trait Derives {
+    private val derived = new ConcurrentHashMap[String, Derived]()
+
+    /** The value `name`, built on the first call, then memoized: one build
+      * per name even under concurrent callers, and a build that throws
+      * leaves the name unbuilt, so the next call retries. */
+    def derive[T](name: String)(build: => T): T =
+      derived.computeIfAbsent(name, _ => new Derived(() => build)).value.asInstanceOf[T]
+  }
+
   /** One derived value: the lazy val runs `build` once, under the slot's
     * lock, and stays unset if it throws. */
   private final class Derived(build: () => Any) {
@@ -351,21 +359,20 @@ object Snapshot {
     * share one. */
   private[store] def empty(spark: SparkSession): Snapshot = {
     def table = Table(VectorMap.empty, 0)
-    new Snapshot(spark, table, table, table, Map.empty, Map.empty)
+    new Snapshot(spark, table, Embeddings.empty, table, Map.empty, Map.empty)
   }
 
   // field ordinals (the key is ordinal 0 in every table)
-  private val EmbeddingVector = 1
-  private val EmbeddingDim = 2
   private val EdgeSource = 1
   private val EdgeTarget = 2
 
-  private def frame(spark: SparkSession, encoder: ExpressionEncoder[_], t: Table): DataFrame =
+  private def frame(spark: SparkSession, encoder: ExpressionEncoder[_], t: Derives)(
+                    rows: => Seq[InternalRow]): DataFrame =
     t.derive("frame") {
-      bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), t.rows.values.toVector))
+      bridge.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(encoder.schema), rows))
     }
 
-  private def str(s: UTF8String): String = if (s == null) null else s.toString
+  private[store] def str(s: UTF8String): String = if (s == null) null else s.toString
   private def str(r: InternalRow, i: Int): String = str(r.getUTF8String(i))
 
   private def decodeNode(r: InternalRow): Node = {
@@ -379,12 +386,6 @@ object Snapshot {
       }
     Node(str(r, 0), str(r, 1), metadata, str(r, 3), str(r, 4))
   }
-
-  private def decodeEmbedding(r: InternalRow): EmbeddingRow =
-    EmbeddingRow(str(r, 0),
-      if (r.isNullAt(EmbeddingVector)) null
-      else ArraySeq.unsafeWrapArray(r.getArray(EmbeddingVector).toFloatArray()),
-      r.getInt(EmbeddingDim))
 
   private def decodeEdge(r: InternalRow): EdgeRow =
     EdgeRow(str(r, 0), str(r, EdgeSource), str(r, EdgeTarget), str(r, 3), r.getDouble(4), str(r, 5))

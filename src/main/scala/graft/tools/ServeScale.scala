@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * prints one table row: for each request type the median of 9 calls
   * after 2 warm-ups, in ms (one decimal below 10 ms). Every call draws
   * new random ids and texts, so no two calls are the same request; the
-  * writes add rows and stay. */
+  * writes change rows and stay, and the node deletes run last. */
 object ServeScale {
   private val WarmUps = 2
   private val Timed = 9
@@ -33,8 +33,9 @@ object ServeScale {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    println("| nodes / edges | getNode | graph d=2 | vector | hybrid | createNode | createEdge |")
-    println("|---|---|---|---|---|---|---|")
+    println("| nodes / edges | getNode | graph d=2 | vector | hybrid | createNode | createEdge " +
+      "| updateNode | deleteNode |")
+    println("|---|---|---|---|---|---|---|---|---|")
     sizes.foreach { n =>
       val rnd = new Random(n)
       def id() = s"n-${rnd.nextInt(n)}"
@@ -46,7 +47,9 @@ object ServeScale {
         () => engine.vectorSearch(text(4)),
         () => engine.hybridSearch(text(4), graphStartId = Some(id())),
         () => engine.createNode(text(12), Map("type" -> "t0")),
-        () => engine.createEdge(id(), id(), "e0", 1.0)
+        () => engine.createEdge(id(), id(), "e0", 1.0),
+        () => engine.updateNode(id(), text = Some(text(12)), regenEmbedding = true),
+        () => engine.deleteNode(id())
       ).map(medianMs)
       println(s"| $n / ${5 * n} | " + medians.map(ms => if (ms < 10) f"$ms%.1f" else f"$ms%.0f").mkString(" | ") + " |")
     }

@@ -225,18 +225,21 @@ class EngineSpec extends SparkSpec {
     val b = e.createNode("delta echo foxtrot", autoEmbed = false)
     // a term in one of two documents has a BM25 idf of 0
     Seq("india juliett", "kilo lima").foreach(e.createNode(_, autoEmbed = false))
-    // a build checkpoints the index's tf and idf tables
+    // the index is held on the driver: a build leaves no persistent RDD
     val (first, built) = persistedBy(e.bm25Search("alpha"))
-    assert(first.map(_.id) == Seq(a.id) && built.nonEmpty, "the first search builds the index")
+    assert(first.map(_.id) == Seq(a.id) && e.bm25BuildCount == 1, "the first search builds the index")
+    assert(built.isEmpty, s"a build left persistent RDDs $built")
     val (again, kept) = persistedBy {
       e.createEdge(a.id, b.id, "t")
       e.catalog.upsertEmbedding(graft.model.EmbeddingRow(b.id, Seq(1f, 0f), 2))
       e.bm25Search("alpha")
     }
-    assert(again == first && kept.isEmpty, "an edge or embedding write must not rebuild the index")
+    assert(again == first && kept.isEmpty && e.bm25BuildCount == 1,
+      "an edge or embedding write must not rebuild the index")
     val c = e.createNode("golf hotel alpha", autoEmbed = false)
     val (later, rebuilt) = persistedBy(e.bm25Search("golf"))
-    assert(later.map(_.id) == Seq(c.id) && rebuilt.nonEmpty, "a node created after the build is found")
+    assert(later.map(_.id) == Seq(c.id) && e.bm25BuildCount == 2, "a node created after the build is found")
+    assert(rebuilt.isEmpty, s"a rebuild left persistent RDDs $rebuilt")
   }
 
   test("BM25 search over store (declared capability, O15)") {

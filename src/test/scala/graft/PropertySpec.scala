@@ -300,6 +300,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("TableCatalog == plain-Scala model over random write sequences (4 samples)") {
+    var compactions = 0
     import graft.model.{EdgeRow, EmbeddingRow, Node}
     import graft.store.TableCatalog
     // a 5-node, 6-edge id pool makes repeats, cascades and re-inserts common
@@ -307,8 +308,14 @@ class PropertySpec extends SparkSpec {
     val edgeId = Gen.oneOf((0 until 6).map(i => s"e$i"))
     val node = Gen.zip(nodeId, word, Gen.oneOf("t0", "t1"))
       .map { case (id, t, ts) => Node(id, t, Map("k" -> t.take(1)), "c", ts) }
-    val emb = Gen.zip(nodeId, Gen.listOf(Gen.choose(-1.0f, 1.0f)))
-      .map { case (id, v) => EmbeddingRow(id, v, v.length) }
+    // null vectors, a dim column that disagrees with the vector, and a
+    // null key among the embeddings
+    val emb = Gen.zip(Gen.frequency(8 -> nodeId, 1 -> Gen.const(null: String)),
+        Gen.frequency(6 -> Gen.listOf(Gen.choose(-1.0f, 1.0f)).map(Option(_)), 1 -> Gen.const(None)),
+        Gen.choose(0, 4))
+      .map { case (id, v, d) =>
+        EmbeddingRow(id, v.orNull, v.fold(d)(x => if (d == 0) x.length + 1 else x.length))
+      }
     val edge = Gen.zip(edgeId, nodeId, nodeId, Gen.oneOf("a", "b"), Gen.choose(0.5, 3.0))
       .map { case (id, s, t, ty, w) => EdgeRow(id, s, t, ty, w, "c") }
     // a bulk batch always repeats its first id, with a later row
@@ -322,7 +329,11 @@ class PropertySpec extends SparkSpec {
     case class DelEdge(id: String) extends Op
     case class UpNodes(b: Seq[Node], distributed: Boolean) extends Op
     case class UpEdges(b: Seq[EdgeRow], distributed: Boolean) extends Op
+    case class Update(id: String, text: String, e: Option[EmbeddingRow]) extends Op
+    case class Load(n: Seq[Node], e: Seq[EmbeddingRow], g: Seq[EdgeRow]) extends Op
     val op: Gen[Op] = Gen.frequency(
+      2 -> Gen.zip(nodeId, word, Gen.option(emb)).map(Update.tupled),
+      1 -> Gen.zip(Gen.listOf(node), Gen.listOf(emb), Gen.listOf(edge)).map(Load.tupled),
       3 -> node.map(UpNode), 2 -> emb.map(UpEmb), 3 -> edge.map(UpEdge),
       2 -> nodeId.map(DelNode), 1 -> edgeId.map(DelEdge),
       1 -> Gen.zip(batch[Node](node, (h, x) => x.copy(id = h.id)), Gen.oneOf(false, true))
@@ -362,14 +373,33 @@ class PropertySpec extends SparkSpec {
             catalog.upsertEmbedding(e); embs = up(embs, Seq(e))(_.node_id); embsVer += 1
           case UpEdge(e) => catalog.upsertEdge(e); edges = up(edges, Seq(e))(_.id); edgesVer += 1
           case DelNode(id) =>
-            catalog.deleteNode(id)
-            nodes = nodes.filterNot(_._1 == id); embs = embs.filterNot(_._1 == id)
-            edges = edges.filterNot { case (_, e) => e.source == id || e.target == id }
-            nodesVer += 1; embsVer += 1; edgesVer += 1
+            // a missing node is a 404: nothing is deleted
+            val found = nodes.exists(_._1 == id)
+            assert(catalog.deleteNode(id) == found, s"step $step: $o")
+            if (found) {
+              nodes = nodes.filterNot(_._1 == id); embs = embs.filterNot(_._1 == id)
+              edges = edges.filterNot { case (_, e) => e.source == id || e.target == id }
+              nodesVer += 1; embsVer += 1; edgesVer += 1
+            }
           case DelEdge(id) =>
-            catalog.deleteEdge(id)
-            if (edges.exists(_._1 == id)) edgesVer += 1
+            val found = edges.exists(_._1 == id)
+            assert(catalog.deleteEdge(id) == found, s"step $step: $o")
+            if (found) edgesVer += 1
             edges = edges.filterNot(_._1 == id)
+          case Update(id, text, e) =>
+            val old = nodes.find(_._1 == id).map(_._2)
+            val withId = e.map(_.copy(node_id = id))
+            assert(catalog.updateNode(id)(n => (n.copy(text = text), withId)) == old.nonEmpty,
+              s"step $step: $o")
+            old.foreach { n =>
+              nodes = up(nodes, Seq(n.copy(text = text)))(_.id); nodesVer += 1
+              withId.foreach { x => embs = up(embs, Seq(x))(_.node_id); embsVer += 1 }
+            }
+          case Load(n, e, g) =>
+            catalog.load(n.toDF(), e.toDF(), g.toDF())
+            nodes = up(Vector.empty, n)(_.id); embs = up(Vector.empty, e)(_.node_id)
+            edges = up(Vector.empty, g)(_.id)
+            nodesVer += 1; embsVer += 1; edgesVer += 1
           case UpNodes(b, d) =>
             catalog.upsertNodes(frame(b, d)); nodes = up(nodes, b)(_.id); nodesVer += 1
           case UpEdges(b, d) =>
@@ -396,7 +426,25 @@ class PropertySpec extends SparkSpec {
         (0 until 6).map(i => s"e$i").foreach { id =>
           assert(s.edge(id) == edges.find(_._1 == id).map(_._2), what)
         }
+        // every live arena slot scores its key's row, in row order, as
+        // `DotProductD.dot` does; a dead or null vector or another dim
+        // never scores
+        val keys = (0 until 5).map(i => s"n$i") ++ Seq(null, "missing")
+        (embs.map(_._2.dim).distinct :+ 3).foreach { d =>
+          val q = Array.tabulate(d)(j => ((j * 7 + step) % 5 - 2) * 0.37f)
+          val want = embs.map(_._2).filter(x => x.dim == d && x.vector != null).map { x =>
+            var acc = 0.0
+            (0 until math.min(x.vector.length, d)).foreach(j => acc += x.vector(j).toDouble * q(j).toDouble)
+            (x.node_id, java.lang.Double.doubleToRawLongBits(acc))
+          }
+          def got(sc: graft.store.Scored) = (0 until sc.size).map(i => (Option(sc.key(i)).map(_.toString).orNull,
+            java.lang.Double.doubleToRawLongBits(sc.score(i))))
+          assert(got(s.vectorScores(q)) == want, s"$what: dim $d")
+          assert(got(s.vectorScores(q, Some(keys))) == want.filter(_._1 != null), s"$what: dim $d, by key")
+        }
+        if (s.embeddingSlots < before.embeddingSlots && !o.isInstanceOf[Load]) compactions += 1
       }
     }
+    assert(compactions > 0, "no write compacted the embedding arena")
   }
 }

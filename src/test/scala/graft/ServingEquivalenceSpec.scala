@@ -7,8 +7,9 @@ import graft.functions.{vec, HashEmbed}
 import graft.graph.{Bfs, GraphOps}
 import graft.hybrid.HybridSearch
 import graft.model._
-import graft.store.TableCatalog
+import graft.store.{Embeddings, Scored, TableCatalog}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Serving requests are keyed reads on a catalog snapshot; these checks
   * hold them to the Spark plans they replaced, kept here as the reference:
@@ -257,6 +258,39 @@ class ServingEquivalenceSpec extends SparkSpec {
     }
   }
 
+  /** vectorSearch and hybridSearch == their plan forms on `e`. */
+  private def assertSearchesAgree(e: Engine, what: String): Unit = {
+    for (text <- Seq("graph vector join", "grown node edge", ""); filter <- filters.take(3);
+         topK <- Seq(1, 10, 1000)) {
+      assert(e.vectorSearch(text, topK, filter).map(vectorKey) ==
+        vectorPlan(e, text, topK, filter, AnnMode.BruteForce).map(vectorKey), s"$what: '$text', $filter, $topK")
+    }
+    for ((vw, gw) <- Seq((0.7, 0.3), (1.0, 0.0)); start <- Seq(None, Some("n-0"))) {
+      assert(e.hybridSearch("graph vector join", vw, gw, 20, start, 2).map(_.map(hybridKey)) ==
+        hybridPlan(e, "graph vector join", vw, gw, 20, start, 2).map(_.map(hybridKey)),
+        s"$what: hybrid ($vw, $gw) from $start")
+    }
+  }
+
+  test("vector and hybrid search == their plans after writes that grow and compact the arena") {
+    val e = engineFor(5)
+    val slots = e.catalog.snapshot.embeddingSlots
+    // rows that fill several new blocks, then a new vector for half of them
+    val rows = 3 * Embeddings.MinBlockFloats / HashEmbed.DefaultDim
+    val created = (0 until rows).map(i => e.createNode(s"${words(i % 8)} grown ${words(i * 3 % 8)}",
+      Map("type" -> Seq("a", "b")(i % 2))).id)
+    created.take(rows / 2).foreach(id =>
+      e.updateNode(id, text = Some(s"edge node $id"), regenEmbedding = true))
+    assert(e.catalog.snapshot.embeddingSlots == slots + rows + rows / 2)
+    assertSearchesAgree(e, "grown")
+    // deletes until dead slots outnumber live ones: the arena compacts
+    val before = e.catalog.snapshot.embeddingSlots
+    created.iterator.takeWhile(_ => e.catalog.snapshot.embeddingSlots >= before)
+      .foreach(id => assert(e.deleteNode(id)))
+    assert(e.catalog.snapshot.embeddingSlots < before, "the arena compacted")
+    assertSearchesAgree(e, "compacted")
+  }
+
   test("closenessRows == closeness: null and NaN weights, a null node, depth overrun") {
     val rnd = new Random(7)
     for (round <- 0 until 20) {
@@ -279,6 +313,15 @@ class ServingEquivalenceSpec extends SparkSpec {
     }
   }
 
+  /** `rows` (distinct ids) as the scored rows a snapshot's arena gives. */
+  private def scored(rows: Seq[(String, Double)]): Scored = new Scored {
+    private val keys = rows.map(r => UTF8String.fromString(r._1)).toArray
+    def size: Int = keys.length
+    def key(i: Int): UTF8String = keys(i)
+    def score(i: Int): Double = rows(i)._2
+    def row(k: UTF8String): Int = keys.indexOf(k)
+  }
+
   test("fuseRows == fuse: NaN, ties, orphans, zero, negative and infinite weights") {
     val rnd = new Random(11)
     val universe = (0 until 8).map(i => s"n$i")
@@ -298,9 +341,10 @@ class ServingEquivalenceSpec extends SparkSpec {
       val want = HybridSearch.fuse(nodes, vecScores.toDF("id", "vector_score"), g, vw, gw, 1000)
         .select($"id", $"vec_norm", $"graph_score", $"final_score")
         .as[(String, Double, Double, Double)].collect().toSeq
-      val fused = HybridSearch.fuseRows(vecScores, graph, vw, gw, universe)
-        .filter(r => universe.contains(r._1))
-      val got = Engine.rank(fused)(_._4, _._1).toSeq
+      val f = HybridSearch.fuseRows(scored(vecScores), graph, vw, gw, universe)
+      val got = Engine.rank(f.size)(f.finalScore, f.key)
+        .map(i => (f.key(i).toString, f.vecNorm(i), f.graphScore(i), f.finalScore(i)))
+        .filter(r => universe.contains(r._1)).toSeq
       def key(r: (String, Double, Double, Double)) = (r._1, bits(r._2), bits(r._3), bits(r._4))
       assert(got.map(key) == want.map(key),
         s"round $round ($vw, $gw): $vecScores / $graph\n$got\n$want")

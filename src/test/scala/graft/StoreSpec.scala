@@ -7,7 +7,7 @@ import scala.util.Random
 import graft.api.Engine
 import graft.functions.HashEmbed
 import graft.model.{EdgeRow, EmbeddingRow, Node, Stats}
-import graft.store.TableCatalog
+import graft.store.{Embeddings, Snapshot, TableCatalog}
 
 /** The serving store: durability (save → fresh catalog → load → identical
   * engine-visible state; the parquet form IS the store's durable form),
@@ -186,5 +186,76 @@ class StoreSpec extends SparkSpec {
       val got = e.getNode(a).get
       assert((got.text, got.metadata) == (s"a' $i", Map("k" -> "v")), s"round $i: an update was lost")
     }
+  }
+
+  test("concurrent deletes of one node or one edge: exactly one reports the delete") {
+    val e = new Engine(new TableCatalog(spark))
+    // the results of two calls of `del` released together
+    def both(del: => Boolean): Seq[Boolean] = {
+      val go = new java.util.concurrent.CyclicBarrier(2)
+      val other = new java.util.concurrent.atomic.AtomicBoolean
+      val t = new Thread(() => { go.await(); other.set(del) })
+      t.start()
+      go.await()
+      val mine = del
+      t.join()
+      Seq(mine, other.get)
+    }
+    (0 until 300).foreach { i =>
+      val a = e.createNode(s"a $i", autoEmbed = false).id
+      val b = e.createNode(s"b $i", autoEmbed = false).id
+      val ab = e.createEdge(a, b, "t").get.id
+      assert(both(e.deleteEdge(ab)).count(identity) == 1, s"round $i: edge")
+      assert(both(e.deleteNode(a)).count(identity) == 1, s"round $i: node")
+    }
+  }
+
+  test("a reader holding an old snapshot keeps its scores while the arena grows and compacts") {
+    val dim = 8
+    val c = new TableCatalog(spark)
+    val rnd = new Random(3)
+    def vector() = Seq.fill(dim)(rnd.nextFloat() * 2 - 1)
+    (0 until 40).foreach(i => c.upsertEmbedding(EmbeddingRow(s"k$i", vector(), dim)))
+    val old = c.snapshot
+    val q = Array.fill(dim)(rnd.nextFloat() - 0.5f)
+    def scoresOf(s: Snapshot) = {
+      val sc = s.vectorScores(q)
+      (0 until sc.size).map(i => (sc.key(i).toString, java.lang.Double.doubleToRawLongBits(sc.score(i))))
+    }
+    val want = scoresOf(old)
+    val wantRows = (0 until 40).map(i => old.embedding(s"k$i"))
+    @volatile var writing = true
+    val errors = new ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val reader = new Thread(() => {
+      while (writing) {
+        val got = scoresOf(old)
+        if (got != want) errors.add(s"scores moved: ${got.diff(want).take(3)}")
+        reads.incrementAndGet()
+      }
+    })
+    reader.start()
+    // enough rows to fill several blocks, every old key replaced twice,
+    // then deletes until dead slots outnumber live ones
+    val rows = 4 * Embeddings.MinBlockFloats / dim
+    var compactions = 0
+    try {
+      while (reads.get < 1 && reader.isAlive) Thread.sleep(1)
+      (0 until rows).foreach(i => c.upsertEmbedding(EmbeddingRow(s"new$i", vector(), dim)))
+      (0 until 2).foreach(_ => (0 until 40).foreach(i =>
+        c.upsertEmbedding(EmbeddingRow(s"k$i", vector(), dim))))
+      assert(c.snapshot.embeddingSlots == 40 + rows + 80)
+      (0 until rows).foreach { i =>
+        val before = c.snapshot.embeddingSlots
+        c.upsertNode(Node(s"new$i", "t", Map.empty, ts, ts))
+        c.deleteNode(s"new$i")
+        if (c.snapshot.embeddingSlots < before) compactions += 1
+      }
+    } finally writing = false
+    reader.join()
+    assert(errors.isEmpty, String.valueOf(errors.peek()))
+    assert(compactions > 0, "the deletes compact the arena")
+    assert(scoresOf(old) == want && (0 until 40).map(i => old.embedding(s"k$i")) == wantRows)
+    assert(c.snapshot.stats.nodesWithEmbeddings == 40)
   }
 }
